@@ -6,10 +6,12 @@ strings (identical in both engines) rather than Spark's xxhash64 (which
 DuckDB lacks). Fixed-width lowercase hex compares lexicographically in
 numeric order, so ``array_min`` of md5 strings IS a min-hash.
 
-Design note for 100 TB: everything is per-row array algebra inside
-whole-stage codegen — a narrow map stage over the documents scan, no
-shuffle, no Python. The only shuffles in the dedup pipeline are the
-groupBy on band keys (LSH bucketing) and the final pair aggregation.
+Design note for 100 TB: everything here is per-row array algebra — a
+narrow map stage over the documents scan, no shuffle, no Python. The
+MinHash signature is the one exception and lives in
+``operators/dedup._minhash_kernel`` as a numpy Arrow stage. The only
+shuffles in the dedup pipeline are the groupBy on band keys (LSH
+bucketing) and the final pair aggregation.
 """
 
 from __future__ import annotations
@@ -46,6 +48,8 @@ import random as _random
 #: Universal-hash mixing constants (a_j, b_j, c_j), fixed seed so the
 #: DuckDB oracle can inline the very same numbers. Kept small enough
 #: that a_j*h32 stays < 2^47 — no 64-bit overflow on either engine.
+#: The signature itself is computed by ``operators/dedup._minhash_kernel``
+#: (one numpy Arrow stage: one md5 per shingle, integer mixing per seed).
 MINHASH_PRIME = 2147483647  # 2^31 - 1
 _rng = _random.Random(7)
 MINHASH_COEFFS: list[tuple[int, int, int]] = [
@@ -56,64 +60,6 @@ MINHASH_COEFFS: list[tuple[int, int, int]] = [
     )
     for _ in range(64)
 ]
-
-
-def shingle_hash_pairs(shingle_arr: Column) -> Column:
-    """ONE md5 per shingle → two 32-bit ints (hex halves).
-
-    All ``n_hashes`` min-hashes derive from these by integer mixing —
-    16× fewer md5 evaluations than hashing per (seed, shingle), which
-    is the dominant cost at corpus scale.
-    """
-    return F.transform(
-        F.transform(shingle_arr, lambda s: F.md5(s)),
-        lambda h: F.struct(
-            F.conv(F.substring(h, 1, 8), 16, 10).cast("long").alias("h1"),
-            F.conv(F.substring(h, 9, 8), 16, 10).cast("long").alias("h2"),
-        ),
-    )
-
-
-def minhash_signature(shingle_arr: Column, n_hashes: int) -> Column:
-    """Array of ``n_hashes`` min-hashes: min_j over shingles of
-    (a_j*h1 + b_j*h2 + c_j) mod (2^31-1). md5 is identical in Spark and
-    DuckDB, making signatures oracle-reproducible (unlike Spark ML's
-    MinHashLSH, whose hash family is JVM-private).
-
-    Single-pass form: ONE ``aggregate`` over the shingle-hash pairs
-    carrying all ``n_hashes`` running minima (zip_with against a
-    literal coefficient array). The per-hash ``array_min(transform(…))``
-    form re-traversed the pairs array n_hashes times — and because
-    higher-order functions evaluate outside codegen (no subexpression
-    elimination), each traversal re-evaluated the md5 subtree too:
-    measured 14.6 s → single-pass ~4 s for the sf0.1 signature build.
-    Values are bit-identical; callers filter empty shingle arrays
-    upstream (an empty array yields the init sentinel here vs nulls
-    before — neither ever reaches the pipeline).
-    """
-    pairs = shingle_hash_pairs(shingle_arr)
-    coeffs = F.array(
-        *[
-            F.struct(
-                F.lit(a).alias("a"), F.lit(b).alias("b"), F.lit(c).alias("c")
-            )
-            for a, b, c in MINHASH_COEFFS[:n_hashes]
-        ]
-    )
-    init = F.array(
-        *[F.lit(MINHASH_PRIME).cast("long") for _ in range(n_hashes)]
-    )
-    return F.aggregate(
-        pairs,
-        init,
-        lambda acc, x: F.zip_with(
-            acc,
-            coeffs,
-            lambda m, co: F.least(
-                m, (x["h1"] * co["a"] + x["h2"] * co["b"] + co["c"]) % MINHASH_PRIME
-            ),
-        ),
-    )
 
 
 def band_keys(sig: Column, bands: int, rows: int) -> Column:

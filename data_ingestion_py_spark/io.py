@@ -30,51 +30,125 @@ TABLE_NAMES = (
 DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
 
-def _nano_ts_columns(path: str) -> list[str]:
-    """Columns stored as parquet TIMESTAMP(NANOS) — Spark's reader rejects
-    them outright (PARQUET_TYPE_ILLEGAL), so they need the nanosAsLong
-    legacy path + an explicit restore to TimestampType."""
+def _footer_schema(spark: SparkSession, path: str):
+    """(spark_schema | None, nano_ts_columns) from one parquet file's
+    footer, read with pyarrow (no Spark job).
+
+    ``spark_schema`` is the StructType ``spark.read.parquet(path)``
+    would infer, passed back via ``spark.read.schema`` so the read runs
+    no schema-inference job. It is ``None`` — fall back to inference —
+    for a directory (partition discovery, multi-file merge), an
+    unreadable footer, or any column type the mapping below cannot
+    reproduce exactly (unsigned ints, binary, INT96, nested structs,
+    maps, timestamps inside lists, ...). Every field is nullable, as
+    Spark reads files.
+
+    ``nano_ts_columns`` are the columns stored as parquet
+    TIMESTAMP(NANOS): Spark's reader rejects them outright
+    (PARQUET_TYPE_ILLEGAL), so they take the nanosAsLong legacy path
+    (read as long) + an explicit restore to TimestampType."""
+    import json
+
+    import pyarrow as pa
     import pyarrow.parquet as pq
+    from pyspark.sql import types as T
 
     try:
-        schema = pq.read_schema(path)
+        meta = pq.read_metadata(path)
+        arrow = meta.schema.to_arrow_schema()
     except Exception:
-        return []
-    import pyarrow as pa
+        return None, []
+    # top-level INT64 timestamp leaves: name -> parquet logical type
+    ts = {}
+    for i in range(meta.num_columns):
+        col = meta.schema.column(i)
+        lt = json.loads(col.logical_type.to_json() or "{}")
+        if col.physical_type == "INT64" and lt.get("Type") == "Timestamp":
+            ts[col.path] = lt
+    nano = [n for n, lt in ts.items() if lt.get("timeUnit") == "nanoseconds"]
+    ntz = bool(ts) and spark.conf.get(
+        "spark.sql.parquet.inferTimestampNTZ.enabled", "true"
+    ).lower() == "true"
 
-    return [
-        f.name
-        for f in schema
-        if pa.types.is_timestamp(f.type) and f.type.unit == "ns"
-    ]
+    def _ts(name: str):
+        lt = ts.get(name)
+        if lt is None:
+            return None
+        if name in nano:
+            return T.LongType()
+        if lt.get("isAdjustedToUTC") or not ntz:
+            return T.TimestampType()
+        return T.TimestampNTZType()
+
+    simple = {
+        pa.bool_(): T.BooleanType(),
+        pa.int8(): T.ByteType(),
+        pa.int16(): T.ShortType(),
+        pa.int32(): T.IntegerType(),
+        pa.int64(): T.LongType(),
+        pa.float32(): T.FloatType(),
+        pa.float64(): T.DoubleType(),
+        pa.string(): T.StringType(),
+        pa.large_string(): T.StringType(),
+        pa.date32(): T.DateType(),
+    }
+
+    def _map(t, name=None):
+        if t in simple:
+            return simple[t]
+        if pa.types.is_decimal128(t):
+            return T.DecimalType(t.precision, t.scale)
+        if pa.types.is_timestamp(t) and name is not None:
+            return _ts(name)
+        if pa.types.is_list(t) or pa.types.is_large_list(t):
+            elem = _map(t.value_type)
+            return None if elem is None else T.ArrayType(elem, True)
+        return None
+
+    fields = []
+    for f in arrow:
+        dt = _map(f.type, f.name)
+        if dt is None:
+            return None, nano
+        fields.append(T.StructField(f.name, dt, True))
+    return T.StructType(fields), nano
 
 
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     """Load one fixture table. Plain parquet scan → full pushdown/pruning.
 
-    Nano-precision timestamp columns (e.g. ``events.ts``) are read as
-    long via ``spark.sql.legacy.parquet.nanosAsLong`` and restored to
-    microsecond timestamps (the fixtures carry no sub-microsecond data,
-    so this is lossless and matches the DuckDB oracle exactly).
-    """
-    path = os.path.join(sf_dir, f"{name}.parquet")
-    nano_cols = _nano_ts_columns(path)
-    if nano_cols:
-        spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    df = spark.read.parquet(path)
-    for c in nano_cols:
-        from pyspark.sql import functions as F
+    A single-file table is read with the schema derived from its
+    parquet footer (``_footer_schema``), so loading runs no Spark job;
+    a directory keeps Spark's schema inference (partition discovery).
 
+    Nano-precision timestamp columns (e.g. ``events.ts``) are read as
+    long and restored to microsecond timestamps (the fixtures carry no
+    sub-microsecond data, so this is lossless and matches the DuckDB
+    oracle exactly). The passed footer schema reads them as long as is;
+    only schema inference needs the session-global
+    ``spark.sql.legacy.parquet.nanosAsLong``, so it is set only on that
+    fallback.
+    """
+    from pyspark.sql import functions as F
+    from pyspark.sql.types import TimestampNTZType
+
+    path = os.path.join(sf_dir, f"{name}.parquet")
+    schema, nano_cols = (
+        _footer_schema(spark, path) if os.path.isfile(path) else (None, [])
+    )
+    if nano_cols and schema is None:
+        spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+    reader = spark.read if schema is None else spark.read.schema(schema)
+    df = reader.parquet(path)
+    for c in nano_cols:
         df = df.withColumn(c, F.timestamp_micros(F.expr(f"`{c}` div 1000")))
     # Belt-and-braces for sessions built outside get_spark() (which pins
     # inferTimestampNTZ=false): normalize any TIMESTAMP_NTZ column to
     # plain TIMESTAMP so unix_micros()/withWatermark() work downstream.
     # The session timezone is UTC, so the cast is value-preserving and
     # matches the DuckDB oracle's naive-timestamp reading byte-for-byte.
-    from pyspark.sql import functions as F
-    from pyspark.sql.types import TimestampNTZType
-
-    ntz_cols = [f.name for f in df.schema.fields if isinstance(f.dataType, TimestampNTZType)]
+    fields = df.schema.fields if schema is None else schema.fields
+    ntz_cols = [f.name for f in fields if isinstance(f.dataType, TimestampNTZType)]
     if ntz_cols:
         # The NTZ→TIMESTAMP cast is value-preserving ONLY under a UTC
         # session timezone; this path exists precisely for sessions

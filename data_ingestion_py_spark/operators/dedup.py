@@ -29,8 +29,9 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, functions as F
 
 from data_ingestion_py_spark.functions.text import (
+    MINHASH_COEFFS,
+    MINHASH_PRIME,
     band_keys,
-    minhash_signature,
     shingles,
     tokens,
 )
@@ -83,6 +84,76 @@ def with_shingles(docs: DataFrame, text_col: str = "text", k: int = SHINGLE_K) -
     return docs.withColumn("shingles", shingles(tokens(F.col(text_col)), k))
 
 
+#: Shingles hashed and mixed per numpy block in ``_minhash_kernel``:
+#: bounds the (shingles × n_hashes) int64 matrix to 2 MiB at 32 hashes,
+#: so the kernel adds little to each Python worker's peak memory.
+_MINHASH_BLOCK = 1 << 13
+
+
+def _minhash_kernel(k: int, n_hashes: int):
+    """mapInPandas body: (doc_id, text) batches → (doc_id, sig,
+    shingles).
+
+    Per document: whitespace tokens (``split(" ")``, empties dropped —
+    ``functions.text.tokens``), stride-1 k-shingles joined by one space
+    (``functions.text.shingles``), ONE md5 per shingle over its UTF-8
+    bytes read as two big-endian u32 halves (h1, h2), and per seed j
+    ``min over shingles of (h1·a_j + h2·b_j + c_j) mod (2^31−1)``. All
+    integer: h·a < 2^47, so the int64 matrix never overflows and the
+    values equal the DuckDB twin (``queries_ext._sql_shingles`` +
+    ``_sql_minhash_sig``) bit for bit. A document with no shingle (NULL
+    text, fewer than k tokens) gets the all-``MINHASH_PRIME`` sentinel;
+    ``minhash_signatures`` drops those rows before the stage.
+
+    Shingles are mixed in blocks of ``_MINHASH_BLOCK`` rows; a block's
+    per-document minima (``np.minimum.reduceat`` over the contiguous
+    runs of one document) fold into the running signature, so one long
+    document never needs more than one block's matrix."""
+    import hashlib
+
+    import numpy as np
+    import pandas as pd
+
+    coeffs = np.array(MINHASH_COEFFS[:n_hashes], dtype=np.int64)
+    a, b, c = coeffs[:, 0], coeffs[:, 1], coeffs[:, 2]
+
+    def _shingles(text) -> list[str]:
+        if text is None:
+            return []
+        toks = [t for t in text.split(" ") if t]
+        return [" ".join(toks[i : i + k]) for i in range(len(toks) - k + 1)]
+
+    def _go(batches):
+        for pdf in batches:
+            sh = [_shingles(t) for t in pdf["text"]]
+            flat = [s for doc in sh for s in doc]
+            owner = np.repeat(
+                np.arange(len(sh)), np.fromiter(map(len, sh), np.int64, len(sh))
+            )
+            sig = np.full((len(sh), n_hashes), MINHASH_PRIME, dtype=np.int64)
+            for lo in range(0, len(flat), _MINHASH_BLOCK):
+                block = flat[lo : lo + _MINHASH_BLOCK]
+                digests = b"".join(
+                    hashlib.md5(s.encode("utf-8")).digest() for s in block
+                )
+                h = np.frombuffer(digests, dtype=">u4").reshape(-1, 4)
+                mixed = h[:, 0].astype(np.int64)[:, None] * a
+                mixed += h[:, 1].astype(np.int64)[:, None] * b
+                mixed += c
+                mixed %= MINHASH_PRIME
+                docs = owner[lo : lo + len(block)]
+                starts = np.flatnonzero(np.diff(docs, prepend=-1))
+                runs = docs[starts]
+                sig[runs] = np.minimum(
+                    sig[runs], np.minimum.reduceat(mixed, starts, axis=0)
+                )
+            yield pd.DataFrame(
+                {"doc_id": pdf["doc_id"], "sig": list(sig), "shingles": sh}
+            )
+
+    return _go
+
+
 def minhash_signatures(
     docs: DataFrame,
     text_col: str = "text",
@@ -90,7 +161,12 @@ def minhash_signatures(
     n_hashes: int = N_HASHES,
 ) -> DataFrame:
     """doc_id + minhash signature (ints; one md5 per shingle + integer
-    mixing per seed — see functions.text.minhash_signature).
+    mixing per seed) + the shingle array, computed in ONE numpy Arrow
+    stage (``_minhash_kernel``). The Catalyst form it replaces — an
+    ``aggregate``/``zip_with`` fold over per-shingle md5 structs — was
+    interpreted per row (higher-order functions don't codegen), and
+    constructing its literal coefficient structs through py4j was most
+    of the dedup query's build time.
 
     Input is rebalanced to the cluster's parallelism first: corpora
     often arrive as few fat files (the fixture is ONE parquet file →
@@ -101,33 +177,21 @@ def minhash_signatures(
     target = spark.sparkContext.defaultParallelism
     # Docs too short to shingle (size(tokens) < k → empty shingle array)
     # are dropped, matching the oracle's WHERE len(toks) >= k. Without
-    # this they'd emit all-null signatures AND share identical band keys
-    # ('0|','1|',...), forming one O(m²) candidate clique — a skew bomb
-    # at corpus scale.
-    #
-    # The filter is phrased on the TOKEN count, before the repartition,
-    # NOT as ``size(shingles) > 0`` after it: Catalyst pushes any
-    # deterministic filter below the round-robin Exchange, and the
-    # shingle-sized form drags the whole shingle-construction subtree
-    # into the pre-shuffle stage — which is exactly the under-
-    # parallelized stage the repartition exists to escape (measured:
-    # the pushed-down shingle filter made the 2-task scan stage the
-    # bottleneck, ~1.8 s of a 2.2 s signature build at sf0.1; the
-    # token-count form costs one split per row there and leaves the
-    # shingle transform in the post-shuffle 32-task stage).
+    # this they'd emit sentinel signatures AND share identical band keys,
+    # forming one O(m²) candidate clique — a skew bomb at corpus scale.
+    # The filter runs on the token count in the JVM, before the
+    # repartition, so the 2-task scan stage does one split per row and
+    # the kernel stage sees only shingle-able docs.
     docs = docs.where(F.size(tokens(F.col(text_col))) >= k)
     # Rebalance only when the input arrives under-partitioned (the
     # fixture is ONE parquet file → 2 tasks); a multi-file corpus that
     # already spans the cluster must not pay a gratuitous full shuffle.
     if docs.rdd.getNumPartitions() < target:
         docs = docs.repartition(target)
-    return (
-        with_shingles(docs, text_col, k)
-        .select(
-            "doc_id",
-            minhash_signature(F.col("shingles"), n_hashes).alias("sig"),
-            F.col("shingles"),
-        )
+    id_type = docs.schema["doc_id"].dataType.simpleString()
+    return docs.select("doc_id", F.col(text_col).alias("text")).mapInPandas(
+        _minhash_kernel(k, n_hashes),
+        f"doc_id {id_type}, sig array<bigint>, shingles array<string>",
     )
 
 

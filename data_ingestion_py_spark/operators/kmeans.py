@@ -140,7 +140,14 @@ def _farthest_first_seeds(vq: DataFrame, k: int) -> list[list[float]]:
     literals (k×dim — the same size class as the broadcast centroid
     array) and runs one TakeOrdered(1) action; distances are exact
     integer arithmetic in doubles, so the sweep replays bit-identically
-    in the DuckDB oracle."""
+    in the DuckDB oracle.
+
+    Build-time jobs: k collects (the first seed, then one per round),
+    run before the caller's action because seed i+1 is a function of
+    seeds 0..i — the rule itself is sequential and the seeds must be
+    driver literals. Each lazily checkpointed round adds its AQE stage
+    jobs. Fewer, fatter rounds need a different seed rule (k-means||,
+    with its DuckDB twin changed alongside)."""
     first = vq.orderBy("vec_id").limit(1).collect()[0]
     seeds: list[list[float]] = [list(first.v)]
 

@@ -23,22 +23,44 @@ Scale design, per round: edges ⋈ ranks on src (keyed shuffle join —
 at web scale, ranks is node-sized and edges dominate; AQE handles the
 skew of hub nodes, or pre-salt known mega-hubs), then one sum
 aggregation on dst, then a left join back to the node list for
-zero-in-degree nodes. ``localCheckpoint`` per round keeps N rounds at
-N depth-1 plans (same pattern as components / catalog.materialize).
-Dangling nodes (no outgoing edges) redistribute their damped mass
-uniformly each round — one extra scalar aggregate over the (static,
-usually tiny) dangling-node set, broadcast into the update as a 1-row
-crossJoin; graphs with no dangling nodes skip it entirely. The share
-``dang * d div (100 * n)`` uses the same truncating integer division
-in Spark and DuckDB, so the oracle replay stays bit-identical.
+zero-in-degree nodes. Dangling nodes (no outgoing edges) redistribute
+their damped mass uniformly each round — one extra scalar aggregate
+over the (static, usually tiny) dangling-node set, broadcast into the
+update as a 1-row crossJoin; graphs with no dangling nodes skip it
+entirely. The share ``dang * d div (100 * n)`` uses the same truncating
+integer division in Spark and DuckDB, so the oracle replay stays
+bit-identical.
+
+Build-time jobs: the edge table (with its static out-weight) is pinned
+once, and one tiny aggregate yields the node count and whether dangling
+nodes exist — both needed as driver values. Nothing else runs before
+the caller's action on graphs without dangling nodes: each round
+references the previous ranks once, so the plan grows linearly and all
+rounds execute in that one action. A per-round ``localCheckpoint``,
+even a lazy one, is NOT free: building it makes AQE materialize the
+round's shuffle stages, i.e. every round ran its jobs at build time
+(54 build jobs for 5 rounds on the nation trade graph). With dangling
+nodes the dangling-mass aggregate references the previous ranks a
+second time, so the plan tree doubles per round; there a lazy
+checkpoint every ``DANGLING_CHECKPOINT_EVERY`` rounds bounds it at
+2^k round copies, at the price of those rounds' jobs at build time.
+The fault-tolerance cost is the usual one for local checkpoints: the
+blocks are unreplicated and lineage is cut, so losing an executor that
+holds them fails the query.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.window import Window
+
+from data_ingestion_py_spark.operators.materialize import pin
 
 SCALE = 1_000_000
+#: Rounds between plan truncations on graphs WITH dangling nodes (see
+#: ``pagerank_integer``); graphs without them never checkpoint a round.
+DANGLING_CHECKPOINT_EVERY = 3
 
 
 def pagerank_integer(
@@ -62,16 +84,20 @@ def pagerank_integer(
     proximity to the seeds, not global authority. Seeds are driver-side
     literals (a seed set is query-sized, never data-sized), so the
     per-node teleport term stays a narrow CASE, no extra join."""
-    e = edges.select(
-        F.col(src).alias("src"), F.col(dst).alias("dst"), F.col(weight).alias("w")
-    ).localCheckpoint()
-    nodes = (
-        e.select(F.col("src").alias("node"))
-        .unionByName(e.select(F.col("dst").alias("node")))
-        .distinct()
-        .localCheckpoint()
+    e = pin(
+        edges.select(
+            F.col(src).alias("src"), F.col(dst).alias("dst"), F.col(weight).alias("w")
+        ).withColumn("out_w", F.sum("w").over(Window.partitionBy("src")))
     )
-    n = nodes.count()
+    # n and the dangling test from ONE tiny aggregate: a node is dangling
+    # iff it is never a src, so dangling nodes exist iff |src ∪ dst| > |src|
+    stats = e.agg(
+        F.collect_set("src").alias("s"), F.collect_set("dst").alias("d")
+    ).select(
+        F.size(F.array_union("s", "d")).alias("n"), F.size("s").alias("n_src")
+    ).first()
+    n = stats["n"]
+    has_dangling = n > stats["n_src"]
     n_tele = len(seeds) if seeds else n
     base_unit = (SCALE * (100 - damping_pct)) // (100 * n_tele)
     if seeds:
@@ -83,20 +109,18 @@ def pagerank_integer(
     else:
         base_col = F.lit(base_unit)
         init_col = F.lit(SCALE // n).cast("long")
-    out_w = e.groupBy("src").agg(F.sum("w").alias("out_w"))
-    # out-weight is static across rounds: attach it to the edge once
-    e = e.join(out_w, "src").localCheckpoint()
-    # dangling set (no outgoing edges) is static too; its per-round mass
-    # is redistributed uniformly. Graphs with no dangling nodes skip the
-    # extra aggregate entirely (the common case for trade/link rollups).
+    nodes = (
+        e.select(F.col("src").alias("node"))
+        .unionByName(e.select(F.col("dst").alias("node")))
+        .distinct()
+    )
+    # static dangling set (no outgoing edges); lazy, so it costs nothing
+    # on graphs without dangling nodes
     dangling = nodes.join(
-        e.select("src").distinct(),
-        nodes["node"] == F.col("src"),
-        "left_anti",
-    ).localCheckpoint()
-    has_dangling = dangling.limit(1).count() > 0
+        e.select("src").distinct(), nodes["node"] == F.col("src"), "left_anti"
+    )
     ranks = nodes.withColumn("rank_micro", init_col)
-    for _ in range(n_iter):
+    for i in range(n_iter):
         contrib = (
             e.join(ranks, e["src"] == ranks["node"])
             .select(
@@ -131,25 +155,16 @@ def pagerank_integer(
             )
         else:
             share = F.lit(0)
-        # eager=False (r16, guide §2.6/§7.3): the LAZY local checkpoint
-        # still truncates the logical plan to a LogicalRDD immediately
-        # (so the 3^n double-reference blowup the docstring describes
-        # cannot happen — both next-round references share ONE
-        # persisted RDD), but skips the per-round count() job: all
-        # n_iter rounds then pipeline inside the single final action
-        # instead of n_iter scheduler barriers. Driver-measured r15:
-        # 5.56 s at 32 cores with the 8-core run FASTER (ratio 0.64) —
-        # the per-iteration job overhead, not the 25-node compute, was
-        # the wall.
-        ranks = (
-            updated.select(
-                "node",
-                (base_col + dampened + share)
-                .cast("long")
-                .alias("rank_micro"),
-            )
-            .localCheckpoint(eager=False)
+        ranks = updated.select(
+            "node",
+            (base_col + dampened + share).cast("long").alias("rank_micro"),
         )
+        # the dangling-mass aggregate is a second reference to the previous
+        # ranks, so the plan tree doubles per round: truncate it every
+        # DANGLING_CHECKPOINT_EVERY rounds (module docstring: build jobs)
+        last = i + 1 == n_iter
+        if has_dangling and (i + 1) % DANGLING_CHECKPOINT_EVERY == 0 and not last:
+            ranks = ranks.localCheckpoint(eager=False)
     return ranks
 
 
@@ -187,7 +202,8 @@ def pagerank_oracle_sql(
     # AS MATERIALIZED: each round references the previous round's CTE
     # up to three times (join, dangling subquery), so default CTE
     # inlining regrows the whole upstream edge build 3^n times — the
-    # SQL twin of why the Spark side localCheckpoints per round.
+    # SQL twin of why the Spark side checkpoints every few rounds when
+    # the graph has dangling nodes.
     for i in range(1, n_iter + 1):
         its.append(
             f"""it{i} AS MATERIALIZED (

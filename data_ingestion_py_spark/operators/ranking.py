@@ -62,18 +62,23 @@ def with_global_rank(
     those blocks off executor storage memory at 100 TB — see
     ``operators/materialize.pin`` (including the note on
     range-boundary stability under recompute).
+
+    Build-time jobs: that pin runs at construction (the boundary sample
+    plus the range shuffle), so each call costs jobs before the caller's
+    action. It cannot be dropped — see the comment at ``pin`` below —
+    and callers ranking on different keys (the three RFM ntiles) cannot
+    share one. ``num_partitions=None`` leaves the range shuffle's
+    partition count to AQE, which coalesces the near-empty partitions
+    of a small input; an explicit ``num_partitions`` is honoured as is.
     """
     cumsum = cumsum or {}
-    spark = df.sparkSession
-    if num_partitions is not None:
-        p = num_partitions
-    else:
-        # "spark.sql.shuffle.partitions" may be non-numeric (e.g. "auto"
-        # under AQE auto-optimized shuffle on some platforms)
-        try:
-            p = int(spark.conf.get("spark.sql.shuffle.partitions"))
-        except (TypeError, ValueError):
-            p = spark.sparkContext.defaultParallelism
+    # With no explicit count the range shuffle is REPARTITION_BY_NONE, so
+    # AQE may coalesce its (mostly near-empty, at small inputs) partitions.
+    # Coalescing merges only CONTIGUOUS reducer ranges, in order, so
+    # spark_partition_id() stays monotone in the sort order and the
+    # offsets below stay correct. An explicit count pins the exchange
+    # (REPARTITION_BY_NUM) and AQE leaves it alone.
+    parts = [] if num_partitions is None else [num_partitions]
     # EAGER localCheckpoint pins ONE materialization of the range shuffle:
     # RangePartitioner samples boundaries with an rdd-id-dependent seed,
     # so if the offsets branch and the window branch each re-executed the
@@ -82,7 +87,7 @@ def with_global_rank(
     # (observed at sf0.1 where boundary sampling is partial). Both
     # branches must read the same blocks, not the same plan.
     ranged = pin(
-        df.repartitionByRange(p, *order_by).withColumn(
+        df.repartitionByRange(*parts, *order_by).withColumn(
             _PID, F.spark_partition_id()
         ),
         storage_level,

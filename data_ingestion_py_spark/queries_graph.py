@@ -120,8 +120,9 @@ def q_graph_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     trade graph. Edge build is the Q7 join shape (fact-fact on
     orderkey, customer/supplier left to AQE — broadcast at fixture SF,
     shuffle-hash at 100 TB) + a 625-group agg; each rank round is a keyed
-    join + sum at node cardinality with ``localCheckpoint`` keeping the
-    plan depth constant. Ranks are micro-units (``rank_micro``), exact
+    join + sum at node cardinality, and all five rounds run in the one
+    final action (the graph has no dangling nodes, so the plan grows
+    linearly). Ranks are micro-units (``rank_micro``), exact
     integers, so the DuckDB unrolled-CTE oracle replays bit-identically.
     """
     l = load_table(spark, sf_dir, "lineitem").select("l_orderkey", "l_suppkey")

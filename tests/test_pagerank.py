@@ -113,3 +113,37 @@ def test_personalized_matches_oracle(spark):
     sql = pagerank_oracle_sql(cte, n_iter=4, seeds=[1, 3])
     want = sorted(map(tuple, duckdb.connect().execute(sql).fetchall()))
     assert got == want
+
+
+def _tree_nodes(df) -> int:
+    return df._jdf.queryExecution().analyzed().treeString().count("\n")
+
+
+@pytest.mark.parametrize("seeds", [None, [1, 5]])
+def test_dangling_twenty_rounds_match_oracle_in_bounded_plan(spark, seeds):
+    # two dangling sinks (4, 6) make every round reference the previous
+    # ranks twice; without periodic truncation the plan tree would
+    # double per round (2^20 copies). The checkpoint every
+    # DANGLING_CHECKPOINT_EVERY rounds keeps it to a few round copies.
+    from data_ingestion_py_spark.operators.pagerank import (
+        DANGLING_CHECKPOINT_EVERY,
+    )
+
+    rows = [
+        (1, 2, 2), (2, 3, 1), (3, 1, 1), (1, 4, 1), (2, 4, 5),
+        (5, 1, 1), (5, 6, 3), (3, 5, 2),
+    ]
+    ranks = pagerank_integer(_edges(spark, rows), n_iter=20, seeds=seeds)
+    one_round = _tree_nodes(
+        pagerank_integer(_edges(spark, rows), n_iter=1, seeds=seeds)
+    )
+    assert _tree_nodes(ranks) <= 2**DANGLING_CHECKPOINT_EVERY * one_round
+    got = sorted((r.node, r.rank_micro) for r in ranks.collect())
+    cte = " UNION ALL ".join(
+        f"SELECT CAST({s} AS BIGINT) AS src, CAST({d} AS BIGINT) AS dst,"
+        f" CAST({w} AS BIGINT) AS w"
+        for s, d, w in rows
+    )
+    sql = pagerank_oracle_sql(cte, n_iter=20, seeds=seeds)
+    want = sorted(map(tuple, duckdb.connect().execute(sql).fetchall()))
+    assert got == want
