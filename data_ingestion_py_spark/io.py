@@ -36,79 +36,62 @@ def _footer_schema(spark: SparkSession, path: str):
 
     ``spark_schema`` is the StructType ``spark.read.parquet(path)``
     would infer, passed back via ``spark.read.schema`` so the read runs
-    no schema-inference job. It is ``None`` — fall back to inference —
-    for a directory (partition discovery, multi-file merge), an
-    unreadable footer, or any column type the mapping below cannot
-    reproduce exactly (unsigned ints, binary, INT96, nested structs,
-    maps, timestamps inside lists, ...). Every field is nullable, as
-    Spark reads files.
+    no schema-inference job. Types map through pyspark's own
+    ``from_arrow_type``; nested nullability may come out stricter than
+    inference, which does not matter because Spark reads a file source
+    with its schema made nullable. It is ``None`` — fall back to
+    inference — for a directory (partition discovery, multi-file merge),
+    an unreadable footer, a type ``from_arrow_type`` rejects (unsigned
+    ints, ...), or a leaf whose Spark reading depends on session
+    settings or that Spark reads differently: INT96 timestamps, binary
+    (``binaryAsString``), TIME, and timestamps nested below the top
+    level.
 
-    ``nano_ts_columns`` are the columns stored as parquet
-    TIMESTAMP(NANOS): Spark's reader rejects them outright
-    (PARQUET_TYPE_ILLEGAL), so they take the nanosAsLong legacy path
-    (read as long) + an explicit restore to TimestampType."""
+    What this module owns is the top-level INT64 timestamp rule:
+    ``isAdjustedToUTC`` reads as TIMESTAMP, otherwise as TIMESTAMP_NTZ
+    iff ``inferTimestampNTZ`` is on, and ``nano_ts_columns`` — the
+    columns stored as TIMESTAMP(NANOS) — read as long: Spark's reader
+    rejects them outright (PARQUET_TYPE_ILLEGAL), so they take the
+    nanosAsLong path + an explicit restore to TimestampType."""
     import json
 
-    import pyarrow as pa
     import pyarrow.parquet as pq
+    from pyspark.errors import PySparkTypeError
     from pyspark.sql import types as T
+    from pyspark.sql.pandas.types import from_arrow_type
 
     try:
         meta = pq.read_metadata(path)
         arrow = meta.schema.to_arrow_schema()
     except Exception:
         return None, []
-    # top-level INT64 timestamp leaves: name -> parquet logical type
-    ts = {}
+    nano, unmapped = [], False
     for i in range(meta.num_columns):
         col = meta.schema.column(i)
         lt = json.loads(col.logical_type.to_json() or "{}")
-        if col.physical_type == "INT64" and lt.get("Type") == "Timestamp":
-            ts[col.path] = lt
-    nano = [n for n, lt in ts.items() if lt.get("timeUnit") == "nanoseconds"]
-    ntz = bool(ts) and spark.conf.get(
+        kind = lt.get("Type")
+        if col.physical_type == "INT96" or kind == "Time":
+            unmapped = True
+        elif col.physical_type.endswith("BYTE_ARRAY"):
+            unmapped |= kind not in ("String", "Decimal")
+        elif kind == "Timestamp" and col.path not in arrow.names:
+            unmapped = True
+        elif kind == "Timestamp" and lt.get("timeUnit") == "nanoseconds":
+            nano.append(col.path)
+    if unmapped:
+        return None, nano
+    ntz = spark.conf.get(
         "spark.sql.parquet.inferTimestampNTZ.enabled", "true"
     ).lower() == "true"
-
-    def _ts(name: str):
-        lt = ts.get(name)
-        if lt is None:
-            return None
-        if name in nano:
-            return T.LongType()
-        if lt.get("isAdjustedToUTC") or not ntz:
-            return T.TimestampType()
-        return T.TimestampNTZType()
-
-    simple = {
-        pa.bool_(): T.BooleanType(),
-        pa.int8(): T.ByteType(),
-        pa.int16(): T.ShortType(),
-        pa.int32(): T.IntegerType(),
-        pa.int64(): T.LongType(),
-        pa.float32(): T.FloatType(),
-        pa.float64(): T.DoubleType(),
-        pa.string(): T.StringType(),
-        pa.large_string(): T.StringType(),
-        pa.date32(): T.DateType(),
-    }
-
-    def _map(t, name=None):
-        if t in simple:
-            return simple[t]
-        if pa.types.is_decimal128(t):
-            return T.DecimalType(t.precision, t.scale)
-        if pa.types.is_timestamp(t) and name is not None:
-            return _ts(name)
-        if pa.types.is_list(t) or pa.types.is_large_list(t):
-            elem = _map(t.value_type)
-            return None if elem is None else T.ArrayType(elem, True)
-        return None
-
     fields = []
     for f in arrow:
-        dt = _map(f.type, f.name)
-        if dt is None:
+        try:
+            dt = (
+                T.LongType()
+                if f.name in nano
+                else from_arrow_type(f.type, prefer_timestamp_ntz=ntz)
+            )
+        except PySparkTypeError:
             return None, nano
         fields.append(T.StructField(f.name, dt, True))
     return T.StructType(fields), nano

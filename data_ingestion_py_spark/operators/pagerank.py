@@ -32,21 +32,24 @@ integer division in Spark and DuckDB, so the oracle replay stays
 bit-identical.
 
 Build-time jobs: the edge table (with its static out-weight) is pinned
-once, and one tiny aggregate yields the node count and whether dangling
-nodes exist — both needed as driver values. Nothing else runs before
-the caller's action on graphs without dangling nodes: each round
-references the previous ranks once, so the plan grows linearly and all
-rounds execute in that one action. A per-round ``localCheckpoint``,
-even a lazy one, is NOT free: building it makes AQE materialize the
-round's shuffle stages, i.e. every round ran its jobs at build time
-(54 build jobs for 5 rounds on the nation trade graph). With dangling
-nodes the dangling-mass aggregate references the previous ranks a
-second time, so the plan tree doubles per round; there a lazy
-checkpoint every ``DANGLING_CHECKPOINT_EVERY`` rounds bounds it at
-2^k round copies, at the price of those rounds' jobs at build time.
-The fault-tolerance cost is the usual one for local checkpoints: the
-blocks are unreplicated and lineage is cut, so losing an executor that
-holds them fails the query.
+once, and one small exact aggregate yields the node count and whether
+dangling nodes exist — both needed as driver values. It is two
+``countDistinct``s over the exploded endpoints, so Spark plans it as a
+distributed two-level aggregate; no task or driver row holds the node
+set. Nothing else runs before the caller's action on graphs without
+dangling nodes: each round references the previous ranks once, so the
+plan grows linearly and all rounds execute in that one action. A
+per-round ``localCheckpoint``, even a lazy one, is NOT free: building
+it makes AQE materialize the round's shuffle stages, i.e. every round
+runs its jobs at build time (54 build jobs for 5 rounds on the nation
+trade graph). With dangling nodes the dangling-mass aggregate
+references the previous ranks a second time, so without truncation the
+plan tree would double per round; there the node list and the dangling
+set are pinned and every round but the last is lazily checkpointed, so
+each round's plan starts from the previous round's blocks, at the price
+of those rounds' jobs at build time. The fault-tolerance cost is the
+usual one for local checkpoints: the blocks are unreplicated and
+lineage is cut, so losing an executor that holds them fails the query.
 """
 
 from __future__ import annotations
@@ -58,9 +61,6 @@ from pyspark.sql.window import Window
 from data_ingestion_py_spark.operators.materialize import pin
 
 SCALE = 1_000_000
-#: Rounds between plan truncations on graphs WITH dangling nodes (see
-#: ``pagerank_integer``); graphs without them never checkpoint a round.
-DANGLING_CHECKPOINT_EVERY = 3
 
 
 def pagerank_integer(
@@ -89,13 +89,17 @@ def pagerank_integer(
             F.col(src).alias("src"), F.col(dst).alias("dst"), F.col(weight).alias("w")
         ).withColumn("out_w", F.sum("w").over(Window.partitionBy("src")))
     )
-    # n and the dangling test from ONE tiny aggregate: a node is dangling
-    # iff it is never a src, so dangling nodes exist iff |src ∪ dst| > |src|
-    stats = e.agg(
-        F.collect_set("src").alias("s"), F.collect_set("dst").alias("d")
-    ).select(
-        F.size(F.array_union("s", "d")).alias("n"), F.size("s").alias("n_src")
-    ).first()
+    # n and the dangling test from ONE exact, distributed aggregate: a
+    # node is dangling iff it is never a src, so dangling nodes exist
+    # iff |src ∪ dst| > |src|
+    stats = (
+        e.select(F.explode(F.array("src", "dst")).alias("node"), "src")
+        .agg(
+            F.countDistinct("node").alias("n"),
+            F.countDistinct("src").alias("n_src"),
+        )
+        .first()
+    )
     n = stats["n"]
     has_dangling = n > stats["n_src"]
     n_tele = len(seeds) if seeds else n
@@ -114,11 +118,12 @@ def pagerank_integer(
         .unionByName(e.select(F.col("dst").alias("node")))
         .distinct()
     )
-    # static dangling set (no outgoing edges); lazy, so it costs nothing
-    # on graphs without dangling nodes
-    dangling = nodes.join(
-        e.select("src").distinct(), nodes["node"] == F.col("src"), "left_anti"
-    )
+    # with dangling nodes (no outgoing edges) every round reads the node
+    # list and the static dangling set twice: pin both (module docstring)
+    if has_dangling:
+        nodes = pin(nodes)
+        srcs = e.select("src").distinct()
+        dangling = pin(nodes.join(srcs, nodes["node"] == srcs["src"], "left_anti"))
     ranks = nodes.withColumn("rank_micro", init_col)
     for i in range(n_iter):
         contrib = (
@@ -160,10 +165,8 @@ def pagerank_integer(
             (base_col + dampened + share).cast("long").alias("rank_micro"),
         )
         # the dangling-mass aggregate is a second reference to the previous
-        # ranks, so the plan tree doubles per round: truncate it every
-        # DANGLING_CHECKPOINT_EVERY rounds (module docstring: build jobs)
-        last = i + 1 == n_iter
-        if has_dangling and (i + 1) % DANGLING_CHECKPOINT_EVERY == 0 and not last:
+        # ranks: truncate the plan every round (module docstring: build jobs)
+        if has_dangling and i + 1 < n_iter:
             ranks = ranks.localCheckpoint(eager=False)
     return ranks
 
@@ -202,8 +205,8 @@ def pagerank_oracle_sql(
     # AS MATERIALIZED: each round references the previous round's CTE
     # up to three times (join, dangling subquery), so default CTE
     # inlining regrows the whole upstream edge build 3^n times — the
-    # SQL twin of why the Spark side checkpoints every few rounds when
-    # the graph has dangling nodes.
+    # SQL twin of why the Spark side checkpoints every round when the
+    # graph has dangling nodes.
     for i in range(1, n_iter + 1):
         its.append(
             f"""it{i} AS MATERIALIZED (

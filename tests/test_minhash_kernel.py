@@ -6,7 +6,9 @@ the same tokenization, md5 and integer mixing. Signatures and shingle
 arrays must be identical on the edges of the input domain: NULL and
 empty text, fewer than / exactly k tokens, runs of spaces, leading and
 trailing spaces, non-ASCII (md5 over UTF-8 bytes) and one long
-document that spans several numpy blocks.
+document that spans several numpy blocks. The kernel's shingles must
+also equal ``functions.text.shingles`` (through ``dedup.with_shingles``),
+the Spark-side shingle rule the other similarity queries use.
 """
 
 from __future__ import annotations
@@ -73,6 +75,25 @@ def test_signatures_match_duckdb_twin_on_edge_cases(spark):
     assert got == want
     assert got[4][1] == ["exactly three tokens"]
     assert len(got[8][1]) == 4998
+
+
+def test_kernel_shingles_match_spark_shingle_rule(spark):
+    """One shingle rule: the kernel's Python tokenize/shingle step equals
+    ``functions.text.shingles(tokens(...))`` on every edge case, NULL and
+    under-k documents included (both give an empty array)."""
+    rows = _edge_docs()
+    docs = spark.createDataFrame(rows, "doc_id long, text string")
+    spark_sh = {
+        r.doc_id: list(r.shingles)
+        for r in dedup.with_shingles(docs).select("doc_id", "shingles").collect()
+    }
+    pdf = pd.DataFrame(
+        {"doc_id": [r[0] for r in rows], "text": [r[1] for r in rows]}
+    )
+    (out,) = dedup._minhash_kernel(dedup.SHINGLE_K, dedup.N_HASHES)([pdf])
+    kernel_sh = {d: list(sh) for d, sh in zip(out["doc_id"], out["shingles"])}
+    assert kernel_sh == spark_sh
+    assert kernel_sh[1] == kernel_sh[2] == kernel_sh[3] == []
 
 
 def test_kernel_blocking_and_sentinel(monkeypatch):

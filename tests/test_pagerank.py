@@ -122,13 +122,9 @@ def _tree_nodes(df) -> int:
 @pytest.mark.parametrize("seeds", [None, [1, 5]])
 def test_dangling_twenty_rounds_match_oracle_in_bounded_plan(spark, seeds):
     # two dangling sinks (4, 6) make every round reference the previous
-    # ranks twice; without periodic truncation the plan tree would
-    # double per round (2^20 copies). The checkpoint every
-    # DANGLING_CHECKPOINT_EVERY rounds keeps it to a few round copies.
-    from data_ingestion_py_spark.operators.pagerank import (
-        DANGLING_CHECKPOINT_EVERY,
-    )
-
+    # ranks twice; without truncation the plan tree would double per
+    # round (2^20 copies). The per-round checkpoint keeps the 20-round
+    # plan no larger than a one-round plan.
     rows = [
         (1, 2, 2), (2, 3, 1), (3, 1, 1), (1, 4, 1), (2, 4, 5),
         (5, 1, 1), (5, 6, 3), (3, 5, 2),
@@ -137,7 +133,7 @@ def test_dangling_twenty_rounds_match_oracle_in_bounded_plan(spark, seeds):
     one_round = _tree_nodes(
         pagerank_integer(_edges(spark, rows), n_iter=1, seeds=seeds)
     )
-    assert _tree_nodes(ranks) <= 2**DANGLING_CHECKPOINT_EVERY * one_round
+    assert _tree_nodes(ranks) <= one_round
     got = sorted((r.node, r.rank_micro) for r in ranks.collect())
     cte = " UNION ALL ".join(
         f"SELECT CAST({s} AS BIGINT) AS src, CAST({d} AS BIGINT) AS dst,"
