@@ -165,27 +165,18 @@ def main() -> None:
     # Fault isolation (round-4 lesson: one AnalysisException zeroed the
     # entire round's perf signal): each query's build+run is wrapped;
     # failures land in `errors` and the run keeps going.
-    # r16 (VERDICT r15 #6, adjudicated by full-bench A/B): a per-query
-    # gc.collect() was tried as churn hygiene and MEASURED WORSE —
-    # same box, back-to-back runs: total 64.9 s with vs 48.3 s without
-    # (geomean 0.74, worst hit the checkpoint-heavy queries:
-    # ivf_kmeans 4.28 vs 3.19, pagerank 2.84 vs 2.01, rfm 3.19 vs
-    # 2.38). Dropping the Python refs between queries makes the JVM
-    # ContextCleaner unpersist blocks INSIDE the next queries' timed
-    # regions, which costs more than the heap churn it reaps; the r13
-    # gc between the query phase and the PROBES (below) remains, where
-    # there is a natural settling boundary. Env-gated OFF by default so
-    # the measurement stays reproducible: SPARK_GRAFT_BENCH_GC=1.
+    # No gc.collect() between queries: a per-query collect measured
+    # worse (64.9 vs 48.3 s total, OPTIMIZATION_r16.md) because the JVM
+    # ContextCleaner then unpersists blocks inside the next queries'
+    # timed regions. The one gc runs between the query phase and the
+    # probes (below), a natural settling boundary.
     import gc
 
-    bench_gc = os.environ.get("SPARK_GRAFT_BENCH_GC", "0") == "1"
     timings: dict[str, float] = {}
     spreads: dict[str, list[float]] = {}
     errors: dict[str, str] = {}
     plan_fp: dict[str, str] = {}
     for name, q in bench_queries.items():
-        if bench_gc:
-            gc.collect()
         try:
             try:
                 plan_fp[name] = _plan_fingerprint(q.spark(spark, sf_dir))

@@ -107,10 +107,10 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     Nano-precision timestamp columns (e.g. ``events.ts``) are read as
     long and restored to microsecond timestamps (the fixtures carry no
     sub-microsecond data, so this is lossless and matches the DuckDB
-    oracle exactly). The passed footer schema reads them as long as is;
-    only schema inference needs the session-global
-    ``spark.sql.legacy.parquet.nanosAsLong``, so it is set only on that
-    fallback.
+    oracle exactly). A passed schema reads them as long as is; only
+    schema inference needs ``spark.sql.legacy.parquet.nanosAsLong``, so
+    on that fallback the conf is set around the inference call alone,
+    then restored, and the table is read with the inferred schema.
     """
     from pyspark.sql import functions as F
     from pyspark.sql.types import TimestampNTZType
@@ -120,7 +120,16 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
         _footer_schema(spark, path) if os.path.isfile(path) else (None, [])
     )
     if nano_cols and schema is None:
-        spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+        key = "spark.sql.legacy.parquet.nanosAsLong"
+        prior = spark.conf.get(key, None)
+        spark.conf.set(key, "true")
+        try:
+            schema = spark.read.parquet(path).schema
+        finally:
+            if prior is None:
+                spark.conf.unset(key)
+            else:
+                spark.conf.set(key, prior)
     reader = spark.read if schema is None else spark.read.schema(schema)
     df = reader.parquet(path)
     for c in nano_cols:

@@ -27,6 +27,11 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import types as T
 
+from data_ingestion_py_spark.sources.bits import (
+    bounded_decompress,
+    decompress_members,
+)
+
 TAR_MEMBER_SCHEMA = T.StructType(
     [
         T.StructField("media_id", T.LongType(), False),
@@ -1049,11 +1054,10 @@ def _orc_decompress(
         if kind == "zlib":
             import zlib
 
-            try:
-                piece = zlib.decompressobj(-15).decompress(
-                    chunk, max_bytes + 1 - len(out)
-                )
-            except zlib.error:
+            piece = bounded_decompress(
+                zlib.decompressobj(-15), chunk, max_bytes - len(out)
+            )
+            if piece is None:
                 return None
         elif kind == "snappy":
             got = _pb_varint(chunk, 0, len(chunk))
@@ -1257,8 +1261,9 @@ def avro_block_decompress(
     DEFLATE, no zlib wrapper), ``snappy`` (block + 4-byte BIG-endian
     CRC32 of the UNCOMPRESSED bytes — VERIFIED), ``zstandard`` (zstd
     frames via the FCS-aware pure/pyarrow kernel in sources/shards),
-    ``bzip2`` and ``xz`` (stdlib). Unknown codecs or any undecodable /
-    checksum-failing block → None. Blocks decompress independently —
+    ``bzip2`` and ``xz`` (stdlib decompressors, every stream, bounded by
+    ``max_bytes``). Unknown codecs or any undecodable / checksum-failing
+    block → None. Blocks decompress independently —
     with the ``avro_blocks`` byte ranges this is the executor-side
     half of the Avro split plan."""
     if payload is None or data_offset + byte_size > len(payload):
@@ -1270,11 +1275,8 @@ def avro_block_decompress(
         import zlib
 
         d = zlib.decompressobj(-15)
-        try:
-            out = d.decompress(raw, max_bytes + 1)
-        except zlib.error:
-            return None
-        return bytes(out) if d.eof and len(out) <= max_bytes else None
+        out = bounded_decompress(d, raw, max_bytes)
+        return out if out is not None and d.eof else None
     if codec == "snappy":
         if len(raw) < 4:
             return None
@@ -1300,17 +1302,9 @@ def avro_block_decompress(
     if codec == "bzip2":
         import bz2
 
-        try:
-            out = bz2.decompress(raw)
-        except (OSError, ValueError):
-            return None
-        return out if len(out) <= max_bytes else None
+        return decompress_members(bz2.BZ2Decompressor, raw, max_bytes)
     if codec == "xz":
         import lzma
 
-        try:
-            out = lzma.decompress(raw)
-        except lzma.LZMAError:
-            return None
-        return out if len(out) <= max_bytes else None
+        return decompress_members(lzma.LZMADecompressor, raw, max_bytes)
     return None

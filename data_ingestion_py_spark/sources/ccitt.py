@@ -36,6 +36,12 @@ from bisect import bisect_right
 
 import numpy as np
 
+from data_ingestion_py_spark.sources.bits import (
+    MsbBits,
+    none_on_truncation,
+    prefix_trie,
+)
+
 # (run_length, bits_as_string) — ITU-T T.4 Table 2 (white) / 3 (black)
 _WHITE_CODES = [
     (0, "00110101"), (1, "000111"), (2, "0111"), (3, "1000"),
@@ -114,83 +120,30 @@ _EXT_CODES = [
 ]
 
 
-def _build_tree(codes: list[tuple[int, str]]) -> dict:
-    """Prefix-code trie: {bit: subtrie-or-('run', n)}."""
-    root: dict = {}
-    for run, bits in codes:
-        node = root
-        for b in bits[:-1]:
-            node = node.setdefault(int(b), {})
-            if not isinstance(node, dict):
-                raise ValueError("prefix clash")
-        last = int(bits[-1])
-        if last in node:
-            raise ValueError("prefix clash")
-        node[last] = ("run", run)
-    return root
+_WHITE_TREE = prefix_trie(
+    (bits, run) for run, bits in _WHITE_CODES + _EXT_CODES
+)
+_BLACK_TREE = prefix_trie(
+    (bits, run) for run, bits in _BLACK_CODES + _EXT_CODES
+)
 
 
-_WHITE_TREE = _build_tree(_WHITE_CODES + _EXT_CODES)
-_BLACK_TREE = _build_tree(_BLACK_CODES + _EXT_CODES)
-
-
-class _Bits:
-    __slots__ = ("data", "pos", "n")
-
-    def __init__(self, data: bytes):
-        self.data = data
-        self.pos = 0
-        self.n = len(data) * 8
-
-    def read1(self) -> int | None:
-        if self.pos >= self.n:
-            return None
-        b = (self.data[self.pos >> 3] >> (7 - (self.pos & 7))) & 1
-        self.pos += 1
-        return b
-
-    def peek(self, k: int) -> int | None:
-        """k bits MSB-first, zero-padded past EOF (None only when the
-        stream is fully exhausted)."""
-        if self.pos >= self.n:
-            return None
-        v = 0
-        for i in range(k):
-            p = self.pos + i
-            bit = (
-                (self.data[p >> 3] >> (7 - (p & 7))) & 1
-                if p < self.n
-                else 0
-            )
-            v = (v << 1) | bit
-        return v
-
-
-def _read_run(bits: _Bits, white: bool) -> int | None:
+def _read_run(bits: MsbBits, white: bool) -> int | None:
     """One T.4 run length: make-up codes accumulate until a
     terminating (<64) code arrives."""
+    tree = _WHITE_TREE if white else _BLACK_TREE
     total = 0
     for _ in range(16):  # ≥2560/64 make-ups would be corrupt anyway
-        node = _WHITE_TREE if white else _BLACK_TREE
-        for _depth in range(14):
-            b = bits.read1()
-            if b is None:
-                return None
-            nxt = node.get(b)
-            if nxt is None:
-                return None
-            if isinstance(nxt, tuple):
-                run = nxt[1]
-                total += run
-                if run < 64:
-                    return total
-                break  # make-up: read another code
-            node = nxt
-        else:
+        run = bits.read_code(tree)
+        if run is None:
             return None
+        total += run
+        if run < 64:
+            return total
     return None
 
 
+@none_on_truncation
 def g3_1d_decode(
     data: bytes,
     columns: int,
@@ -208,24 +161,15 @@ def g3_1d_decode(
     row-count mismatch."""
     if columns <= 0 or columns > 1 << 16:
         return None
-    bits = _Bits(data)
+    bits = MsbBits(data)
     out: list[np.ndarray] = []
     max_rows = rows if rows is not None else 1 << 20
     while len(out) < max_rows:
-        if byte_align and bits.pos % 8:
-            bits.pos += 8 - bits.pos % 8
+        if byte_align:
+            bits.align()
         while allow_eol and bits.peek(12) == 0b000000000001:
             bits.pos += 12
-        if bits.pos >= bits.n:
-            break
-        first_partial = (
-            bits.data[bits.pos >> 3] & (0xFF >> (bits.pos & 7))
-            if bits.pos < bits.n
-            else 0
-        )
-        if first_partial == 0 and not any(
-            bits.data[(bits.pos >> 3) + 1 :]
-        ):
+        if bits.rest_is_zero():
             break  # zero padding after the last line
         line = np.full(columns, 255, np.uint8)
         total = 0
@@ -248,6 +192,7 @@ def g3_1d_decode(
     return np.stack(out)
 
 
+@none_on_truncation
 def g4_decode(
     data: bytes, columns: int, rows: int | None = None
 ) -> "np.ndarray | None":
@@ -257,23 +202,14 @@ def g4_decode(
     any malformed mode code, run overflow, or truncated line."""
     if columns <= 0 or columns > 1 << 16:
         return None
-    bits = _Bits(data)
+    bits = MsbBits(data)
     # reference transitions for the imaginary all-white line above
     ref: list[int] = [columns, columns]
     out: list[np.ndarray] = []
     max_rows = rows if rows is not None else 1 << 20
     while len(out) < max_rows:
-        if bits.pos >= bits.n:
-            break
         # encoder zero-padding to the byte boundary after the last line
-        first_partial = (
-            bits.data[bits.pos >> 3] & (0xFF >> (bits.pos & 7))
-            if bits.pos < bits.n
-            else 0
-        )
-        if first_partial == 0 and not any(
-            bits.data[(bits.pos >> 3) + 1 :]
-        ):
+        if bits.rest_is_zero():
             break
         # EOFB: 000000000001 000000000001
         if bits.peek(24) == 0b000000000001000000000001:
@@ -291,7 +227,7 @@ def g4_decode(
 
 
 def _decode_2d_line(
-    bits: _Bits, ref: list[int], columns: int
+    bits: MsbBits, ref: list[int], columns: int
 ) -> list[int] | None:
     """One 2D-coded line (pass / vertical / horizontal modes against
     the reference line's changing elements) → its transition
@@ -318,8 +254,6 @@ def _decode_2d_line(
         b1 = ref[idx] if idx < len(ref) else columns
         b2 = ref[idx + 1] if idx + 1 < len(ref) else columns
         p = bits.peek(7)
-        if p is None:
-            return None
         if p >> 6 == 0b1:  # V0
             bits.pos += 1
             a1 = b1
@@ -382,7 +316,7 @@ def _render_line(cur: list[int], columns: int) -> "np.ndarray":
     return line
 
 
-def _decode_1d_line(bits: _Bits, columns: int) -> list[int] | None:
+def _decode_1d_line(bits: MsbBits, columns: int) -> list[int] | None:
     """One T.4 modified-Huffman 1D line → transition positions (run
     sums must hit ``columns`` exactly); used by the 1D-tagged lines
     of mixed-2D Group 3, where the next line's 2D coding needs the
@@ -403,6 +337,7 @@ def _decode_1d_line(bits: _Bits, columns: int) -> list[int] | None:
     return cur
 
 
+@none_on_truncation
 def g3_2d_decode(
     data: bytes,
     columns: int,
@@ -424,30 +359,19 @@ def g3_2d_decode(
     line, any malformed code, or a row-count mismatch."""
     if columns <= 0 or columns > 1 << 16:
         return None
-    bits = _Bits(data)
+    bits = MsbBits(data)
     ref: list[int] | None = None  # no reference before the first line
     out: list[np.ndarray] = []
     max_rows = rows if rows is not None else 1 << 20
     while len(out) < max_rows:
         # FILL (zero bits) then EOL; a 1 before 11 zeros is garbage
-        zeros = 0
-        at_end = False
-        while True:
-            b = bits.read1()
-            if b is None:
-                at_end = True
-                break
-            if b == 0:
-                zeros += 1
-                continue
-            if zeros < 11:
-                return None
+        if bits.rest_is_zero():
             break
-        if at_end:
+        if bits.unary() < 11:
+            return None
+        if bits.pos >= bits.n:
             break
         tag = bits.read1()
-        if tag is None:
-            break
         # RTC: the next thing after EOL+tag is another EOL (no T.4
         # code has 11 leading zeros, so this cannot shadow line data)
         if bits.peek(12) == 0b000000000001:

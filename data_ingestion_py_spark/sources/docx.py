@@ -29,6 +29,7 @@ same snippetize/quality operators.
 
 from __future__ import annotations
 
+from data_ingestion_py_spark.sources.bits import bounded_decompress
 from data_ingestion_py_spark.sources.spread import spread_for_kernel
 
 import re
@@ -86,13 +87,8 @@ def docx_document_xml(payload: bytes | None) -> bytes | None:
         if method == 0:
             return raw if len(raw) == uncomp else None
         if method == 8:
-            try:
-                out = zlib.decompressobj(-15).decompress(
-                    raw, uncomp + 1
-                )
-            except zlib.error:
-                return None
-            return out if len(out) == uncomp else None
+            out = bounded_decompress(zlib.decompressobj(-15), raw, uncomp)
+            return out if out is not None and len(out) == uncomp else None
         return None  # OPC allows only STORED/DEFLATE
     return None
 

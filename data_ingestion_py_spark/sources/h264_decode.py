@@ -33,79 +33,18 @@ path that lets a 100 TB pipeline fetch ONLY keyframe byte ranges
 
 from __future__ import annotations
 
+from data_ingestion_py_spark.sources.bits import (
+    MsbBits,
+    none_on_truncation,
+    prefix_trie,
+    rbsp_unescape,
+)
 from data_ingestion_py_spark.sources.spread import spread_for_kernel
 
 try:  # numpy is a hard dep of the package; guard for doc tooling only
     import numpy as np
 except ImportError:  # pragma: no cover
     np = None  # type: ignore[assignment]
-
-
-# ---------------------------------------------------------------------
-# bit reader over RBSP (emulation-prevention bytes already removed)
-# ---------------------------------------------------------------------
-
-
-class _Bits:
-    __slots__ = ("data", "pos", "n")
-
-    def __init__(self, data: bytes):
-        self.data = data
-        self.pos = 0
-        self.n = len(data) * 8
-
-    def u(self, k: int) -> int | None:
-        if self.pos + k > self.n:
-            return None
-        v = 0
-        p = self.pos
-        d = self.data
-        for i in range(k):
-            v = (v << 1) | ((d[(p + i) >> 3] >> (7 - ((p + i) & 7))) & 1)
-        self.pos += k
-        return v
-
-    def ue(self) -> int | None:
-        zeros = 0
-        while True:
-            b = self.u(1)
-            if b is None:
-                return None
-            if b:
-                break
-            zeros += 1
-            if zeros > 31:
-                return None
-        if zeros == 0:
-            return 0
-        rest = self.u(zeros)
-        if rest is None:
-            return None
-        return (1 << zeros) - 1 + rest
-
-    def se(self) -> int | None:
-        k = self.ue()
-        if k is None:
-            return None
-        return (k + 1) >> 1 if k & 1 else -(k >> 1)
-
-    def byte_align(self) -> None:
-        if self.pos % 8:
-            self.pos += 8 - self.pos % 8
-
-
-def ebsp_to_rbsp(data: bytes) -> bytes:
-    """Strip emulation-prevention bytes (00 00 03 -> 00 00)."""
-    out = bytearray()
-    i, n = 0, len(data)
-    while i < n:
-        if i + 2 < n and data[i] == 0 and data[i + 1] == 0 and data[i + 2] == 3:
-            out += data[i : i + 2]
-            i += 3
-        else:
-            out.append(data[i])
-            i += 1
-    return bytes(out)
 
 
 # ---------------------------------------------------------------------
@@ -297,67 +236,29 @@ _CBP_INTRA = (
 )
 
 
-def _build_tree(table: dict) -> dict:
-    """Bit-string table → prefix tree; raises at import on a code
-    that prefixes another (transcription collision guard)."""
-    root: dict = {}
-    for code, val in table.items():
-        node = root
-        for i, ch in enumerate(code):
-            b = int(ch)
-            if i == len(code) - 1:
-                if b in node:
-                    raise ValueError(f"collision at {code}")
-                node[b] = ("leaf", val)
-            else:
-                nxt = node.get(b)
-                if nxt is None:
-                    node[b] = node = {}
-                elif isinstance(nxt, tuple):
-                    raise ValueError(f"prefix collision at {code}")
-                else:
-                    node = nxt
-    return root
-
-
-_CT_TREES = {k: _build_tree(v) for k, v in _COEFF_TOKEN.items()}
-_TZ_TREES = {k: _build_tree(v) for k, v in _TOTAL_ZEROS.items()}
-_TZC_TREES = {k: _build_tree(v) for k, v in _TOTAL_ZEROS_CDC.items()}
-_RB_TREES = {k: _build_tree(v) for k, v in _RUN_BEFORE.items()}
-
-
-def _read_vlc(bits: _Bits, tree: dict):
-    node = tree
-    for _ in range(20):
-        b = bits.u(1)
-        if b is None:
-            return None
-        nxt = node.get(b)
-        if nxt is None:
-            return None
-        if isinstance(nxt, tuple):
-            return nxt[1]
-        node = nxt
-    return None
+_CT_TREES = {k: prefix_trie(v.items()) for k, v in _COEFF_TOKEN.items()}
+_TZ_TREES = {k: prefix_trie(v.items()) for k, v in _TOTAL_ZEROS.items()}
+_TZC_TREES = {
+    k: prefix_trie(v.items()) for k, v in _TOTAL_ZEROS_CDC.items()
+}
+_RB_TREES = {k: prefix_trie(v.items()) for k, v in _RUN_BEFORE.items()}
 
 
 def _residual_block(
-    bits: _Bits, n_coeff_max: int, nc: int
+    bits: MsbBits, n_coeff_max: int, nc: int
 ) -> list[int] | None:
     """One CAVLC residual block (§9.2) → coefficient list of length
     ``n_coeff_max`` in decoding (zigzag) order, or None."""
     if nc < 0:
-        ct = _read_vlc(bits, _CT_TREES[4])
+        ct = bits.read_code(_CT_TREES[4])
     elif nc < 2:
-        ct = _read_vlc(bits, _CT_TREES[0])
+        ct = bits.read_code(_CT_TREES[0])
     elif nc < 4:
-        ct = _read_vlc(bits, _CT_TREES[1])
+        ct = bits.read_code(_CT_TREES[1])
     elif nc < 8:
-        ct = _read_vlc(bits, _CT_TREES[2])
+        ct = bits.read_code(_CT_TREES[2])
     else:
-        v = bits.u(6)
-        if v is None:
-            return None
+        v = bits.read(6)
         ct = (0, 0) if v == 3 else ((v >> 2) + 1, v & 3)
     if ct is None:
         return None
@@ -369,33 +270,19 @@ def _residual_block(
         return None
     levels: list[int] = []
     for _ in range(trailing_ones):
-        s = bits.u(1)
-        if s is None:
-            return None
-        levels.append(-1 if s else 1)
+        levels.append(-1 if bits.read1() else 1)
     suffix_len = 1 if (total_coeff > 10 and trailing_ones < 3) else 0
     for i in range(total_coeff - trailing_ones):
-        prefix = 0
-        while True:
-            b = bits.u(1)
-            if b is None:
-                return None
-            if b:
-                break
-            prefix += 1
-            if prefix > 32:
-                return None
+        prefix = bits.unary()
+        if prefix > 32:
+            return None
         if suffix_len == 0 and prefix == 14:
             sz = 4
         elif prefix >= 15:
             sz = prefix - 3
         else:
             sz = suffix_len
-        suffix = 0
-        if sz:
-            suffix = bits.u(sz)
-            if suffix is None:
-                return None
+        suffix = bits.read(sz)
         level_code = (min(15, prefix) << suffix_len) + suffix
         if prefix >= 15 and suffix_len == 0:
             level_code += 15
@@ -415,9 +302,9 @@ def _residual_block(
     # total_zeros
     if total_coeff < n_coeff_max:
         if nc < 0:
-            tz = _read_vlc(bits, _TZC_TREES.get(total_coeff, {}))
+            tz = bits.read_code(_TZC_TREES.get(total_coeff, {}))
         else:
-            tz = _read_vlc(bits, _TZ_TREES.get(total_coeff, {}))
+            tz = bits.read_code(_TZ_TREES.get(total_coeff, {}))
         if tz is None:
             return None
     else:
@@ -429,7 +316,7 @@ def _residual_block(
     for i in range(total_coeff - 1):
         if zeros_left == 0:
             break
-        run = _read_vlc(bits, _RB_TREES[min(zeros_left, 7)])
+        run = bits.read_code(_RB_TREES[min(zeros_left, 7)])
         if run is None or run > zeros_left:
             return None
         runs[i] = run
@@ -859,103 +746,44 @@ def _pred_chroma_dc(plane, cy, cx, have_up, have_left) -> None:
 
 
 def parse_sps_decode(rbsp: bytes) -> dict | None:
-    """The SPS fields an intra decoder needs (beyond the r14 geometry
-    parse): sizes, cropping, frame_mbs_only. Refuses scaling
-    matrices, chroma formats other than implicit 4:2:0, and field
-    coding."""
-    b = _Bits(rbsp)
-    profile = b.u(8)
-    b.u(8)  # constraint flags + reserved
-    level = b.u(8)
-    if b.ue() is None:  # sps id
+    """The SPS fields an intra decoder needs, from the one SPS walk
+    (``multimodal.h264_sps_fields``): sizes, cropping, frame_num and
+    POC widths. Refuses (None) what the walk cannot model plus chroma
+    formats other than 4:2:0 and field coding."""
+    from data_ingestion_py_spark.sources.multimodal import h264_sps_fields
+
+    f = h264_sps_fields(rbsp)
+    if f is None or f["chroma_format_idc"] != 1 or not f["frame_mbs_only"]:
         return None
-    if profile in (100, 110, 122, 244, 44, 83, 86, 118, 128):
-        cf = b.ue()
-        if cf != 1:
-            return None  # only 4:2:0
-        if b.ue() is None or b.ue() is None:  # bit depths
-            return None
-        b.u(1)
-        if b.u(1):  # scaling matrices
-            return None
-    log2_max_frame_num = b.ue()
-    if log2_max_frame_num is None:
-        return None
-    poc_type = b.ue()
-    log2_max_poc_lsb = 4
-    if poc_type == 0:
-        v = b.ue()
-        if v is None:
-            return None
-        log2_max_poc_lsb = v + 4
-    elif poc_type == 1:
-        b.u(1)
-        if b.se() is None or b.se() is None:
-            return None
-        n = b.ue()
-        if n is None:
-            return None
-        for _ in range(n):
-            if b.se() is None:
-                return None
-    if b.ue() is None:  # max_num_ref_frames
-        return None
-    b.u(1)
-    w_mbs = b.ue()
-    h_units = b.ue()
-    if w_mbs is None or h_units is None:
-        return None
-    frame_mbs_only = b.u(1)
-    if not frame_mbs_only:
-        return None  # fields/MBAFF: refuse
-    b.u(1)  # direct_8x8
-    crop = (0, 0, 0, 0)
-    if b.u(1):
-        vals = [b.ue() for _ in range(4)]
-        if any(v is None for v in vals):
-            return None
-        crop = tuple(vals)
-    return {
-        "profile_idc": profile,
-        "level_idc": level,
-        "pic_width_in_mbs": w_mbs + 1,
-        "pic_height_in_mbs": h_units + 1,
-        "log2_max_frame_num": log2_max_frame_num + 4,
-        "poc_type": poc_type,
-        "log2_max_poc_lsb": log2_max_poc_lsb,
-        "crop": crop,
-    }
+    return {**f, "pic_height_in_mbs": f["pic_height_in_map_units"]}
 
 
+@none_on_truncation
 def parse_pps_decode(rbsp: bytes) -> dict | None:
     """PPS fields for CAVLC intra decode; CABAC, slice groups, and
-    8x8 transforms refuse."""
-    b = _Bits(rbsp)
-    if b.ue() is None or b.ue() is None:  # pps id, sps id
+    8x8 transforms refuse, and so does an RBSP cut before its stop
+    bit."""
+    b = MsbBits(rbsp)
+    b.ue()  # pps id
+    b.ue()  # sps id
+    if b.read1():  # entropy_coding_mode_flag: CABAC
         return None
-    if b.u(1):  # entropy_coding_mode_flag: CABAC
-        return None
-    b.u(1)  # bottom_field_pic_order
-    ng = b.ue()
-    if ng is None or ng != 0:
+    b.read1()  # bottom_field_pic_order
+    if b.ue() != 0:
         return None  # slice groups: refuse
-    if b.ue() is None or b.ue() is None:  # num_ref_idx defaults
-        return None
-    b.u(1)  # weighted_pred
-    b.u(2)  # weighted_bipred
+    b.ue()  # num_ref_idx_l0_default_active_minus1
+    b.ue()  # num_ref_idx_l1_default_active_minus1
+    b.read1()  # weighted_pred
+    b.read(2)  # weighted_bipred
     qp = b.se()
-    if qp is None:
-        return None
-    if b.se() is None:  # pic_init_qs
-        return None
+    b.se()  # pic_init_qs
     cqo = b.se()
-    if cqo is None:
-        return None
-    dbc = b.u(1)  # deblocking_filter_control_present
-    constrained_intra = b.u(1)
-    if constrained_intra:
+    dbc = b.read1()  # deblocking_filter_control_present
+    if b.read1():  # constrained_intra_pred
         return None  # changes availability rules; refuse for now
-    redundant = b.u(1)
+    redundant = b.read1()
+    if b.rest_is_zero():
+        return None  # no rbsp_stop_one_bit: the RBSP was cut
     return {
         "pic_init_qp": 26 + qp,
         "chroma_qp_offset": cqo,
@@ -964,6 +792,7 @@ def parse_pps_decode(rbsp: bytes) -> dict | None:
     }
 
 
+@none_on_truncation
 def decode_idr_slice(
     sps: dict, pps: dict, slice_rbsp: bytes
 ) -> "tuple[np.ndarray, np.ndarray, np.ndarray] | None":
@@ -973,33 +802,23 @@ def decode_idr_slice(
     malformed bitstream — never guessed pixels."""
     if np is None:  # pragma: no cover
         return None
-    b = _Bits(slice_rbsp)
+    b = MsbBits(slice_rbsp)
     first_mb = b.ue()
     slice_type = b.ue()
     if first_mb != 0 or slice_type not in (2, 7):
         return None  # partial-frame slices / non-I: refuse
-    if b.ue() is None:  # pps id
-        return None
-    if b.u(sps["log2_max_frame_num"]) is None:  # frame_num
-        return None
-    if b.ue() is None:  # idr_pic_id
-        return None
+    b.ue()  # pps id
+    b.read(sps["log2_max_frame_num"])  # frame_num
+    b.ue()  # idr_pic_id
     if sps["poc_type"] == 0:
-        if b.u(sps["log2_max_poc_lsb"]) is None:  # pic_order_cnt_lsb
-            return None
+        b.read(sps["log2_max_poc_lsb"])  # pic_order_cnt_lsb
     # dec_ref_pic_marking for IDR: no_output_of_prior_pics + long_term
-    if b.u(1) is None or b.u(1) is None:
-        return None
+    b.read(2)
     qp_delta = b.se()
-    if qp_delta is None:
-        return None
     if pps["deblock_control"]:
-        dfi = b.ue()
-        if dfi is None:
-            return None
-        if dfi != 1:
-            if b.se() is None or b.se() is None:
-                return None
+        if b.ue() != 1:  # disable_deblocking_filter_idc
+            b.se()  # slice_alpha_c0_offset_div2
+            b.se()  # slice_beta_offset_div2
     qp = pps["pic_init_qp"] + qp_delta
     if not 0 <= qp <= 51:
         return None
@@ -1037,7 +856,7 @@ def decode_idr_slice(
         my_mb, mx_mb = divmod(mb, wmb)
         yy, xx = my_mb * 16, mx_mb * 16
         mb_type = b.ue()
-        if mb_type is None or mb_type > 25:
+        if mb_type > 25:
             return None
 
         def avail(py, px):
@@ -1046,20 +865,14 @@ def decode_idr_slice(
             return blk_done[py >> 2][px >> 2]
 
         if mb_type == 25:  # I_PCM
-            b.byte_align()
+            b.align()
             for r in range(16):
                 for c in range(16):
-                    v = b.u(8)
-                    if v is None:
-                        return None
-                    Y[yy + r][xx + c] = v
+                    Y[yy + r][xx + c] = b.read(8)
             for plane in (Cb, Cr):
                 for r in range(8):
                     for c in range(8):
-                        v = b.u(8)
-                        if v is None:
-                            return None
-                        plane[yy // 2 + r][xx // 2 + c] = v
+                        plane[yy // 2 + r][xx // 2 + c] = b.read(8)
             by, bx = my_mb * 4, mx_mb * 4
             for r in range(4):
                 for c in range(4):
@@ -1075,29 +888,20 @@ def decode_idr_slice(
         if mb_type == 0:  # I_4x4
             modes: list[int] = []
             for blk in range(16):
-                prev = b.u(1)
-                if prev is None:
-                    return None
-                if prev:
+                if b.read1():
                     modes.append(-1)  # use predicted
                 else:
-                    rem = b.u(3)
-                    if rem is None:
-                        return None
-                    modes.append(rem)
+                    modes.append(b.read(3))
             chroma_mode = b.ue()
-            if chroma_mode is None or chroma_mode > 3:
+            if chroma_mode > 3:
                 return None
             cbp_idx = b.ue()
-            if cbp_idx is None or cbp_idx >= 48:
+            if cbp_idx >= 48:
                 return None
             cbp = _CBP_INTRA[cbp_idx]
             cbp_luma, cbp_chroma = cbp & 15, cbp >> 4
             if cbp:
-                d = b.se()
-                if d is None:
-                    return None
-                qp = qp + d
+                qp = qp + b.se()
                 if not 0 <= qp <= 51:
                     return None
             # decode the 16 4x4 blocks in the spec's raster-in-8x8
@@ -1148,12 +952,9 @@ def decode_idr_slice(
             cbp_chroma = (t // 4) % 3
             cbp_luma = 15 if t >= 12 else 0
             chroma_mode = b.ue()
-            if chroma_mode is None or chroma_mode > 3:
+            if chroma_mode > 3:
                 return None
-            d = b.se()
-            if d is None:
-                return None
-            qp = qp + d
+            qp = qp + b.se()
             if not 0 <= qp <= 51:
                 return None
             have_up = avail(yy - 1, xx)
@@ -1269,11 +1070,11 @@ def decode_idr_annexb(payload: bytes) -> dict | None:
     for _i, off, size, ntype, _k in idx["nals"]:
         nal = payload[off : off + size]
         if ntype == 7 and sps is None:
-            sps = parse_sps_decode(ebsp_to_rbsp(nal[1:]))
+            sps = parse_sps_decode(rbsp_unescape(nal[1:]))
         elif ntype == 8 and pps is None:
-            pps = parse_pps_decode(ebsp_to_rbsp(nal[1:]))
+            pps = parse_pps_decode(rbsp_unescape(nal[1:]))
         elif ntype == 5 and idr is None:
-            idr = ebsp_to_rbsp(nal[1:])
+            idr = rbsp_unescape(nal[1:])
     if sps is None or pps is None or idr is None:
         return None
     got = decode_idr_slice(sps, pps, idr)

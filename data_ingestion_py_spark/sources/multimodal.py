@@ -31,6 +31,13 @@ shape — (doc_id, page_number, image_bytes) rows.
 
 from __future__ import annotations
 
+from data_ingestion_py_spark.sources.bits import (
+    MsbBits,
+    Truncated,
+    bounded_decompress,
+    none_on_truncation,
+    rbsp_unescape,
+)
 from data_ingestion_py_spark.sources.spread import spread_for_kernel
 
 import hashlib
@@ -824,7 +831,8 @@ def decode_png_array(
     payload: bytes | None,
 ) -> tuple[int, int, "np.ndarray"] | None:
     """REAL PNG pixel decode with NOTHING but the stdlib — PNG's pixel
-    stream is zlib (RFC 1950/1951, ``zlib.decompress``) under five
+    stream is zlib (RFC 1950/1951, inflated no further than the
+    scanline bytes IHDR implies) under five
     per-scanline byte filters (PNG spec §9): this closes the
     compressed-image seam for the most common format without the
     ``[ingest]`` extras. Returns (width, height, grayscale uint8
@@ -895,10 +903,6 @@ def decode_png_array(
         plte is None or len(plte) % 3 or not 3 <= len(plte) <= 768
     ):
         return None
-    try:
-        raw = zlib.decompress(bytes(idat))
-    except zlib.error:
-        return None
     ch = 1 if color_type == 3 else _PNG_CHANNELS[color_type]
     if bit_depth < 8:
         stride = (w * bit_depth + 7) // 8
@@ -906,6 +910,19 @@ def decode_png_array(
     else:
         stride = w * ch * (bit_depth // 8)
         bpp = ch * (bit_depth // 8)
+    # the filtered scanline bytes IHDR implies: the inflate cap
+    if interlace == 0:
+        need = h * (stride + 1)
+    else:
+        need = sum(
+            ((h - y0 + dy - 1) // dy) * (((w - x0 + dx - 1) // dx) * ch + 1)
+            for x0, y0, dx, dy in _ADAM7_PASSES
+            if w > x0 and h > y0
+        )
+    d = zlib.decompressobj()
+    raw = bounded_decompress(d, idat, need)
+    if raw is None or not d.eof:
+        return None
     if interlace == 0:
         recon = _png_unfilter(raw, stride, h, bpp)
         if recon is None:
@@ -2996,118 +3013,101 @@ def mp4_sample_plan(
 # omit or get wrong).
 
 
-def _rbsp_unescape(data: bytes) -> bytes:
-    """Strip H.264 emulation-prevention bytes (00 00 03 -> 00 00,
-    ISO 14496-10 §7.4.1.1) from a NAL payload."""
-    out = bytearray()
-    i, n = 0, len(data)
-    while i < n:
-        if i + 2 < n and data[i] == 0 and data[i + 1] == 0 and data[i + 2] == 3:
-            out += b"\x00\x00"
-            i += 3
-        else:
-            out.append(data[i])
-            i += 1
-    return bytes(out)
-
-
-class _H264Bits:
-    """MSB-first bit reader with the Exp-Golomb codes SPS parsing
-    needs. Raises ValueError past end — callers catch and refuse."""
-
-    def __init__(self, data: bytes):
-        self.d = data
-        self.pos = 0
-        self.n = len(data) * 8
-
-    def u(self, nbits: int) -> int:
-        if self.pos + nbits > self.n:
-            raise ValueError("sps truncated")
-        v = 0
-        for _ in range(nbits):
-            byte = self.d[self.pos >> 3]
-            v = (v << 1) | ((byte >> (7 - (self.pos & 7))) & 1)
-            self.pos += 1
-        return v
-
-    def ue(self) -> int:
-        zeros = 0
-        while self.u(1) == 0:
-            zeros += 1
-            if zeros > 31:
-                raise ValueError("bad exp-golomb")
-        return (1 << zeros) - 1 + (self.u(zeros) if zeros else 0)
-
-    def se(self) -> int:
-        k = self.ue()
-        return (k + 1) // 2 if k % 2 else -(k // 2)
+@none_on_truncation
+def h264_sps_fields(rbsp: bytes) -> dict | None:
+    """The one SPS syntax walk (ISO 14496-10 §7.3.2.1) over an RBSP
+    (NAL header stripped, emulation prevention removed) → every field
+    its two views use: ``h264_sps_params`` (planning geometry) and
+    ``h264_decode.parse_sps_decode`` (the intra decoder's refusals).
+    None for truncated bits — an RBSP with no 1 bit left after the
+    cropping fields lost its VUI flag or stop bit — or a scaling
+    matrix, which this walk doesn't model."""
+    b = MsbBits(rbsp)
+    profile_idc = b.read(8)
+    b.read(8)  # constraint flags + reserved
+    level_idc = b.read(8)
+    b.ue()  # seq_parameter_set_id
+    chroma_format_idc = 1
+    if profile_idc in (
+        100, 110, 122, 244, 44, 83, 86, 118, 128, 138, 139, 134, 135
+    ):
+        chroma_format_idc = b.ue()
+        if chroma_format_idc == 3:
+            b.read1()  # separate_colour_plane_flag
+        b.ue()  # bit_depth_luma_minus8
+        b.ue()  # bit_depth_chroma_minus8
+        b.read1()  # qpprime_y_zero_transform_bypass
+        if b.read1():  # seq_scaling_matrix_present
+            return None  # scaling lists: honest seam (rare)
+    log2_max_frame_num = b.ue() + 4
+    poc_type = b.ue()
+    log2_max_poc_lsb = 4
+    if poc_type == 0:
+        log2_max_poc_lsb = b.ue() + 4
+    elif poc_type == 1:
+        b.read1()
+        b.se()
+        b.se()
+        for _ in range(b.ue()):
+            b.se()
+    b.ue()  # max_num_ref_frames
+    b.read1()  # gaps_in_frame_num_value_allowed
+    w_mbs = b.ue() + 1
+    h_units = b.ue() + 1
+    frame_mbs_only = b.read1()
+    if not frame_mbs_only:
+        b.read1()  # mb_adaptive_frame_field
+    b.read1()  # direct_8x8_inference
+    crop = (0, 0, 0, 0)
+    if b.read1():  # frame_cropping_flag
+        crop = (b.ue(), b.ue(), b.ue(), b.ue())
+    if b.rest_is_zero():
+        return None
+    return {
+        "profile_idc": profile_idc,
+        "level_idc": level_idc,
+        "chroma_format_idc": chroma_format_idc,
+        "log2_max_frame_num": log2_max_frame_num,
+        "poc_type": poc_type,
+        "log2_max_poc_lsb": log2_max_poc_lsb,
+        "pic_width_in_mbs": w_mbs,
+        "pic_height_in_map_units": h_units,
+        "frame_mbs_only": frame_mbs_only,
+        "crop": crop,
+    }
 
 
 def h264_sps_params(sps_nal: bytes) -> dict | None:
     """Parse an SPS NAL unit (header byte + RBSP) → ``{"profile_idc",
     "level_idc", "width", "height"}`` per ISO 14496-10 §7.3.2.1:
-    Exp-Golomb geometry fields, frame_mbs_only handling, and frame
-    cropping (4:2:0 / 4:2:2 / 4:4:4 crop units). None for truncated
-    bits or the scaling-matrix shapes this walk doesn't model —
-    honest absence, never guessed geometry."""
+    Exp-Golomb geometry fields (``h264_sps_fields``), frame_mbs_only
+    handling, and frame cropping (4:2:0 / 4:2:2 / 4:4:4 crop units).
+    None for truncated bits or the scaling-matrix shapes the walk
+    doesn't model — honest absence, never guessed geometry."""
     if not sps_nal or (sps_nal[0] & 0x1F) != 7:
         return None
-    b = _H264Bits(_rbsp_unescape(sps_nal[1:]))
-    try:
-        profile_idc = b.u(8)
-        b.u(8)  # constraint flags + reserved
-        level_idc = b.u(8)
-        b.ue()  # seq_parameter_set_id
-        chroma_format_idc = 1
-        if profile_idc in (
-            100, 110, 122, 244, 44, 83, 86, 118, 128, 138, 139, 134, 135
-        ):
-            chroma_format_idc = b.ue()
-            if chroma_format_idc == 3:
-                b.u(1)  # separate_colour_plane_flag
-            b.ue()  # bit_depth_luma_minus8
-            b.ue()  # bit_depth_chroma_minus8
-            b.u(1)  # qpprime_y_zero_transform_bypass
-            if b.u(1):  # seq_scaling_matrix_present
-                return None  # scaling lists: honest seam (rare)
-        b.ue()  # log2_max_frame_num_minus4
-        poc_type = b.ue()
-        if poc_type == 0:
-            b.ue()
-        elif poc_type == 1:
-            b.u(1)
-            b.se()
-            b.se()
-            for _ in range(b.ue()):
-                b.se()
-        b.ue()  # max_num_ref_frames
-        b.u(1)  # gaps_in_frame_num_value_allowed
-        w_mbs = b.ue() + 1
-        h_units = b.ue() + 1
-        frame_mbs_only = b.u(1)
-        if not frame_mbs_only:
-            b.u(1)  # mb_adaptive_frame_field
-        b.u(1)  # direct_8x8_inference
-        crop_l = crop_r = crop_t = crop_b = 0
-        if b.u(1):  # frame_cropping_flag
-            crop_l, crop_r, crop_t, crop_b = (
-                b.ue(), b.ue(), b.ue(), b.ue()
-            )
-    except ValueError:
+    f = h264_sps_fields(rbsp_unescape(sps_nal[1:]))
+    if f is None:
         return None
     # crop units per chroma format (§7.4.2.1.1): SubWidthC/SubHeightC
     # are 2/2 for 4:2:0, 2/1 for 4:2:2, 1/1 for 4:4:4 and monochrome
+    chroma_format_idc = f["chroma_format_idc"]
+    frame_mbs_only = f["frame_mbs_only"]
+    crop_l, crop_r, crop_t, crop_b = f["crop"]
     sub_w = 2 if chroma_format_idc in (1, 2) else 1
     sub_h = 2 if chroma_format_idc == 1 else 1
     cux = sub_w
     cuy = sub_h * (2 - frame_mbs_only)
-    width = w_mbs * 16 - (crop_l + crop_r) * cux
-    height = (2 - frame_mbs_only) * h_units * 16 - (crop_t + crop_b) * cuy
+    width = f["pic_width_in_mbs"] * 16 - (crop_l + crop_r) * cux
+    height = (
+        (2 - frame_mbs_only) * f["pic_height_in_map_units"] * 16
+        - (crop_t + crop_b) * cuy
+    )
     if width <= 0 or height <= 0:
         return None
     return {
-        "profile_idc": profile_idc,
-        "level_idc": level_idc,
+        "profile_idc": f["profile_idc"],
+        "level_idc": f["level_idc"],
         "width": width,
         "height": height,
     }
@@ -3919,54 +3919,6 @@ def decode_wav_samples(
     return None
 
 
-class _Bits:
-    """MSB-first bit reader over bytes — the shared primitive of the
-    FLAC frame decoder (subframe headers, Rice residuals). ``read``
-    pulls n bits as an unsigned int; ``unary`` counts 0-bits up to the
-    terminating 1 (the Rice quotient). Raises IndexError past the end —
-    callers translate truncation into honest None."""
-
-    __slots__ = ("data", "pos")
-
-    def __init__(self, data: bytes, pos: int = 0) -> None:
-        self.data = data
-        self.pos = pos  # in bits
-
-    def read(self, n: int) -> int:
-        p = self.pos
-        end = p + n
-        if end > len(self.data) * 8:
-            raise IndexError("bitstream truncated")
-        self.pos = end
-        chunk = int.from_bytes(self.data[p // 8 : (end + 7) // 8], "big")
-        return (chunk >> ((-end) % 8)) & ((1 << n) - 1)
-
-    def read_signed(self, n: int) -> int:
-        v = self.read(n)
-        return v - (1 << n) if v >> (n - 1) else v
-
-    def unary(self) -> int:
-        data, p = self.data, self.pos
-        nbits = len(data) * 8
-        q = 0
-        # byte-at-a-time: skip whole zero bytes, then bit_length for
-        # the position of the leading 1 — no per-bit loop
-        while p < nbits:
-            cur = data[p // 8] & (0xFF >> (p % 8))
-            if cur == 0:
-                q += 8 - (p % 8)
-                p += 8 - (p % 8)
-                continue
-            lead = 8 - cur.bit_length()  # zeros before the 1 in this byte
-            q += lead - (p % 8)
-            self.pos = (p // 8) * 8 + lead + 1
-            return q
-        raise IndexError("bitstream truncated")
-
-    def align(self) -> None:
-        self.pos = (self.pos + 7) & ~7
-
-
 def _crc8_flac(data: bytes) -> int:
     """CRC-8 poly 0x07, init 0 (FLAC frame-header CRC; check value of
     b'123456789' is 0xF4 — pinned in tests)."""
@@ -4046,7 +3998,7 @@ def decode_flac_samples(
     out: list[int] = []
     while i < n and (total == 0 or len(out) < total):
         frame_start = i
-        bits_r = _Bits(payload, i * 8)
+        bits_r = MsbBits(payload, i * 8)
         try:
             if bits_r.read(14) != 0x3FFE or bits_r.read(1):
                 return None
@@ -4098,6 +4050,8 @@ def decode_flac_samples(
             wasted = 0
             if bits_r.read(1):
                 wasted = bits_r.unary() + 1
+                if wasted >= 16:
+                    return None  # no sample bits left
             bps = 16 - wasted
             if sf_type == 0:  # CONSTANT
                 samples = [bits_r.read_signed(bps)] * blocksize
@@ -4135,7 +4089,7 @@ def decode_flac_samples(
             crc_end = bits_r.pos // 8
             if _crc16_flac(payload[frame_start:crc_end]) != bits_r.read(16):
                 return None
-        except IndexError:
+        except Truncated:
             return None
         if any(s < -32768 or s > 32767 for s in samples):
             return None  # corrupt stream: escaped the sample range
@@ -4149,7 +4103,7 @@ def decode_flac_samples(
 
 
 def _flac_residual(
-    bits_r: _Bits, blocksize: int, order: int
+    bits_r: MsbBits, blocksize: int, order: int
 ) -> list[int] | None:
     """Rice-coded residual section (RFC 9639 §9.2.7): 2-bit method
     selects 4- or 5-bit Rice parameters, 4-bit partition order splits

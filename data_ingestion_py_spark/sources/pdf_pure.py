@@ -48,6 +48,8 @@ from __future__ import annotations
 import re
 import zlib
 
+from data_ingestion_py_spark.sources.bits import bounded_decompress
+
 _OBJ_RE = re.compile(rb"(\d{1,10})\s+(\d{1,5})\s+obj\b")
 _TRAILER_RE = re.compile(rb"trailer\b")
 _WS = b"\x00\t\n\x0c\r "
@@ -225,17 +227,6 @@ def _parse_value(buf: bytes, i: int, depth: int = 0):
         if buf[i : i + ln] == lit:
             return val, i + ln
     raise ValueError(f"bad token at {i}")
-
-
-def _inflate(raw: bytes) -> bytes | None:
-    try:
-        d = zlib.decompressobj()
-        out = d.decompress(raw, _MAX_INFLATE)
-        if d.unconsumed_tail:  # bomb cap hit
-            return None
-        return out
-    except zlib.error:
-        return None
 
 
 # PDF 32000-1 §7.6.3.3 Algorithm 2 password padding string
@@ -906,7 +897,7 @@ class _PdfDoc:
         if name == "/FlateDecode":
             if parms is not None and not isinstance(parms, dict):
                 return None
-            out = _inflate(data)
+            out = bounded_decompress(zlib.decompressobj(), data, _MAX_INFLATE)
             if out is None:
                 return None
             return self._unpredict(out, parms)

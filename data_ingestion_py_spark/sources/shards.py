@@ -53,6 +53,8 @@ from typing import TYPE_CHECKING
 
 from pyspark.sql import types as T
 
+from data_ingestion_py_spark.sources.bits import decompress_members
+
 if TYPE_CHECKING:  # pragma: no cover
     import pandas as pd
     from pyspark.sql import DataFrame
@@ -724,10 +726,11 @@ def decompress_auto(
     payload: bytes | None,
     max_content_bytes: int = 1 << 26,
 ) -> bytes | None:
-    """Sniff + decompress a whole shard. gzip walks EVERY member (the
-    jsonl.gz-of-concatenated-members layout, same trailer-verifying loop
-    as warc_gz_members); bz2/xz via stdlib; zstd/lz4 via the frame
-    kernels above; 'raw' passes through. Undecodable → None."""
+    """Sniff + decompress a whole shard. gzip / bz2 / xz walk EVERY
+    member or stream (the jsonl.gz-of-concatenated-members layout) via
+    ``bits.decompress_members``, which stops one byte past
+    ``max_content_bytes``; zstd/lz4 via the frame kernels above; 'raw'
+    passes through. Undecodable or over the cap → None."""
     codec = sniff_compression(payload)
     if codec is None:
         return None
@@ -737,38 +740,21 @@ def decompress_auto(
     if codec == "gzip":
         import zlib
 
-        out = bytearray()
-        i, n = 0, len(payload)
-        while i < n:
-            if not payload.startswith(b"\x1f\x8b", i):
-                return None
-            d = zlib.decompressobj(31)
-            try:
-                out += d.decompress(
-                    payload[i:], max_content_bytes + 1 - len(out)
-                )
-            except zlib.error:
-                return None
-            if not d.eof or len(out) > max_content_bytes:
-                return None
-            i = n - len(d.unused_data)
-        return bytes(out)
+        return decompress_members(
+            lambda: zlib.decompressobj(31), payload, max_content_bytes
+        )
     if codec == "bz2":
         import bz2
 
-        try:
-            data = bz2.decompress(payload)
-        except (OSError, ValueError):
-            return None
-        return data if len(data) <= max_content_bytes else None
+        return decompress_members(
+            bz2.BZ2Decompressor, payload, max_content_bytes
+        )
     if codec == "xz":
         import lzma
 
-        try:
-            data = lzma.decompress(payload)
-        except lzma.LZMAError:
-            return None
-        return data if len(data) <= max_content_bytes else None
+        return decompress_members(
+            lzma.LZMADecompressor, payload, max_content_bytes
+        )
     if codec == "zstd":
         return zstd_decompress_all(payload, max_content_bytes)
     frames = lz4_frames(payload)

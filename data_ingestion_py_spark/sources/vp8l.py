@@ -50,29 +50,7 @@ from __future__ import annotations
 
 import numpy as np
 
-# ---------------------------------------------------------------------------
-# Bit reader — LSB-first within and across bytes (VP8L convention)
-# ---------------------------------------------------------------------------
-
-
-class _Bits:
-    __slots__ = ("data", "pos", "n")
-
-    def __init__(self, data: bytes) -> None:
-        self.data = data
-        self.pos = 0
-        self.n = len(data) * 8
-
-    def read(self, nbits: int) -> int | None:
-        if self.pos + nbits > self.n:
-            return None
-        v = 0
-        p = self.pos
-        for k in range(nbits):
-            v |= ((self.data[(p + k) >> 3] >> ((p + k) & 7)) & 1) << k
-        self.pos = p + nbits
-        return v
-
+from data_ingestion_py_spark.sources.bits import LsbBits, none_on_truncation
 
 # ---------------------------------------------------------------------------
 # Canonical prefix codes (DEFLATE convention, max length 15)
@@ -120,15 +98,12 @@ class _Prefix:
             return len(used) == 1
         return sum(1 << (15 - l) for l in used) == 1 << 15
 
-    def decode(self, bits: _Bits) -> int | None:
+    def decode(self, bits: LsbBits) -> int | None:
         if self.single is not None:
             return self.single
         code = 0
         for l in range(1, len(self.count)):
-            b = bits.read(1)
-            if b is None:
-                return None
-            code = (code << 1) | b
+            code = (code << 1) | bits.read1()
             idx = code - self.first[l]
             if 0 <= idx < self.count[l]:
                 return self.syms_at[l][idx]
@@ -138,52 +113,29 @@ class _Prefix:
 _CLC_ORDER = (17, 18, 0, 1, 2, 3, 4, 5, 6, 7, 8, 9, 10, 11, 12, 13, 14, 15, 16)
 
 
-def _read_prefix_code(bits: _Bits, alphabet: int) -> _Prefix | None:
-    simple = bits.read(1)
-    if simple is None:
-        return None
+def _read_prefix_code(bits: LsbBits, alphabet: int) -> _Prefix | None:
     lengths = [0] * alphabet
-    if simple:
-        two = bits.read(1)
-        if two is None:
-            return None
-        first_8 = bits.read(1)
-        if first_8 is None:
-            return None
-        s0 = bits.read(8 if first_8 else 1)
-        if s0 is None or s0 >= alphabet:
+    if bits.read1():  # simple code
+        two = bits.read1()
+        s0 = bits.read(8 if bits.read1() else 1)
+        if s0 >= alphabet:
             return None
         lengths[s0] = 1
         if two:
             s1 = bits.read(8)
-            if s1 is None or s1 >= alphabet or s1 == s0:
+            if s1 >= alphabet or s1 == s0:
                 return None
             lengths[s1] = 1
         return _Prefix(lengths)
-    ncl = bits.read(4)
-    if ncl is None:
-        return None
-    ncl += 4
+    ncl = bits.read(4) + 4
     cl_lengths = [0] * 19
     for i in range(ncl):
-        v = bits.read(3)
-        if v is None:
-            return None
-        cl_lengths[_CLC_ORDER[i]] = v
+        cl_lengths[_CLC_ORDER[i]] = bits.read(3)
     if not _Prefix.complete(cl_lengths):
         return None
     cl = _Prefix(cl_lengths)
-    use_max = bits.read(1)
-    if use_max is None:
-        return None
-    if use_max:
-        nb = bits.read(3)
-        if nb is None:
-            return None
-        ms = bits.read(2 + 2 * nb)
-        if ms is None:
-            return None
-        max_symbol = 2 + ms
+    if bits.read1():  # use max_symbol
+        max_symbol = 2 + bits.read(2 + 2 * bits.read(3))
     else:
         max_symbol = alphabet
     sym = 0
@@ -202,19 +154,19 @@ def _read_prefix_code(bits: _Bits, alphabet: int) -> _Prefix | None:
                 prev = s
         elif s == 16:
             r = bits.read(2)
-            if r is None or sym + r + 3 > alphabet:
+            if sym + r + 3 > alphabet:
                 return None
             for _ in range(3 + r):
                 lengths[sym] = prev
                 sym += 1
         elif s == 17:
             r = bits.read(3)
-            if r is None or sym + r + 3 > alphabet:
+            if sym + r + 3 > alphabet:
                 return None
             sym += 3 + r
         else:  # 18
             r = bits.read(7)
-            if r is None or sym + r + 11 > alphabet:
+            if sym + r + 11 > alphabet:
                 return None
             sym += 11 + r
     if not _Prefix.complete(lengths):
@@ -227,16 +179,13 @@ def _read_prefix_code(bits: _Bits, alphabet: int) -> _Prefix | None:
 # ---------------------------------------------------------------------------
 
 
-def _lz77_value(bits: _Bits, code: int) -> int | None:
+def _lz77_value(bits: LsbBits, code: int) -> int:
     """Length/distance prefix decoding: codes 0-3 are 1-4; above that,
     ``(2 + (code&1)) << extra`` plus ``extra`` literal bits plus 1."""
     if code < 4:
         return code + 1
     extra = (code - 2) >> 1
-    lo = bits.read(extra)
-    if lo is None:
-        return None
-    return ((2 + (code & 1)) << extra) + lo + 1
+    return ((2 + (code & 1)) << extra) + bits.read(extra) + 1
 
 
 def _plane_code_offsets() -> list[tuple[int, int]]:
@@ -274,7 +223,7 @@ _GREEN_BASE = 256 + 24
 
 
 def _decode_pixels(
-    bits: _Bits,
+    bits: LsbBits,
     w: int,
     h: int,
     groups: list[list[_Prefix]],
@@ -309,15 +258,10 @@ def _decode_pixels(
                 cache[(0x1E35A7BD * px & 0xFFFFFFFF) >> (32 - cache_bits)] = px
         elif s < _GREEN_BASE:
             length = _lz77_value(bits, s - 256)
-            if length is None:
-                return None
             dcode = g[4].decode(bits)
             if dcode is None:
                 return None
-            dval = _lz77_value(bits, dcode)
-            if dval is None:
-                return None
-            dist = _distance(dval, w)
+            dist = _distance(_lz77_value(bits, dcode), w)
             if dist > len(out) or len(out) + length > npix:
                 return None
             base = len(out) - dist
@@ -336,7 +280,7 @@ def _decode_pixels(
 
 
 def _decode_image_stream(
-    bits: _Bits,
+    bits: LsbBits,
     w: int,
     h: int,
     level0: bool,
@@ -350,23 +294,15 @@ def _decode_image_stream(
     xsize = w
     if level0:
         seen = set()
-        while True:
-            t = bits.read(1)
-            if t is None:
-                return None
-            if not t:
-                break
+        while bits.read1():
             ttype = bits.read(2)
-            if ttype is None or ttype in seen:
+            if ttype in seen:
                 return None
             seen.add(ttype)
             if ttype == 2:  # SUBTRACT_GREEN
                 transforms.append((2,))
             elif ttype in (0, 1):  # PREDICTOR / COLOR
-                sb = bits.read(3)
-                if sb is None:
-                    return None
-                size_bits = sb + 2
+                size_bits = bits.read(3) + 2
                 tw = (xsize + (1 << size_bits) - 1) >> size_bits
                 th = (h + (1 << size_bits) - 1) >> size_bits
                 sub = _decode_image_stream(bits, tw, th, False, max_pixels)
@@ -374,10 +310,7 @@ def _decode_image_stream(
                     return None
                 transforms.append((ttype, size_bits, tw, sub[0], xsize))
             else:  # COLOR_INDEXING
-                nc = bits.read(8)
-                if nc is None:
-                    return None
-                num_colors = nc + 1
+                num_colors = bits.read(8) + 1
                 pal = _decode_image_stream(
                     bits, num_colors, 1, False, max_pixels
                 )
@@ -405,25 +338,16 @@ def _decode_image_stream(
                     wb = 3
                 transforms.append((3, wb, xsize, entries))
                 xsize = (xsize + (1 << wb) - 1) >> wb
-    cc = bits.read(1)
-    if cc is None:
-        return None
     cache_bits = 0
-    if cc:
+    if bits.read1():
         cache_bits = bits.read(4)
-        if cache_bits is None or not 1 <= cache_bits <= 11:
+        if not 1 <= cache_bits <= 11:
             return None
     meta = None
     n_groups = 1
     if level0:
-        mp = bits.read(1)
-        if mp is None:
-            return None
-        if mp:
-            pb3 = bits.read(3)
-            if pb3 is None:
-                return None
-            pb = pb3 + 2
+        if bits.read1():
+            pb = bits.read(3) + 2
             ew = (xsize + (1 << pb) - 1) >> pb
             eh = (h + (1 << pb) - 1) >> pb
             sub = _decode_image_stream(bits, ew, eh, False, max_pixels)
@@ -615,6 +539,7 @@ def _apply_color_indexing_inverse(
 # ---------------------------------------------------------------------------
 
 
+@none_on_truncation
 def decode_vp8l_pixels(
     chunk: bytes, max_pixels: int = 1 << 24
 ) -> tuple[int, int, list[int]] | None:
@@ -622,18 +547,11 @@ def decode_vp8l_pixels(
     into (width, height, ARGB row-major list)."""
     if len(chunk) < 5 or chunk[0] != 0x2F:
         return None
-    bits = _Bits(chunk)
-    bits.pos = 8
-    w = bits.read(14)
-    h = bits.read(14)
-    if w is None or h is None:
-        return None
-    w += 1
-    h += 1
-    if bits.read(1) is None:  # alpha hint
-        return None
-    ver = bits.read(3)
-    if ver is None or ver != 0:
+    bits = LsbBits(chunk, 8)
+    w = bits.read(14) + 1
+    h = bits.read(14) + 1
+    bits.read1()  # alpha hint
+    if bits.read(3) != 0:  # version
         return None
     got = _decode_image_stream(bits, w, h, True, max_pixels)
     if got is None:

@@ -26,6 +26,8 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import types as T
 
+from data_ingestion_py_spark.sources.bits import bounded_decompress
+
 WARC_RECORD_SCHEMA = T.StructType(
     [
         T.StructField("media_id", T.LongType(), False),
@@ -156,12 +158,11 @@ def warc_gz_members(
         ):
             break
         d = zlib.decompressobj(31)
-        try:
-            data = d.decompress(payload[i:], max_member_bytes + 1)
-        except zlib.error:
-            break  # corrupt stream / CRC / ISIZE: keep verified prefix
-        if not d.eof or len(data) > max_member_bytes:
-            break  # truncated tail member, or zip-bomb guard tripped
+        data = bounded_decompress(d, payload[i:], max_member_bytes)
+        if data is None or not d.eof:
+            # corrupt stream / CRC / ISIZE, truncated tail member, or
+            # zip-bomb guard tripped: keep the verified prefix
+            break
         comp = (n - i) - len(d.unused_data)
         recs = warc_records(data, max_records=1)
         wtype, uri, clen = recs[0][:3] if recs else (None, None, None)

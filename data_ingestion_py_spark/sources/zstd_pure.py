@@ -38,6 +38,8 @@ guess.
 
 from __future__ import annotations
 
+from data_ingestion_py_spark.sources.bits import LsbBits, none_on_truncation
+
 # ---------------------------------------------------------------------------
 # Predefined sequence distributions (RFC 8878 §3.1.1.3.2.2)
 # ---------------------------------------------------------------------------
@@ -143,30 +145,6 @@ class _RevBits:
         return got, True
 
 
-class _FwdBits:
-    """Forward LSB-first reader (FSE table headers)."""
-
-    __slots__ = ("data", "pos", "n")
-
-    def __init__(self, data: bytes, start: int) -> None:
-        self.data = data
-        self.pos = start * 8
-        self.n = len(data) * 8
-
-    def read(self, nbits: int) -> int | None:
-        if self.pos + nbits > self.n:
-            return None
-        v = 0
-        for k in range(nbits):
-            p = self.pos + k
-            v |= ((self.data[p >> 3] >> (p & 7)) & 1) << k
-        self.pos += nbits
-        return v
-
-    def byte_pos(self) -> int:
-        return (self.pos + 7) // 8
-
-
 # ---------------------------------------------------------------------------
 # FSE
 # ---------------------------------------------------------------------------
@@ -219,16 +197,14 @@ class _FseTable:
         return t
 
 
+@none_on_truncation
 def _parse_fse_header(
     data: bytes, start: int, max_al: int, max_symbols: int
 ) -> tuple[list[int], int, int] | None:
     """Normalized-count parse (RFC 8878 §4.1.1) → (norm, accuracy_log,
     next_byte_offset)."""
-    bits = _FwdBits(data, start)
-    low = bits.read(4)
-    if low is None:
-        return None
-    al = low + 5
+    bits = LsbBits(data, start * 8)
+    al = bits.read(4) + 5
     if al > max_al:
         return None
     remaining = (1 << al) + 1
@@ -243,8 +219,6 @@ def _parse_fse_header(
             # 2-bit repeat flags: 3 means "3 more zeros, read again"
             while True:
                 rep = bits.read(2)
-                if rep is None:
-                    return None
                 norm.extend([0] * rep if rep < 3 else [0, 0, 0])
                 if rep < 3:
                     break
@@ -254,15 +228,10 @@ def _parse_fse_header(
             continue
         maxv = (2 * threshold - 1) - remaining
         small = bits.read(nbits - 1)
-        if small is None:
-            return None
         if small < maxv:
             count = small
         else:
-            extra = bits.read(1)
-            if extra is None:
-                return None
-            count = small + (extra << (nbits - 1))
+            count = small + (bits.read1() << (nbits - 1))
             if count >= threshold:
                 count -= maxv
         count -= 1  # stored value is prob+1; 0 → "-1" (low prob)
@@ -274,7 +243,7 @@ def _parse_fse_header(
             threshold >>= 1
     if remaining != 1 or len(norm) > max_symbols:
         return None
-    return norm, al, bits.byte_pos()
+    return norm, al, (bits.pos + 7) // 8
 
 
 def _fse_decompress_weights(

@@ -283,3 +283,13 @@ def test_flac_flows_through_audio_dispatch_and_stats():
     assert n == 48
     assert peak == max(abs(x) for x in s)
     assert energy == sum(x * x for x in s)
+
+
+def test_flac_wasted_bits_leaving_no_sample_bits_refuse():
+    """A subframe whose wasted-bits count takes all 16 sample bits is
+    corrupt: None, not an exception from a zero-width read."""
+    s = [0] * 16
+    assert decode_flac_samples(
+        _streaminfo(8000, 16) + _frame(s, 0, "verbatim", wasted=16)
+    ) is None
+    _check([_frame(s, 0, "verbatim", wasted=15)], s)

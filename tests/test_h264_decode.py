@@ -12,6 +12,8 @@ import random
 
 import numpy as np
 
+from data_ingestion_py_spark.sources.bits import MsbBits as _Bits
+from data_ingestion_py_spark.sources.bits import rbsp_unescape
 from data_ingestion_py_spark.sources.h264_decode import (
     _CBP_INTRA,
     _COEFF_TOKEN,
@@ -19,10 +21,8 @@ from data_ingestion_py_spark.sources.h264_decode import (
     _TOTAL_ZEROS,
     _TOTAL_ZEROS_CDC,
     _ZIGZAG,
-    _Bits,
     _residual_block,
     decode_idr_annexb,
-    ebsp_to_rbsp,
 )
 
 # ---------------------------------------------------------------- writer
@@ -658,3 +658,71 @@ def test_qp_variation_and_chroma_offset():
             rec[bry*4:bry*4+4, brx*4:brx*4+4] = np.clip(
                 pred[bry*4:bry*4+4, brx*4:brx*4+4] + res, 0, 255)
         assert (got["y"][:, 16:] == rec.astype(np.uint8)).all(), qp
+
+
+def test_truncated_parameter_sets_refuse():
+    """Every proper prefix of an SPS or PPS RBSP refuses (None) — a cut
+    inside a field, or one that drops only the stop bit, which would
+    otherwise read its remaining flags as absent — while the whole
+    NAL still parses."""
+    from data_ingestion_py_spark.sources.h264_decode import (
+        parse_pps_decode,
+        parse_sps_decode,
+    )
+
+    for nal, parse in (
+        (make_sps(1, 2), parse_sps_decode),  # stop bit alone in byte 6
+        (make_sps(2, 2), parse_sps_decode),
+        (make_sps(20, 15), parse_sps_decode),
+        (make_pps(), parse_pps_decode),
+        (make_pps(qp=30, chroma_qp_offset=-2), parse_pps_decode),
+    ):
+        rbsp = rbsp_unescape(nal[1:])
+        assert parse(rbsp) is not None
+        for k in range(len(rbsp)):
+            assert parse(rbsp[:k]) is None, (nal, k)
+
+
+def _sps_high(profile: int, wmb: int, hmb: int) -> bytes:
+    b = _BW()
+    b.u(profile, 8)
+    b.u(0, 8)
+    b.u(30, 8)
+    b.ue(0)
+    b.ue(1)  # chroma_format_idc 4:2:0
+    b.ue(0)  # bit_depth_luma_minus8
+    b.ue(0)  # bit_depth_chroma_minus8
+    b.u(0, 1)  # qpprime_y_zero_transform_bypass
+    b.u(0, 1)  # no scaling matrices
+    b.ue(0)
+    b.ue(0)
+    b.ue(0)
+    b.ue(1)
+    b.u(0, 1)
+    b.ue(wmb - 1)
+    b.ue(hmb - 1)
+    b.u(1, 1)  # frame_mbs_only
+    b.u(0, 1)
+    b.u(0, 1)  # no crop
+    b.u(0, 1)  # no vui
+    b.rbsp_trailing()
+    return b"\x67" + rbsp_to_ebsp(b.bytes())
+
+
+def test_sps_views_agree_on_every_listed_high_profile():
+    """Both SPS views read the one walk: a 4:2:0 SPS of every profile
+    that carries chroma_format_idc (including 138/139/134/135) is 320×240
+    to the planner and 20×15 macroblocks to the decoder."""
+    from data_ingestion_py_spark.sources.h264_decode import parse_sps_decode
+    from data_ingestion_py_spark.sources.multimodal import h264_sps_params
+
+    for profile in (100, 110, 122, 244, 44, 83, 86, 118, 128, 138, 139,
+                    134, 135):
+        nal = _sps_high(profile, 20, 15)
+        params = h264_sps_params(nal)
+        dec = parse_sps_decode(rbsp_unescape(nal[1:]))
+        assert params is not None and dec is not None, profile
+        assert (params["width"], params["height"]) == (320, 240)
+        assert (dec["pic_width_in_mbs"] * 16,
+                dec["pic_height_in_mbs"] * 16) == (320, 240)
+        assert params["profile_idc"] == dec["profile_idc"] == profile

@@ -107,3 +107,47 @@ def test_directory_keeps_inference(spark, tmp_path):
     df = io.load_table(spark, str(tmp_path), "docs")
     assert df.schema == spark.read.parquet(str(out)).schema
     assert "lang" in df.columns
+
+
+def test_inference_fallback_restores_nanos_as_long(spark, tmp_path):
+    """A single file the footer schema cannot map (an unsigned column)
+    that also holds a TIMESTAMP(NANOS) column takes the inference
+    fallback: nanosAsLong is set around the inference call only, so the
+    session conf is the same after load_table as before, and the nanos
+    column still comes back as the microsecond timestamps."""
+    micros = pa.array([1_600_000_000_000_001, None], pa.timestamp("us"))
+    t = pa.table(
+        {
+            "u": pa.array([1, 2], pa.uint32()),
+            "ts": micros.cast(pa.timestamp("ns")),
+        }
+    )
+    pq.write_table(t, tmp_path / "mixed.parquet")
+    pq.write_table(
+        pa.table({"u": pa.array([1, 2], pa.int64()), "ts": micros}),
+        tmp_path / "want.parquet",
+    )
+    assert io._footer_schema(spark, str(tmp_path / "mixed.parquet")) == (
+        None,
+        ["ts"],
+    )
+    key = "spark.sql.legacy.parquet.nanosAsLong"
+    before = spark.conf.get(key, None)
+    try:
+        for prior in (None, "false"):
+            if prior is None:
+                spark.conf.unset(key)
+            else:
+                spark.conf.set(key, prior)
+            df = io.load_table(spark, str(tmp_path), "mixed")
+            assert spark.conf.get(key, None) == prior
+            want = io.load_table(spark, str(tmp_path), "want")
+            assert df.schema == want.schema
+            assert sorted(df.collect(), key=str) == sorted(
+                want.collect(), key=str
+            )
+    finally:
+        if before is None:
+            spark.conf.unset(key)
+        else:
+            spark.conf.set(key, before)
