@@ -60,8 +60,15 @@ def num_exchanges(df: DataFrame) -> int:
 
 
 def uses_python_eval(df: DataFrame) -> bool:
+    """Any Python evaluation node: row-at-a-time or Arrow UDFs, and the
+    Arrow batch stages (``mapInPandas`` / ``mapInArrow``)."""
     plan = executed_plan(df)
-    return "BatchEvalPython" in plan or "ArrowEvalPython" in plan
+    return any(
+        op in plan
+        for op in (
+            "BatchEvalPython", "ArrowEvalPython", "MapInPandas", "MapInArrow"
+        )
+    )
 
 
 def codegen_stage_count(df: DataFrame) -> int:
@@ -110,12 +117,15 @@ def single_partition_windows(df: DataFrame) -> int:
 def _node_children(node):
     """Children of an executed SparkPlan node via py4j, following the
     indirections a plain ``children()`` walk would stop at:
-    AdaptiveSparkPlan's final plan, QueryStage wrappers' inner plan,
+    AdaptiveSparkPlan's current plan, QueryStage wrappers' inner plan,
     and ReusedExchange's original exchange (the node that actually
-    holds the populated SQL metrics)."""
+    holds the populated SQL metrics). The adaptive plan is read with
+    ``executedPlan()``, which runs nothing: before the query runs it is
+    the initial plan, after it runs it is the final plan
+    (``finalPhysicalPlan()`` would run the query stages)."""
     name = node.nodeName()
     if name == "AdaptiveSparkPlan":
-        return [node.finalPhysicalPlan()]
+        return [node.executedPlan()]
     if "QueryStage" in name:
         return [node.plan()]
     if name == "ReusedExchange":

@@ -20,10 +20,6 @@ at-scale counterpart of that directory-of-files model.
 
 from __future__ import annotations
 
-
-from collections.abc import Iterator
-
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import types as T
 
@@ -31,6 +27,7 @@ from data_ingestion_py_spark.sources.bits import (
     bounded_decompress,
     decompress_members,
 )
+from data_ingestion_py_spark.sources.spread import kernel_rows
 
 TAR_MEMBER_SCHEMA = T.StructType(
     [
@@ -104,33 +101,11 @@ def tar_manifest(media: DataFrame, max_members: int = 256) -> DataFrame:
     members become addressable by byte range, unparseable payloads
     emit no rows."""
 
-    def _go(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids, names, sizes, offs, flags = [], [], [], [], []
-            for mid, payload in zip(pdf["media_id"], pdf["payload"]):
-                members = tar_members(
-                    None if payload is None else bytes(payload), max_members
-                )
-                if members is None:
-                    continue
-                for name, size, off, flag in members:
-                    ids.append(int(mid))
-                    names.append(name)
-                    sizes.append(size)
-                    offs.append(off)
-                    flags.append(flag)
-            yield pd.DataFrame(
-                {
-                    "media_id": ids,
-                    "name": names,
-                    "size": sizes,
-                    "byte_offset": offs,
-                    "typeflag": flags,
-                }
-            )
-
-    return media.select("media_id", "payload").mapInPandas(
-        _go, TAR_MEMBER_SCHEMA
+    return kernel_rows(
+        media,
+        ("media_id", "payload"),
+        lambda mid, p: [(mid, *m) for m in tar_members(p, max_members) or ()],
+        TAR_MEMBER_SCHEMA,
     )
 
 
@@ -210,35 +185,11 @@ def zip_manifest(media: DataFrame, max_members: int = 256) -> DataFrame:
     shard fan-out as ``tar_manifest`` for zip-packaged corpora;
     unparseable payloads emit no rows."""
 
-    def _go(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids, names, methods, sizes, comps, offs = [], [], [], [], [], []
-            for mid, payload in zip(pdf["media_id"], pdf["payload"]):
-                members = zip_members(
-                    None if payload is None else bytes(payload), max_members
-                )
-                if members is None:
-                    continue
-                for name, method, uncomp, comp, off in members:
-                    ids.append(int(mid))
-                    names.append(name)
-                    methods.append(method)
-                    sizes.append(uncomp)
-                    comps.append(comp)
-                    offs.append(off)
-            yield pd.DataFrame(
-                {
-                    "media_id": ids,
-                    "name": names,
-                    "method": methods,
-                    "size": sizes,
-                    "compressed_size": comps,
-                    "byte_offset": offs,
-                }
-            )
-
-    return media.select("media_id", "payload").mapInPandas(
-        _go, ZIP_MEMBER_SCHEMA
+    return kernel_rows(
+        media,
+        ("media_id", "payload"),
+        lambda mid, p: [(mid, *m) for m in zip_members(p, max_members) or ()],
+        ZIP_MEMBER_SCHEMA,
     )
 
 
@@ -335,33 +286,12 @@ def tfrecord_manifest(
     TFRecord sibling of ``tar_manifest``; unparseable payloads emit no
     rows."""
 
-    def _go(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids, idxs, lens, offs = [], [], [], []
-            for mid, payload in zip(pdf["media_id"], pdf["payload"]):
-                recs = tfrecord_records(
-                    None if payload is None else bytes(payload),
-                    max_records,
-                    verify,
-                )
-                if recs is None:
-                    continue
-                for ri, length, off in recs:
-                    ids.append(int(mid))
-                    idxs.append(ri)
-                    lens.append(length)
-                    offs.append(off)
-            yield pd.DataFrame(
-                {
-                    "media_id": ids,
-                    "rec_index": idxs,
-                    "length": lens,
-                    "byte_offset": offs,
-                }
-            )
+    def _records(mid, payload):
+        recs = tfrecord_records(payload, max_records, verify)
+        return [(mid, *r) for r in recs or ()]
 
-    return media.select("media_id", "payload").mapInPandas(
-        _go, TFRECORD_SCHEMA
+    return kernel_rows(
+        media, ("media_id", "payload"), _records, TFRECORD_SCHEMA
     )
 
 
@@ -475,33 +405,12 @@ def avro_block_manifest(media: DataFrame, max_blocks: int = 256) -> DataFrame:
     — the split plan an Avro source builds before any record decode;
     unparseable payloads emit no rows."""
 
-    def _go(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids, idxs, recs, sizes, offs = [], [], [], [], []
-            for mid, payload in zip(pdf["media_id"], pdf["payload"]):
-                tab = avro_blocks(
-                    None if payload is None else bytes(payload), max_blocks
-                )
-                if tab is None:
-                    continue
-                for bi, nr, size, off in tab["blocks"]:
-                    ids.append(int(mid))
-                    idxs.append(bi)
-                    recs.append(nr)
-                    sizes.append(size)
-                    offs.append(off)
-            yield pd.DataFrame(
-                {
-                    "media_id": ids,
-                    "block_index": idxs,
-                    "n_records": recs,
-                    "size": sizes,
-                    "byte_offset": offs,
-                }
-            )
+    def _blocks(mid, payload):
+        tab = avro_blocks(payload, max_blocks)
+        return None if tab is None else [(mid, *b) for b in tab["blocks"]]
 
-    return media.select("media_id", "payload").mapInPandas(
-        _go, AVRO_BLOCK_SCHEMA
+    return kernel_rows(
+        media, ("media_id", "payload"), _blocks, AVRO_BLOCK_SCHEMA
     )
 
 
@@ -781,33 +690,12 @@ def parquet_rg_manifest(media: DataFrame) -> DataFrame:
     read as opaque binaries (federation / audit / foreign-layout
     scenarios); unparseable payloads emit no rows."""
 
-    def _go(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids, rgs, rows, sizes, cols = [], [], [], [], []
-            for mid, payload in zip(pdf["media_id"], pdf["payload"]):
-                tab = parquet_row_groups(
-                    None if payload is None else bytes(payload)
-                )
-                if tab is None:
-                    continue
-                for gi, nr, bs, nc in tab["row_groups"]:
-                    ids.append(int(mid))
-                    rgs.append(gi)
-                    rows.append(nr)
-                    sizes.append(bs)
-                    cols.append(nc)
-            yield pd.DataFrame(
-                {
-                    "media_id": ids,
-                    "row_group_id": rgs,
-                    "num_rows": rows,
-                    "total_byte_size": sizes,
-                    "n_columns": cols,
-                }
-            )
+    def _row_groups(mid, payload):
+        tab = parquet_row_groups(payload)
+        return None if tab is None else [(mid, *g) for g in tab["row_groups"]]
 
-    return media.select("media_id", "payload").mapInPandas(
-        _go, PARQUET_RG_SCHEMA
+    return kernel_rows(
+        media, ("media_id", "payload"), _row_groups, PARQUET_RG_SCHEMA
     )
 
 
@@ -872,35 +760,11 @@ def safetensors_manifest(media: DataFrame) -> DataFrame:
     absolute byte range) via Arrow ``mapInPandas``; unparseable
     payloads emit no rows."""
 
-    def _go(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids, names, dts, shapes, begins, ends = [], [], [], [], [], []
-            for mid, payload in zip(pdf["media_id"], pdf["payload"]):
-                idx = safetensors_index(
-                    None if payload is None else bytes(payload)
-                )
-                if idx is None:
-                    continue
-                for name, dtype, shape, b, e in idx:
-                    ids.append(int(mid))
-                    names.append(name)
-                    dts.append(dtype)
-                    shapes.append(shape)
-                    begins.append(b)
-                    ends.append(e)
-            yield pd.DataFrame(
-                {
-                    "media_id": ids,
-                    "tensor_name": names,
-                    "dtype": dts,
-                    "shape": shapes,
-                    "begin": begins,
-                    "end": ends,
-                }
-            )
-
-    return media.select("media_id", "payload").mapInPandas(
-        _go, SAFETENSORS_SCHEMA
+    return kernel_rows(
+        media,
+        ("media_id", "payload"),
+        lambda mid, p: [(mid, *t) for t in safetensors_index(p) or ()],
+        SAFETENSORS_SCHEMA,
     )
 
 
@@ -1210,43 +1074,18 @@ def orc_stripe_manifest(media: DataFrame, max_stripes: int = 4096) -> DataFrame:
     Arrow ``mapInPandas``. Non-ORC payloads emit no rows. Narrow
     stage, no shuffle."""
 
-    def _go(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            cols: dict[str, list] = {
-                k: []
-                for k in (
-                    "media_id",
-                    "stripe_index",
-                    "offset",
-                    "index_length",
-                    "data_length",
-                    "footer_length",
-                    "n_rows",
-                    "file_rows",
-                    "compression",
-                )
-            }
-            for mid, payload in zip(pdf["media_id"], pdf["payload"]):
-                info = orc_file_info(
-                    None if payload is None else bytes(payload), max_stripes
-                )
-                if info is None:
-                    continue
-                for si, (off, iln, dln, fln, rows) in enumerate(
-                    info["stripes"]
-                ):
-                    cols["media_id"].append(int(mid))
-                    cols["stripe_index"].append(si)
-                    cols["offset"].append(off)
-                    cols["index_length"].append(iln)
-                    cols["data_length"].append(dln)
-                    cols["footer_length"].append(fln)
-                    cols["n_rows"].append(rows)
-                    cols["file_rows"].append(info["n_rows"])
-                    cols["compression"].append(info["compression"])
-            yield pd.DataFrame(cols)
+    def _stripes(mid, payload):
+        info = orc_file_info(payload, max_stripes)
+        if info is None:
+            return None
+        return [
+            (mid, si, *stripe, info["n_rows"], info["compression"])
+            for si, stripe in enumerate(info["stripes"])
+        ]
 
-    return media.mapInPandas(_go, schema=ORC_STRIPE_SCHEMA)
+    return kernel_rows(
+        media, ("media_id", "payload"), _stripes, ORC_STRIPE_SCHEMA
+    )
 
 
 def avro_block_decompress(

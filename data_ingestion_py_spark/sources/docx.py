@@ -30,11 +30,10 @@ same snippetize/quality operators.
 from __future__ import annotations
 
 from data_ingestion_py_spark.sources.bits import bounded_decompress
-from data_ingestion_py_spark.sources.spread import spread_for_kernel
+from data_ingestion_py_spark.sources.spread import kernel_rows
 
 import re
 import zlib
-from typing import Iterator
 
 _ENTITIES = {
     "amp": "&", "lt": "<", "gt": ">", "quot": '"', "apos": "'",
@@ -131,7 +130,6 @@ def docx_paragraph_rows(media):
     rows. One narrow stage, no shuffle; at 100 TB the stage is
     embarrassingly parallel per document exactly like
     ``pdf.extract_pages``."""
-    import pandas as pd
     from pyspark.sql import types as T
 
     schema = T.StructType(
@@ -142,25 +140,12 @@ def docx_paragraph_rows(media):
         ]
     )
 
-    def _go(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        for pdf in batches:
-            ids: list[int] = []
-            idxs: list[int] = []
-            texts: list[str] = []
-            for mid, payload in zip(pdf["media_id"], pdf["payload"]):
-                xml = docx_document_xml(
-                    None if payload is None else bytes(payload)
-                )
-                if xml is None:
-                    continue
-                for i, t in enumerate(docx_paragraphs(xml)):
-                    ids.append(int(mid))
-                    idxs.append(i)
-                    texts.append(t)
-            yield pd.DataFrame(
-                {"media_id": ids, "para_index": idxs, "text": texts}
-            )
+    def _paragraphs(mid, payload):
+        xml = docx_document_xml(payload)
+        if xml is None:
+            return None
+        return [(mid, i, t) for i, t in enumerate(docx_paragraphs(xml))]
 
-    return spread_for_kernel(
-        media.select("media_id", "payload")
-    ).mapInPandas(_go, schema)
+    return kernel_rows(
+        media, ("media_id", "payload"), _paragraphs, schema, spread=True
+    )

@@ -39,7 +39,7 @@ from data_ingestion_py_spark.sources.bits import (
     prefix_trie,
     rbsp_unescape,
 )
-from data_ingestion_py_spark.sources.spread import spread_for_kernel
+from data_ingestion_py_spark.sources.spread import kernel_rows
 
 try:  # numpy is a hard dep of the package; guard for doc tooling only
     import numpy as np
@@ -749,11 +749,18 @@ def parse_sps_decode(rbsp: bytes) -> dict | None:
     """The SPS fields an intra decoder needs, from the one SPS walk
     (``multimodal.h264_sps_fields``): sizes, cropping, frame_num and
     POC widths. Refuses (None) what the walk cannot model plus chroma
-    formats other than 4:2:0 and field coding."""
+    formats other than 4:2:0, field coding and sample bit depths other
+    than 8 (I_PCM samples and dequantisation here are 8-bit only)."""
     from data_ingestion_py_spark.sources.multimodal import h264_sps_fields
 
     f = h264_sps_fields(rbsp)
-    if f is None or f["chroma_format_idc"] != 1 or not f["frame_mbs_only"]:
+    if (
+        f is None
+        or f["chroma_format_idc"] != 1
+        or not f["frame_mbs_only"]
+        or f["bit_depth_luma"] != 8
+        or f["bit_depth_chroma"] != 8
+    ):
         return None
     return {**f, "pic_height_in_mbs": f["pic_height_in_map_units"]}
 
@@ -823,6 +830,11 @@ def decode_idr_slice(
     if not 0 <= qp <= 51:
         return None
     wmb, hmb = sps["pic_width_in_mbs"], sps["pic_height_in_mbs"]
+    if wmb * hmb > b.n - b.pos:
+        # every CAVLC I-slice MB costs at least one bit (mb_type is
+        # ue(v)): a slice this short cannot cover the declared frame,
+        # so refuse before allocating the W×H planes
+        return None
     W, H = wmb * 16, hmb * 16
     Y = [[0] * W for _ in range(H)]
     Cb = [[0] * (W // 2) for _ in range(H // 2)]
@@ -1096,9 +1108,6 @@ def decode_idr_annexb(payload: bytes) -> dict | None:
     }
 
 
-H264_MB_SCHEMA = None  # built lazily (pyspark import kept off the hot path)
-
-
 def h264_idr_mb_rows(media):
     """(media_id, payload[Annex-B ES]) → one row per macroblock of
     the FIRST IDR frame: ``(media_id, mb_row, mb_col, y_sum, width,
@@ -1107,7 +1116,6 @@ def h264_idr_mb_rows(media):
     this stage decodes them embarrassingly parallel per stream —
     no shuffle, no codec libraries. Undecodable payloads emit no
     rows (honest absence)."""
-    import pandas as pd
     from pyspark.sql import types as T
 
     schema = T.StructType(
@@ -1121,35 +1129,21 @@ def h264_idr_mb_rows(media):
         ]
     )
 
-    def _go(batches):
-        for pdf in batches:
-            ids, mrs, mcs, sums, ws, hs = [], [], [], [], [], []
-            for mid, payload in zip(pdf["media_id"], pdf["payload"]):
-                got = decode_idr_annexb(
-                    None if payload is None else bytes(payload)
-                )
-                if got is None:
-                    continue
-                y = got["y"].astype("int64")
-                H, W = y.shape
-                for mr in range(H // 16):
-                    for mc in range(W // 16):
-                        ids.append(int(mid))
-                        mrs.append(mr)
-                        mcs.append(mc)
-                        sums.append(int(
-                            y[mr*16:mr*16+16, mc*16:mc*16+16].sum()
-                        ))
-                        ws.append(W)
-                        hs.append(H)
-            yield pd.DataFrame(
-                {"media_id": ids, "mb_row": mrs, "mb_col": mcs,
-                 "y_sum": sums, "width": ws, "height": hs}
-            )
+    def _mbs(mid, payload):
+        got = decode_idr_annexb(payload)
+        if got is None:
+            return None
+        y = got["y"].astype("int64")
+        H, W = y.shape
+        return [
+            (mid, mr, mc, int(y[mr*16:mr*16+16, mc*16:mc*16+16].sum()), W, H)
+            for mr in range(H // 16)
+            for mc in range(W // 16)
+        ]
 
-    return spread_for_kernel(
-        media.select("media_id", "payload")
-    ).mapInPandas(_go, schema)
+    return kernel_rows(
+        media, ("media_id", "payload"), _mbs, schema, spread=True
+    )
 
 
 def h264_idr_phashes(media, grid: int = 4):
@@ -1158,7 +1152,6 @@ def h264_idr_phashes(media, grid: int = 4):
     kernel still images use (``multimodal.raster_average_hash``) —
     the H.264 leg of video near-dup dedup. Undecodable payloads
     hash to null."""
-    import pandas as pd
     from pyspark.sql import types as T
 
     from data_ingestion_py_spark.sources.multimodal import (
@@ -1172,22 +1165,11 @@ def h264_idr_phashes(media, grid: int = 4):
         ]
     )
 
-    def _go(batches):
-        for pdf in batches:
-            hashes = []
-            for payload in pdf["payload"]:
-                got = decode_idr_annexb(
-                    None if payload is None else bytes(payload)
-                )
-                hashes.append(
-                    None if got is None
-                    else raster_average_hash(got["y"], grid)
-                )
-            yield pd.DataFrame(
-                {"media_id": pdf["media_id"],
-                 "phash": pd.array(hashes, dtype="Int64")}
-            )
+    def _phash(mid, payload):
+        got = decode_idr_annexb(payload)
+        phash = None if got is None else raster_average_hash(got["y"], grid)
+        return [(mid, phash)]
 
-    return spread_for_kernel(
-        media.select("media_id", "payload")
-    ).mapInPandas(_go, schema)
+    return kernel_rows(
+        media, ("media_id", "payload"), _phash, schema, spread=True
+    )

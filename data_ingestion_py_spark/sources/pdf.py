@@ -23,14 +23,11 @@ NotImplementedError only for docs that genuinely need it.
 
 from __future__ import annotations
 
-from collections.abc import Iterator
-
-import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from data_ingestion_py_spark.sources.spread import spread_for_kernel
+from data_ingestion_py_spark.sources.spread import kernel_rows
 
 PAGE_ROW_SCHEMA = T.StructType(
     [
@@ -170,44 +167,29 @@ def extract_pages(
     exactly like unparseable ones: empty text, needs_ocr set, honest.
     """
 
-    def _extract(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out: dict[str, list] = {
-                "file_path": [],
-                "document_name": [],
-                "page_number": [],
-                "page_text": [],
-                "needs_ocr": [],
-                "document_metadata": [],
-            }
-            for path, content in zip(pdf["path"], pdf["content"]):
-                content = bytes(content)
-                if HAVE_FITZ:
-                    pages, meta = _extract_pages_fitz(content)
-                else:
-                    pages, meta = _extract_pages_fallback(
-                        content, password
-                    )
-                # P9: whole-document empty-text predicate decides OCR
-                needs_ocr = sum(len(p.strip()) for p in pages) == 0
-                if needs_ocr:
-                    try:
-                        pages = _ocr_pages(content)
-                        meta = {**meta, "extractor": "ocr"
-                                if HAVE_OCR else "ocr-lite"}
-                    except NotImplementedError:
-                        pass  # honest: text stays empty, flag stays set
-                name = path.rsplit("/", 1)[-1]
-                for i, text in enumerate(pages):
-                    out["file_path"].append(path)
-                    out["document_name"].append(name)
-                    out["page_number"].append(i + 1)
-                    out["page_text"].append(text)
-                    out["needs_ocr"].append(needs_ocr)
-                    out["document_metadata"].append(meta)
-            yield pd.DataFrame(out)
+    def _pages(path, content):
+        if HAVE_FITZ:
+            pages, meta = _extract_pages_fitz(content)
+        else:
+            pages, meta = _extract_pages_fallback(content, password)
+        # P9: whole-document empty-text predicate decides OCR
+        needs_ocr = sum(len(p.strip()) for p in pages) == 0
+        if needs_ocr:
+            try:
+                pages = _ocr_pages(content)
+                meta = {**meta, "extractor": "ocr"
+                        if HAVE_OCR else "ocr-lite"}
+            except NotImplementedError:
+                pass  # honest: text stays empty, flag stays set
+        name = path.rsplit("/", 1)[-1]
+        return [
+            (path, name, i + 1, text, needs_ocr, meta)
+            for i, text in enumerate(pages)
+        ]
 
-    return spread_for_kernel(binary_df).mapInPandas(_extract, PAGE_ROW_SCHEMA)
+    return kernel_rows(
+        binary_df, ("path", "content"), _pages, PAGE_ROW_SCHEMA, spread=True
+    )
 
 
 IMAGE_ROW_SCHEMA = T.StructType(
@@ -240,31 +222,18 @@ def extract_image_xobjects(binary_df: DataFrame) -> DataFrame:
         extract_page_images,
     )
 
-    def _extract(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf_batch in batches:
-            out: dict[str, list] = {
-                f.name: [] for f in IMAGE_ROW_SCHEMA.fields
-            }
-            for path, content in zip(
-                pdf_batch["path"], pdf_batch["content"]
-            ):
-                imgs = extract_page_images(bytes(content))
-                if not imgs:
-                    continue
-                name = path.rsplit("/", 1)[-1]
-                for pno, idx, xname, w, h, _bpc, kind, data in imgs:
-                    out["file_path"].append(path)
-                    out["document_name"].append(name)
-                    out["page_number"].append(pno)
-                    out["image_index"].append(idx)
-                    out["xobject_name"].append(xname)
-                    out["width"].append(w)
-                    out["height"].append(h)
-                    out["kind"].append(kind)
-                    out["data"].append(data)
-            yield pd.DataFrame(out)
+    def _images(path, content):
+        name = path.rsplit("/", 1)[-1]
+        return [
+            (path, name, pno, idx, xname, w, h, kind, data)
+            for pno, idx, xname, w, h, _bpc, kind, data in (
+                extract_page_images(content) or ()
+            )
+        ]
 
-    return spread_for_kernel(binary_df).mapInPandas(_extract, IMAGE_ROW_SCHEMA)
+    return kernel_rows(
+        binary_df, ("path", "content"), _images, IMAGE_ROW_SCHEMA, spread=True
+    )
 
 
 SCANNED_TEXT_SCHEMA = T.StructType(
@@ -292,28 +261,18 @@ def extract_scanned_text(
     narrow Arrow stage, no shuffle."""
     from data_ingestion_py_spark.sources.ocr_pure import ocr_pdf_pages
 
-    def _extract(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf_batch in batches:
-            out: dict[str, list] = {
-                f.name: [] for f in SCANNED_TEXT_SCHEMA.fields
-            }
-            for path, content in zip(
-                pdf_batch["path"], pdf_batch["content"]
-            ):
-                pages = ocr_pdf_pages(
-                    bytes(content), strict=strict, templates=templates
-                )
-                if pages is None:
-                    continue
-                name = path.rsplit("/", 1)[-1]
-                for i, text in enumerate(pages):
-                    out["file_path"].append(path)
-                    out["document_name"].append(name)
-                    out["page_number"].append(i + 1)
-                    out["page_text"].append(text)
-            yield pd.DataFrame(out)
+    def _pages(path, content):
+        pages = ocr_pdf_pages(content, strict=strict, templates=templates)
+        name = path.rsplit("/", 1)[-1]
+        return [(path, name, i + 1, t) for i, t in enumerate(pages or ())]
 
-    return spread_for_kernel(binary_df).mapInPandas(_extract, SCANNED_TEXT_SCHEMA)
+    return kernel_rows(
+        binary_df,
+        ("path", "content"),
+        _pages,
+        SCANNED_TEXT_SCHEMA,
+        spread=True,
+    )
 
 
 def pages_with_links(pages: DataFrame, link_col: str = "file_path") -> DataFrame:
@@ -346,25 +305,10 @@ def extract_annotation_text(binary_df: DataFrame) -> DataFrame:
         extract_annotations,
     )
 
-    def _extract(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf_batch in batches:
-            out: dict[str, list] = {
-                f.name: [] for f in ANNOT_ROW_SCHEMA.fields
-            }
-            for path, content in zip(
-                pdf_batch["path"], pdf_batch["content"]
-            ):
-                rows = extract_annotations(bytes(content))
-                if not rows:
-                    continue
-                name = path.rsplit("/", 1)[-1]
-                for pno, idx, sub, text in rows:
-                    out["file_path"].append(path)
-                    out["document_name"].append(name)
-                    out["page_number"].append(pno)
-                    out["annot_index"].append(idx)
-                    out["subtype"].append(sub)
-                    out["contents"].append(text)
-            yield pd.DataFrame(out)
+    def _annots(path, content):
+        name = path.rsplit("/", 1)[-1]
+        return [(path, name, *a) for a in extract_annotations(content) or ()]
 
-    return spread_for_kernel(binary_df).mapInPandas(_extract, ANNOT_ROW_SCHEMA)
+    return kernel_rows(
+        binary_df, ("path", "content"), _annots, ANNOT_ROW_SCHEMA, spread=True
+    )

@@ -20,13 +20,11 @@ instead, and this module is that source done Spark-first.
 
 from __future__ import annotations
 
-from collections.abc import Iterator
-
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import types as T
 
 from data_ingestion_py_spark.sources.bits import bounded_decompress
+from data_ingestion_py_spark.sources.spread import kernel_rows
 
 WARC_RECORD_SCHEMA = T.StructType(
     [
@@ -177,63 +175,12 @@ def warc_gz_manifest(media: DataFrame, max_members: int = 64) -> DataFrame:
     via Arrow ``mapInPandas`` — the split plan for compressed crawl
     shards; non-gzip payloads emit no rows."""
 
-    def _go(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            cols: dict[str, list] = {
-                k: []
-                for k in (
-                    "media_id",
-                    "member_index",
-                    "offset",
-                    "comp_size",
-                    "decomp_size",
-                    "warc_type",
-                    "target_uri",
-                    "content_length",
-                )
-            }
-            for mid, payload in zip(pdf["media_id"], pdf["payload"]):
-                members = warc_gz_members(
-                    None if payload is None else bytes(payload), max_members
-                )
-                if members is None:
-                    continue
-                for mi, (off, comp, dec, wtype, uri, clen) in enumerate(
-                    members
-                ):
-                    cols["media_id"].append(int(mid))
-                    cols["member_index"].append(mi)
-                    cols["offset"].append(off)
-                    cols["comp_size"].append(comp)
-                    cols["decomp_size"].append(dec)
-                    cols["warc_type"].append(wtype)
-                    cols["target_uri"].append(uri)
-                    cols["content_length"].append(
-                        None if clen is None else int(clen)
-                    )
-            yield pd.DataFrame(
-                {
-                    "media_id": cols["media_id"],
-                    "member_index": pd.array(
-                        cols["member_index"], dtype="Int32"
-                    ),
-                    "offset": pd.array(cols["offset"], dtype="Int64"),
-                    "comp_size": pd.array(cols["comp_size"], dtype="Int64"),
-                    "decomp_size": pd.array(
-                        cols["decomp_size"], dtype="Int64"
-                    ),
-                    "warc_type": pd.array(cols["warc_type"], dtype="string"),
-                    "target_uri": pd.array(
-                        cols["target_uri"], dtype="string"
-                    ),
-                    "content_length": pd.array(
-                        cols["content_length"], dtype="Int64"
-                    ),
-                }
-            )
+    def _members(mid, payload):
+        members = warc_gz_members(payload, max_members) or ()
+        return [(mid, mi, *m) for mi, m in enumerate(members)]
 
-    return media.select("media_id", "payload").mapInPandas(
-        _go, WARC_GZ_MEMBER_SCHEMA
+    return kernel_rows(
+        media, ("media_id", "payload"), _members, WARC_GZ_MEMBER_SCHEMA
     )
 
 
@@ -243,33 +190,10 @@ def warc_manifest(media: DataFrame, max_records: int = 64) -> DataFrame:
     shard fan-out a crawl-scale corpus read needs: shards parse in
     parallel with the scan, unparseable payloads emit no rows."""
 
-    def _go(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids, idxs, types, uris, lens, bodies = [], [], [], [], [], []
-            for mid, payload in zip(pdf["media_id"], pdf["payload"]):
-                recs = warc_records(
-                    None if payload is None else bytes(payload), max_records
-                )
-                if recs is None:
-                    continue
-                for ri, (wtype, uri, clen, body) in enumerate(recs):
-                    ids.append(int(mid))
-                    idxs.append(ri)
-                    types.append(wtype)
-                    uris.append(uri)
-                    lens.append(clen)
-                    bodies.append(body)
-            yield pd.DataFrame(
-                {
-                    "media_id": ids,
-                    "rec_index": idxs,
-                    "warc_type": types,
-                    "target_uri": uris,
-                    "content_length": lens,
-                    "body": bodies,
-                }
-            )
+    def _records(mid, payload):
+        recs = warc_records(payload, max_records) or ()
+        return [(mid, ri, *r) for ri, r in enumerate(recs)]
 
-    return media.select("media_id", "payload").mapInPandas(
-        _go, WARC_RECORD_SCHEMA
+    return kernel_rows(
+        media, ("media_id", "payload"), _records, WARC_RECORD_SCHEMA
     )

@@ -683,15 +683,15 @@ def test_truncated_parameter_sets_refuse():
             assert parse(rbsp[:k]) is None, (nal, k)
 
 
-def _sps_high(profile: int, wmb: int, hmb: int) -> bytes:
+def _sps_high(profile: int, wmb: int, hmb: int, bit_depth: int = 8) -> bytes:
     b = _BW()
     b.u(profile, 8)
     b.u(0, 8)
     b.u(30, 8)
     b.ue(0)
     b.ue(1)  # chroma_format_idc 4:2:0
-    b.ue(0)  # bit_depth_luma_minus8
-    b.ue(0)  # bit_depth_chroma_minus8
+    b.ue(bit_depth - 8)  # bit_depth_luma_minus8
+    b.ue(bit_depth - 8)  # bit_depth_chroma_minus8
     b.u(0, 1)  # qpprime_y_zero_transform_bypass
     b.u(0, 1)  # no scaling matrices
     b.ue(0)
@@ -726,3 +726,46 @@ def test_sps_views_agree_on_every_listed_high_profile():
         assert (dec["pic_width_in_mbs"] * 16,
                 dec["pic_height_in_mbs"] * 16) == (320, 240)
         assert params["profile_idc"] == dec["profile_idc"] == profile
+
+
+def test_high10_sps_refuses_decode():
+    """The decoder is 8-bit only: a High-10 (profile 110) 4:2:0 SPS with
+    10-bit samples refuses (None), while the planner still reads its
+    geometry and both views report the bit depths."""
+    from data_ingestion_py_spark.sources.h264_decode import parse_sps_decode
+    from data_ingestion_py_spark.sources.multimodal import (
+        h264_sps_fields,
+        h264_sps_params,
+    )
+
+    nal = _sps_high(110, 20, 15, bit_depth=10)
+    rbsp = rbsp_unescape(nal[1:])
+    f = h264_sps_fields(rbsp)
+    assert (f["bit_depth_luma"], f["bit_depth_chroma"]) == (10, 10)
+    assert parse_sps_decode(rbsp) is None
+    assert h264_sps_params(nal)["width"] == 320
+    eight = rbsp_unescape(_sps_high(110, 20, 15)[1:])
+    assert parse_sps_decode(eight)["bit_depth_luma"] == 8
+
+
+def test_declared_frame_larger_than_slice_refuses_before_allocating():
+    """A few hundred bytes declaring 100x100 macroblocks (one PCM MB
+    coded) refuse without allocating the declared planes: every CAVLC
+    I-slice MB costs at least one bit, so the slice cannot cover them."""
+    import tracemalloc
+
+    # the decoder imports multimodal lazily: keep that out of the trace
+    import data_ingestion_py_spark.sources.multimodal  # noqa: F401
+
+    rng = np.random.RandomState(5)
+    stream = annexb(make_sps(100, 100), make_pps(),
+                    make_idr(100, 100, [_pcm_mb(rng)]))
+    assert len(stream) < 512
+    tracemalloc.start()
+    try:
+        got = decode_idr_annexb(stream)
+        _, peak = tracemalloc.get_traced_memory()
+    finally:
+        tracemalloc.stop()
+    assert got is None
+    assert peak < 1 << 20, peak

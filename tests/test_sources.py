@@ -1972,6 +1972,30 @@ def test_png_pixel_checksums_spark(spark):
     assert resized[3] == (None, None)
 
 
+def test_pixel_checksums_exact_next_to_null_rows(spark):
+    """px_wsum stays exact when undecodable and NULL payloads share the
+    Arrow batch: a 3000x3000 PGM's weighted sum (~1.03e16) is not a
+    float64 value, so a column that fell back to float64 would be off."""
+    import numpy as np
+
+    from data_ingestion_py_spark.sources import multimodal as mm
+
+    w = h = 3000
+    pix = np.full(w * h, 255, dtype=np.uint8)
+    pix[0] = 254
+    pgm = b"P5\n%d %d\n255\n" % (w, h) + pix.tobytes()
+    p64 = pix.astype(np.int64)
+    want = int(np.dot(np.arange(1, p64.size + 1, dtype=np.int64), p64))
+    assert float(want) != want  # the check below can tell
+    media = spark.createDataFrame(
+        [(1, pgm), (2, b"junk"), (3, None)], "media_id long, payload binary"
+    ).coalesce(1)
+    got = {r.media_id: r for r in mm.pixel_checksums(media).collect()}
+    assert got[1].px_wsum == want
+    assert got[1].px_sum == int(p64.sum())
+    assert got[2].px_wsum is None and got[3].px_wsum is None
+
+
 # ---------------------------------------------------------- warc.gz members
 
 
