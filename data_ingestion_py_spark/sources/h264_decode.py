@@ -33,6 +33,8 @@ path that lets a 100 TB pipeline fetch ONLY keyframe byte ranges
 
 from __future__ import annotations
 
+from array import array
+
 from data_ingestion_py_spark.sources.bits import (
     MsbBits,
     none_on_truncation,
@@ -745,12 +747,32 @@ def _pred_chroma_dc(plane, cy, cx, have_up, have_left) -> None:
 # ---------------------------------------------------------------------
 
 
+#: Table A-1 MaxFS (frame size in macroblocks) by level_idc; level 1b
+#: is level_idc 9, or 11 with constraint_set3 (read as 1.1: a looser
+#: bound). A level_idc outside the table gets the table's largest.
+_MAX_FS = {
+    9: 99, 10: 99, 11: 396, 12: 396, 13: 396, 20: 396, 21: 792,
+    22: 1620, 30: 1620, 31: 3600, 32: 5120, 40: 8192, 41: 8192,
+    42: 8704, 50: 22080, 51: 36864, 52: 36864, 60: 139264,
+    61: 139264, 62: 139264,
+}
+
+#: The fewest slice bits one CAVLC I-slice macroblock can take:
+#: I_16x16 with mb_type codeNum 1 or 2 (3 bits), then
+#: intra_chroma_pred_mode, mb_qp_delta and the luma DC coeff_token (at
+#: least 1 bit each). I_4x4 needs 19 (16 prev_intra4x4_pred_mode
+#: flags) and I_PCM 3072 sample bits.
+_MIN_MB_BITS = 6
+
+
 def parse_sps_decode(rbsp: bytes) -> dict | None:
     """The SPS fields an intra decoder needs, from the one SPS walk
     (``multimodal.h264_sps_fields``): sizes, cropping, frame_num and
     POC widths. Refuses (None) what the walk cannot model plus chroma
-    formats other than 4:2:0, field coding and sample bit depths other
-    than 8 (I_PCM samples and dequantisation here are 8-bit only)."""
+    formats other than 4:2:0, field coding, sample bit depths other
+    than 8 (I_PCM samples and dequantisation here are 8-bit only) and
+    a frame larger than its level's MaxFS (Table A-1), which bounds
+    what a slice decode allocates."""
     from data_ingestion_py_spark.sources.multimodal import h264_sps_fields
 
     f = h264_sps_fields(rbsp)
@@ -760,6 +782,8 @@ def parse_sps_decode(rbsp: bytes) -> dict | None:
         or not f["frame_mbs_only"]
         or f["bit_depth_luma"] != 8
         or f["bit_depth_chroma"] != 8
+        or f["pic_width_in_mbs"] * f["pic_height_in_map_units"]
+        > _MAX_FS.get(f["level_idc"], _MAX_FS[62])
     ):
         return None
     return {**f, "pic_height_in_mbs": f["pic_height_in_map_units"]}
@@ -830,26 +854,28 @@ def decode_idr_slice(
     if not 0 <= qp <= 51:
         return None
     wmb, hmb = sps["pic_width_in_mbs"], sps["pic_height_in_mbs"]
-    if wmb * hmb > b.n - b.pos:
-        # every CAVLC I-slice MB costs at least one bit (mb_type is
-        # ue(v)): a slice this short cannot cover the declared frame,
-        # so refuse before allocating the W×H planes
+    if wmb * hmb * _MIN_MB_BITS > b.n - b.pos:
+        # a slice this short cannot cover the declared frame: refuse
+        # before allocating the W×H planes
         return None
+    # one byte per sample and per map entry (bytearray rows, signed
+    # for the mode map), not a list slot: a frame's working set is
+    # ~440 bytes per MB, so the level's MaxFS bounds it
     W, H = wmb * 16, hmb * 16
-    Y = [[0] * W for _ in range(H)]
-    Cb = [[0] * (W // 2) for _ in range(H // 2)]
-    Cr = [[0] * (W // 2) for _ in range(H // 2)]
+    Y = [bytearray(W) for _ in range(H)]
+    Cb = [bytearray(W // 2) for _ in range(H // 2)]
+    Cr = [bytearray(W // 2) for _ in range(H // 2)]
     # per-4x4-luma-block reconstruction map: intra availability at
     # spec granularity (inside an I_4x4 MB the up-right neighbour of
     # some sub-blocks is NOT yet decoded — a whole-MB map gets the
     # spec's decode-order rules wrong)
-    blk_done = [[False] * (wmb * 4) for _ in range(hmb * 4)]
+    blk_done = [bytearray(wmb * 4) for _ in range(hmb * 4)]
     # per-4x4-block nonzero-coefficient counts for nC (luma + chroma)
-    luma_nz = [[0] * (wmb * 4) for _ in range(hmb * 4)]
-    cb_nz = [[0] * (wmb * 2) for _ in range(hmb * 2)]
-    cr_nz = [[0] * (wmb * 2) for _ in range(hmb * 2)]
+    luma_nz = [bytearray(wmb * 4) for _ in range(hmb * 4)]
+    cb_nz = [bytearray(wmb * 2) for _ in range(hmb * 2)]
+    cr_nz = [bytearray(wmb * 2) for _ in range(hmb * 2)]
     # per-4x4 intra mode for predIntra4x4PredMode (§8.3.1.1)
-    pred_modes = [[-1] * (wmb * 4) for _ in range(hmb * 4)]
+    pred_modes = [array("b", [-1]) * (wmb * 4) for _ in range(hmb * 4)]
 
     def nC(nz, by, bx):
         rows = len(nz)

@@ -78,11 +78,11 @@ def rbsp_to_ebsp(data: bytes) -> bytes:
     return bytes(out)
 
 
-def make_sps(wmb: int, hmb: int) -> bytes:
+def make_sps(wmb: int, hmb: int, level: int = 30) -> bytes:
     b = _BW()
     b.u(66, 8)
     b.u(0, 8)
-    b.u(30, 8)
+    b.u(level, 8)
     b.ue(0)
     b.ue(0)  # log2_max_frame_num_minus4
     b.ue(0)  # poc type 0
@@ -748,24 +748,68 @@ def test_high10_sps_refuses_decode():
     assert parse_sps_decode(eight)["bit_depth_luma"] == 8
 
 
-def test_declared_frame_larger_than_slice_refuses_before_allocating():
-    """A few hundred bytes declaring 100x100 macroblocks (one PCM MB
-    coded) refuse without allocating the declared planes: every CAVLC
-    I-slice MB costs at least one bit, so the slice cannot cover them."""
+def _decode_peak(stream: bytes):
+    """(decode_idr_annexb result, tracemalloc peak in bytes)."""
     import tracemalloc
 
     # the decoder imports multimodal lazily: keep that out of the trace
     import data_ingestion_py_spark.sources.multimodal  # noqa: F401
 
-    rng = np.random.RandomState(5)
-    stream = annexb(make_sps(100, 100), make_pps(),
-                    make_idr(100, 100, [_pcm_mb(rng)]))
-    assert len(stream) < 512
     tracemalloc.start()
     try:
         got = decode_idr_annexb(stream)
         _, peak = tracemalloc.get_traced_memory()
     finally:
         tracemalloc.stop()
+    return got, peak
+
+
+def test_declared_frame_larger_than_slice_refuses_before_allocating():
+    """A few hundred bytes declaring 60x50 macroblocks (one PCM MB
+    coded) at a level that admits that frame refuse without
+    allocating the declared planes: every CAVLC I-slice MB costs at
+    least 6 bits, so the slice cannot cover them (it has a bit for
+    each of them)."""
+    rng = np.random.RandomState(5)
+    stream = annexb(make_sps(60, 50, level=31), make_pps(),
+                    make_idr(60, 50, [_pcm_mb(rng)]))
+    assert 60 * 50 < (len(stream) - 20) * 8 < 60 * 50 * 6
+    got, peak = _decode_peak(stream)
     assert got is None
     assert peak < 1 << 20, peak
+
+
+def test_frame_beyond_level_max_fs_refuses():
+    """A ~100 KB slice (267 PCM MBs) declaring 400x400 macroblocks, more
+    than any level's MaxFS (Table A-1), refuses before allocating:
+    the slice has a bit for each of the 160k MBs, and ~560 MB of list
+    planes is what the declared frame asked of the decoder before."""
+    from data_ingestion_py_spark.sources.h264_decode import parse_sps_decode
+
+    rng = np.random.RandomState(6)
+    mbs = [_pcm_mb(rng) for _ in range(267)]
+    stream = annexb(make_sps(400, 400, level=62), make_pps(),
+                    make_idr(400, 400, mbs))
+    assert len(stream) > 100_000
+    got, peak = _decode_peak(stream)
+    assert got is None
+    assert peak < 1 << 20, peak
+    # the level's MaxFS is the bound: 1620 MBs at level 3.0
+    for (w, h), ok in (((45, 36), True), ((41, 40), False)):
+        sps = parse_sps_decode(rbsp_unescape(make_sps(w, h)[1:]))
+        assert (sps is not None) == ok, (w, h)
+
+
+def test_frame_working_set_is_bytes_per_sample():
+    """A slice that may cover its frame allocates one byte per sample
+    and per map entry: a level-4.0 MaxFS frame (128x64 MBs, 8192) with
+    a slice cut after 20 PCM MBs stays under 1000 bytes per declared
+    MB (a list slot per sample would be ~3.5 KB)."""
+    rng = np.random.RandomState(7)
+    mbs = [_pcm_mb(rng) for _ in range(20)]
+    stream = annexb(make_sps(128, 64, level=40), make_pps(),
+                    make_idr(128, 64, mbs))
+    assert len(stream) * 8 > 128 * 64 * 6  # passes the bit bound
+    got, peak = _decode_peak(stream)
+    assert got is None  # cut after MB 20
+    assert 128 * 64 * 384 < peak < 128 * 64 * 1000, peak

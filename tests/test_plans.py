@@ -139,6 +139,8 @@ def test_no_python_udfs_anywhere_in_registry(spark):
     """Every registered query stays JVM-side, except the multimodal
     entries and the ``ARROW_BY_DESIGN`` names, whose stage is BY DESIGN
     an Arrow-batched mapInPandas (never row-at-a-time BatchEvalPython).
+    An ``ARROW_BY_DESIGN`` query may not add a scalar Arrow UDF
+    (ArrowEvalPython) beside its stage either.
 
     Error-isolated: a query that fails to even build is reported as
     that query's failure, without hiding the lint result for the rest
@@ -154,6 +156,8 @@ def test_no_python_udfs_anywhere_in_registry(spark):
                     failures.append(f"{name}: lost its Arrow stage")
                 if "BatchEvalPython" in plan:
                     failures.append(f"{name}: row-at-a-time Python")
+                if name in ARROW_BY_DESIGN and "ArrowEvalPython" in plan:
+                    failures.append(f"{name}: Arrow UDF beside its stage")
             elif E.uses_python_eval(df):
                 failures.append(f"{name}: uses Python eval")
         except Exception as exc:  # noqa: BLE001 — collect, don't abort
