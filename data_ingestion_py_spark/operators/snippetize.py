@@ -31,6 +31,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from data_ingestion_py_spark.functions.text import tokens
+
 #: Reference constants: data_ingestion.py:39 (num_sent_per_snippet=5)
 #: and :190 (stride = ceil(num_sent / 2) = 3 → 2-sentence overlap).
 NUM_SENT = 5
@@ -38,11 +40,6 @@ STRIDE = 3  # == ceil(NUM_SENT / 2)
 SENT_TOKENS = 8
 
 SENTENCE_SPLIT_REGEX = r"(?<=[.!?])\s+"
-
-
-def tokens(text: Column) -> Column:
-    """Whitespace tokens with empties dropped (array<string>)."""
-    return F.filter(F.split(text, " "), lambda t: t != "")
 
 
 def sentences_from_tokens(toks: Column, sent_tokens: int = SENT_TOKENS) -> Column:

@@ -24,8 +24,11 @@ from pyspark.sql import DataFrame
 from pyspark.sql import types as T
 
 from data_ingestion_py_spark.sources.bits import (
+    Refused,
+    Truncated,
     bounded_decompress,
     decompress_members,
+    none_on_refusal,
 )
 from data_ingestion_py_spark.sources.spread import kernel_rows
 
@@ -121,6 +124,7 @@ ZIP_MEMBER_SCHEMA = T.StructType(
 )
 
 
+@none_on_refusal
 def zip_members(
     payload: bytes | None, max_members: int = 256
 ) -> list[tuple[str, int, int, int, int]] | None:
@@ -138,11 +142,11 @@ def zip_members(
     Bad signatures, truncated directories, or out-of-range offsets
     return None — never guessed geometry."""
     if payload is None or len(payload) < 22:
-        return None
+        raise Refused("not a readable ZIP")
     n = len(payload)
     eocd = payload.rfind(b"PK\x05\x06", max(0, n - 22 - 65536))
     if eocd < 0 or eocd + 22 > n:
-        return None
+        raise Refused("not a readable ZIP")
 
     def u16(off: int) -> int:
         return int.from_bytes(payload[off : off + 2], "little")
@@ -156,27 +160,29 @@ def zip_members(
     i = cd_off
     for _ in range(min(count, max_members)):
         if i + 46 > n or payload[i : i + 4] != b"PK\x01\x02":
-            return None
+            raise Refused("not a readable ZIP")
         method = u16(i + 10)
         comp = u32(i + 20)
         uncomp = u32(i + 24)
         nlen, xlen, clen = u16(i + 28), u16(i + 30), u16(i + 32)
         local_off = u32(i + 42)
         if i + 46 + nlen > n:
-            return None
+            raise Refused("not a readable ZIP")
         name = payload[i + 46 : i + 46 + nlen].decode("utf-8", "replace")
         if local_off + 30 > n or payload[local_off : local_off + 4] != (
             b"PK\x03\x04"
         ):
-            return None
+            raise Refused("not a readable ZIP")
         lnlen = u16(local_off + 26)
         lxlen = u16(local_off + 28)
         data_off = local_off + 30 + lnlen + lxlen
         if data_off + comp > n:
-            return None
+            raise Refused("not a readable ZIP")
         out.append((name, method, uncomp, comp, data_off))
         i += 46 + nlen + xlen + clen
-    return out or None
+    if not out:
+        raise Refused("no ZIP members")
+    return out
 
 
 def zip_manifest(media: DataFrame, max_members: int = 256) -> DataFrame:
@@ -295,21 +301,21 @@ def tfrecord_manifest(
     )
 
 
-def _avro_varint(payload: bytes, i: int) -> tuple[int, int] | None:
+def _avro_varint(payload: bytes, i: int) -> tuple[int, int]:
     """Avro zigzag-varint long at offset ``i`` → (value, next_offset).
-    None on truncation or overlong (>10 byte) encodings."""
+    ``Refused`` on truncation or overlong (>10 byte) encodings."""
     shift = 0
     acc = 0
     n = len(payload)
     for k in range(10):
         if i + k >= n:
-            return None
+            raise Truncated
         b = payload[i + k]
         acc |= (b & 0x7F) << shift
         if not b & 0x80:
             return (acc >> 1) ^ -(acc & 1), i + k + 1  # zigzag decode
         shift += 7
-    return None
+    raise Refused("varint longer than 10 bytes")
 
 
 AVRO_BLOCK_SCHEMA = T.StructType(
@@ -323,6 +329,7 @@ AVRO_BLOCK_SCHEMA = T.StructType(
 )
 
 
+@none_on_refusal
 def avro_blocks(
     payload: bytes | None, max_blocks: int = 256
 ) -> dict | None:
@@ -346,31 +353,19 @@ def avro_blocks(
     i = 4
     codec = "null"
     while True:  # metadata map blocks
-        got = _avro_varint(payload, i)
-        if got is None:
-            return None
-        count, i = got
+        count, i = _avro_varint(payload, i)
         if count == 0:
             break
         if count < 0:  # block-size form: |count| entries, size long first
             count = -count
-            got = _avro_varint(payload, i)
-            if got is None:
-                return None
-            _, i = got
+            _, i = _avro_varint(payload, i)
         for _ in range(count):
-            got = _avro_varint(payload, i)
-            if got is None:
-                return None
-            klen, i = got
+            klen, i = _avro_varint(payload, i)
             if klen < 0 or i + klen > n:
                 return None
             key = payload[i : i + klen]
             i += klen
-            got = _avro_varint(payload, i)
-            if got is None:
-                return None
-            vlen, i = got
+            vlen, i = _avro_varint(payload, i)
             if vlen < 0 or i + vlen > n:
                 return None
             if key == b"avro.codec":
@@ -382,14 +377,11 @@ def avro_blocks(
     i += 16
     blocks: list[tuple[int, int, int, int]] = []
     while i < n and len(blocks) < max_blocks:
-        got = _avro_varint(payload, i)
-        if got is None:
-            break
-        n_recs, j = got
-        got = _avro_varint(payload, j)
-        if got is None:
-            break
-        size, j = got
+        try:
+            n_recs, j = _avro_varint(payload, i)
+            size, j = _avro_varint(payload, j)
+        except Refused:
+            break  # torn block header: the manifest ends before it
         if n_recs < 0 or size < 0 or j + size + 16 > n:
             break  # truncated block
         if payload[j + size : j + size + 16] != sync:
@@ -414,62 +406,59 @@ def avro_block_manifest(media: DataFrame, max_blocks: int = 256) -> DataFrame:
     )
 
 
-def _tc_varint(payload: bytes, i: int) -> tuple[int, int] | None:
+def _tc_varint(payload: bytes, i: int) -> tuple[int, int]:
     """Unsigned LEB128 varint (thrift compact) → (value, next)."""
     acc = 0
     shift = 0
     n = len(payload)
     for k in range(10):
         if i + k >= n:
-            return None
+            raise Truncated
         b = payload[i + k]
         acc |= (b & 0x7F) << shift
         if not b & 0x80:
             return acc, i + k + 1
         shift += 7
-    return None
+    raise Refused("varint longer than 10 bytes")
 
 
-def _tc_zigzag(payload: bytes, i: int) -> tuple[int, int] | None:
-    got = _tc_varint(payload, i)
-    if got is None:
-        return None
-    u, i = got
+def _tc_zigzag(payload: bytes, i: int) -> tuple[int, int]:
+    u, i = _tc_varint(payload, i)
     return (u >> 1) ^ -(u & 1), i
 
 
-def _tc_skip(payload: bytes, i: int, ftype: int) -> int | None:
+def _tc_in(payload: bytes, end: int) -> int:
+    """``end`` when it lies inside ``payload``, else ``Truncated``."""
+    if end > len(payload):
+        raise Truncated
+    return end
+
+
+def _tc_skip(payload: bytes, i: int, ftype: int) -> int:
     """Skip one thrift-compact value of wire type ``ftype``; returns
-    the offset past it, or None on truncation/unknown type. Knowing
+    the offset past it, ``Refused`` on truncation/unknown type. Knowing
     how to SKIP every type is what makes the targeted parquet walk
     forward-compatible: new footer fields pass through untouched."""
     if ftype in (1, 2):  # BOOLEAN_TRUE / BOOLEAN_FALSE: value in type
         return i
     if ftype == 3:  # BYTE
-        return i + 1 if i + 1 <= len(payload) else None
+        return _tc_in(payload, i + 1)
     if ftype in (4, 5, 6):  # I16 / I32 / I64: zigzag varint
-        got = _tc_zigzag(payload, i)
-        return None if got is None else got[1]
+        return _tc_zigzag(payload, i)[1]
     if ftype == 7:  # DOUBLE: fixed 8 bytes
-        return i + 8 if i + 8 <= len(payload) else None
+        return _tc_in(payload, i + 8)
     if ftype == 8:  # BINARY: varint length + bytes
-        got = _tc_varint(payload, i)
-        if got is None:
-            return None
-        ln, i = got
-        return i + ln if ln >= 0 and i + ln <= len(payload) else None
+        ln, i = _tc_varint(payload, i)
+        return _tc_in(payload, i + ln)
     if ftype in (9, 10):  # LIST / SET
         if i >= len(payload):
-            return None
+            raise Truncated
         hdr = payload[i]
         i += 1
         size = hdr >> 4
         etype = hdr & 0x0F
         if size == 15:
-            got = _tc_varint(payload, i)
-            if got is None:
-                return None
-            size, i = got
+            size, i = _tc_varint(payload, i)
         if size > len(payload) - i:
             # Every element consumes >= 1 byte (bool COLLECTION
             # elements occupy one 0x01/0x02 byte each, unlike bool
@@ -477,46 +466,37 @@ def _tc_skip(payload: bytes, i: int, ftype: int) -> int | None:
             # declared size beyond the remaining bytes is corruption,
             # not data — and the bound keeps a crafted huge count from
             # spinning the loop.
-            return None
+            raise Refused("collection size beyond the data")
         if etype in (1, 2):
             return i + size  # one byte per bool element, bound-checked
         for _ in range(size):
             i = _tc_skip(payload, i, etype)
-            if i is None:
-                return None
         return i
     if ftype == 11:  # MAP: varint size, then key/val type byte + pairs
-        got = _tc_varint(payload, i)
-        if got is None:
-            return None
-        size, i = got
+        size, i = _tc_varint(payload, i)
         if size == 0:
             return i
         if i >= len(payload):
-            return None
+            raise Truncated
         kv = payload[i]
         i += 1
         if size > len(payload) - i:
             # each pair consumes >= 2 bytes (bool keys/values occupy
             # one byte each inside collections — see the LIST guard)
-            return None
+            raise Refused("map size beyond the data")
 
-        def _elem(j: int, t: int) -> int | None:
+        def _elem(j: int, t: int) -> int:
             if t in (1, 2):  # bool collection element: one byte
-                return j + 1 if j + 1 <= len(payload) else None
+                return _tc_in(payload, j + 1)
             return _tc_skip(payload, j, t)
 
         for _ in range(size):
             i = _elem(i, kv >> 4)
-            if i is None:
-                return None
             i = _elem(i, kv & 0x0F)
-            if i is None:
-                return None
         return i
     if ftype == 12:  # STRUCT: fields until STOP
         return _tc_skip_struct(payload, i)
-    return None
+    raise Refused("unknown thrift-compact type")
 
 
 def _tc_fields(payload: bytes, i: int):
@@ -534,31 +514,33 @@ def _tc_fields(payload: bytes, i: int):
             return
         ftype = hdr & 0x0F
         delta = hdr >> 4
-        if delta == 0:
-            got = _tc_zigzag(payload, i)
-            if got is None:
-                return
-            fid, i = got
-        else:
+        if delta:
             fid += delta
+        else:
+            try:
+                fid, i = _tc_zigzag(payload, i)
+            except Refused:
+                return  # a torn field header ends the walk
         consumed = yield fid, ftype, i
         if consumed is not None:
             i = consumed
             yield None  # resume the send()
         else:
-            i = _tc_skip(payload, i, ftype)
-            if i is None:
-                return
+            try:
+                i = _tc_skip(payload, i, ftype)
+            except Refused:
+                return  # so does a value that cannot be skipped
     return
 
 
-def _tc_skip_struct(payload: bytes, i: int) -> int | None:
+def _tc_skip_struct(payload: bytes, i: int) -> int:
     for fid, ftype, off in _tc_fields(payload, i):
         if fid is None:
             return off
-    return None
+    raise Truncated
 
 
+@none_on_refusal
 def parquet_row_groups(payload: bytes | None) -> dict | None:
     """REAL parquet footer walk — the row-group manifest WITHOUT the
     parquet reader: parse the thrift-compact FileMetaData from the
@@ -588,7 +570,7 @@ def parquet_row_groups(payload: bytes | None) -> dict | None:
     num_rows = None
     row_groups: list[tuple[int, int, int, int]] = []
 
-    def _parse_row_group(i: int) -> int | None:
+    def _parse_row_group(i: int) -> int:
         n_cols = 0
         rg_bytes = None
         rg_rows = None
@@ -596,58 +578,44 @@ def parquet_row_groups(payload: bytes | None) -> dict | None:
         for fid, ftype, off in gen:
             if fid is None:
                 if rg_bytes is None or rg_rows is None:
-                    return None
+                    raise Refused("row group without size or row count")
                 row_groups.append(
                     (len(row_groups), rg_rows, rg_bytes, n_cols)
                 )
                 return off
             if fid == 1 and ftype == 9:  # columns list<ColumnChunk>
                 if off >= len(payload):
-                    return None
+                    raise Truncated
                 hdr = payload[off]
                 j = off + 1
                 size = hdr >> 4
                 etype = hdr & 0x0F
                 if size == 15:
-                    got = _tc_varint(payload, j)
-                    if got is None:
-                        return None
-                    size, j = got
+                    size, j = _tc_varint(payload, j)
                 if etype != 12 or size > len(payload) - j:
                     # ColumnChunk elements are structs (>= 1 byte each);
                     # anything else — including a declared size beyond
                     # the remaining bytes, which would also overflow the
                     # int32 n_columns column — is corruption.
-                    return None
+                    raise Refused("columns list")
                 n_cols = size
                 for _ in range(size):
                     j = _tc_skip(payload, j, etype)
-                    if j is None:
-                        return None
                 gen.send(j)
             elif fid == 2 and ftype == 6:
-                got = _tc_zigzag(payload, off)
-                if got is None:
-                    return None
-                rg_bytes, j = got
+                rg_bytes, j = _tc_zigzag(payload, off)
                 gen.send(j)
             elif fid == 3 and ftype == 6:
-                got = _tc_zigzag(payload, off)
-                if got is None:
-                    return None
-                rg_rows, j = got
+                rg_rows, j = _tc_zigzag(payload, off)
                 gen.send(j)
-        return None
+        raise Truncated
 
     gen = _tc_fields(payload, start)
     for fid, ftype, off in gen:
         if fid is None:
             break
         if fid == 3 and ftype == 6:  # FileMetaData.num_rows
-            got = _tc_zigzag(payload, off)
-            if got is None:
-                return None
-            num_rows, j = got
+            num_rows, j = _tc_zigzag(payload, off)
             gen.send(j)
         elif fid == 4 and ftype == 9:  # row_groups list<RowGroup>
             if off >= len(payload):
@@ -657,16 +625,11 @@ def parquet_row_groups(payload: bytes | None) -> dict | None:
             size = hdr >> 4
             etype = hdr & 0x0F
             if size == 15:
-                got = _tc_varint(payload, j)
-                if got is None:
-                    return None
-                size, j = got
+                size, j = _tc_varint(payload, j)
             if etype != 12 or size > len(payload) - j:
                 return None
             for _ in range(size):
                 j = _parse_row_group(j)
-                if j is None:
-                    return None
             gen.send(j)
     if num_rows is None or not row_groups:
         return None
@@ -888,7 +851,7 @@ def _orc_decompress(
     length: int,
     kind: str,
     max_bytes: int = 1 << 26,
-) -> bytes | None:
+) -> bytes:
     """Inflate an ORC compressed STREAM (footer/metadata/stripe-footer):
     a sequence of chunks, each with a 3-byte little-endian header
     ``(chunk_length << 1) | is_original`` — original chunks are stored
@@ -897,19 +860,19 @@ def _orc_decompress(
     read from snappy's own leading varint; LZ4 block via the pure
     decoder in sources/shards; zstd via the FCS-aware frame kernel).
     ``kind == 'none'`` streams are not chunk-framed at all. Unknown
-    codecs (lzo) or any undecodable chunk → None."""
+    codecs (lzo) or any undecodable chunk → ``Refused``."""
     if kind == "none":
         return payload[start : start + length]
     out = bytearray()
     i, end = start, start + length
     while i < end:
         if i + 3 > end:
-            return None
+            raise Truncated
         hdr = int.from_bytes(payload[i : i + 3], "little")
         clen = hdr >> 1
         i += 3
         if i + clen > end or len(out) + clen > max_bytes:
-            return None
+            raise Refused("ORC chunk past its stream or the cap")
         chunk = payload[i : i + clen]
         i += clen
         if hdr & 1:  # is_original: stored raw
@@ -922,43 +885,42 @@ def _orc_decompress(
                 zlib.decompressobj(-15), chunk, max_bytes - len(out)
             )
             if piece is None:
-                return None
+                raise Refused("undecodable or over-cap deflate chunk")
         elif kind == "snappy":
             got = _pb_varint(chunk, 0, len(chunk))
             if got is None or got[0] > max_bytes - len(out):
-                return None
+                raise Refused("snappy length missing or over the cap")
             import pyarrow as pa
 
             try:
                 piece = bytes(pa.Codec("snappy").decompress(chunk, got[0]))
             except Exception:
-                return None
+                raise Refused("undecodable snappy chunk") from None
         elif kind == "lz4":
             from data_ingestion_py_spark.sources.shards import (
                 lz4_block_decompress,
             )
 
-            piece = lz4_block_decompress(chunk, max_bytes - len(out))
-            if piece is None:
-                return None
+            piece = lz4_block_decompress.__wrapped__(
+                chunk, max_bytes - len(out)
+            )
         elif kind == "zstd":
             from data_ingestion_py_spark.sources.shards import (
                 zstd_frame_decompress,
             )
 
-            piece = zstd_frame_decompress(
+            piece = zstd_frame_decompress.__wrapped__(
                 bytes(chunk), 0, max_bytes - len(out)
             )
-            if piece is None:
-                return None
         else:
-            return None
+            raise Refused(f"ORC compression {kind}")
         out += piece
         if len(out) > max_bytes:
-            return None
+            raise Refused("ORC stream over the cap")
     return bytes(out)
 
 
+@none_on_refusal
 def orc_file_info(payload: bytes | None, max_stripes: int = 4096):
     """Walk an ORC file TAIL-FIRST — the reader pattern the format is
     designed for: last byte = postscript length; the (never-compressed)
@@ -1010,8 +972,6 @@ def orc_file_info(payload: bytes | None, max_stripes: int = 4096):
     if footer_start < 3 or footer_len == 0:
         return None
     footer = _orc_decompress(payload, footer_start, footer_len, kind)
-    if footer is None:
-        return None
     info = {
         "n_rows": 0,
         "compression": kind,

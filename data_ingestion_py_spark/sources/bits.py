@@ -9,14 +9,21 @@
   inflation that stops one byte past an output cap, so a few hundred
   bytes of hostile input cannot make a decoder allocate far past it.
 
-One truncation rule for both readers: a read past the end of the data
-raises ``Truncated`` (a ``ValueError``); each public decode entry point
-catches it once and returns None (``none_on_truncation``), so callers
-test decoded values only, never per-read sentinels. ``MsbBits.peek``
-alone never raises: past the end it pads with zero bits, which the
-CCITT look-ahead needs for its EOL and mode codes (an all-zero peek
-matches no mode code). Multi-bit reads slice the bytes and convert
-them with one ``int.from_bytes``, so they cost no per-bit loop.
+One refusal contract for every decoder in ``sources/``: below a public
+entry point, bytes a decoder will not decode (corrupt, unsupported, or
+over a size bound) raise ``Refused`` (a ``ValueError``), and a read
+past the end of the data raises its subclass ``Truncated``; each public
+entry point catches it once and returns None (``none_on_refusal``), so
+callers test decoded values only, never per-read or per-helper
+sentinels. A public entry point that builds on another calls that one's
+``__wrapped__``, so the refusal passes up to the outer catch. Row
+functions (``spread.kernel_rows``) see only that None and pick their own
+reaction: a NULL row, no row, or a fallback.
+``MsbBits.peek`` alone never raises: past the end it pads with zero
+bits, which the CCITT look-ahead needs for its EOL and mode codes (an
+all-zero peek matches no mode code). Multi-bit reads slice the bytes
+and convert them with one ``int.from_bytes``, so they cost no per-bit
+loop.
 
 Three readers stay with their kernels, because each has a byte rule of
 its own that sharing would turn into per-caller branches here:
@@ -28,6 +35,9 @@ its own that sharing would turn into per-caller branches here:
   every 0xFF byte, so a byte there may carry only 7 bits.
 - ``zstd_pure._RevBits``: the zstd entropy streams are read backward
   from the marker bit in their last byte.
+
+Like the two shared readers, each of them raises ``Truncated`` past the
+end of its data.
 """
 
 from __future__ import annotations
@@ -38,20 +48,25 @@ import sys
 import zlib
 
 
-class Truncated(ValueError):
+class Refused(ValueError):
+    """The decoder refuses these bytes: corrupt, unsupported, or over
+    one of its size bounds."""
+
+
+class Truncated(Refused):
     """A read ran past the end of the data, or an Exp-Golomb prefix
     ran past the 31 zeros a conforming stream can hold."""
 
 
-def none_on_truncation(decode):
-    """Decorator for a public decode entry point: ``Truncated`` raised
+def none_on_refusal(decode):
+    """Decorator for a public decode entry point: ``Refused`` raised
     anywhere below it returns None."""
 
     @functools.wraps(decode)
     def wrapper(*args, **kwargs):
         try:
             return decode(*args, **kwargs)
-        except Truncated:
+        except Refused:
             return None
 
     return wrapper

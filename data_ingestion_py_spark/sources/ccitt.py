@@ -38,7 +38,8 @@ import numpy as np
 
 from data_ingestion_py_spark.sources.bits import (
     MsbBits,
-    none_on_truncation,
+    Refused,
+    none_on_refusal,
     prefix_trie,
 )
 
@@ -128,7 +129,7 @@ _BLACK_TREE = prefix_trie(
 )
 
 
-def _read_run(bits: MsbBits, white: bool) -> int | None:
+def _read_run(bits: MsbBits, white: bool) -> int:
     """One T.4 run length: make-up codes accumulate until a
     terminating (<64) code arrives."""
     tree = _WHITE_TREE if white else _BLACK_TREE
@@ -136,14 +137,14 @@ def _read_run(bits: MsbBits, white: bool) -> int | None:
     for _ in range(16):  # ≥2560/64 make-ups would be corrupt anyway
         run = bits.read_code(tree)
         if run is None:
-            return None
+            raise Refused("no T.4 run code")
         total += run
         if run < 64:
             return total
-    return None
+    raise Refused("too many make-up codes")
 
 
-@none_on_truncation
+@none_on_refusal
 def g3_1d_decode(
     data: bytes,
     columns: int,
@@ -160,7 +161,7 @@ def g3_1d_decode(
     between lines. None on run-sum overflow/underflow, bad codes, or a
     row-count mismatch."""
     if columns <= 0 or columns > 1 << 16:
-        return None
+        raise Refused("fax line width")
     bits = MsbBits(data)
     out: list[np.ndarray] = []
     max_rows = rows if rows is not None else 1 << 20
@@ -176,23 +177,21 @@ def g3_1d_decode(
         white = True
         while total < columns:
             run = _read_run(bits, white)
-            if run is None:
-                return None
             if total + run > columns:
-                return None
+                raise Refused("1D runs overflow the line")
             if not white:
                 line[total : total + run] = 0
             total += run
             white = not white
         out.append(line)
     if rows is not None and len(out) != rows:
-        return None
+        raise Refused("fax row count")
     if not out:
-        return None
+        raise Refused("no fax lines")
     return np.stack(out)
 
 
-@none_on_truncation
+@none_on_refusal
 def g4_decode(
     data: bytes, columns: int, rows: int | None = None
 ) -> "np.ndarray | None":
@@ -201,7 +200,7 @@ def g4_decode(
     ImageLength); decoding also stops at EOFB or stream end. None on
     any malformed mode code, run overflow, or truncated line."""
     if columns <= 0 or columns > 1 << 16:
-        return None
+        raise Refused("fax line width")
     bits = MsbBits(data)
     # reference transitions for the imaginary all-white line above
     ref: list[int] = [columns, columns]
@@ -215,23 +214,21 @@ def g4_decode(
         if bits.peek(24) == 0b000000000001000000000001:
             break
         cur = _decode_2d_line(bits, ref, columns)
-        if cur is None:
-            return None
         out.append(_render_line(cur, columns))
         ref = cur + [columns, columns]
     if rows is not None and len(out) != rows:
-        return None
+        raise Refused("fax row count")
     if not out:
-        return None
+        raise Refused("no fax lines")
     return np.stack(out)
 
 
 def _decode_2d_line(
     bits: MsbBits, ref: list[int], columns: int
-) -> list[int] | None:
+) -> list[int]:
     """One 2D-coded line (pass / vertical / horizontal modes against
     the reference line's changing elements) → its transition
-    positions, or None on any malformed code. Shared by T.6 Group 4
+    positions; ``Refused`` on any malformed code. Shared by T.6 Group 4
     and the 2D lines of mixed-2D Group 3 (T.4 K>0) — the coding is
     identical; only framing differs (T.88 §6.2.6 makes the same
     observation for JBIG2 MMR)."""
@@ -242,7 +239,7 @@ def _decode_2d_line(
     while a0 < columns:
         guard += 1
         if guard > 4 * columns + 16:
-            return None
+            raise Refused("2D line does not end")
         # Changing elements alternate: EVEN index = white→black,
         # ODD = black→white (lines start white). b1 = first ref
         # transition strictly right of a0 whose change is to the
@@ -266,16 +263,10 @@ def _decode_2d_line(
         elif p >> 4 == 0b001:  # horizontal
             bits.pos += 3
             start = max(a0, 0)
-            r1 = _read_run(bits, color_white)
-            if r1 is None:
-                return None
-            r2 = _read_run(bits, not color_white)
-            if r2 is None:
-                return None
-            t1 = start + r1
-            t2 = t1 + r2
+            t1 = start + _read_run(bits, color_white)
+            t2 = t1 + _read_run(bits, not color_white)
             if t2 > columns:
-                return None
+                raise Refused("horizontal runs overflow the line")
             cur.append(t1)
             cur.append(t2)
             a0 = t2
@@ -297,9 +288,9 @@ def _decode_2d_line(
             bits.pos += 7
             a1 = b1 - 3
         else:
-            return None  # EOL mid-line, or garbage
+            raise Refused("no 2D mode code")  # EOL mid-line, or garbage
         if a1 < 0 or a1 > columns or (cur and a1 < cur[-1]):
-            return None
+            raise Refused("vertical mode leaves the line")
         cur.append(a1)
         a0 = a1
         color_white = not color_white
@@ -316,7 +307,7 @@ def _render_line(cur: list[int], columns: int) -> "np.ndarray":
     return line
 
 
-def _decode_1d_line(bits: MsbBits, columns: int) -> list[int] | None:
+def _decode_1d_line(bits: MsbBits, columns: int) -> list[int]:
     """One T.4 modified-Huffman 1D line → transition positions (run
     sums must hit ``columns`` exactly); used by the 1D-tagged lines
     of mixed-2D Group 3, where the next line's 2D coding needs the
@@ -325,19 +316,16 @@ def _decode_1d_line(bits: MsbBits, columns: int) -> list[int] | None:
     total = 0
     white = True
     while total < columns:
-        run = _read_run(bits, white)
-        if run is None:
-            return None
-        total += run
+        total += _read_run(bits, white)
         if total > columns:
-            return None
+            raise Refused("1D runs overflow the line")
         if total < columns:
             cur.append(total)
         white = not white
     return cur
 
 
-@none_on_truncation
+@none_on_refusal
 def g3_2d_decode(
     data: bytes,
     columns: int,
@@ -358,7 +346,7 @@ def g3_2d_decode(
     stream end; None on a stray bit before an EOL, a 2D-tagged FIRST
     line, any malformed code, or a row-count mismatch."""
     if columns <= 0 or columns > 1 << 16:
-        return None
+        raise Refused("fax line width")
     bits = MsbBits(data)
     ref: list[int] | None = None  # no reference before the first line
     out: list[np.ndarray] = []
@@ -368,7 +356,7 @@ def g3_2d_decode(
         if bits.rest_is_zero():
             break
         if bits.unary() < 11:
-            return None
+            raise Refused("stray bit before EOL")
         if bits.pos >= bits.n:
             break
         tag = bits.read1()
@@ -380,15 +368,13 @@ def g3_2d_decode(
             cur = _decode_1d_line(bits, columns)
         else:
             if ref is None:
-                return None  # first line must be 1D: nothing above
+                raise Refused("first line is 2D-coded")
             cur = _decode_2d_line(bits, ref + [columns, columns],
                                   columns)
-        if cur is None:
-            return None
         out.append(_render_line(cur, columns))
         ref = cur
     if rows is not None and len(out) != rows:
-        return None
+        raise Refused("fax row count")
     if not out:
-        return None
+        raise Refused("no fax lines")
     return np.stack(out)

@@ -29,7 +29,11 @@ same snippetize/quality operators.
 
 from __future__ import annotations
 
-from data_ingestion_py_spark.sources.bits import bounded_decompress
+from data_ingestion_py_spark.sources.bits import (
+    Refused,
+    bounded_decompress,
+    none_on_refusal,
+)
 from data_ingestion_py_spark.sources.spread import kernel_rows
 
 import re
@@ -68,6 +72,7 @@ def _unescape(s: str) -> str:
     return _ENT.sub(one, s)
 
 
+@none_on_refusal
 def docx_document_xml(payload: bytes | None) -> bytes | None:
     """``word/document.xml`` bytes out of a DOCX package: ZIP walk +
     member decompression (STORED as-is, DEFLATE via raw inflate
@@ -76,20 +81,21 @@ def docx_document_xml(payload: bytes | None) -> bytes | None:
     inflation fails/overflows the declared size."""
     from data_ingestion_py_spark.sources.archive import zip_members
 
-    members = zip_members(payload)
-    if members is None:
-        return None
-    for name, method, uncomp, comp, off in members:
+    for name, method, uncomp, comp, off in zip_members.__wrapped__(payload):
         if name != "word/document.xml":
             continue
-        raw = payload[off : off + comp]
         if method == 0:
-            return raw if len(raw) == uncomp else None
-        if method == 8:
-            out = bounded_decompress(zlib.decompressobj(-15), raw, uncomp)
-            return out if out is not None and len(out) == uncomp else None
-        return None  # OPC allows only STORED/DEFLATE
-    return None
+            out = payload[off : off + comp]
+        elif method == 8:
+            out = bounded_decompress(
+                zlib.decompressobj(-15), payload[off : off + comp], uncomp
+            )
+        else:
+            raise Refused("OPC allows only STORED/DEFLATE")
+        if out is None or len(out) != uncomp:
+            raise Refused("document part does not inflate to its size")
+        return out
+    raise Refused("no word/document.xml part")
 
 
 def docx_paragraphs(xml: bytes) -> list[str]:
@@ -113,14 +119,12 @@ def docx_paragraphs(xml: bytes) -> list[str]:
     return out
 
 
+@none_on_refusal
 def docx_text(payload: bytes | None) -> str | None:
     """Whole-document text: paragraphs joined by newlines (the same
     page_text convention the PDF path emits). None when the package
     or part does not parse."""
-    xml = docx_document_xml(payload)
-    if xml is None:
-        return None
-    return "\n".join(docx_paragraphs(xml))
+    return "\n".join(docx_paragraphs(docx_document_xml.__wrapped__(payload)))
 
 
 def docx_paragraph_rows(media):

@@ -35,18 +35,16 @@ from __future__ import annotations
 
 from array import array
 
+import numpy as np
+
 from data_ingestion_py_spark.sources.bits import (
     MsbBits,
-    none_on_truncation,
+    Refused,
+    none_on_refusal,
     prefix_trie,
     rbsp_unescape,
 )
 from data_ingestion_py_spark.sources.spread import kernel_rows
-
-try:  # numpy is a hard dep of the package; guard for doc tooling only
-    import numpy as np
-except ImportError:  # pragma: no cover
-    np = None  # type: ignore[assignment]
 
 
 # ---------------------------------------------------------------------
@@ -248,9 +246,9 @@ _RB_TREES = {k: prefix_trie(v.items()) for k, v in _RUN_BEFORE.items()}
 
 def _residual_block(
     bits: MsbBits, n_coeff_max: int, nc: int
-) -> list[int] | None:
+) -> list[int]:
     """One CAVLC residual block (§9.2) → coefficient list of length
-    ``n_coeff_max`` in decoding (zigzag) order, or None."""
+    ``n_coeff_max`` in decoding (zigzag) order."""
     if nc < 0:
         ct = bits.read_code(_CT_TREES[4])
     elif nc < 2:
@@ -263,13 +261,13 @@ def _residual_block(
         v = bits.read(6)
         ct = (0, 0) if v == 3 else ((v >> 2) + 1, v & 3)
     if ct is None:
-        return None
+        raise Refused("no coeff_token code")
     total_coeff, trailing_ones = ct
     coeffs = [0] * n_coeff_max
     if total_coeff == 0:
         return coeffs
     if total_coeff > n_coeff_max or trailing_ones > total_coeff:
-        return None
+        raise Refused("coeff_token out of range")
     levels: list[int] = []
     for _ in range(trailing_ones):
         levels.append(-1 if bits.read1() else 1)
@@ -277,7 +275,7 @@ def _residual_block(
     for i in range(total_coeff - trailing_ones):
         prefix = bits.unary()
         if prefix > 32:
-            return None
+            raise Refused("level_prefix over 32")
         if suffix_len == 0 and prefix == 14:
             sz = 4
         elif prefix >= 15:
@@ -308,11 +306,11 @@ def _residual_block(
         else:
             tz = bits.read_code(_TZ_TREES.get(total_coeff, {}))
         if tz is None:
-            return None
+            raise Refused("no total_zeros code")
     else:
         tz = 0
     if tz > n_coeff_max - total_coeff:
-        return None
+        raise Refused("total_zeros out of range")
     runs = [0] * total_coeff
     zeros_left = tz
     for i in range(total_coeff - 1):
@@ -320,7 +318,7 @@ def _residual_block(
             break
         run = bits.read_code(_RB_TREES[min(zeros_left, 7)])
         if run is None or run > zeros_left:
-            return None
+            raise Refused("run_before out of range")
         runs[i] = run
         zeros_left -= run
     runs[total_coeff - 1] = zeros_left
@@ -328,7 +326,7 @@ def _residual_block(
     pos = total_coeff - 1 + tz
     for i in range(total_coeff):
         if pos < 0 or pos >= n_coeff_max:
-            return None
+            raise Refused("coefficient outside the block")
         coeffs[pos] = levels[i]
         pos -= runs[i] + 1
     return coeffs
@@ -460,7 +458,7 @@ def _pred4x4(mode, dst, y0, x0, w, h, plane, avail):
     """Predict the 4x4 block at (y0, x0) of ``plane`` in place; the
     neighbour samples come from already-reconstructed pixels.
     ``avail(y, x)`` says whether that pixel is decodable context.
-    Returns False on a mode that needs unavailable samples (stream
+    ``Refused`` on a mode that needs unavailable samples (stream
     malformed for baseline constrained intra assumptions)."""
     up = [0] * 8
     left = [0] * 4
@@ -487,13 +485,13 @@ def _pred4x4(mode, dst, y0, x0, w, h, plane, avail):
 
     if mode == 0:  # vertical
         if not have_up:
-            return False
+            raise Refused("prediction needs an unavailable neighbour")
         for r in range(4):
             for c in range(4):
                 dst[r][c] = up[c]
     elif mode == 1:  # horizontal
         if not have_left:
-            return False
+            raise Refused("prediction needs an unavailable neighbour")
         for r in range(4):
             for c in range(4):
                 dst[r][c] = left[r]
@@ -511,7 +509,7 @@ def _pred4x4(mode, dst, y0, x0, w, h, plane, avail):
                 dst[r][c] = dc
     elif mode == 3:  # diagonal down-left
         if not have_up:
-            return False
+            raise Refused("prediction needs an unavailable neighbour")
         for r in range(4):
             for c in range(4):
                 i = r + c
@@ -521,7 +519,7 @@ def _pred4x4(mode, dst, y0, x0, w, h, plane, avail):
                     dst[r][c] = (up[i] + 2 * up[i + 1] + up[i + 2] + 2) >> 2
     elif mode == 4:  # diagonal down-right
         if not (have_up and have_left and have_ul):
-            return False
+            raise Refused("prediction needs an unavailable neighbour")
         for r in range(4):
             for c in range(4):
                 if c > r:
@@ -542,7 +540,7 @@ def _pred4x4(mode, dst, y0, x0, w, h, plane, avail):
                     dst[r][c] = (up[0] + 2 * ul + left[0] + 2) >> 2
     elif mode == 5:  # vertical-right
         if not (have_up and have_left and have_ul):
-            return False
+            raise Refused("prediction needs an unavailable neighbour")
         for r in range(4):
             for c in range(4):
                 z = 2 * c - r
@@ -566,7 +564,7 @@ def _pred4x4(mode, dst, y0, x0, w, h, plane, avail):
                     ) >> 2
     elif mode == 6:  # horizontal-down
         if not (have_up and have_left and have_ul):
-            return False
+            raise Refused("prediction needs an unavailable neighbour")
         for r in range(4):
             for c in range(4):
                 z = 2 * r - c
@@ -588,7 +586,7 @@ def _pred4x4(mode, dst, y0, x0, w, h, plane, avail):
                     ) >> 2
     elif mode == 7:  # vertical-left
         if not have_up:
-            return False
+            raise Refused("prediction needs an unavailable neighbour")
         for r in range(4):
             for c in range(4):
                 i = c + (r >> 1)
@@ -598,7 +596,7 @@ def _pred4x4(mode, dst, y0, x0, w, h, plane, avail):
                     dst[r][c] = (up[i] + 2 * up[i + 1] + up[i + 2] + 2) >> 2
     elif mode == 8:  # horizontal-up
         if not have_left:
-            return False
+            raise Refused("prediction needs an unavailable neighbour")
         for r in range(4):
             for c in range(4):
                 z = c + 2 * r
@@ -614,23 +612,22 @@ def _pred4x4(mode, dst, y0, x0, w, h, plane, avail):
                 else:  # z > 5
                     dst[r][c] = left[3]
     else:
-        return False
+        raise Refused("intra prediction mode")
     for r in range(4):
         for c in range(4):
             dst[r][c] = clip(dst[r][c])
-    return True
 
 
-def _pred16x16(mode, plane, my, mx, have_up, have_left) -> bool:
+def _pred16x16(mode, plane, my, mx, have_up, have_left) -> None:
     """I_16x16 luma prediction written into plane[my:my+16, mx:mx+16].
     Modes: 0 vertical, 1 horizontal, 2 DC, 3 plane (§8.3.3)."""
     return _pred_block(mode, plane, my, mx, 16, have_up, have_left)
 
 
-def _pred_block(mode, plane, my, mx, size, have_up, have_left) -> bool:
+def _pred_block(mode, plane, my, mx, size, have_up, have_left) -> None:
     if mode == 0:  # vertical
         if not have_up:
-            return False
+            raise Refused("prediction needs an unavailable neighbour")
         for r in range(size):
             row = plane[my + r]
             src = plane[my - 1]
@@ -638,7 +635,7 @@ def _pred_block(mode, plane, my, mx, size, have_up, have_left) -> bool:
                 row[mx + c] = src[mx + c]
     elif mode == 1:  # horizontal
         if not have_left:
-            return False
+            raise Refused("prediction needs an unavailable neighbour")
         for r in range(size):
             v = plane[my + r][mx - 1]
             row = plane[my + r]
@@ -660,7 +657,7 @@ def _pred_block(mode, plane, my, mx, size, have_up, have_left) -> bool:
                 row[mx + c] = dc
     elif mode == 3:  # plane
         if not (have_up and have_left):
-            return False
+            raise Refused("prediction needs an unavailable neighbour")
         half = size // 2
         h = sum(
             (i + 1) * (
@@ -690,8 +687,7 @@ def _pred_block(mode, plane, my, mx, size, have_up, have_left) -> bool:
                        + 16) >> 5
                 row[mx + cc] = 0 if val < 0 else 255 if val > 255 else val
     else:
-        return False
-    return True
+        raise Refused("intra prediction mode")
 
 
 # chroma pred mode numbering differs from luma 16x16: 0 DC, 1 H, 2 V,
@@ -789,7 +785,7 @@ def parse_sps_decode(rbsp: bytes) -> dict | None:
     return {**f, "pic_height_in_mbs": f["pic_height_in_map_units"]}
 
 
-@none_on_truncation
+@none_on_refusal
 def parse_pps_decode(rbsp: bytes) -> dict | None:
     """PPS fields for CAVLC intra decode; CABAC, slice groups, and
     8x8 transforms refuse, and so does an RBSP cut before its stop
@@ -823,7 +819,7 @@ def parse_pps_decode(rbsp: bytes) -> dict | None:
     }
 
 
-@none_on_truncation
+@none_on_refusal
 def decode_idr_slice(
     sps: dict, pps: dict, slice_rbsp: bytes
 ) -> "tuple[np.ndarray, np.ndarray, np.ndarray] | None":
@@ -831,13 +827,11 @@ def decode_idr_slice(
     (Y, Cb, Cr) uint8 arrays (full uncropped MB grid; the caller
     applies SPS cropping). None on any unsupported shape or
     malformed bitstream — never guessed pixels."""
-    if np is None:  # pragma: no cover
-        return None
     b = MsbBits(slice_rbsp)
     first_mb = b.ue()
     slice_type = b.ue()
     if first_mb != 0 or slice_type not in (2, 7):
-        return None  # partial-frame slices / non-I: refuse
+        raise Refused("partial-frame or non-I slice")
     b.ue()  # pps id
     b.read(sps["log2_max_frame_num"])  # frame_num
     b.ue()  # idr_pic_id
@@ -852,12 +846,12 @@ def decode_idr_slice(
             b.se()  # slice_beta_offset_div2
     qp = pps["pic_init_qp"] + qp_delta
     if not 0 <= qp <= 51:
-        return None
+        raise Refused("slice QP")
     wmb, hmb = sps["pic_width_in_mbs"], sps["pic_height_in_mbs"]
     if wmb * hmb * _MIN_MB_BITS > b.n - b.pos:
         # a slice this short cannot cover the declared frame: refuse
         # before allocating the W×H planes
-        return None
+        raise Refused("slice too short for the frame")
     # one byte per sample and per map entry (bytearray rows, signed
     # for the mode map), not a list slot: a frame's working set is
     # ~440 bytes per MB, so the level's MaxFS bounds it
@@ -895,7 +889,7 @@ def decode_idr_slice(
         yy, xx = my_mb * 16, mx_mb * 16
         mb_type = b.ue()
         if mb_type > 25:
-            return None
+            raise Refused("mb_type")
 
         def avail(py, px):
             if py < 0 or px < 0 or px >= W:
@@ -932,16 +926,16 @@ def decode_idr_slice(
                     modes.append(b.read(3))
             chroma_mode = b.ue()
             if chroma_mode > 3:
-                return None
+                raise Refused("chroma prediction mode")
             cbp_idx = b.ue()
             if cbp_idx >= 48:
-                return None
+                raise Refused("coded_block_pattern")
             cbp = _CBP_INTRA[cbp_idx]
             cbp_luma, cbp_chroma = cbp & 15, cbp >> 4
             if cbp:
                 qp = qp + b.se()
                 if not 0 <= qp <= 51:
-                    return None
+                    raise Refused("MB QP")
             # decode the 16 4x4 blocks in the spec's raster-in-8x8
             # order, predicting + reconstructing each before the next
             for blk in range(16):
@@ -965,13 +959,10 @@ def decode_idr_slice(
                     mode = want if want < pred else want + 1
                 pred_modes[gby][gbx] = mode
                 dst = [[0] * 4 for _ in range(4)]
-                if not _pred4x4(mode, dst, y0, x0, W, H, Y, avail):
-                    return None
+                _pred4x4(mode, dst, y0, x0, W, H, Y, avail)
                 if cbp_luma & (1 << blk8):
                     nc = nC(luma_nz, gby, gbx)
                     coeffs = _residual_block(b, 16, nc)
-                    if coeffs is None:
-                        return None
                     luma_nz[gby][gbx] = sum(1 for v in coeffs if v)
                     res = _itransform4x4(_dequant4x4(coeffs, qp, False))
                 else:
@@ -991,20 +982,17 @@ def decode_idr_slice(
             cbp_luma = 15 if t >= 12 else 0
             chroma_mode = b.ue()
             if chroma_mode > 3:
-                return None
+                raise Refused("chroma prediction mode")
             qp = qp + b.se()
             if not 0 <= qp <= 51:
-                return None
+                raise Refused("MB QP")
             have_up = avail(yy - 1, xx)
             have_left = avail(yy, xx - 1)
             # map I16x16 mode numbering (0 V, 1 H, 2 DC, 3 plane)
-            if not _pred16x16(pred_mode16, Y, yy, xx, have_up, have_left):
-                return None
+            _pred16x16(pred_mode16, Y, yy, xx, have_up, have_left)
             # DC block (always present)
             nc = nC(luma_nz, my_mb * 4, mx_mb * 4)
             dc_coeffs = _residual_block(b, 16, nc)
-            if dc_coeffs is None:
-                return None
             dcm = [[0] * 4 for _ in range(4)]
             for i, (r, c) in enumerate(_ZIGZAG):
                 dcm[r][c] = dc_coeffs[i]
@@ -1018,8 +1006,6 @@ def decode_idr_slice(
                 if cbp_luma:
                     nc = nC(luma_nz, gby, gbx)
                     ac = _residual_block(b, 15, nc)
-                    if ac is None:
-                        return None
                     luma_nz[gby][gbx] = sum(1 for v in ac if v)
                     coeffs = [0] + ac
                 else:
@@ -1049,15 +1035,11 @@ def decode_idr_slice(
         for plane in (Cb, Cr):
             if cmode == 2:  # DC: per-quadrant rules
                 _pred_chroma_dc(plane, cy, cx, have_up, have_left)
-            elif not _pred_block(
-                cmode, plane, cy, cx, 8, have_up, have_left
-            ):
-                return None
+            else:
+                _pred_block(cmode, plane, cy, cx, 8, have_up, have_left)
         for plane, nz in ((Cb, cb_nz), (Cr, cr_nz)):
             if cbp_chroma:
                 dc = _residual_block(b, 4, -1)
-                if dc is None:
-                    return None
             else:
                 dc = [0, 0, 0, 0]
             dcd = _chroma_dc_dequant(dc, qpc)
@@ -1067,8 +1049,6 @@ def decode_idr_slice(
                 if cbp_chroma == 2:
                     nc = nC(nz, gby, gbx)
                     ac = _residual_block(b, 15, nc)
-                    if ac is None:
-                        return None
                     nz[gby][gbx] = sum(1 for v in ac if v)
                     coeffs = [0] + ac
                 else:
@@ -1092,6 +1072,7 @@ def decode_idr_slice(
     )
 
 
+@none_on_refusal
 def decode_idr_annexb(payload: bytes) -> dict | None:
     """Decode the FIRST IDR frame of an Annex-B elementary stream →
     ``{"width", "height", "y", "cb", "cr"}`` (cropped per SPS).
@@ -1101,11 +1082,9 @@ def decode_idr_annexb(payload: bytes) -> dict | None:
         h264_annexb_nals,
     )
 
-    idx = h264_annexb_nals(payload, max_nals=512)
-    if idx is None:
-        return None
     sps = pps = idr = None
-    for _i, off, size, ntype, _k in idx["nals"]:
+    nals = h264_annexb_nals.__wrapped__(payload, max_nals=512)["nals"]
+    for _i, off, size, ntype, _k in nals:
         nal = payload[off : off + size]
         if ntype == 7 and sps is None:
             sps = parse_sps_decode(rbsp_unescape(nal[1:]))
@@ -1115,10 +1094,7 @@ def decode_idr_annexb(payload: bytes) -> dict | None:
             idr = rbsp_unescape(nal[1:])
     if sps is None or pps is None or idr is None:
         return None
-    got = decode_idr_slice(sps, pps, idr)
-    if got is None:
-        return None
-    y, cb, cr = got
+    y, cb, cr = decode_idr_slice.__wrapped__(sps, pps, idr)
     cl, cr_, ct, cb_ = sps["crop"]
     W = sps["pic_width_in_mbs"] * 16 - 2 * (cl + cr_)
     H = sps["pic_height_in_mbs"] * 16 - 2 * (ct + cb_)

@@ -34,15 +34,17 @@ the extras-free counterpart for the generic-region class.
 
 from __future__ import annotations
 
-try:  # numpy is a hard dep of the package; guard for doc tooling only
-    import numpy as np
-except ImportError:  # pragma: no cover
-    np = None  # type: ignore[assignment]
+import numpy as np
+
+from data_ingestion_py_spark.sources.bits import Refused, none_on_refusal
 
 #: segment types (T.88 §7.3)
 _IMMEDIATE_GENERIC = (38, 39)  # immediate / immediate lossless
 _INTERMEDIATE_GENERIC = 36
 _PAGE_INFO = 48
+#: bound on the pixels of one region or of the page buffer (a 600-dpi
+#: A4 scan is ~35 Mpx): a few header bytes must not size a GB raster
+_MAX_PIXELS = 1 << 26
 
 # ---------------------------------------------------------------------
 # MQ arithmetic decoder (T.88 Annex E, software conventions): the
@@ -183,6 +185,7 @@ _AT_DEFAULTS = {
 _TPGDON_CTX = (0x9B25, 0x0795, 0x00E5, 0x0195)
 
 
+@none_on_refusal
 def generic_region_arith(
     data: bytes,
     w: int,
@@ -200,19 +203,17 @@ def generic_region_arith(
     convention — or None for bad geometry / out-of-range params.
     An AT pixel must not reference unseen data (dy > 0, or dy == 0
     with dx >= 0): refused."""
-    if np is None:  # pragma: no cover
-        return None
-    if template not in _GB_FIXED or w <= 0 or h <= 0:
-        return None
+    if template not in _GB_FIXED or w <= 0 or h <= 0 or w * h > _MAX_PIXELS:
+        raise Refused("generic region geometry")
     ats = tuple(at) if at is not None else _AT_DEFAULTS[template]
     if len(ats) != len(_AT_DEFAULTS[template]):
-        return None
+        raise Refused("AT pixel count")
     pixels = list(_GB_FIXED[template])
     for ax, ay in ats:
         if ay > 0 or (ay == 0 and ax >= 0):
-            return None
+            raise Refused("AT pixel references unseen data")
         if not (-128 <= ax <= 127 and -128 <= ay <= 127):
-            return None
+            raise Refused("AT pixel out of range")
         pixels.append((ax, ay))
     # (row, column) order, MSB first — the fixed label bijection
     pixels.sort(key=lambda p: (p[1], p[0]))
@@ -314,6 +315,7 @@ def _segments(data: bytes):
         i += dlen
 
 
+@none_on_refusal
 def jbig2_generic_decode(
     data: bytes, globals_data: bytes | None = None
 ) -> "np.ndarray | None":
@@ -328,8 +330,6 @@ def jbig2_generic_decode(
     operator a full-page scan uses). None for symbol/text segments
     carrying image data, the EXTTEMPLATE extension, or any malformed
     geometry."""
-    if np is None:  # pragma: no cover
-        return None
     from data_ingestion_py_spark.sources.ccitt import g4_decode
 
     if globals_data:
@@ -338,40 +338,38 @@ def jbig2_generic_decode(
         # image-bearing segment types is the arithmetic/symbol seam
         for stype, _p in _segments(globals_data):
             if stype not in (_PAGE_INFO, 50, 51, 62):  # info-ish only
-                return None
+                raise Refused("unsupported or malformed JBIG2 stream")
     page_w = page_h = None
     regions: list[tuple[int, int, "np.ndarray"]] = []
     for stype, payload in _segments(data):
         if stype == _PAGE_INFO:
             if len(payload) < 8:
-                return None
+                raise Refused("unsupported or malformed JBIG2 stream")
             page_w = int.from_bytes(payload[0:4], "big")
             page_h = int.from_bytes(payload[4:8], "big")
             if page_h == 0xFFFFFFFF:
                 page_h = None
         elif stype in _IMMEDIATE_GENERIC:
             if len(payload) < 18:
-                return None
+                raise Refused("unsupported or malformed JBIG2 stream")
             w = int.from_bytes(payload[0:4], "big")
             h = int.from_bytes(payload[4:8], "big")
             x = int.from_bytes(payload[8:12], "big")
             y = int.from_bytes(payload[12:16], "big")
             gflags = payload[17]
             if gflags & 0x10:
-                return None  # EXTTEMPLATE (12 ATs): honest seam
-            if w <= 0 or h <= 0 or w > 1 << 16 or h > 1 << 16:
-                return None
+                raise Refused("EXTTEMPLATE (12 ATs)")
+            if w <= 0 or h <= 0 or w > 1 << 16 or w * h > _MAX_PIXELS:
+                raise Refused("unsupported or malformed JBIG2 stream")
             if gflags & 1:  # MMR == T.6
-                arr = g4_decode(payload[18:], w, h)
-                if arr is None:
-                    return None
+                arr = g4_decode.__wrapped__(payload[18:], w, h)
             else:  # MQ arithmetic (r15)
                 template = (gflags >> 1) & 3
                 tpgdon = bool(gflags & 8)
                 n_at = 4 if template == 0 else 1
                 off = 18
                 if off + 2 * n_at > len(payload):
-                    return None
+                    raise Refused("unsupported or malformed JBIG2 stream")
                 at = []
                 for _k in range(n_at):
                     ax = int.from_bytes(
@@ -382,26 +380,26 @@ def jbig2_generic_decode(
                     )
                     at.append((ax, ay))
                     off += 2
-                bits = generic_region_arith(
+                bits = generic_region_arith.__wrapped__(
                     payload[off:], w, h, template, tuple(at), tpgdon
                 )
-                if bits is None:
-                    return None
                 arr = np.where(bits != 0, 0, 255).astype(np.uint8)
             regions.append((x, y, arr))
         elif stype in (_INTERMEDIATE_GENERIC, 4, 6, 7, 20, 22, 23,
                        40, 42, 43):
-            return None  # image-bearing segment we can't decode
+            raise Refused("image-bearing segment we can't decode")
         # else: dictionaries/extensions/end markers — no pixels, skip
     if not regions:
-        return None
+        raise Refused("unsupported or malformed JBIG2 stream")
     if page_w is None:
         page_w = max(x + r.shape[1] for x, _y, r in regions)
     if page_h is None:
         page_h = max(y + r.shape[0] for _x, y, r in regions)
     for x, y, r in regions:
         if x + r.shape[1] > page_w or y + r.shape[0] > page_h:
-            return None  # region outside the page: malformed
+            raise Refused("region outside the page")
+    if page_w * page_h > _MAX_PIXELS:
+        raise Refused("page over the pixel bound")
     page = np.full((page_h, page_w), 255, dtype=np.uint8)
     for x, y, r in regions:
         tgt = page[y : y + r.shape[0], x : x + r.shape[1]]

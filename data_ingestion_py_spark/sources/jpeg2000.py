@@ -37,11 +37,13 @@ extras-free reversible core of that path.
 
 from __future__ import annotations
 
-try:  # numpy is a hard dep of the package; guard for doc tooling only
-    import numpy as np
-except ImportError:  # pragma: no cover
-    np = None  # type: ignore[assignment]
+import numpy as np
 
+from data_ingestion_py_spark.sources.bits import (
+    Refused,
+    Truncated,
+    none_on_refusal,
+)
 from data_ingestion_py_spark.sources.jbig2 import _MQDecoder
 
 # ---------------------------------------------------------------------
@@ -260,6 +262,7 @@ class _BlockCoder:
                 row[x] = 0
 
 
+@none_on_refusal
 def decode_codeblock(
     data: bytes, w: int, h: int, band: str, n_passes: int
 ) -> list[list[int]] | None:
@@ -267,7 +270,7 @@ def decode_codeblock(
     codeword segment (``n_passes`` coding passes, first coded
     bit-plane first). Returns signed coefficients."""
     if w <= 0 or h <= 0 or n_passes <= 0:
-        return None
+        raise Refused("code block geometry")
     dec = _MQDecoder(data)
     cx = [(0, 0)] * _N_CTX
     for ctx, st in _CTX_INIT.items():
@@ -311,9 +314,9 @@ class _HdrBits:
         self.bit = 0
         self.prev_ff = False
 
-    def read1(self) -> int | None:
+    def read1(self) -> int:
         if self.pos >= len(self.data):
-            return None
+            raise Truncated
         if self.bit == 0 and self.prev_ff:
             self.bit = 1  # skip the stuffed MSB
         b = (self.data[self.pos] >> (7 - self.bit)) & 1
@@ -324,13 +327,10 @@ class _HdrBits:
             self.bit = 0
         return b
 
-    def read(self, k: int) -> int | None:
+    def read(self, k: int) -> int:
         v = 0
         for _ in range(k):
-            b = self.read1()
-            if b is None:
-                return None
-            v = (v << 1) | b
+            v = (v << 1) | self.read1()
         return v
 
     def align(self) -> None:
@@ -358,10 +358,10 @@ class _TagTree:
         self.known = [[False] * (sw * sh) for sw, sh in self.sizes]
 
     def update(self, bits: _HdrBits, x: int, y: int,
-               threshold: int) -> bool | None:
+               threshold: int) -> bool:
         """Read bits until it is known whether value(x, y) >=
         ``threshold``; True = still >= threshold, False = the exact
-        value is < threshold, None = truncated header."""
+        value is < threshold."""
         nodes = []
         xx, yy = x, y
         for lvl in range(len(self.sizes)):
@@ -374,10 +374,7 @@ class _TagTree:
             if self.low[lvl][k] < low:
                 self.low[lvl][k] = low
             while not self.known[lvl][k] and self.low[lvl][k] < threshold:
-                b = bits.read1()
-                if b is None:
-                    return None
-                if b:
+                if bits.read1():
                     self.known[lvl][k] = True
                     self.val[lvl][k] = self.low[lvl][k]
                 else:
@@ -391,42 +388,25 @@ class _TagTree:
                 return True
         return False
 
-    def decode_value(self, bits: _HdrBits, x: int, y: int) -> int | None:
+    def decode_value(self, bits: _HdrBits, x: int, y: int) -> int:
         t = 1
-        while True:
-            r = self.update(bits, x, y, t)
-            if r is None:
-                return None
-            if not r:
-                return t - 1
+        while self.update(bits, x, y, t):
             t += 1
+        return t - 1
 
 
-def _read_n_passes(bits: _HdrBits) -> int | None:
-    b = bits.read1()
-    if b is None:
-        return None
-    if b == 0:
+def _read_n_passes(bits: _HdrBits) -> int:
+    if bits.read1() == 0:
         return 1
-    b = bits.read1()
-    if b is None:
-        return None
-    if b == 0:
+    if bits.read1() == 0:
         return 2
     v = bits.read(2)
-    if v is None:
-        return None
     if v != 3:
         return 3 + v
     v = bits.read(5)
-    if v is None:
-        return None
     if v != 31:
         return 6 + v
-    v = bits.read(7)
-    if v is None:
-        return None
-    return 37 + v
+    return 37 + bits.read(7)
 
 
 # ---------------------------------------------------------------------
@@ -540,21 +520,22 @@ def jp2_codestream(payload: bytes) -> bytes | None:
     return None
 
 
+@none_on_refusal
 def decode_jp2k(payload: bytes | None) -> dict | None:
     """Decode a lossless Part-1 codestream (optionally JP2-boxed) →
     ``{"width", "height", "components": [np.uint8 arrays]}``.
     Unsupported shapes (see module docstring) return None."""
-    if np is None or payload is None or len(payload) < 4:
-        return None
+    if payload is None or len(payload) < 4:
+        raise Refused("unsupported or malformed JPEG 2000 codestream")
     data = jp2_codestream(payload)
     if data is None or data[:2] != b"\xff\x4f":
-        return None
+        raise Refused("unsupported or malformed JPEG 2000 codestream")
     i, n = 2, len(data)
     siz = cod = None
     tile_data = None
     while i + 4 <= n:
         if data[i] != 0xFF:
-            return None
+            raise Refused("unsupported or malformed JPEG 2000 codestream")
         marker = data[i : i + 2]
         i += 2
         if marker == b"\xff\x93":  # SOD
@@ -563,12 +544,12 @@ def decode_jp2k(payload: bytes | None) -> dict | None:
         if marker == b"\xff\xd9":
             break
         if i + 2 > n:
-            return None
+            raise Refused("unsupported or malformed JPEG 2000 codestream")
         ln = int.from_bytes(data[i : i + 2], "big")
         seg = data[i + 2 : i + ln]
         if marker == b"\xff\x51":  # SIZ
             if len(seg) < 36:
-                return None
+                raise Refused("unsupported or malformed JPEG 2000 codestream")
             xs = int.from_bytes(seg[2:6], "big")
             ys = int.from_bytes(seg[6:10], "big")
             xo = int.from_bytes(seg[10:14], "big")
@@ -579,20 +560,20 @@ def decode_jp2k(payload: bytes | None) -> dict | None:
             yto = int.from_bytes(seg[30:34], "big")
             ncomp = int.from_bytes(seg[34:36], "big")
             if xo or yo or xto or yto or xt < xs or yt < ys:
-                return None  # multi-tile / offset canvas: refuse
+                raise Refused("multi-tile / offset canvas")
             if ncomp not in (1, 3) or len(seg) < 36 + 3 * ncomp:
-                return None
+                raise Refused("unsupported or malformed JPEG 2000 codestream")
             for c in range(ncomp):
                 ssiz, xr, yr = seg[36 + 3 * c : 39 + 3 * c]
                 if ssiz != 7 or xr != 1 or yr != 1:
-                    return None  # only 8-bit unsigned, no subsampling
+                    raise Refused("only 8-bit unsigned, no subsampling")
             siz = {"w": xs, "h": ys, "ncomp": ncomp}
         elif marker == b"\xff\x52":  # COD
             if len(seg) < 10:
-                return None
+                raise Refused("unsupported or malformed JPEG 2000 codestream")
             scod = seg[0]
             if scod & 0x07:
-                return None  # custom precincts / SOP / EPH: refuse
+                raise Refused("custom precincts / SOP / EPH")
             prog = seg[1]
             layers = int.from_bytes(seg[2:4], "big")
             mct = seg[4]
@@ -609,7 +590,7 @@ def decode_jp2k(payload: bytes | None) -> dict | None:
                 or cbstyle != 0  # bypass/termination etc.: refuse
                 or transform != 1  # 5/3 reversible only
             ):
-                return None
+                raise Refused("unsupported or malformed JPEG 2000 codestream")
             cod = {
                 "levels": levels,
                 "cb_w": 1 << (cbw + 2),
@@ -617,17 +598,17 @@ def decode_jp2k(payload: bytes | None) -> dict | None:
             }
         elif marker == b"\xff\x5c":  # QCD
             if not seg or (seg[0] & 0x1F) != 0:
-                return None  # only no-quantization (reversible)
+                raise Refused("only no-quantization (reversible)")
         elif marker == b"\xff\x90":  # SOT
             pass  # single tile assumed; Psot unchecked (EOC-bounded)
         i += ln
     if siz is None or cod is None or tile_data is None:
-        return None
+        raise Refused("unsupported or malformed JPEG 2000 codestream")
     if tile_data.endswith(b"\xff\xd9"):
         tile_data = tile_data[:-2]
     W, H = siz["w"], siz["h"]
     if W <= 0 or H <= 0 or W > 1 << 15 or H > 1 << 15:
-        return None
+        raise Refused("unsupported or malformed JPEG 2000 codestream")
     levels = cod["levels"]
     llw, llh, level_dims = _band_geometry(W, H, levels)
     comps = []
@@ -659,11 +640,8 @@ def decode_jp2k(payload: bytes | None) -> dict | None:
                      level_dims[res - 1][2][1]),
                 ]
             hdr = _HdrBits(data_bytes, pos)
-            nonzero = hdr.read1()
-            if nonzero is None:
-                return None
             segs: list[tuple] = []
-            if nonzero:
+            if hdr.read1():
                 for bname, bw, bh in bands:
                     if bw <= 0 or bh <= 0:
                         continue
@@ -673,31 +651,19 @@ def decode_jp2k(payload: bytes | None) -> dict | None:
                     zbp_tree = _TagTree(ncbx, ncby)
                     for cby in range(ncby):
                         for cbx in range(ncbx):
-                            inc = inc_tree.update(hdr, cbx, cby, 1)
-                            if inc is None:
-                                return None
-                            if inc:  # not included
-                                continue
-                            zbp = zbp_tree.decode_value(hdr, cbx, cby)
-                            if zbp is None:
-                                return None
+                            if inc_tree.update(hdr, cbx, cby, 1):
+                                continue  # not included
+                            # zero bit-planes: read to stay in step;
+                            # nps fixes the first coded plane here
+                            zbp_tree.decode_value(hdr, cbx, cby)
                             nps = _read_n_passes(hdr)
-                            if nps is None:
-                                return None
                             lblock = 3
-                            while True:
-                                bit = hdr.read1()
-                                if bit is None:
-                                    return None
-                                if bit == 0:
-                                    break
+                            while hdr.read1():
                                 lblock += 1
                             nbits = lblock + max(
                                 0, nps.bit_length() - 1
                             )
                             seg_len = hdr.read(nbits)
-                            if seg_len is None:
-                                return None
                             cw = min(
                                 cod["cb_w"],
                                 bw - cbx * cod["cb_w"],
@@ -715,11 +681,11 @@ def decode_jp2k(payload: bytes | None) -> dict | None:
             for bname, bw, bh, cbx, cby, cw, ch, nps, seg_len in segs:
                 seg_data = data_bytes[pos : pos + seg_len]
                 if len(seg_data) != seg_len:
-                    return None
+                    raise Truncated
                 pos += seg_len
-                coeffs = decode_codeblock(seg_data, cw, ch, bname, nps)
-                if coeffs is None:
-                    return None
+                coeffs = decode_codeblock.__wrapped__(
+                    seg_data, cw, ch, bname, nps
+                )
                 key = (comp, res, bname)
                 if key not in band_coeffs:
                     band_coeffs[key] = np.zeros(
@@ -754,8 +720,8 @@ def decode_jp2k(payload: bytes | None) -> dict | None:
         tile = idwt53(ll, seq)
         tile = tile + 128  # DC level shift (8-bit unsigned)
         if tile.shape != (H, W):
-            return None
+            raise Refused("unsupported or malformed JPEG 2000 codestream")
         if tile.min() < 0 or tile.max() > 255:
-            return None  # not a conformant lossless 8-bit stream
+            raise Refused("not a conformant lossless 8-bit stream")
         out_comps.append(tile.astype(np.uint8))
     return {"width": W, "height": H, "components": out_comps}

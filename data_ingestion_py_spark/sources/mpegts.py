@@ -18,6 +18,8 @@ pipeline runs before any decode.
 
 from __future__ import annotations
 
+from data_ingestion_py_spark.sources.bits import Refused, none_on_refusal
+
 
 _SYNC = 0x47
 _PKT = 188
@@ -69,6 +71,7 @@ def _psi_table(data: bytes) -> bytes | None:
     return data[s + 8 : end - 4]  # skip to after last_section_number
 
 
+@none_on_refusal
 def ts_program_map(payload: bytes) -> dict | None:
     """{elementary_pid: stream_type} of the FIRST program: PAT on PID
     0 → PMT PID → PMT stream list (descriptor loops skipped by their
@@ -87,7 +90,7 @@ def ts_program_map(payload: bytes) -> dict | None:
             if pmt_pid is not None:
                 break
     if pmt_pid is None:
-        return None
+        raise Refused("no complete PAT and PMT")
     for pid, pusi, _cc, scrambled, data in _packets(payload):
         if pid == pmt_pid and pusi and not scrambled:
             body = _psi_table(data)
@@ -104,9 +107,10 @@ def ts_program_map(payload: bytes) -> dict | None:
                 k += 5 + es_len
             if out:
                 return out
-    return None
+    raise Refused("no complete PAT and PMT")
 
 
+@none_on_refusal
 def ts_elementary_stream(payload: bytes, pid: int) -> bytes | None:
     """Reassembled elementary-stream bytes of one PID: PES packets
     (start code 00 00 01, stream id, header-length skip) concatenated
@@ -123,12 +127,12 @@ def ts_elementary_stream(payload: bytes, pid: int) -> bytes | None:
         if p != pid:
             continue
         if scrambled:
-            return None
+            raise Refused("scrambled packet")
         if last_cc is not None:
             if cc == last_cc:
                 continue  # duplicate packet
             if cc != (last_cc + 1) % 16:
-                return None  # continuity gap — refuse, don't guess
+                raise Refused("continuity gap")  # never guess
         last_cc = cc
         if pusi:
             if (
@@ -137,16 +141,21 @@ def ts_elementary_stream(payload: bytes, pid: int) -> bytes | None:
                 or data[1] != 0
                 or data[2] != 1
             ):
-                return None if not started else bytes(out)
+                if not started:
+                    raise Refused("no valid PES start")
+                return bytes(out)
             hdr_len = data[8]
             body = data[9 + hdr_len :]
             out += body
             started = True
         elif started:
             out += data
-    return bytes(out) if started else None
+    if not started:
+        raise Refused("no valid PES start")
+    return bytes(out)
 
 
+@none_on_refusal
 def ts_h264_index(payload: bytes, max_nals: int = 256) -> dict | None:
     """End-to-end TS → H.264 plan: resolve the program map, find the
     first H.264 stream (type 0x1B), reassemble its PES payload, and
@@ -157,18 +166,12 @@ def ts_h264_index(payload: bytes, max_nals: int = 256) -> dict | None:
         h264_annexb_nals,
     )
 
-    pm = ts_program_map(payload)
-    if pm is None:
-        return None
+    pm = ts_program_map.__wrapped__(payload)
     h264_pids = [p for p, t in sorted(pm.items()) if t == 0x1B]
     if not h264_pids:
         return None
-    es = ts_elementary_stream(payload, h264_pids[0])
-    if es is None:
-        return None
-    idx = h264_annexb_nals(es, max_nals)
-    if idx is None:
-        return None
+    es = ts_elementary_stream.__wrapped__(payload, h264_pids[0])
+    idx = h264_annexb_nals.__wrapped__(es, max_nals)
     return {**idx, "pid": h264_pids[0], "es_bytes": len(es)}
 
 

@@ -33,9 +33,10 @@ from __future__ import annotations
 
 from data_ingestion_py_spark.sources.bits import (
     MsbBits,
+    Refused,
     Truncated,
     bounded_decompress,
-    none_on_truncation,
+    none_on_refusal,
     rbsp_unescape,
 )
 from data_ingestion_py_spark.sources.spread import kernel_rows
@@ -351,6 +352,7 @@ def exif_metadata(payload: bytes | None) -> dict | None:
     return out if found else None
 
 
+@none_on_refusal
 def decode_tiff_array(
     payload: bytes | None,
 ) -> tuple[int, int, "np.ndarray"] | None:
@@ -396,7 +398,7 @@ def decode_tiff_array(
         typ = int.from_bytes(payload[e + 2 : e + 4], end)
         nv = int.from_bytes(payload[e + 4 : e + 8], end)
         size = {1: 1, 3: 2, 4: 4}.get(typ)
-        if size is None or nv > len(payload):
+        if size is None or nv == 0 or nv > len(payload):
             continue  # ASCII/rational fields are irrelevant here
         total = size * nv
         if total <= 4:
@@ -477,7 +479,7 @@ def decode_tiff_array(
 
     def _chunk(
         raw: bytes, rows_this: int, w_px: int, rb: int, lanes: int = spp
-    ) -> bytes | None:
+    ) -> bytes:
         """Decode one strip/tile payload to exactly rows_this*rb raw
         sample bytes (decompression + fax + predictor inverse) —
         shared by the strip and tile layouts (r14)."""
@@ -498,21 +500,19 @@ def decode_tiff_array(
             )
 
             if comp == 4:
-                arr2 = g4_decode(bytes(raw), w_px, rows_this)
+                arr2 = g4_decode.__wrapped__(bytes(raw), w_px, rows_this)
             elif comp == 2:
-                arr2 = g3_1d_decode(
+                arr2 = g3_1d_decode.__wrapped__(
                     bytes(raw), w_px, rows_this,
                     byte_align=True, allow_eol=False,
                 )
             elif t4opts & 1:  # comp 3, 2D (bit-2 fill subsumed)
-                arr2 = g3_2d_decode(bytes(raw), w_px, rows_this)
+                arr2 = g3_2d_decode.__wrapped__(bytes(raw), w_px, rows_this)
             else:  # comp 3, 1D with EOLs
-                arr2 = g3_1d_decode(
+                arr2 = g3_1d_decode.__wrapped__(
                     bytes(raw), w_px, rows_this,
                     byte_align=bool(t4opts & 4), allow_eol=True,
                 )
-            if arr2 is None:
-                return None
             raw = np.packbits(
                 (arr2 == 0) if photo == 0 else (arr2 != 0), axis=1
             ).tobytes()
@@ -520,12 +520,9 @@ def decode_tiff_array(
             try:  # cap inflation at the declared row budget
                 raw = zlib.decompressobj().decompress(raw, need)
             except zlib.error:
-                return None
+                raise Refused("corrupt deflate strip")
         elif comp == 5:  # TIFF LZW (MSB-first, early change)
-            got = lzw_msb_decode(raw, need)
-            if got is None:
-                return None
-            raw = got
+            raw = lzw_msb_decode.__wrapped__(raw, need)
         elif comp == 32773:  # PackBits RLE (TIFF 6.0 §9)
             out = bytearray()
             j = 0
@@ -536,17 +533,17 @@ def decode_tiff_array(
                     continue
                 if nb >= 0:  # literal run of nb+1 bytes
                     if j + nb + 1 > len(raw):
-                        return None
+                        raise Truncated
                     out += raw[j : j + nb + 1]
                     j += nb + 1
                 else:  # repeat next byte 1-nb times
                     if j >= len(raw):
-                        return None
+                        raise Truncated
                     out += bytes([raw[j]]) * (1 - nb)
                     j += 1
             raw = bytes(out)
         if len(raw) < need:
-            return None
+            raise Truncated
         if predictor == 2:
             # horizontal differencing: undo per row, per channel lane.
             # Applied regardless of compression — Predictor=2 on an
@@ -579,8 +576,6 @@ def decode_tiff_array(
             if o + c > len(payload):
                 return None
             got = _chunk(payload[o : o + c], tile_h, tile_w, trb)
-            if got is None:
-                return None
             block = np.frombuffer(got, np.uint8).reshape(tile_h, trb)
             if depth != 8:
                 bits = np.unpackbits(block, axis=1)
@@ -619,12 +614,7 @@ def decode_tiff_array(
                 if o + c > len(payload):
                     return None
                 rows_this = min(rps, h - s * rps)
-                got = _chunk(
-                    payload[o : o + c], rows_this, w, w, lanes=1
-                )
-                if got is None:
-                    return None
-                data += got
+                data += _chunk(payload[o : o + c], rows_this, w, w, lanes=1)
             planes.append(
                 np.frombuffer(bytes(data), np.uint8).reshape(h, w)
             )
@@ -641,10 +631,7 @@ def decode_tiff_array(
             if o + c > len(payload):
                 return None
             rows_this = min(rps, h - s * rps)
-            got = _chunk(payload[o : o + c], rows_this, w, row_bytes)
-            if got is None:
-                return None
-            data += got
+            data += _chunk(payload[o : o + c], rows_this, w, row_bytes)
         arr = np.frombuffer(bytes(data), dtype=np.uint8)
         if depth != 8:
             # unpack MSB-first (FillOrder 1) depth-bit samples per
@@ -679,20 +666,18 @@ def decode_tiff_array(
 
 def _parse_pnm_header(
     payload: bytes | None,
-) -> tuple[int, int, int, int] | None:
+) -> tuple[int, int, int, int]:
     """Parse a binary netpbm header: (width, height, channels,
-    raster_offset), or None for unrecognized/invalid/truncated
+    raster_offset); ``Refused`` for unrecognized/invalid/truncated
     payloads or maxval > 255 (2-byte rasters not supported).
 
     - P5 (PGM, binary grayscale): 'P5', whitespace/comments, ASCII
       width height maxval, ONE whitespace byte, then w*h raster bytes.
     - P6 (PPM, binary RGB): same header, 3 bytes/pixel.
     """
-    if payload is None or len(payload) < 2 or payload[:1] != b"P":
-        return None
-    magic = payload[:2]
+    magic = payload[:2] if payload is not None else b""
     if magic not in (b"P5", b"P6"):
-        return None
+        raise Refused("not binary netpbm")
     i, n = 2, len(payload)
 
     def _skip_ws(i: int) -> int:
@@ -706,32 +691,30 @@ def _parse_pnm_header(
                 break
         return i
 
-    def _read_int(i: int) -> tuple[int, int] | None:
+    def _read_int(i: int) -> tuple[int, int]:
         i = _skip_ws(i)
         j = i
         while j < n and 0x30 <= payload[j] <= 0x39:
             j += 1
         if j == i:
-            return None
+            raise Refused("netpbm header field")
         return int(payload[i:j]), j
 
     hdr = []
     for _ in range(3):  # width, height, maxval
-        got = _read_int(i)
-        if got is None:
-            return None
-        v, i = got
+        v, i = _read_int(i)
         hdr.append(v)
     w, h, maxval = hdr
     if w <= 0 or h <= 0 or not (0 < maxval <= 255):
-        return None
+        raise Refused("netpbm geometry or maxval")
     i += 1  # exactly one whitespace byte before the raster
     ch = 1 if magic == b"P5" else 3
     if i + w * h * ch > n:
-        return None
+        raise Truncated
     return w, h, ch, i
 
 
+@none_on_refusal
 def decode_pnm_array(payload: bytes | None) -> tuple[int, int, "np.ndarray"] | None:
     """REAL pixel decode kernel for the uncompressed netpbm formats —
     the honest step past header parsing that needs no codec library.
@@ -742,10 +725,7 @@ def decode_pnm_array(payload: bytes | None) -> tuple[int, int, "np.ndarray"] | N
     bit-identical to the per-pixel definition, but a constant-factor
     that survives megapixel rasters inside an Arrow batch (the
     per-pixel-Python form measured ~100× slower there)."""
-    hdr = _parse_pnm_header(payload)
-    if hdr is None:
-        return None
-    w, h, ch, off = hdr
+    w, h, ch, off = _parse_pnm_header(payload)
     raster = np.frombuffer(payload, dtype=np.uint8, count=w * h * ch, offset=off)
     if ch == 1:
         return w, h, raster
@@ -753,15 +733,13 @@ def decode_pnm_array(payload: bytes | None) -> tuple[int, int, "np.ndarray"] | N
     return w, h, (rgb.sum(axis=1, dtype=np.int16) // 3).astype(np.uint8)
 
 
+@none_on_refusal
 def decode_pnm(payload: bytes | None) -> tuple[int, int, list[int]] | None:
     """``decode_pnm_array`` with the raster as a plain python list —
     the hand-value-test-friendly form the scalar kernels
     (``average_hash``, WAV parity) consume; the batched Arrow kernels
     use the ndarray form directly."""
-    decoded = decode_pnm_array(payload)
-    if decoded is None:
-        return None
-    w, h, pix = decoded
+    w, h, pix = decode_pnm_array.__wrapped__(payload)
     return w, h, [int(p) for p in pix]
 
 
@@ -781,21 +759,21 @@ _ADAM7_PASSES = (
 
 def _png_unfilter(
     raw: bytes, stride: int, h: int, bpp: int
-) -> "np.ndarray | None":
+) -> "np.ndarray":
     """Reconstruct one (sub-)image's SCANLINE BYTES from its filtered
     stream (PNG spec §9): h scanlines of 1 filter byte + ``stride``
     bytes, with ``bpp`` = the filter unit in BYTES (channels×depth/8,
-    min 1 — sub-byte depths filter on whole bytes per spec). None if
-    the stream length or a filter type is wrong. Filters None/Sub/Up
-    are vectorized (Sub as a per-byte-lane uint8 cumulative sum —
-    mod-256 wraps for free); Average/Paeth carry a true left-neighbor
-    dependency and go per-byte within the line."""
+    min 1 — sub-byte depths filter on whole bytes per spec).
+    ``Refused`` if the stream length or a filter type is wrong.
+    Filters None/Sub/Up are vectorized (Sub as a per-byte-lane uint8
+    cumulative sum — mod-256 wraps for free); Average/Paeth carry a
+    true left-neighbor dependency and go per-byte within the line."""
     if stride % bpp or len(raw) != h * (stride + 1):
-        return None
+        raise Refused("scanline bytes disagree with the geometry")
     lines = np.frombuffer(raw, dtype=np.uint8).reshape(h, stride + 1)
     ftypes = lines[:, 0]
     if ftypes.max(initial=0) > 4:
-        return None
+        raise Refused("PNG filter type")
     recon = lines[:, 1:].copy()
     zero = np.zeros(stride, dtype=np.uint8)
     for r in range(h):
@@ -826,6 +804,7 @@ def _png_unfilter(
     return recon
 
 
+@none_on_refusal
 def decode_png_array(
     payload: bytes | None,
 ) -> tuple[int, int, "np.ndarray"] | None:
@@ -924,8 +903,6 @@ def decode_png_array(
         return None
     if interlace == 0:
         recon = _png_unfilter(raw, stride, h, bpp)
-        if recon is None:
-            return None
         if bit_depth < 8:
             # unpack MSB-first depth-bit samples, keep the first w
             bits = np.unpackbits(recon, axis=1)
@@ -952,8 +929,6 @@ def decode_png_array(
                 continue  # empty pass contributes no scanlines
             size = hp * (wp * ch + 1)
             sub = _png_unfilter(raw[pos : pos + size], wp * ch, hp, ch)
-            if sub is None:
-                return None
             pos += size
             # scatter: pass pixel (i, j) -> raster (y0+i*dy, x0+j*dx)
             view = recon.reshape(h, w, ch)
@@ -981,6 +956,7 @@ def decode_png_array(
     return w, h, np.ascontiguousarray(gray).reshape(-1)
 
 
+@none_on_refusal
 def lzw_msb_decode(
     data: bytes,
     max_out: int,
@@ -1003,7 +979,7 @@ def lzw_msb_decode(
     out = bytearray()
     while True:
         if pos + width > nbits:
-            return None  # torn: EOI never arrived
+            raise Truncated  # torn: EOI never arrived
         code = 0
         for k in range(width):
             code = (code << 1) | (
@@ -1022,10 +998,10 @@ def lzw_msb_decode(
         elif code == len(table) and prev is not None:
             entry = prev + prev[:1]  # KwKwK
         else:
-            return None
+            raise Refused("LZW code past the table")
         out += entry
         if len(out) > max_out:
-            return None
+            raise Refused("LZW output over max_out")
         if prev is not None:
             table.append(prev + entry[:1])
         prev = entry
@@ -1038,13 +1014,13 @@ def lzw_msb_decode(
 
 def _gif_lzw_decode(
     data: bytes, min_code_size: int, max_pixels: int
-) -> "np.ndarray | None":
+) -> "np.ndarray":
     """REAL GIF LZW decompression (GIF89a spec appendix F): variable-
     width codes packed LSB-first, CLEAR resets the dictionary, width
     grows at 2^width up to 12 bits, the KwKwK case handled. Returns
     the palette-index stream (uint8 ndarray, exactly ``max_pixels``
     entries — extra output is truncated per the spec's 'data beyond
-    the image is ignored') or None on malformed codes/truncation."""
+    the image is ignored'); ``Refused`` on malformed codes/truncation."""
     n_bits = len(data) * 8
     clear = 1 << min_code_size
     end = clear + 1
@@ -1073,23 +1049,23 @@ def _gif_lzw_decode(
             break
         if prev < 0:  # first code after clear must be a root
             if code >= clear:
-                return None
+                raise Refused("malformed GIF LZW code")
             out.append(code)
             prev = code
         else:
             if code > next_code or code == end or code == clear:
-                return None
+                raise Refused("malformed GIF LZW code")
             seq.clear()
             c = code
             if code == next_code:  # KwKwK: cur = prev + first(prev)
                 c = prev
             while c >= clear + 2:  # expand through the chain
                 if c >= next_code:
-                    return None
+                    raise Refused("malformed GIF LZW code")
                 seq.append(suffix[c])
                 c = prefix[c]
             if c >= clear:
-                return None
+                raise Refused("malformed GIF LZW code")
             seq.append(c)
             first = c  # first byte of the expansion
             expansion = seq[::-1]
@@ -1106,7 +1082,7 @@ def _gif_lzw_decode(
         if len(out) >= max_pixels:
             break
     if len(out) < max_pixels:
-        return None  # truncated stream: never guessed pixels
+        raise Truncated  # never guessed pixels
     return np.frombuffer(bytes(out[:max_pixels]), dtype=np.uint8)
 
 
@@ -1114,6 +1090,7 @@ def _gif_lzw_decode(
 _GIF_INTERLACE_PASSES = ((0, 8), (4, 8), (2, 4), (1, 2))
 
 
+@none_on_refusal
 def decode_gif_array(
     payload: bytes | None,
 ) -> tuple[int, int, "np.ndarray"] | None:
@@ -1144,25 +1121,22 @@ def decode_gif_array(
         gct = payload[i : i + n]
         i += n
 
-    def _skip_subblocks(j: int) -> int | None:
+    def _skip_subblocks(j: int) -> int:
         while True:
             if j >= len(payload):
-                return None
+                raise Truncated
             ln = payload[j]
             j += 1
             if ln == 0:
                 return j
             if j + ln > len(payload):
-                return None
+                raise Truncated
             j += ln
 
     while i < len(payload):
         b = payload[i]
         if b == 0x21:  # extension: label + sub-blocks
-            nxt = _skip_subblocks(i + 2)
-            if nxt is None:
-                return None
-            i = nxt
+            i = _skip_subblocks(i + 2)
         elif b == 0x2C:  # image descriptor
             if i + 10 > len(payload):
                 return None
@@ -1197,8 +1171,6 @@ def decode_gif_array(
                 stream += payload[j : j + ln]
                 j += ln
             idx = _gif_lzw_decode(bytes(stream), min_code, w * h)
-            if idx is None:
-                return None
             pal = np.frombuffer(table, dtype=np.uint8).reshape(-1, 3)
             lut = np.zeros(256, dtype=np.uint8)
             lut[: pal.shape[0]] = (
@@ -1234,15 +1206,15 @@ _JPEG_ZIGZAG = (
 
 def _jpeg_huff_table(
     counts: bytes, vals: bytes
-) -> tuple[list[int], list[int], list[int], bytes] | None:
+) -> tuple[list[int], list[int], list[int], bytes]:
     """Canonical Huffman decode tables from a DHT segment's 16 length
     counts + symbol list (ITU T.81 Annex C): per code length l the
     smallest and largest code value and the index of the first symbol
     of that length. Canonical codes of length l occupy the contiguous
     range [mincode[l], maxcode[l]] and any LONGER code's l-bit prefix
     compares greater than maxcode[l], so one peek-and-compare pass per
-    length decodes a symbol without a per-bit loop. None if the counts
-    overflow the code space (corrupt table)."""
+    length decodes a symbol without a per-bit loop. ``Refused`` if the
+    counts overflow the code space (corrupt table)."""
     mincode = [0] * 17
     maxcode = [-1] * 17
     valptr = [0] * 17
@@ -1257,10 +1229,10 @@ def _jpeg_huff_table(
             maxcode[length] = code - 1
             k += n
         if code > (1 << length):  # more codes than the length can hold
-            return None
+            raise Refused("Huffman counts overflow the code space")
         code <<= 1
     if k != len(vals):
-        return None
+        raise Refused("Huffman symbol count")
     return mincode, maxcode, valptr, vals
 
 
@@ -1289,7 +1261,7 @@ def _jpeg_idct(coef: "np.ndarray") -> "np.ndarray":
 
 def _jpeg_entropy_segments(
     payload: bytes, i: int
-) -> tuple[list[bytes], int] | None:
+) -> tuple[list[bytes], int]:
     """Split the entropy-coded data starting at ``i`` into restart
     segments: byte-stuffed 0xFF00 unstuffs to 0xFF, RSTn (FFD0-FFD7)
     markers end one segment and start the next, any other marker ends
@@ -1304,7 +1276,7 @@ def _jpeg_entropy_segments(
             i += 1
             continue
         if i + 1 >= n:
-            return None
+            raise Truncated
         m = payload[i + 1]
         if m == 0x00:  # stuffed literal 0xFF
             cur.append(0xFF)
@@ -1318,13 +1290,14 @@ def _jpeg_entropy_segments(
         else:  # real marker: scan over
             segs.append(bytes(cur))
             return segs, i
-    return None  # ran out of bytes before EOI — truncated
+    raise Truncated  # ran out of bytes before EOI
 
 
 class _JpegBitReader:
     """MSB-first bit reader over one unstuffed entropy segment. Reads
-    past the final byte fail (the encoder pads the last byte with 1s,
-    so up to 7 pad bits inside it are legal by construction)."""
+    past the final byte raise ``Truncated`` (the encoder pads the last
+    byte with 1s, so up to 7 pad bits inside it are legal by
+    construction)."""
 
     __slots__ = ("buf", "pos", "limit")
 
@@ -1338,26 +1311,26 @@ class _JpegBitReader:
         chunk = int.from_bytes(self.buf[byte0 : byte0 + 3], "big")
         return (chunk >> (8 - (self.pos & 7))) & 0xFFFF
 
-    def take(self, nbits: int) -> int | None:
+    def take(self, nbits: int) -> int:
         if self.pos + nbits > self.limit:
-            return None
+            raise Truncated
         byte0 = self.pos >> 3
         chunk = int.from_bytes(self.buf[byte0 : byte0 + 4], "big")
         out = (chunk >> (32 - (self.pos & 7) - nbits)) & ((1 << nbits) - 1)
         self.pos += nbits
         return out
 
-    def huff(self, table) -> int | None:
+    def huff(self, table) -> int:
         mincode, maxcode, valptr, vals = table
         peek = self.peek16()
         for length in range(1, 17):
             c = peek >> (16 - length)
             if c <= maxcode[length]:
                 if self.pos + length > self.limit:
-                    return None
+                    raise Truncated
                 self.pos += length
                 return vals[valptr[length] + c - mincode[length]]
-        return None
+        raise Refused("no Huffman code matches")
 
 
 def _jpeg_extend(v: int, s: int) -> int:
@@ -1379,7 +1352,7 @@ def _jpeg_progressive_fill(
     h: int,
     huff_dc: dict[int, tuple],
     huff_ac: dict[int, tuple],
-) -> bool:
+) -> None:
     """Progressive-JPEG coefficient accumulation (ITU T.81 Annex G):
     each SOS scan deposits one spectral/bit slice into the shared
     per-component coefficient arrays — DC first scans are diff-coded
@@ -1395,8 +1368,9 @@ def _jpeg_progressive_fill(
     ceil(cw/8)×ceil(ch/8) block grid — NOT the MCU-padded grid the
     arrays are allocated at, which is exactly the off-by-padding trap
     this walk has to avoid. Restart markers reset DC predictors and
-    the EOB run per segment. Returns False (→ honest None upstream)
-    for desync, truncation, missing tables, or out-of-range runs."""
+    the EOB run per segment. Raises ``Refused`` (→ honest None
+    upstream) for desync, truncation, missing tables, or out-of-range
+    runs."""
     n_mcus = mcus_x * mcus_y
     for sel, ss, se, ah, al, ri, segments in scans:
         is_dc = ss == 0
@@ -1415,7 +1389,7 @@ def _jpeg_progressive_fill(
                 bw_t, bh_t = (cw + 7) // 8, (chh + 7) // 8
             units = bw_t * bh_t
         if not segments or (ri and len(segments) < (units + ri - 1) // ri):
-            return False
+            raise Refused("fewer restart segments than intervals")
         dc_t = {c: huff_dc.get(d) for c, d, _ in sel}
         ac_t = None if is_dc else huff_ac[sel[0][2]]
         p1, m1 = 1 << al, -(1 << al)
@@ -1427,7 +1401,7 @@ def _jpeg_progressive_fill(
             if ri and u and u % ri == 0:
                 seg_i += 1
                 if seg_i >= len(segments):
-                    return False
+                    raise Refused("fewer restart segments than intervals")
                 reader = _JpegBitReader(segments[seg_i])
                 pred = dict.fromkeys(pred, 0)
                 eobrun = 0
@@ -1451,18 +1425,14 @@ def _jpeg_progressive_fill(
                     block = coefs[c][idx]
                     if ah == 0:  # first pass: diff-coded, point transform
                         s = reader.huff(dc_t[c])
-                        if s is None or s > 15:
-                            return False
+                        if s > 15:
+                            raise Refused("DC category over 15")
                         if s:
                             v = reader.take(s)
-                            if v is None:
-                                return False
                             pred[c] += _jpeg_extend(v, s)
                         block[0] = pred[c] << al
                     else:  # refinement: one raw bit per block
                         bit = reader.take(1)
-                        if bit is None:
-                            return False
                         if bit:
                             block[0] |= p1
             elif ah == 0:  # AC first pass: EOB-run coded
@@ -1473,8 +1443,6 @@ def _jpeg_progressive_fill(
                 k = ss
                 while k <= se:
                     rs = reader.huff(ac_t)
-                    if rs is None:
-                        return False
                     r, s = rs >> 4, rs & 0x0F
                     if s == 0:
                         if r == 15:  # ZRL: sixteen zeros
@@ -1483,16 +1451,12 @@ def _jpeg_progressive_fill(
                         eobrun = (1 << r) - 1  # covers SUBSEQUENT blocks
                         if r:
                             bits = reader.take(r)
-                            if bits is None:
-                                return False
                             eobrun += bits
                         break
                     k += r
                     if k > se:
-                        return False
+                        raise Refused("run past the spectral band")
                     v = reader.take(s)
-                    if v is None:
-                        return False
                     block[_JPEG_ZIGZAG[k]] = _jpeg_extend(v, s) << al
                     k += 1
             else:  # AC refinement
@@ -1501,8 +1465,6 @@ def _jpeg_progressive_fill(
                 if eobrun == 0:
                     while k <= se:
                         rs = reader.huff(ac_t)
-                        if rs is None:
-                            return False
                         r, s = rs >> 4, rs & 0x0F
                         newval = 0
                         if s == 0:
@@ -1510,17 +1472,13 @@ def _jpeg_progressive_fill(
                                 eobrun = 1 << r
                                 if r:
                                     bits = reader.take(r)
-                                    if bits is None:
-                                        return False
                                     eobrun += bits
                                 break
                             # r == 15: skip 16 zero-history coefficients
                         else:
                             if s != 1:
-                                return False
+                                raise Refused("refinement magnitude not 1")
                             bit = reader.take(1)
-                            if bit is None:
-                                return False
                             newval = p1 if bit else m1
                         # cross r zero-history coefficients, applying a
                         # correction bit to every nonzero one passed
@@ -1528,8 +1486,6 @@ def _jpeg_progressive_fill(
                             z = _JPEG_ZIGZAG[k]
                             if block[z]:
                                 bit = reader.take(1)
-                                if bit is None:
-                                    return False
                                 if bit and not (block[z] & p1):
                                     block[z] += p1 if block[z] > 0 else m1
                             else:
@@ -1539,7 +1495,7 @@ def _jpeg_progressive_fill(
                             k += 1
                         if newval:
                             if k > se:
-                                return False
+                                raise Refused("run past the spectral band")
                             block[_JPEG_ZIGZAG[k]] = newval
                         k += 1
                 if eobrun:  # tail corrections for the rest of the block
@@ -1547,15 +1503,13 @@ def _jpeg_progressive_fill(
                         z = _JPEG_ZIGZAG[k]
                         if block[z]:
                             bit = reader.take(1)
-                            if bit is None:
-                                return False
                             if bit and not (block[z] & p1):
                                 block[z] += p1 if block[z] > 0 else m1
                         k += 1
                     eobrun -= 1
-    return True
 
 
+@none_on_refusal
 def decode_jpeg_array(
     payload: bytes | None,
 ) -> tuple[int, int, "np.ndarray"] | None:
@@ -1586,7 +1540,7 @@ def decode_jpeg_array(
     path (single-component images are Y directly, consistent with
     r=g=b=Y), so checksums/phashes stay decoder-independent."""
     if payload is None or len(payload) < 4 or payload[:2] != b"\xff\xd8":
-        return None
+        raise Refused("malformed or unsupported JPEG")
     n = len(payload)
     i = 2
     qt: dict[int, "np.ndarray"] = {}
@@ -1599,17 +1553,17 @@ def decode_jpeg_array(
     scans: list[tuple] = []
     while i + 4 <= n:
         if payload[i] != 0xFF:
-            return None
+            raise Refused("malformed or unsupported JPEG")
         while i + 2 < n and payload[i + 1] == 0xFF:  # legal fill bytes
             i += 1
         marker = payload[i + 1]
         if marker == 0xD9:
             if scans:  # progressive: EOI terminates the scan sequence
                 break
-            return None  # EOI before a scan completed
+            raise Refused("EOI before a scan completed")
         seglen = int.from_bytes(payload[i + 2 : i + 4], "big")
         if seglen < 2 or i + 2 + seglen > n:
-            return None
+            raise Refused("malformed or unsupported JPEG")
         body = payload[i + 4 : i + 2 + seglen]
         i += 2 + seglen
         if marker == 0xDB:  # DQT: one or more tables
@@ -1619,21 +1573,21 @@ def decode_jpeg_array(
                 j += 1
                 if pq == 0:
                     if j + 64 > len(body):
-                        return None
+                        raise Refused("malformed or unsupported JPEG")
                     vals = np.frombuffer(
                         body[j : j + 64], dtype=np.uint8
                     ).astype(np.int32)
                     j += 64
                 elif pq == 1:
                     if j + 128 > len(body):
-                        return None
+                        raise Refused("malformed or unsupported JPEG")
                     vals = (
                         np.frombuffer(body[j : j + 128], dtype=">u2")
                         .astype(np.int32)
                     )
                     j += 128
                 else:
-                    return None
+                    raise Refused("malformed or unsupported JPEG")
                 table = np.zeros(64, dtype=np.int32)
                 table[list(_JPEG_ZIGZAG)] = vals  # stored in zigzag order
                 qt[tq_id] = table
@@ -1644,27 +1598,28 @@ def decode_jpeg_array(
                 counts = body[j + 1 : j + 17]
                 nv = sum(counts)
                 if j + 17 + nv > len(body):
-                    return None
-                table = _jpeg_huff_table(counts, body[j + 17 : j + 17 + nv])
-                if table is None or tc > 1:
-                    return None
-                (huff_dc if tc == 0 else huff_ac)[th] = table
+                    raise Refused("malformed or unsupported JPEG")
+                if tc > 1:
+                    raise Refused("malformed or unsupported JPEG")
+                (huff_dc if tc == 0 else huff_ac)[th] = _jpeg_huff_table(
+                    counts, body[j + 17 : j + 17 + nv]
+                )
                 j += 17 + nv
             if j != len(body):
-                return None
+                raise Refused("malformed or unsupported JPEG")
         elif marker in (0xC0, 0xC1, 0xC2):  # sequential / progressive
             if frame is not None:  # second SOF: corrupt
-                return None
+                raise Refused("malformed or unsupported JPEG")
             progressive = marker == 0xC2
             if len(body) < 6 or body[0] != 8:  # 8-bit samples only
-                return None
+                raise Refused("malformed or unsupported JPEG")
             h = int.from_bytes(body[1:3], "big")
             w = int.from_bytes(body[3:5], "big")
             ncomp = body[5]
             if w <= 0 or h <= 0 or ncomp not in (1, 3):
-                return None
+                raise Refused("malformed or unsupported JPEG")
             if len(body) != 6 + 3 * ncomp:
-                return None
+                raise Refused("malformed or unsupported JPEG")
             comps = []
             for c in range(ncomp):
                 cid = body[6 + 3 * c]
@@ -1673,21 +1628,21 @@ def decode_jpeg_array(
             frame = (w, h, comps)
         elif marker in (0xC3, 0xC5, 0xC6, 0xC7, 0xC9, 0xCA, 0xCB,
                         0xCD, 0xCE, 0xCF):
-            return None  # lossless/arithmetic/hierarchical: unsupported
+            raise Refused("lossless/arithmetic/hierarchical")
         elif marker == 0xDD:  # DRI (may change between scans)
             if len(body) != 2:
-                return None
+                raise Refused("malformed or unsupported JPEG")
             restart_interval = int.from_bytes(body, "big")
         elif marker == 0xDA:  # SOS
             if frame is None or len(body) < 1:
-                return None
+                raise Refused("malformed or unsupported JPEG")
             ns = body[0]
             if len(body) != 1 + 2 * ns + 3:
-                return None
+                raise Refused("malformed or unsupported JPEG")
             if not progressive and ns != len(frame[2]):
-                return None  # baseline: single interleaved scan
+                raise Refused("baseline scan is not interleaved")
             if not 1 <= ns <= len(frame[2]):
-                return None
+                raise Refused("malformed or unsupported JPEG")
             sel = []
             for s in range(ns):
                 cs = body[1 + 2 * s]
@@ -1695,22 +1650,20 @@ def decode_jpeg_array(
                     (k for k, c in enumerate(frame[2]) if c[0] == cs), None
                 )
                 if idx is None:
-                    return None
+                    raise Refused("malformed or unsupported JPEG")
                 tt = body[2 + 2 * s]
                 sel.append((idx, tt >> 4, tt & 0x0F))
             ss, se = body[1 + 2 * ns], body[2 + 2 * ns]
             ah, al = body[3 + 2 * ns] >> 4, body[3 + 2 * ns] & 0x0F
-            got = _jpeg_entropy_segments(payload, i)
-            if got is None:
-                return None
-            scans.append((sel, ss, se, ah, al, restart_interval, got[0]))
+            segments, end = _jpeg_entropy_segments(payload, i)
+            scans.append((sel, ss, se, ah, al, restart_interval, segments))
             if not progressive:
                 break
-            i = got[1]  # resume the marker walk after this scan
+            i = end  # resume the marker walk after this scan
             continue
         # APPn / COM / anything else with a length: skipped
     if frame is None or not scans:
-        return None
+        raise Refused("malformed or unsupported JPEG")
     w, h, comps = frame
     sel, _, _, _, _, restart_interval, segments = scans[0]
     hmax = max(c[1] for c in comps)
@@ -1720,7 +1673,7 @@ def decode_jpeg_array(
         and vmax % c[2] == 0 and c[3] in qt
         for c in comps
     ):
-        return None
+        raise Refused("malformed or unsupported JPEG")
     if progressive:
         # per-scan table/spectral validation (T.81 G.1.1.1.1): a DC
         # scan (Ss=Se=0) needs its DC table only on the first pass
@@ -1731,16 +1684,16 @@ def decode_jpeg_array(
                 if ah == 0 and any(
                     d not in huff_dc for _, d, _ in s_sel
                 ):
-                    return None
+                    raise Refused("malformed or unsupported JPEG")
             elif 1 <= ss <= se <= 63:
                 if len(s_sel) != 1 or s_sel[0][2] not in huff_ac:
-                    return None
+                    raise Refused("malformed or unsupported JPEG")
             else:
-                return None
+                raise Refused("malformed or unsupported JPEG")
     else:
         for _, dc_id, ac_id in sel:
             if dc_id not in huff_dc or ac_id not in huff_ac:
-                return None
+                raise Refused("malformed or unsupported JPEG")
     if len(comps) == 1:
         # non-interleaved single-component scan: MCU = one block over
         # the component's own ceil(w/8) x ceil(h/8) grid (T.81 A.2.2)
@@ -1758,7 +1711,7 @@ def decode_jpeg_array(
         else:
             n_segs = 1
         if len(segments) < n_segs:
-            return None
+            raise Refused("malformed or unsupported JPEG")
 
     # Allocation guard (the parquet-footer crafted-input lesson): a
     # forged SOF declaring 65535x65535 implies a ~17 GB coefficient
@@ -1773,7 +1726,7 @@ def decode_jpeg_array(
         total_blocks += (mcus_x * hf) * (mcus_y * vf)
     entropy_bytes = sum(len(s) for sc in scans for s in sc[6])
     if (2 if not progressive else 1) * total_blocks > 8 * entropy_bytes:
-        return None
+        raise Refused("malformed or unsupported JPEG")
 
     # per component: coefficient batch (n_blocks, 64) + plane geometry
     coefs = []
@@ -1794,7 +1747,7 @@ def decode_jpeg_array(
             if restart_interval and mcu and mcu % restart_interval == 0:
                 seg_i += 1
                 if seg_i >= len(segments):
-                    return None
+                    raise Refused("malformed or unsupported JPEG")
                 reader = _JpegBitReader(segments[seg_i])
                 pred = dict.fromkeys(order, 0)
             my, mx = divmod(mcu, mcus_x)
@@ -1804,19 +1757,15 @@ def decode_jpeg_array(
                     for bx in range(hf):
                         block = np.zeros(64, dtype=np.int32)
                         s = reader.huff(dc_tab[ci])
-                        if s is None or s > 15:
-                            return None
+                        if s > 15:
+                            raise Refused("malformed or unsupported JPEG")
                         if s:
                             v = reader.take(s)
-                            if v is None:
-                                return None
                             pred[ci] += _jpeg_extend(v, s)
                         block[0] = pred[ci]
                         k = 1
                         while k < 64:
                             rs = reader.huff(ac_tab[ci])
-                            if rs is None:
-                                return None
                             r, sz = rs >> 4, rs & 0x0F
                             if sz == 0:
                                 if r == 15:  # ZRL: sixteen zeros
@@ -1825,21 +1774,19 @@ def decode_jpeg_array(
                                 break  # EOB
                             k += r
                             if k > 63:
-                                return None
+                                raise Refused("malformed or unsupported JPEG")
                             v = reader.take(sz)
-                            if v is None:
-                                return None
                             block[_JPEG_ZIGZAG[k]] = _jpeg_extend(v, sz)
                             k += 1
                         bw = mcus_x * (layout[ci][1])
                         row = my * vf + by
                         col = mx * hf + bx
                         coefs[ci][row * bw + col] = block
-    elif not _jpeg_progressive_fill(
-        scans, coefs, comps, layout, mcus_x, mcus_y, hmax, vmax,
-        w, h, huff_dc, huff_ac,
-    ):
-        return None
+    else:
+        _jpeg_progressive_fill(
+            scans, coefs, comps, layout, mcus_x, mcus_y, hmax, vmax,
+            w, h, huff_dc, huff_ac,
+        )
     # dequantize + IDCT + assemble planes (all batched numpy)
     planes = []
     for ci, c in enumerate(comps):
@@ -2646,6 +2593,7 @@ def decode_avi_frames(
     return frames or None
 
 
+@none_on_refusal
 def decode_mp4_mjpeg_frames(
     payload: bytes | None, max_frames: int = 16
 ) -> tuple[int, list[tuple[int, int, bytes]]] | None:
@@ -2661,17 +2609,12 @@ def decode_mp4_mjpeg_frames(
     None on an unparseable container, an out-of-range sample, or a
     sample that is not a decodable JPEG — honest absence; the ffmpeg
     seam now covers only true inter-frame codecs (H.264 etc.)."""
-    tab = mp4_sample_table(payload, max_samples=max_frames)
-    if tab is None:
-        return None
+    tab = mp4_sample_table.__wrapped__(payload, max_samples=max_frames)
     frames: list[tuple[int, int, bytes]] = []
     for si, dts, size, off in tab["samples"]:
         if off < 0 or off + size > len(payload):
             return None
-        got = decode_jpeg_array(payload[off : off + size])
-        if got is None:
-            return None
-        w, h, pix = got
+        w, h, pix = decode_jpeg_array.__wrapped__(payload[off : off + size])
         frames.append(
             (si, dts, b"P5\n%d %d\n255\n" % (w, h) + pix.tobytes())
         )
@@ -2758,6 +2701,7 @@ def _mp4_video_mdia(payload: bytes, moov) -> tuple[int, int] | None:
     return no_hdlr or first
 
 
+@none_on_refusal
 def mp4_sample_table(
     payload: bytes | None, max_samples: int = 64, sync_only: bool = False
 ) -> dict | None:
@@ -2787,7 +2731,7 @@ def mp4_sample_table(
     plans exact byte-range fetches of every Nth (key)frame from
     object storage without touching frame bytes."""
     if payload is None or len(payload) < 12 or payload[4:8] != b"ftyp":
-        return None
+        raise Refused("malformed MP4 sample table")
     n = len(payload)
 
     def find(fourcc: bytes, start: int, end: int) -> tuple[int, int] | None:
@@ -2799,19 +2743,19 @@ def mp4_sample_table(
     moov = find(b"moov", 0, n)
     mdia = _mp4_video_mdia(payload, moov) if moov else None
     if mdia is None:
-        return None
+        raise Refused("malformed MP4 sample table")
     mdhd = find(b"mdhd", *mdia)
     if mdhd is None or mdhd[0] + 4 > n:
-        return None
+        raise Refused("malformed MP4 sample table")
     ver = payload[mdhd[0]]
     ts_off = mdhd[0] + (20 if ver == 1 else 12)
     if ts_off + 4 > mdhd[1]:
-        return None
+        raise Refused("malformed MP4 sample table")
     timescale = int.from_bytes(payload[ts_off : ts_off + 4], "big")
     span = find(b"minf", *mdia)
     stbl = find(b"stbl", *span) if span else None
     if stbl is None:
-        return None
+        raise Refused("malformed MP4 sample table")
 
     def u32(off: int) -> int:
         return int.from_bytes(payload[off : off + 4], "big")
@@ -2825,7 +2769,7 @@ def mp4_sample_table(
     if stts is None or stsz is None or stsc is None or (
         stco is None and co64 is None
     ):
-        return None
+        raise Refused("malformed MP4 sample table")
 
     # stts → per-sample dts (truncated expansion)
     n_tt = u32(stts[0] + 4)
@@ -2834,7 +2778,7 @@ def mp4_sample_table(
     for e in range(n_tt):
         off = stts[0] + 8 + e * 8
         if off + 8 > stts[1]:
-            return None
+            raise Refused("malformed MP4 sample table")
         cnt, delta = u32(off), u32(off + 4)
         for _ in range(cnt):
             if len(dts) == max_samples:
@@ -2851,14 +2795,14 @@ def mp4_sample_table(
         sizes = [uniform] * n_out
     else:
         if stsz[0] + 12 + n_out * 4 > stsz[1]:
-            return None
+            raise Refused("malformed MP4 sample table")
         sizes = [u32(stsz[0] + 12 + i * 4) for i in range(n_out)]
 
     # stco/co64 → chunk offsets
     cbox, width = (stco, 4) if stco is not None else (co64, 8)
     n_ch = u32(cbox[0] + 4)
     if cbox[0] + 8 + n_ch * width > cbox[1]:
-        return None
+        raise Refused("malformed MP4 sample table")
     offsets = [
         int.from_bytes(
             payload[cbox[0] + 8 + i * width : cbox[0] + 8 + (i + 1) * width],
@@ -2873,10 +2817,10 @@ def mp4_sample_table(
     for e in range(n_sc):
         off = stsc[0] + 8 + e * 12
         if off + 12 > stsc[1]:
-            return None
+            raise Refused("malformed MP4 sample table")
         runs.append((u32(off), u32(off + 4)))  # (first_chunk, spc)
     if not runs or runs[0][0] != 1:
-        return None
+        raise Refused("malformed MP4 sample table")
 
     samples: list[tuple[int, int, int, int]] = []
     run_i = 0
@@ -2894,13 +2838,13 @@ def mp4_sample_table(
         if si >= n_out:
             break
     if si < n_out:  # stsc×stco cover fewer samples than declared
-        return None
+        raise Refused("malformed MP4 sample table")
     if sync_only:
         stss = table(b"stss")
         if stss is not None:  # absent stss = every sample is sync
             n_ss = u32(stss[0] + 4)
             if stss[0] + 8 + n_ss * 4 > stss[1]:
-                return None
+                raise Refused("malformed MP4 sample table")
             sync = {
                 u32(stss[0] + 8 + i * 4) - 1 for i in range(n_ss)  # 1-based
             }
@@ -2956,7 +2900,7 @@ def mp4_sample_plan(
 # omit or get wrong).
 
 
-@none_on_truncation
+@none_on_refusal
 def h264_sps_fields(rbsp: bytes) -> dict | None:
     """The one SPS syntax walk (ISO 14496-10 §7.3.2.1) over an RBSP
     (NAL header stripped, emulation prevention removed) → every field
@@ -2982,7 +2926,7 @@ def h264_sps_fields(rbsp: bytes) -> dict | None:
         bit_depth_chroma = b.ue() + 8
         b.read1()  # qpprime_y_zero_transform_bypass
         if b.read1():  # seq_scaling_matrix_present
-            return None  # scaling lists: honest seam (rare)
+            raise Refused("scaling lists: honest seam (rare)")
     log2_max_frame_num = b.ue() + 4
     poc_type = b.ue()
     log2_max_poc_lsb = 4
@@ -3006,7 +2950,7 @@ def h264_sps_fields(rbsp: bytes) -> dict | None:
     if b.read1():  # frame_cropping_flag
         crop = (b.ue(), b.ue(), b.ue(), b.ue())
     if b.rest_is_zero():
-        return None
+        raise Refused("unsupported SPS")
     return {
         "profile_idc": profile_idc,
         "level_idc": level_idc,
@@ -3023,6 +2967,7 @@ def h264_sps_fields(rbsp: bytes) -> dict | None:
     }
 
 
+@none_on_refusal
 def h264_sps_params(sps_nal: bytes) -> dict | None:
     """Parse an SPS NAL unit (header byte + RBSP) → ``{"profile_idc",
     "level_idc", "width", "height"}`` per ISO 14496-10 §7.3.2.1:
@@ -3031,10 +2976,8 @@ def h264_sps_params(sps_nal: bytes) -> dict | None:
     None for truncated bits or the scaling-matrix shapes the walk
     doesn't model — honest absence, never guessed geometry."""
     if not sps_nal or (sps_nal[0] & 0x1F) != 7:
-        return None
-    f = h264_sps_fields(rbsp_unescape(sps_nal[1:]))
-    if f is None:
-        return None
+        raise Refused("not an SPS NAL or empty picture")
+    f = h264_sps_fields.__wrapped__(rbsp_unescape(sps_nal[1:]))
     # crop units per chroma format (§7.4.2.1.1): SubWidthC/SubHeightC
     # are 2/2 for 4:2:0, 2/1 for 4:2:2, 1/1 for 4:4:4 and monochrome
     chroma_format_idc = f["chroma_format_idc"]
@@ -3050,7 +2993,7 @@ def h264_sps_params(sps_nal: bytes) -> dict | None:
         - (crop_t + crop_b) * cuy
     )
     if width <= 0 or height <= 0:
-        return None
+        raise Refused("not an SPS NAL or empty picture")
     return {
         "profile_idc": f["profile_idc"],
         "level_idc": f["level_idc"],
@@ -3059,13 +3002,14 @@ def h264_sps_params(sps_nal: bytes) -> dict | None:
     }
 
 
+@none_on_refusal
 def mp4_avc_config(payload: bytes) -> dict | None:
     """First video track's AVC decoder configuration (the 'avcC' box
     under stsd/avc1, ISO 14496-15 §5.3.3): ``{"nal_length_size",
     "sps": [bytes, ...], "pps": [bytes, ...], **sps_params}``. None
     when the track isn't AVC or the record is torn."""
     if payload is None or len(payload) < 12 or payload[4:8] != b"ftyp":
-        return None
+        raise Refused("no AVC configuration record")
     n = len(payload)
 
     def find(fourcc: bytes, start: int, end: int):
@@ -3078,7 +3022,7 @@ def mp4_avc_config(payload: bytes) -> dict | None:
     # take the first whose stsd carries an AVC sample entry.
     moov = find(b"moov", 0, n)
     if moov is None:
-        return None
+        raise Refused("no AVC configuration record")
     avc1 = None
     for t, ds, de in _mp4_boxes(payload, *moov):
         if t != b"trak" or avc1 is not None:
@@ -3091,14 +3035,14 @@ def mp4_avc_config(payload: bytes) -> dict | None:
         span = (span[0] + 8, span[1])  # skip ver/flags + count
         avc1 = find(b"avc1", *span) or find(b"avc3", *span)
     if avc1 is None:
-        return None
+        raise Refused("no AVC configuration record")
     # VisualSampleEntry: 78 bytes of fields before the child boxes
     avcc = find(b"avcC", avc1[0] + 78, avc1[1])
     if avcc is None:
-        return None
+        raise Refused("no AVC configuration record")
     d, e = avcc
     if e - d < 7 or payload[d] != 1:
-        return None
+        raise Refused("no AVC configuration record")
     nal_len = (payload[d + 4] & 0x03) + 1
     i = d + 5
     sps_list: list[bytes] = []
@@ -3107,31 +3051,29 @@ def mp4_avc_config(payload: bytes) -> dict | None:
     i += 1
     for _ in range(n_sps):
         if i + 2 > e:
-            return None
+            raise Refused("no AVC configuration record")
         ln = int.from_bytes(payload[i : i + 2], "big")
         i += 2
         if i + ln > e:
-            return None
+            raise Refused("no AVC configuration record")
         sps_list.append(payload[i : i + ln])
         i += ln
     if i >= e:
-        return None
+        raise Refused("no AVC configuration record")
     n_pps = payload[i]
     i += 1
     for _ in range(n_pps):
         if i + 2 > e:
-            return None
+            raise Refused("no AVC configuration record")
         ln = int.from_bytes(payload[i : i + 2], "big")
         i += 2
         if i + ln > e:
-            return None
+            raise Refused("no AVC configuration record")
         pps_list.append(payload[i : i + ln])
         i += ln
     if not sps_list:
-        return None
-    params = h264_sps_params(sps_list[0])
-    if params is None:
-        return None
+        raise Refused("no AVC configuration record")
+    params = h264_sps_params.__wrapped__(sps_list[0])
     return {
         "nal_length_size": nal_len,
         "sps": sps_list,
@@ -3140,6 +3082,7 @@ def mp4_avc_config(payload: bytes) -> dict | None:
     }
 
 
+@none_on_refusal
 def h264_nal_index(payload: bytes, max_samples: int = 64) -> dict | None:
     """Bitstream-level frame index of an AVC MP4: SPS geometry plus a
     per-sample NAL-unit walk of the AVCC length-prefixed sample data —
@@ -3150,30 +3093,26 @@ def h264_nal_index(payload: bytes, max_samples: int = 64) -> dict | None:
     container's optional 'stss'. A sample whose NAL lengths don't tile
     its exact byte range refuses the whole index (torn mdat /
     desynced sample table — never a guessed frame plan)."""
-    cfg = mp4_avc_config(payload)
-    if cfg is None:
-        return None
-    tab = mp4_sample_table(payload, max_samples)
-    if tab is None:
-        return None
+    cfg = mp4_avc_config.__wrapped__(payload)
+    tab = mp4_sample_table.__wrapped__(payload, max_samples)
     nls = cfg["nal_length_size"]
     out = []
     for si, _dts, size, off in tab["samples"]:
         if off + size > len(payload):
-            return None
+            raise Refused("sample NALs do not tile the sample")
         j, end = off, off + size
         types: list[int] = []
         while j < end:
             if j + nls > end:
-                return None
+                raise Refused("sample NALs do not tile the sample")
             ln = int.from_bytes(payload[j : j + nls], "big")
             j += nls
             if ln <= 0 or j + ln > end:
-                return None
+                raise Refused("sample NALs do not tile the sample")
             types.append(payload[j] & 0x1F)
             j += ln
         if j != end or not types:
-            return None
+            raise Refused("sample NALs do not tile the sample")
         out.append((si, off, size, types, 5 in types))
     return {
         "width": cfg["width"],
@@ -3184,6 +3123,7 @@ def h264_nal_index(payload: bytes, max_samples: int = 64) -> dict | None:
     }
 
 
+@none_on_refusal
 def h264_annexb_nals(
     payload: bytes, max_nals: int = 256
 ) -> dict | None:
@@ -3209,7 +3149,7 @@ def h264_annexb_nals(
         starts.append(j + 3)
         i = j + 3
     if not starts:
-        return None
+        raise Refused("no start code, SPS or NAL")
     truncated = len(starts) > max_nals
     nals = []
     params = None
@@ -3228,7 +3168,7 @@ def h264_annexb_nals(
             params = h264_sps_params(payload[s:e])
         nals.append((len(nals), s, e - s, ntype, ntype == 5))
     if params is None or not nals:
-        return None
+        raise Refused("no start code, SPS or NAL")
     return {**params, "nals": nals}
 
 
@@ -3624,7 +3564,7 @@ _IMA_ADJ = (-1, -1, -1, -1, 2, 4, 6, 8, -1, -1, -1, -1, 2, 4, 6, 8)
 
 def _ima_adpcm_decode(
     data: bytes, block_align: int
-) -> "np.ndarray | None":
+) -> "np.ndarray":
     """Decode mono IMA ADPCM (WAVE format 0x11) sample data: each
     ``block_align``-byte block opens with a 4-byte header (int16
     predictor = the block's first OUTPUT sample, uint8 step index,
@@ -3634,19 +3574,19 @@ def _ima_adpcm_decode(
     [0, 88]) is inherently sequential — predictor and step index feed
     every next code — so like the GIF LZW kernel this is an honest
     per-code Python loop; there is no vectorizable form. A block header
-    with index > 88 is corrupt → None, never guessed samples. A short
+    with index > 88 is corrupt → ``Refused``, never guessed samples. A short
     final block decodes the codes it has (valid per spec: the data
     chunk bounds the stream)."""
     out: list[int] = []
     n = len(data)
     if block_align < 4:
-        return None
+        raise Refused("IMA ADPCM step index over 88")
     for off in range(0, n - 3, block_align):
         blk = data[off : off + block_align]
         pred = int.from_bytes(blk[0:2], "little", signed=True)
         idx = blk[2]
         if idx > 88:
-            return None
+            raise Refused("IMA ADPCM step index over 88")
         out.append(pred)
         for byte in blk[4:]:
             for nib in (byte & 0x0F, byte >> 4):
@@ -3672,6 +3612,7 @@ def _ima_adpcm_decode(
     return np.array(out, dtype=np.int16) if out else None
 
 
+@none_on_refusal
 def decode_wav_samples(
     payload: bytes | None,
 ) -> tuple[int, "np.ndarray"] | None:
@@ -3695,10 +3636,10 @@ def decode_wav_samples(
     yield int16, so ``decode_wav_pcm`` stats, ``resample_wav``, and the
     duration math downstream are codec-independent."""
     if payload is None:
-        return None
+        raise Refused("unsupported or empty WAV")
     n = len(payload)
     if n < 12 or payload[:4] != b"RIFF" or payload[8:12] != b"WAVE":
-        return None
+        raise Refused("unsupported or empty WAV")
     i = 12
     audio_format = 0
     rate = 0
@@ -3720,31 +3661,28 @@ def decode_wav_samples(
             )
         elif cid == b"data":
             if not fmt_ok:
-                return None
+                raise Refused("unsupported or empty WAV")
             avail = min(csz, n - i - 8)
             if audio_format == 1:
                 m = avail // 2
                 if m == 0:
-                    return None
+                    raise Refused("unsupported or empty WAV")
                 return rate, np.frombuffer(
                     payload, dtype="<i2", count=m, offset=i + 8
                 )
             if audio_format in (6, 7):
                 if avail == 0:
-                    return None
+                    raise Refused("unsupported or empty WAV")
                 lut = _ULAW_LUT if audio_format == 7 else _ALAW_LUT
                 codes = np.frombuffer(
                     payload, dtype=np.uint8, count=avail, offset=i + 8
                 )
                 return rate, lut[codes]
-            samples = _ima_adpcm_decode(
+            return rate, _ima_adpcm_decode(
                 payload[i + 8 : i + 8 + avail], block_align
             )
-            if samples is None:
-                return None
-            return rate, samples
         i += 8 + csz + (csz & 1)  # word-aligned RIFF chunks
-    return None
+    raise Refused("unsupported or empty WAV")
 
 
 def _crc8_flac(data: bytes) -> int:
@@ -3779,6 +3717,7 @@ _FLAC_BLOCKSIZE = (
 _FLAC_FIXED_COEFS = ((), (1,), (2, -1), (3, -3, 1), (4, -6, 4, -1))
 
 
+@none_on_refusal
 def decode_flac_samples(
     payload: bytes | None,
 ) -> tuple[int, "np.ndarray"] | None:
@@ -3827,97 +3766,91 @@ def decode_flac_samples(
     while i < n and (total == 0 or len(out) < total):
         frame_start = i
         bits_r = MsbBits(payload, i * 8)
-        try:
-            if bits_r.read(14) != 0x3FFE or bits_r.read(1):
+        if bits_r.read(14) != 0x3FFE or bits_r.read(1):
+            return None
+        bits_r.read(1)  # blocking strategy (either is fine)
+        bs_code = bits_r.read(4)
+        sr_code = bits_r.read(4)
+        if bits_r.read(4) != 0:  # channel assignment: mono only
+            return None
+        ss_code = bits_r.read(3)
+        if bits_r.read(1):
+            return None
+        # UTF-8-coded frame/sample number (RFC 9639 §9.1.5)
+        first = bits_r.read(8)
+        extra = 0
+        if first >= 0xC0:
+            v = first
+            while v & 0x40:
+                extra += 1
+                v <<= 1
+            if extra > 6:
                 return None
-            bits_r.read(1)  # blocking strategy (either is fine)
-            bs_code = bits_r.read(4)
-            sr_code = bits_r.read(4)
-            if bits_r.read(4) != 0:  # channel assignment: mono only
-                return None
-            ss_code = bits_r.read(3)
-            if bits_r.read(1):
-                return None
-            # UTF-8-coded frame/sample number (RFC 9639 §9.1.5)
-            first = bits_r.read(8)
-            extra = 0
-            if first >= 0xC0:
-                v = first
-                while v & 0x40:
-                    extra += 1
-                    v <<= 1
-                if extra > 6:
+            for _ in range(extra):
+                if bits_r.read(8) & 0xC0 != 0x80:
                     return None
-                for _ in range(extra):
-                    if bits_r.read(8) & 0xC0 != 0x80:
-                        return None
-            elif first >= 0x80:
-                return None
-            # sample size: 000 = from STREAMINFO (16 here), 100 = 16-bit
-            # explicitly; any other code contradicts the mono-16 gate
-            if bs_code == 0 or ss_code not in (0, 4):
-                return None
-            blocksize = _FLAC_BLOCKSIZE[bs_code]
-            if blocksize == -8:
-                blocksize = bits_r.read(8) + 1
-            elif blocksize == -16:
-                blocksize = bits_r.read(16) + 1
-            if sr_code == 12:
-                bits_r.read(8)
-            elif sr_code in (13, 14):
-                bits_r.read(16)
-            elif sr_code == 15:
-                return None
-            hdr_end = bits_r.pos // 8
-            if _crc8_flac(payload[frame_start:hdr_end]) != bits_r.read(8):
-                return None
-            # --- one subframe (mono) ---
-            if bits_r.read(1):
-                return None
-            sf_type = bits_r.read(6)
-            wasted = 0
-            if bits_r.read(1):
-                wasted = bits_r.unary() + 1
-                if wasted >= 16:
-                    return None  # no sample bits left
-            bps = 16 - wasted
-            if sf_type == 0:  # CONSTANT
-                samples = [bits_r.read_signed(bps)] * blocksize
-            elif sf_type == 1:  # VERBATIM
-                samples = [bits_r.read_signed(bps) for _ in range(blocksize)]
-            elif 8 <= sf_type <= 12 or sf_type >= 32:
-                if sf_type >= 32:  # LPC
-                    order = (sf_type & 31) + 1
-                    samples = [bits_r.read_signed(bps) for _ in range(order)]
-                    prec = bits_r.read(4) + 1
-                    if prec == 16:
-                        return None  # 1111 is invalid per spec
-                    shift = bits_r.read_signed(5)
-                    if shift < 0:
-                        return None
-                    coefs = [bits_r.read_signed(prec) for _ in range(order)]
-                else:  # FIXED
-                    order = sf_type - 8
-                    samples = [bits_r.read_signed(bps) for _ in range(order)]
-                    coefs = list(_FLAC_FIXED_COEFS[order])
-                    shift = 0
-                res = _flac_residual(bits_r, blocksize, order)
-                if res is None:
+        elif first >= 0x80:
+            return None
+        # sample size: 000 = from STREAMINFO (16 here), 100 = 16-bit
+        # explicitly; any other code contradicts the mono-16 gate
+        if bs_code == 0 or ss_code not in (0, 4):
+            return None
+        blocksize = _FLAC_BLOCKSIZE[bs_code]
+        if blocksize == -8:
+            blocksize = bits_r.read(8) + 1
+        elif blocksize == -16:
+            blocksize = bits_r.read(16) + 1
+        if sr_code == 12:
+            bits_r.read(8)
+        elif sr_code in (13, 14):
+            bits_r.read(16)
+        elif sr_code == 15:
+            return None
+        hdr_end = bits_r.pos // 8
+        if _crc8_flac(payload[frame_start:hdr_end]) != bits_r.read(8):
+            return None
+        # --- one subframe (mono) ---
+        if bits_r.read(1):
+            return None
+        sf_type = bits_r.read(6)
+        wasted = 0
+        if bits_r.read(1):
+            wasted = bits_r.unary() + 1
+            if wasted >= 16:
+                return None  # no sample bits left
+        bps = 16 - wasted
+        if sf_type == 0:  # CONSTANT
+            samples = [bits_r.read_signed(bps)] * blocksize
+        elif sf_type == 1:  # VERBATIM
+            samples = [bits_r.read_signed(bps) for _ in range(blocksize)]
+        elif 8 <= sf_type <= 12 or sf_type >= 32:
+            if sf_type >= 32:  # LPC
+                order = (sf_type & 31) + 1
+                samples = [bits_r.read_signed(bps) for _ in range(order)]
+                prec = bits_r.read(4) + 1
+                if prec == 16:
+                    return None  # 1111 is invalid per spec
+                shift = bits_r.read_signed(5)
+                if shift < 0:
                     return None
-                for r in res:
-                    pred = 0
-                    for j, c in enumerate(coefs):
-                        pred += c * samples[-1 - j]
-                    samples.append(r + (pred >> shift))
-            else:
-                return None  # reserved subframe type
-            if wasted:
-                samples = [s << wasted for s in samples]
-            bits_r.align()
-            crc_end = bits_r.pos // 8
-            if _crc16_flac(payload[frame_start:crc_end]) != bits_r.read(16):
-                return None
-        except Truncated:
+                coefs = [bits_r.read_signed(prec) for _ in range(order)]
+            else:  # FIXED
+                order = sf_type - 8
+                samples = [bits_r.read_signed(bps) for _ in range(order)]
+                coefs = list(_FLAC_FIXED_COEFS[order])
+                shift = 0
+            for r in _flac_residual(bits_r, blocksize, order):
+                pred = 0
+                for j, c in enumerate(coefs):
+                    pred += c * samples[-1 - j]
+                samples.append(r + (pred >> shift))
+        else:
+            return None  # reserved subframe type
+        if wasted:
+            samples = [s << wasted for s in samples]
+        bits_r.align()
+        crc_end = bits_r.pos // 8
+        if _crc16_flac(payload[frame_start:crc_end]) != bits_r.read(16):
             return None
         if any(s < -32768 or s > 32767 for s in samples):
             return None  # corrupt stream: escaped the sample range
@@ -3932,7 +3865,7 @@ def decode_flac_samples(
 
 def _flac_residual(
     bits_r: MsbBits, blocksize: int, order: int
-) -> list[int] | None:
+) -> list[int]:
     """Rice-coded residual section (RFC 9639 §9.2.7): 2-bit method
     selects 4- or 5-bit Rice parameters, 4-bit partition order splits
     the block into 2^po equal partitions (the first short by the
@@ -3940,12 +3873,12 @@ def _flac_residual(
     fixed-width-bit residuals. Zigzag 'unsigned folding' per spec."""
     method = bits_r.read(2)
     if method > 1:
-        return None
+        raise Refused("reserved residual coding method")
     pbits = 4 if method == 0 else 5
     escape = (1 << pbits) - 1
     po = bits_r.read(4)
     if blocksize % (1 << po) or (blocksize >> po) <= order:
-        return None
+        raise Refused("partition order does not fit the block")
     res: list[int] = []
     for part in range(1 << po):
         count = (blocksize >> po) - (order if part == 0 else 0)
@@ -3975,16 +3908,14 @@ def decode_audio_samples(
     return decode_flac_samples(payload)
 
 
+@none_on_refusal
 def decode_wav_pcm(payload: bytes | None) -> tuple[int, int, int] | None:
     """(n_samples, peak_abs, energy) from a WAV payload via
     ``decode_wav_samples`` (PCM, G.711 μ/A-law, or IMA ADPCM — all
     land as int16): ``energy`` is the exact integer Σ v² (int64
     lanes, bounded by n·2³⁰), ``peak_abs`` handles the −32768
     asymmetry — all vectorized."""
-    decoded = decode_wav_samples(payload)
-    if decoded is None:
-        return None
-    v = decoded[1].astype(np.int64)
+    v = decode_wav_samples.__wrapped__(payload)[1].astype(np.int64)
     return (
         int(v.size),
         int(np.abs(v).max()),
@@ -4170,6 +4101,7 @@ RESIZED_SCHEMA = T.StructType(
 )
 
 
+@none_on_refusal
 def resize_pnm(payload: bytes | None, tw: int, th: int) -> bytes | None:
     """REAL resize kernel for the formats we can really decode:
     nearest-neighbor resample of the PGM/PPM grayscale raster to
@@ -4181,10 +4113,7 @@ def resize_pnm(payload: bytes | None, tw: int, th: int) -> bytes | None:
     as decode."""
     if tw <= 0 or th <= 0:
         return None
-    decoded = decode_pnm_array(payload)
-    if decoded is None:
-        return None
-    return _resample_to_pgm(decoded, tw, th)
+    return _resample_to_pgm(decode_pnm_array.__wrapped__(payload), tw, th)
 
 
 def _resample_to_pgm(

@@ -31,6 +31,8 @@ from __future__ import annotations
 
 import numpy as np
 
+from data_ingestion_py_spark.sources.bits import none_on_refusal
+
 # ---------------------------------------------------------------------------
 # The house bitmap font: digits 0-9 at 3 rows × 2 cols of cells.
 # Each cell is 1 = ink (dark, pixel < threshold) / 0 = paper. The ten
@@ -187,6 +189,7 @@ def match_glyph_grid(
     return "\n".join(lines)
 
 
+@none_on_refusal
 def ocr_pdf_pages(
     content: bytes,
     strict: bool = True,
@@ -223,10 +226,7 @@ def ocr_pdf_pages(
     rasters: list[tuple[int, np.ndarray]] = []
     for pno, _idx, _name, w, h, _bpc, kind, data in imgs:
         if kind == "jpeg":
-            got = decode_jpeg_array(data)
-            if got is None:
-                return None
-            dw, dh, arr = got
+            dw, dh, arr = decode_jpeg_array.__wrapped__(data)
             gray = np.asarray(arr, dtype=np.uint8).reshape(dh, dw)
         else:  # raw gray8, validated by extract_page_images
             gray = np.frombuffer(data, dtype=np.uint8).reshape(h, w)

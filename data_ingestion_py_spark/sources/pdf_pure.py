@@ -48,7 +48,12 @@ from __future__ import annotations
 import re
 import zlib
 
-from data_ingestion_py_spark.sources.bits import bounded_decompress
+from data_ingestion_py_spark.sources.bits import (
+    Refused,
+    Truncated,
+    bounded_decompress,
+    none_on_refusal,
+)
 
 _OBJ_RE = re.compile(rb"(\d{1,10})\s+(\d{1,5})\s+obj\b")
 _TRAILER_RE = re.compile(rb"trailer\b")
@@ -463,7 +468,7 @@ def _aesv3_file_key(
     validation salt, decrypt /UE with the key-salt hash (AES-256 CBC,
     zero IV, no padding), then check /Perms round-trips to 'adb'
     under the recovered key (Algorithm 13 — a wrong key NEVER
-    ships). None on any mismatch."""
+    ships). ``Refused`` on any mismatch."""
     import hashlib
 
     r = enc.get("R")
@@ -475,16 +480,16 @@ def _aesv3_file_key(
         or len(u) < 48
         or len(ue) != 32
     ):
-        return None
+        raise Refused("user password does not verify")
     pw = password[:127]
     vsalt, ksalt = u[32:40], u[40:48]
     if r == 6:
         if _hash_2b(pw, vsalt) != u[:32]:
-            return None
+            raise Refused("user password does not verify")
         ik = _hash_2b(pw, ksalt)
     else:  # R5: single SHA-256 (Adobe Extension Level 3)
         if hashlib.sha256(pw + vsalt).digest() != u[:32]:
-            return None
+            raise Refused("user password does not verify")
         ik = hashlib.sha256(pw + ksalt).digest()
     # /UE: AES-256 CBC, zero IV, NO padding
     rks = _aes_round_keys(ik)
@@ -501,12 +506,12 @@ def _aesv3_file_key(
     if isinstance(perms, bytes) and len(perms) == 16:
         dec = _aes_decrypt_block(_aes_round_keys(key), perms)
         if dec[9:12] != b"adb":
-            return None  # wrong key or tampered perms: refuse
+            raise Refused("wrong key or tampered perms")
         p = enc.get("P")
         if isinstance(p, int) and int.from_bytes(
             dec[:4], "little", signed=False
         ) != (p & 0xFFFFFFFF):
-            return None
+            raise Refused("user password does not verify")
     return key
 
 
@@ -538,7 +543,7 @@ def _std_security_key(
         or len(o) != 32
         or len(u) < 16
     ):
-        return None
+        raise Refused("user password does not verify")
     # /Length defaults to 40 for EVERY revision (PDF 32000-1 Table 20)
     # — but R3+ writers that omit it overwhelmingly mean 128, so when
     # the key is unspecified try both and let /U verification pick.
@@ -551,7 +556,7 @@ def _std_security_key(
             or length % 8
             or not 40 <= length <= 128
         ):
-            return None
+            raise Refused("user password does not verify")
         candidates = [length]
     padded = (password + _PW_PAD)[:32]
     suffix = b""
@@ -577,7 +582,7 @@ def _std_security_key(
             ok = t == u[:16]
         if ok:
             return key
-    return None
+    raise Refused("user password does not verify")
 
 
 class _PdfDoc:
@@ -646,17 +651,17 @@ class _PdfDoc:
 
     def _raw_stream(
         self, num: int
-    ) -> tuple[dict, bytes, list, list] | None:
+    ) -> tuple[dict, bytes, list, list]:
         """(stream dict, raw bytes, filters, decode-parms) of object
         ``num`` — the shared preamble of ``stream_bytes`` and
         ``image_stream``: /Length-or-endstream recovery done, filter
         chain NOT yet applied."""
         got = self.objs.get(num)
         if got is None or got[1] is None:
-            return None
+            raise Refused("no such stream object")
         d, start = got
         if not isinstance(d, dict):
-            return None
+            raise Refused("stream without a dictionary")
         length = self.resolve(d.get("Length"))
         raw = None
         if isinstance(length, int) and 0 <= length <= len(self.buf) - start:
@@ -668,7 +673,7 @@ class _PdfDoc:
         if raw is None:  # fall back to scanning for endstream
             end = self.buf.find(b"endstream", start)
             if end < 0:
-                return None
+                raise Truncated  # no endstream
             raw = self.buf[start:end]
             if raw.endswith(b"\r\n"):
                 raw = raw[:-2]
@@ -681,7 +686,7 @@ class _PdfDoc:
             # key: RC4, or AES-CBC under the AESV2 crypt filter
             raw = self._decrypt(num, raw)
             if raw is None:
-                return None  # bad AES padding/length: corrupt
+                raise Refused("bad AES padding/length")
         filt = self.resolve(d.get("Filter"))
         filts = (
             [] if filt is None
@@ -691,25 +696,22 @@ class _PdfDoc:
         if not isinstance(parms, list):
             parms = [parms] * len(filts)
         if len(parms) != len(filts):
-            return None
+            raise Refused("DecodeParms do not match the filters")
         return d, raw, filts, parms
 
+    @none_on_refusal
     def stream_bytes(self, num: int) -> bytes | None:
         """Decoded stream content of object ``num`` (None if absent or
-        undecodable). Supports no filter and /FlateDecode (scalar or
-        1-element array)."""
-        got = self._raw_stream(num)
-        if got is None:
-            return None
-        _d, data, filts, parms = got
+        undecodable: any undecodable link breaks the chain). Supports
+        the filters ``_apply_filter`` implements."""
+        _d, data, filts, parms = self._raw_stream(num)
         for f, dp in zip(filts, parms):
             data = self._apply_filter(
                 self.resolve(f), self.resolve(dp), data
             )
-            if data is None:
-                return None  # any undecodable link breaks the chain
         return data
 
+    @none_on_refusal
     def image_stream(self, num: int) -> tuple[str, bytes] | None:
         """Image XObject stream content, DCT-aware (r13, VERDICT task
         #4): a TERMINAL /DCTDecode is not applied — the remaining bytes
@@ -719,10 +721,7 @@ class _PdfDoc:
         A fully-applied chain (or no filter) returns ``('raw', data)``.
         /DCTDecode anywhere but last, or any unsupported link, → None
         (honest: never emit half-decoded bytes as an image)."""
-        got = self._raw_stream(num)
-        if got is None:
-            return None
-        d, data, filts, parms = got
+        d, data, filts, parms = self._raw_stream(num)
         for i, (f, dp) in enumerate(zip(filts, parms)):
             name = self.resolve(f)
             if name == "/DCTDecode":
@@ -763,13 +762,13 @@ class _PdfDoc:
                 if k < 0:  # pure Group 4
                     if self.resolve(rdp.get("EncodedByteAlign")) is True:
                         return None
-                    arr = g4_decode(data, cols, rows)
+                    arr = g4_decode.__wrapped__(data, cols, rows)
                 elif k > 0:  # mixed 2D Group 3 (r15): EOL framing
                     # self-delimits, so /EncodedByteAlign fill is
                     # subsumed by the decoder's zero-skip
-                    arr = g3_2d_decode(data, cols, rows)
+                    arr = g3_2d_decode.__wrapped__(data, cols, rows)
                 else:  # K == 0: Group 3 one-dimensional (r13)
-                    arr = g3_1d_decode(
+                    arr = g3_1d_decode.__wrapped__(
                         data,
                         cols,
                         rows,
@@ -778,8 +777,6 @@ class _PdfDoc:
                         )
                         is True,
                     )
-                if arr is None:
-                    return None
                 return ("gray8", arr.tobytes())
             if name == "/JBIG2Decode":
                 # terminal modern-fax bilevel (r14, VERDICT stretch
@@ -803,9 +800,7 @@ class _PdfDoc:
                     jbig2_generic_decode,
                 )
 
-                arr = jbig2_generic_decode(data, gdata)
-                if arr is None:
-                    return None
+                arr = jbig2_generic_decode.__wrapped__(data, gdata)
                 return ("gray8", arr.tobytes())
             if name == "/JPXDecode":
                 # terminal book-scan wavelet bilevel/gray (r15,
@@ -820,16 +815,14 @@ class _PdfDoc:
                     decode_jp2k,
                 )
 
-                got = decode_jp2k(data)
-                if got is None or len(got["components"]) != 1:
+                got = decode_jp2k.__wrapped__(data)
+                if len(got["components"]) != 1:
                     return None  # gray only in the raster path
                 return ("gray8", got["components"][0].tobytes())
             data = self._apply_filter(name, self.resolve(dp), data)
-            if data is None:
-                return None
         return ("raw", data)
 
-    def _unpredict(self, data: bytes, parms) -> bytes | None:
+    def _unpredict(self, data: bytes, parms) -> bytes:
         """Invert a /DecodeParms /Predictor on decompressed Flate/LZW
         output (PDF 32000-1 §7.4.4.4, r14 — the gap real-world
         generators hit constantly: Predictor-12 image XObjects and
@@ -838,8 +831,9 @@ class _PdfDoc:
         wild uses; sub-byte stays an honest None); 10–15 = PNG filters
         (one tag byte per row, inverted by the SAME row machinery as
         ``multimodal._png_unfilter`` — per PNG spec the per-row tag
-        decides, so all six values decode identically). None on torn
-        rows / bad geometry — never emits differenced bytes as data."""
+        decides, so all six values decode identically). ``Refused`` on
+        torn rows / bad geometry — never emits differenced bytes as
+        data."""
         if not isinstance(parms, dict):
             return data
         pred = self.resolve(parms.get("Predictor", 1))
@@ -854,15 +848,15 @@ class _PdfDoc:
             or cols < 1
             or bpc not in (1, 2, 4, 8, 16)
         ):
-            return None
+            raise Refused("predictor parameters")
         import numpy as np
 
         if pred == 2:  # TIFF horizontal differencing
             if bpc != 8:
-                return None  # sub-byte/16-bit TIFF predictor: seam
+                raise Refused("sub-byte/16-bit TIFF predictor")
             stride = cols * colors
             if not data or len(data) % stride:
-                return None  # torn rows
+                raise Refused("torn rows")
             arr = (
                 np.frombuffer(data, np.uint8)
                 .reshape(-1, cols, colors)
@@ -877,70 +871,65 @@ class _PdfDoc:
 
             stride = (cols * colors * bpc + 7) // 8
             if not data or len(data) % (stride + 1):
-                return None  # torn rows
+                raise Refused("torn rows")
             h = len(data) // (stride + 1)
             bpp = max(1, (colors * bpc) // 8)
-            recon = _png_unfilter(data, stride, h, bpp)
-            if recon is None:
-                return None
-            return recon.tobytes()
-        return None  # unknown predictor value
+            return _png_unfilter(data, stride, h, bpp).tobytes()
+        raise Refused("unknown predictor value")
 
-    def _apply_filter(self, name, parms, data: bytes) -> bytes | None:
+    def _apply_filter(self, name, parms, data: bytes) -> bytes:
         """One link of a /Filter chain (r12: chains supported — the
         common real-world shape is an ASCII armor filter in front of a
         binary one). Implemented: FlateDecode, LZWDecode (EarlyChange
         honored, both with /Predictor 2 and 10–15 via ``_unpredict``),
         RunLengthDecode, ASCIIHexDecode, ASCII85Decode.
-        Honest None: DCT/CCITT/JBIG2/JPX/Crypt (terminal image
+        Honest ``Refused``: DCT/CCITT/JBIG2/JPX/Crypt (terminal image
         filters are handled by ``image_stream``)."""
         if name == "/FlateDecode":
             if parms is not None and not isinstance(parms, dict):
-                return None
+                raise Refused("malformed filter data")
             out = bounded_decompress(zlib.decompressobj(), data, _MAX_INFLATE)
             if out is None:
-                return None
+                raise Refused("corrupt or over-cap Flate stream")
             return self._unpredict(out, parms)
         if name == "/LZWDecode":
             early = 1
             if isinstance(parms, dict):
                 early = self.resolve(parms.get("EarlyChange", 1))
                 if early not in (0, 1):
-                    return None
+                    raise Refused("malformed filter data")
             elif parms is not None:
-                return None
+                raise Refused("malformed filter data")
             from data_ingestion_py_spark.sources.multimodal import (
                 lzw_msb_decode,
             )
 
-            out = lzw_msb_decode(
+            out = lzw_msb_decode.__wrapped__(
                 data, _MAX_INFLATE, early_change=bool(early)
             )
-            if out is None:
-                return None
             return self._unpredict(out, parms)
         if name == "/RunLengthDecode":
             out = bytearray()
             i, n = 0, len(data)
             while True:
                 if i >= n:
-                    return None  # EOD (128) never arrived: torn
+                    raise Refused("EOD (128) never arrived")
                 b = data[i]
                 i += 1
                 if b == 128:
                     return bytes(out)
                 if b < 128:  # literal run of b+1 bytes
                     if i + b + 1 > n:
-                        return None
+                        raise Refused("malformed filter data")
                     out += data[i : i + b + 1]
                     i += b + 1
                 else:  # repeat next byte 257-b times
                     if i >= n:
-                        return None
+                        raise Refused("malformed filter data")
                     out += bytes([data[i]]) * (257 - b)
                     i += 1
                 if len(out) > _MAX_INFLATE:
-                    return None
+                    raise Refused("malformed filter data")
         if name == "/ASCIIHexDecode":
             digits = []
             for b in data:
@@ -950,10 +939,10 @@ class _PdfDoc:
                     break
                 c = chr(b)
                 if c not in "0123456789abcdefABCDEF":
-                    return None
+                    raise Refused("malformed filter data")
                 digits.append(c)
             else:
-                return None  # EOD never arrived
+                raise Refused("EOD never arrived")
             if len(digits) % 2:
                 digits.append("0")  # spec: odd final digit, pad 0
             return bytes.fromhex("".join(digits))
@@ -970,38 +959,38 @@ class _PdfDoc:
                     break
                 if b == 0x7A:  # 'z' = four zero bytes, only between groups
                     if group:
-                        return None
+                        raise Refused("malformed filter data")
                     out += b"\x00\x00\x00\x00"
                     i += 1
                     continue
                 if not 0x21 <= b <= 0x75:
-                    return None
+                    raise Refused("malformed filter data")
                 group.append(b - 0x21)
                 if len(group) == 5:
                     v = 0
                     for g in group:
                         v = v * 85 + g
                     if v > 0xFFFFFFFF:
-                        return None
+                        raise Refused("malformed filter data")
                     out += v.to_bytes(4, "big")
                     group = []
                 if len(out) > _MAX_INFLATE:
-                    return None
+                    raise Refused("malformed filter data")
                 i += 1
             else:
-                return None  # EOD never arrived
+                raise Refused("EOD never arrived")
             if len(group) == 1:
-                return None  # a 1-char final group is invalid
+                raise Refused("a 1-char final group is invalid")
             if group:
                 k = len(group)
                 v = 0
                 for g in group + [84] * (5 - k):  # pad with 'u'
                     v = v * 85 + g
                 if v > 0xFFFFFFFF:
-                    return None
+                    raise Refused("malformed filter data")
                 out += v.to_bytes(4, "big")[: k - 1]
             return bytes(out)
-        return None  # DCT/CCITT/JBIG2/JPX/Crypt: honest seam
+        raise Refused("not a stream filter: DCT/CCITT/JBIG2/JPX/Crypt")
 
 
 def _scan(buf: bytes) -> _PdfDoc:
@@ -1597,6 +1586,7 @@ def _decode_inline_image(
     if len(parms) != len(filts):
         return None, _skip_inline_image(content, i)
 
+    @none_on_refusal
     def chain(raw: bytes) -> tuple[str, bytes] | None:
         for k, (f, dp) in enumerate(zip(filts, parms)):
             f = doc.resolve(f)
@@ -1625,22 +1615,18 @@ def _decode_inline_image(
                 if kk < 0:
                     if doc.resolve(rdp.get("EncodedByteAlign")) is True:
                         return None
-                    arr = g4_decode(raw, cols, rows)
+                    arr = g4_decode.__wrapped__(raw, cols, rows)
                 elif kk > 0:  # mixed 2D Group 3 (r15)
-                    arr = g3_2d_decode(raw, cols, rows)
+                    arr = g3_2d_decode.__wrapped__(raw, cols, rows)
                 else:
-                    arr = g3_1d_decode(
+                    arr = g3_1d_decode.__wrapped__(
                         raw, cols, rows,
                         byte_align=doc.resolve(
                             rdp.get("EncodedByteAlign")
                         ) is True,
                     )
-                if arr is None:
-                    return None
                 return ("gray8", arr.tobytes())
             raw = doc._apply_filter(f, dp, raw)
-            if raw is None:
-                return None
         return ("raw", raw)
 
     if not filts:
@@ -1720,14 +1706,14 @@ def _inline_images(
 
 def _setup_encryption(
     doc: _PdfDoc, trailers: list[dict], password: bytes = b""
-) -> bool:
+) -> None:
     """Arm the document's standard-security decryption (r13 RC4, r14
     AESV2/V3, r15 caller-supplied passwords): V1/V2 R2/R3, V4 AESV2,
     and V5 R5/R6 AESV3, verifying the USER password — empty by
     default (the owner-locked-but-readable shape most encrypted PDFs
-    in the wild have) or the caller's ``password`` bytes. Returns
-    False (caller refuses, honest) for any other handler, a missing
-    /ID, or a password that fails /U verification."""
+    in the wild have) or the caller's ``password`` bytes. Raises
+    ``Refused`` (caller refuses, honest) for any other handler, a
+    missing /ID, or a password that fails /U verification."""
     enc_ref = None
     id0 = None
     for t in trailers:
@@ -1742,12 +1728,12 @@ def _setup_encryption(
                 id0 = fid[0]
             break
     if enc_ref is None:
-        return True  # unencrypted
+        return  # unencrypted
     enc = doc.resolve(enc_ref)
     if not isinstance(enc, dict):
-        return False
+        raise Refused("unsupported security handler")
     if enc.get("Filter") != "/Standard":
-        return False
+        raise Refused("unsupported security handler")
     if enc.get("V") == 5:
         # AESV3 / AES-256 (r14, VERDICT task #5): R5 (AEL3) and R6
         # (PDF 2.0). No /ID in the key schedule; the file key comes
@@ -1761,18 +1747,15 @@ def _setup_encryption(
             or enc.get("StmF") != "/StdCF"
             or enc.get("StrF") != "/StdCF"
         ):
-            return False
-        key = _aesv3_file_key(enc, doc.resolve, password)
-        if key is None:
-            return False
-        doc.enc_key = key
+            raise Refused("unsupported security handler")
+        doc.enc_key = _aesv3_file_key(enc, doc.resolve, password)
         doc.enc_aes = True
         doc.enc_v5 = True
         doc.enc_num = enc_ref.num if isinstance(enc_ref, _Ref) else None
         _expand_objstms(doc)
-        return True
+        return
     if id0 is None:
-        return False
+        raise Refused("unsupported security handler")
     aes = False
     if enc.get("V") == 4:
         # V4 routes through named crypt filters: only the ubiquitous
@@ -1786,31 +1769,26 @@ def _setup_encryption(
             or enc.get("StmF") != "/StdCF"
             or enc.get("StrF") != "/StdCF"
         ):
-            return False
+            raise Refused("unsupported security handler")
         aes = True
-    key = _std_security_key(enc, id0, password)
-    if key is None:
-        return False
-    doc.enc_key = key
+    doc.enc_key = _std_security_key(enc, id0, password)
     doc.enc_aes = aes
     doc.enc_num = enc_ref.num if isinstance(enc_ref, _Ref) else None
     # the scan deferred ObjStm expansion for encrypted docs (their
     # stream bytes were ciphertext); expand now that decryption works
     _expand_objstms(doc)
-    return True
 
 
 def _walk_pages(
     doc: _PdfDoc, password: bytes = b""
-) -> list[dict] | None:
+) -> list[dict]:
     """Page objects in document order (shared by the text and image
-    extractors), or None when no catalog/page tree parses. Encrypted
+    extractors); ``Refused`` when no catalog/page tree parses. Encrypted
     documents arm decryption when the standard handler verifies the
     USER password — empty by default, caller-supplied via
     ``password`` (r15); otherwise honest None."""
     trailers = _find_trailer_dicts(doc)
-    if not _setup_encryption(doc, trailers, password):
-        return None  # unsupported handler or wrong password: honest
+    _setup_encryption(doc, trailers, password)
     root = None
     for t in trailers:
         r = t.get("Root")
@@ -1824,7 +1802,7 @@ def _walk_pages(
                 root = d
                 break
     if not isinstance(root, dict):
-        return None
+        raise Refused("no document catalog")
     page_objs: list[dict] = []
 
     def walk(node, depth: int = 0):
@@ -1840,9 +1818,12 @@ def _walk_pages(
                 walk(k, depth + 1)
 
     walk(root.get("Pages"))
-    return page_objs or None
+    if not page_objs:
+        raise Refused("no page objects")
+    return page_objs
 
 
+@none_on_refusal
 def extract_page_images(
     content: bytes, password: bytes = b""
 ) -> list[tuple[int, int, str, int, int, int, str, bytes]] | None:
@@ -1874,8 +1855,6 @@ def extract_page_images(
     if not doc.objs:
         return None
     pages = _walk_pages(doc, password)
-    if pages is None:
-        return None
     out: list[tuple[int, int, str, int, int, int, str, bytes]] = []
     for pno, p in enumerate(pages, start=1):
         res = doc.resolve(p.get("Resources"))
@@ -1947,6 +1926,7 @@ def extract_page_images(
     return out
 
 
+@none_on_refusal
 def parse_pdf_text(
     content: bytes, password: bytes = b""
 ) -> tuple[list[str], dict] | None:
@@ -1960,8 +1940,6 @@ def parse_pdf_text(
         return None
     trailers = _find_trailer_dicts(doc)
     page_objs = _walk_pages(doc, password)
-    if page_objs is None:
-        return None
     pages: list[str] = []
     for p in page_objs:
         contents = p.get("Contents")
@@ -2008,6 +1986,7 @@ def _pdf_text_string(v: bytes) -> str:
     return v.decode("latin-1")
 
 
+@none_on_refusal
 def extract_annotations(
     content: bytes, password: bytes = b""
 ) -> list[tuple[int, int, str, str]] | None:
@@ -2028,8 +2007,6 @@ def extract_annotations(
     if not doc.objs:
         return None
     pages = _walk_pages(doc, password)
-    if pages is None:
-        return None
     out: list[tuple[int, int, str, str]] = []
     for pno, p in enumerate(pages, start=1):
         annots = doc.resolve(p.get("Annots"))

@@ -52,7 +52,12 @@ from typing import TYPE_CHECKING
 
 from pyspark.sql import types as T
 
-from data_ingestion_py_spark.sources.bits import decompress_members
+from data_ingestion_py_spark.sources.bits import (
+    Refused,
+    Truncated,
+    decompress_members,
+    none_on_refusal,
+)
 from data_ingestion_py_spark.sources.spread import kernel_rows
 
 if TYPE_CHECKING:  # pragma: no cover
@@ -228,6 +233,7 @@ LZ4_FRAME_MAGIC = 0x184D2204
 _SKIPPABLE_LO, _SKIPPABLE_HI = 0x184D2A50, 0x184D2A5F
 
 
+@none_on_refusal
 def lz4_block_decompress(
     src: bytes,
     max_out: int = 1 << 26,
@@ -247,36 +253,36 @@ def lz4_block_decompress(
     i, n = 0, len(src)
     while True:
         if i >= n:
-            return None  # a block must end on a literals-only tail
+            raise Truncated  # a block must end on a literals-only tail
         tok = src[i]
         i += 1
         lit = tok >> 4
         if lit == 15:
             while True:
                 if i >= n:
-                    return None
+                    raise Refused("malformed LZ4 block")
                 b = src[i]
                 i += 1
                 lit += b
                 if b != 255:
                     break
         if i + lit > n or len(out) - base + lit > max_out:
-            return None
+            raise Refused("malformed LZ4 block")
         out += src[i : i + lit]
         i += lit
         if i == n:
             return bytes(out[base:])  # last sequence carries no match
         if i + 2 > n:
-            return None
+            raise Refused("malformed LZ4 block")
         off = src[i] | (src[i + 1] << 8)
         i += 2
         if off == 0 or off > len(out):
-            return None
+            raise Refused("malformed LZ4 block")
         mlen = tok & 15
         if mlen == 15:
             while True:
                 if i >= n:
-                    return None
+                    raise Refused("malformed LZ4 block")
                 b = src[i]
                 i += 1
                 mlen += b
@@ -284,7 +290,7 @@ def lz4_block_decompress(
                     break
         mlen += 4
         if len(out) - base + mlen > max_out:
-            return None
+            raise Refused("malformed LZ4 block")
         start = len(out) - off
         if off >= mlen:
             out += out[start : start + mlen]
@@ -293,6 +299,7 @@ def lz4_block_decompress(
                 out.append(out[start + k])
 
 
+@none_on_refusal
 def lz4_frames(
     payload: bytes | None,
     max_frames: int | None = None,
@@ -306,7 +313,7 @@ def lz4_frames(
     ``n_blocks`` 0. Non-LZ4 payloads return None; a torn tail frame
     truncates the walk to the verified prefix."""
     if payload is None or len(payload) < 7:
-        return None
+        raise Refused("not an LZ4 shard")
     n = len(payload)
 
     def u32(o: int) -> int:
@@ -316,7 +323,7 @@ def lz4_frames(
     if first != LZ4_FRAME_MAGIC and not (
         _SKIPPABLE_LO <= first <= _SKIPPABLE_HI
     ):
-        return None
+        raise Refused("not an LZ4 shard")
     out: list[tuple[int, int, int | None, int, bool, bool]] = []
     i = 0
     while i + 4 <= n and (max_frames is None or len(out) < max_frames):
@@ -377,7 +384,9 @@ def lz4_frames(
             j += 4  # verified on decompress, where the content exists
         out.append((i, j - i, content, nb, indep, ccksum))
         i = j
-    return out or None
+    if not out:
+        raise Refused("no LZ4 frame")
+    return out
 
 
 def lz4_blocks(
@@ -415,6 +424,7 @@ def lz4_blocks(
     return out or None
 
 
+@none_on_refusal
 def lz4_frame_decompress(
     payload: bytes,
     offset: int = 0,
@@ -428,11 +438,11 @@ def lz4_frame_decompress(
     malformed block returns None."""
     frames = lz4_frames(payload[offset:], max_frames=1)
     if not frames:
-        return None
+        raise Refused("malformed LZ4 frame")
     _off, _comp, declared, nb, indep, ccksum = frames[0]
     flg = payload[offset + 4]
     if flg & 1:
-        return None  # dictionary-keyed frame, no dictionary: never guess
+        raise Refused("dictionary-keyed frame, no dictionary")
     bcksum = bool((flg >> 4) & 1)
     j = (
         offset + 6 + (8 if (flg >> 3) & 1 else 0) + (4 if flg & 1 else 0) + 1
@@ -445,23 +455,23 @@ def lz4_frame_decompress(
         data = payload[j : j + bsz]
         j += bsz + (4 if bcksum else 0)
         if word >> 31:
-            piece: bytes | None = bytes(data)
-        elif indep:
-            piece = lz4_block_decompress(data, max_content_bytes)
+            piece = bytes(data)
         else:
-            piece = lz4_block_decompress(
-                data, max_content_bytes, prefix=bytes(out[-65536:])
+            piece = lz4_block_decompress.__wrapped__(
+                data,
+                max_content_bytes,
+                prefix=b"" if indep else bytes(out[-65536:]),
             )
-        if piece is None or len(out) + len(piece) > max_content_bytes:
-            return None
+        if len(out) + len(piece) > max_content_bytes:
+            raise Refused("LZ4 content over the cap")
         out += piece
     j += 4  # EndMark
     if ccksum and int.from_bytes(payload[j : j + 4], "little") != xxh32(
         bytes(out)
     ):
-        return None
+        raise Refused("malformed LZ4 frame")
     if declared is not None and declared != len(out):
-        return None
+        raise Refused("malformed LZ4 frame")
     return bytes(out)
 
 
@@ -592,6 +602,7 @@ def _zstd_pure_decode(
             return bytes(out)
 
 
+@none_on_refusal
 def zstd_frame_decompress(
     payload: bytes,
     offset: int = 0,
@@ -606,12 +617,12 @@ def zstd_frame_decompress(
     per RFC 8878 §3.1.1; a mismatch returns None."""
     frames = zstd_frames(payload[offset:], max_frames=1)
     if not frames:
-        return None
+        raise Refused("no zstd frame")
     _off, comp, content_size, kind, _nb, has_cksum = frames[0]
     if kind == "skippable":
         return b""
     if payload[offset + 4] & 3:
-        return None  # dictionary-keyed frame, no dictionary: never guess
+        raise Refused("dictionary-keyed frame, no dictionary")
     data = _zstd_pure_decode(payload, offset, max_content_bytes)
     if data is None:
         if content_size is not None and content_size <= max_content_bytes:
@@ -632,22 +643,21 @@ def zstd_frame_decompress(
                 zstd_decompress_frame,
             )
 
-            data = zstd_decompress_frame(
+            data = zstd_decompress_frame.__wrapped__(
                 bytes(payload), offset, max_content_bytes
             )
-        if data is None:
-            return None
     if content_size is not None and len(data) != content_size:
-        return None
+        raise Refused("content size mismatch")
     if has_cksum:
         stored = int.from_bytes(
             payload[offset + comp - 4 : offset + comp], "little"
         )
         if stored != (xxh64(data) & 0xFFFFFFFF):
-            return None
+            raise Refused("content checksum mismatch")
     return data
 
 
+@none_on_refusal
 def zstd_decompress_all(
     payload: bytes | None,
     max_content_bytes: int = 1 << 26,
@@ -661,20 +671,17 @@ def zstd_decompress_all(
     the shard rather than returning a silent prefix."""
     frames = zstd_frames(payload)
     if frames is None or payload is None:
-        return None
+        raise Refused("undecodable zstd shard")
     last_off, last_comp = frames[-1][0], frames[-1][1]
     if last_off + last_comp != len(payload):
-        return None  # walk stopped early: never ship a prefix as success
+        raise Refused("walk stopped early")
     out = bytearray()
     for off, _comp, _cs, kind, _nb, _ck in frames:
         if kind == "skippable":
             continue
-        piece = zstd_frame_decompress(
+        out += zstd_frame_decompress.__wrapped__(
             payload, off, max_content_bytes - len(out)
         )
-        if piece is None:
-            return None
-        out += piece
     return bytes(out)
 
 
@@ -721,6 +728,7 @@ def sniff_compression(payload: bytes | None) -> str | None:
     return "raw"
 
 
+@none_on_refusal
 def decompress_auto(
     payload: bytes | None,
     max_content_bytes: int = 1 << 26,
@@ -732,48 +740,39 @@ def decompress_auto(
     passes through. Undecodable or over the cap → None."""
     codec = sniff_compression(payload)
     if codec is None:
-        return None
-    assert payload is not None
+        raise Refused("empty shard")
     if codec == "raw":
         return payload
-    if codec == "gzip":
+    if codec in ("gzip", "bz2", "xz"):
+        import bz2
+        import lzma
         import zlib
 
-        return decompress_members(
-            lambda: zlib.decompressobj(31), payload, max_content_bytes
-        )
-    if codec == "bz2":
-        import bz2
-
-        return decompress_members(
-            bz2.BZ2Decompressor, payload, max_content_bytes
-        )
-    if codec == "xz":
-        import lzma
-
-        return decompress_members(
-            lzma.LZMADecompressor, payload, max_content_bytes
-        )
+        new = {
+            "gzip": lambda: zlib.decompressobj(31),
+            "bz2": bz2.BZ2Decompressor,
+            "xz": lzma.LZMADecompressor,
+        }[codec]
+        out = decompress_members(new, payload, max_content_bytes)
+        if out is None:
+            raise Refused(f"undecodable {codec} shard or over the cap")
+        return out
     if codec == "zstd":
-        return zstd_decompress_all(payload, max_content_bytes)
-    frames = lz4_frames(payload)
-    if frames is None:
-        return None
+        return zstd_decompress_all.__wrapped__(payload, max_content_bytes)
+    frames = lz4_frames.__wrapped__(payload)
     if frames[-1][0] + frames[-1][1] != len(payload):
-        return None  # walk stopped early: never ship a prefix as success
+        raise Refused("walk stopped early: never ship a prefix as success")
     out = bytearray()
     for off, _comp, _cs, nb, _ind, _cc in frames:
         if nb == 0:
             continue  # skippable
-        piece = lz4_frame_decompress(
+        out += lz4_frame_decompress.__wrapped__(
             payload, off, max_content_bytes - len(out)
         )
-        if piece is None:
-            return None
-        out += piece
     return bytes(out)
 
 
+@none_on_refusal
 def shard_text_lines(
     payload: bytes | None,
     max_lines: int = 1 << 20,
@@ -786,9 +785,7 @@ def shard_text_lines(
     tail of a shard (the default of 2^20 lines is above any real
     Dolma/Pile shard at the 2^26-byte content bound; raise it alongside
     ``max_content_bytes`` for bigger shards)."""
-    data = decompress_auto(payload, max_content_bytes)
-    if data is None:
-        return None
+    data = decompress_auto.__wrapped__(payload, max_content_bytes)
     lines = data.split(b"\n")
     if lines and lines[-1] == b"":
         lines.pop()
@@ -838,6 +835,7 @@ def jsonl_shard_manifest(
     )
 
 
+@none_on_refusal
 def compressed_tar_members(
     payload: bytes | None,
     max_members: int = 256,
@@ -850,9 +848,7 @@ def compressed_tar_members(
     to compressed ranges frame-by-frame."""
     from data_ingestion_py_spark.sources.archive import tar_members
 
-    data = decompress_auto(payload, max_content_bytes)
-    if data is None:
-        return None
+    data = decompress_auto.__wrapped__(payload, max_content_bytes)
     return tar_members(data, max_members)
 
 

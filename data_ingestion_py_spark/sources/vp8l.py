@@ -50,7 +50,11 @@ from __future__ import annotations
 
 import numpy as np
 
-from data_ingestion_py_spark.sources.bits import LsbBits, none_on_truncation
+from data_ingestion_py_spark.sources.bits import (
+    LsbBits,
+    Refused,
+    none_on_refusal,
+)
 
 # ---------------------------------------------------------------------------
 # Canonical prefix codes (DEFLATE convention, max length 15)
@@ -98,7 +102,7 @@ class _Prefix:
             return len(used) == 1
         return sum(1 << (15 - l) for l in used) == 1 << 15
 
-    def decode(self, bits: LsbBits) -> int | None:
+    def decode(self, bits: LsbBits) -> int:
         if self.single is not None:
             return self.single
         code = 0
@@ -107,24 +111,24 @@ class _Prefix:
             idx = code - self.first[l]
             if 0 <= idx < self.count[l]:
                 return self.syms_at[l][idx]
-        return None
+        raise Refused("no prefix code matches")
 
 
 _CLC_ORDER = (17, 18, 0, 1, 2, 3, 4, 5, 6, 7, 8, 9, 10, 11, 12, 13, 14, 15, 16)
 
 
-def _read_prefix_code(bits: LsbBits, alphabet: int) -> _Prefix | None:
+def _read_prefix_code(bits: LsbBits, alphabet: int) -> _Prefix:
     lengths = [0] * alphabet
     if bits.read1():  # simple code
         two = bits.read1()
         s0 = bits.read(8 if bits.read1() else 1)
         if s0 >= alphabet:
-            return None
+            raise Refused("simple-code symbol")
         lengths[s0] = 1
         if two:
             s1 = bits.read(8)
             if s1 >= alphabet or s1 == s0:
-                return None
+                raise Refused("simple-code symbol")
             lengths[s1] = 1
         return _Prefix(lengths)
     ncl = bits.read(4) + 4
@@ -132,7 +136,7 @@ def _read_prefix_code(bits: LsbBits, alphabet: int) -> _Prefix | None:
     for i in range(ncl):
         cl_lengths[_CLC_ORDER[i]] = bits.read(3)
     if not _Prefix.complete(cl_lengths):
-        return None
+        raise Refused("incomplete code-length code")
     cl = _Prefix(cl_lengths)
     if bits.read1():  # use max_symbol
         max_symbol = 2 + bits.read(2 + 2 * bits.read(3))
@@ -145,8 +149,6 @@ def _read_prefix_code(bits: LsbBits, alphabet: int) -> _Prefix | None:
             break
         max_symbol -= 1
         s = cl.decode(bits)
-        if s is None:
-            return None
         if s < 16:
             lengths[sym] = s
             sym += 1
@@ -155,22 +157,22 @@ def _read_prefix_code(bits: LsbBits, alphabet: int) -> _Prefix | None:
         elif s == 16:
             r = bits.read(2)
             if sym + r + 3 > alphabet:
-                return None
+                raise Refused("code lengths overrun the alphabet")
             for _ in range(3 + r):
                 lengths[sym] = prev
                 sym += 1
         elif s == 17:
             r = bits.read(3)
             if sym + r + 3 > alphabet:
-                return None
+                raise Refused("code lengths overrun the alphabet")
             sym += 3 + r
         else:  # 18
             r = bits.read(7)
             if sym + r + 11 > alphabet:
-                return None
+                raise Refused("code lengths overrun the alphabet")
             sym += 11 + r
     if not _Prefix.complete(lengths):
-        return None
+        raise Refused("incomplete prefix code")
     return _Prefix(lengths)
 
 
@@ -229,7 +231,7 @@ def _decode_pixels(
     groups: list[list[_Prefix]],
     meta: tuple[list[int], int, int] | None,
     cache_bits: int,
-) -> list[int] | None:
+) -> list[int]:
     npix = w * h
     out: list[int] = []
     cache = [0] * (1 << cache_bits) if cache_bits else None
@@ -241,29 +243,22 @@ def _decode_pixels(
             x, y = len(out) % w, len(out) // w
             gi = entropy[(y >> pb) * ew + (x >> pb)]
             if gi >= len(groups):
-                return None
+                raise Refused("entropy group index")
             g = groups[gi]
         s = g[0].decode(bits)
-        if s is None:
-            return None
         if s < 256:
             r = g[1].decode(bits)
             b = g[2].decode(bits)
             a = g[3].decode(bits)
-            if r is None or b is None or a is None:
-                return None
             px = (a << 24) | (r << 16) | (s << 8) | b
             out.append(px)
             if cache is not None:
                 cache[(0x1E35A7BD * px & 0xFFFFFFFF) >> (32 - cache_bits)] = px
         elif s < _GREEN_BASE:
             length = _lz77_value(bits, s - 256)
-            dcode = g[4].decode(bits)
-            if dcode is None:
-                return None
-            dist = _distance(_lz77_value(bits, dcode), w)
+            dist = _distance(_lz77_value(bits, g[4].decode(bits)), w)
             if dist > len(out) or len(out) + length > npix:
-                return None
+                raise Refused("backward reference out of range")
             base = len(out) - dist
             for k in range(length):
                 px = out[base + k]
@@ -274,7 +269,7 @@ def _decode_pixels(
                     ] = px
         else:
             if cache is None or s - _GREEN_BASE >= len(cache):
-                return None
+                raise Refused("color-cache index")
             out.append(cache[s - _GREEN_BASE])
     return out
 
@@ -285,11 +280,11 @@ def _decode_image_stream(
     h: int,
     level0: bool,
     max_pixels: int,
-) -> tuple[list[int], list[tuple]] | None:
+) -> tuple[list[int], list[tuple]]:
     """Returns (pixels, transforms) — ``transforms`` is the read-order
     list of (type, data...) tuples, empty unless ``level0``."""
     if w * h > max_pixels or w <= 0 or h <= 0:
-        return None
+        raise Refused("image size")
     transforms: list[tuple] = []
     xsize = w
     if level0:
@@ -297,7 +292,7 @@ def _decode_image_stream(
         while bits.read1():
             ttype = bits.read(2)
             if ttype in seen:
-                return None
+                raise Refused("transform repeated")
             seen.add(ttype)
             if ttype == 2:  # SUBTRACT_GREEN
                 transforms.append((2,))
@@ -306,16 +301,12 @@ def _decode_image_stream(
                 tw = (xsize + (1 << size_bits) - 1) >> size_bits
                 th = (h + (1 << size_bits) - 1) >> size_bits
                 sub = _decode_image_stream(bits, tw, th, False, max_pixels)
-                if sub is None:
-                    return None
                 transforms.append((ttype, size_bits, tw, sub[0], xsize))
             else:  # COLOR_INDEXING
                 num_colors = bits.read(8) + 1
                 pal = _decode_image_stream(
                     bits, num_colors, 1, False, max_pixels
                 )
-                if pal is None:
-                    return None
                 # palette entries are component-wise deltas
                 entries = []
                 prev = 0
@@ -342,7 +333,7 @@ def _decode_image_stream(
     if bits.read1():
         cache_bits = bits.read(4)
         if not 1 <= cache_bits <= 11:
-            return None
+            raise Refused("color-cache bits")
     meta = None
     n_groups = 1
     if level0:
@@ -351,8 +342,6 @@ def _decode_image_stream(
             ew = (xsize + (1 << pb) - 1) >> pb
             eh = (h + (1 << pb) - 1) >> pb
             sub = _decode_image_stream(bits, ew, eh, False, max_pixels)
-            if sub is None:
-                return None
             entropy = [
                 ((p >> 8) & 0xFF00) | ((p >> 8) & 0xFF) for p in sub[0]
             ]
@@ -362,16 +351,8 @@ def _decode_image_stream(
                  256, 256, 256, 40)
     groups = []
     for _ in range(n_groups):
-        codes = []
-        for alpha_size in alphabets:
-            c = _read_prefix_code(bits, alpha_size)
-            if c is None:
-                return None
-            codes.append(c)
-        groups.append(codes)
+        groups.append([_read_prefix_code(bits, a) for a in alphabets])
     pixels = _decode_pixels(bits, xsize, h, groups, meta, cache_bits)
-    if pixels is None:
-        return None
     return pixels, transforms
 
 
@@ -539,24 +520,21 @@ def _apply_color_indexing_inverse(
 # ---------------------------------------------------------------------------
 
 
-@none_on_truncation
+@none_on_refusal
 def decode_vp8l_pixels(
     chunk: bytes, max_pixels: int = 1 << 24
 ) -> tuple[int, int, list[int]] | None:
     """Decode a VP8L chunk payload (starting at the 0x2F signature)
     into (width, height, ARGB row-major list)."""
     if len(chunk) < 5 or chunk[0] != 0x2F:
-        return None
+        raise Refused("no VP8L signature")
     bits = LsbBits(chunk, 8)
     w = bits.read(14) + 1
     h = bits.read(14) + 1
     bits.read1()  # alpha hint
     if bits.read(3) != 0:  # version
-        return None
-    got = _decode_image_stream(bits, w, h, True, max_pixels)
-    if got is None:
-        return None
-    px, transforms = got
+        raise Refused("VP8L version")
+    px, transforms = _decode_image_stream(bits, w, h, True, max_pixels)
     for t in reversed(transforms):
         if t[0] == 2:
             _apply_subtract_green_inverse(px)
@@ -567,10 +545,11 @@ def decode_vp8l_pixels(
         else:
             px = _apply_color_indexing_inverse(px, t[2], t[1], t[3])
             if len(px) != w * h:
-                return None
+                raise Refused("color-indexed size")
     return w, h, px
 
 
+@none_on_refusal
 def decode_webp_array(
     payload: bytes | None, max_pixels: int = 1 << 24
 ) -> tuple[int, int, "np.ndarray"] | None:
@@ -594,12 +573,9 @@ def decode_webp_array(
         if i + 8 + size > n:
             return None
         if tag == b"VP8L":
-            got = decode_vp8l_pixels(
+            w, h, px = decode_vp8l_pixels.__wrapped__(
                 payload[i + 8 : i + 8 + size], max_pixels
             )
-            if got is None:
-                return None
-            w, h, px = got
             arr = np.asarray(px, dtype=np.uint32)
             gray = (
                 ((arr >> 16) & 0xFF) + ((arr >> 8) & 0xFF) + (arr & 0xFF)

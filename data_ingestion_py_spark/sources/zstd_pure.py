@@ -38,7 +38,12 @@ guess.
 
 from __future__ import annotations
 
-from data_ingestion_py_spark.sources.bits import LsbBits, none_on_truncation
+from data_ingestion_py_spark.sources.bits import (
+    LsbBits,
+    Refused,
+    Truncated,
+    none_on_refusal,
+)
 
 # ---------------------------------------------------------------------------
 # Predefined sequence distributions (RFC 8878 §3.1.1.3.2.2)
@@ -80,24 +85,22 @@ _ML_EXTRA = [
 ]
 
 
-def _ll_value(code: int, bits) -> int | None:
+def _ll_value(code: int, bits) -> int:
     if code < 16:
         return code
     if code > 35:
-        return None
+        raise Refused("literal-length code")
     base, nb = _LL_EXTRA[code - 16]
-    got = bits.read(nb)
-    return None if got is None else base + got
+    return base + bits.read(nb)
 
 
-def _ml_value(code: int, bits) -> int | None:
+def _ml_value(code: int, bits) -> int:
     if code < 32:
         return code + 3
     if code > 52:
-        return None
+        raise Refused("match-length code")
     base, nb = _ML_EXTRA[code - 32]
-    got = bits.read(nb)
-    return None if got is None else base + got
+    return base + bits.read(nb)
 
 
 # ---------------------------------------------------------------------------
@@ -120,12 +123,12 @@ class _RevBits:
         self.val = int.from_bytes(data, "little")
         self.pos = self.val.bit_length() - 1  # strip the marker bit
 
-    def read(self, n: int) -> int | None:
-        """n bits below the cursor; None on underflow (corrupt)."""
+    def read(self, n: int) -> int:
+        """n bits below the cursor; ``Truncated`` on underflow."""
         if n == 0:
             return 0
         if self.pos < n:
-            return None
+            raise Truncated
         self.pos -= n
         return (self.val >> self.pos) & ((1 << n) - 1)
 
@@ -172,7 +175,7 @@ class _FseTable:
                 while pos > high:
                     pos = (pos + step) & mask
         if pos != 0:
-            raise ValueError("corrupt normalized counts")
+            raise Refused("corrupt normalized counts")
         nxt = [1 if c == -1 else c for c in norm]
         nb = [0] * size
         base = [0] * size
@@ -197,7 +200,7 @@ class _FseTable:
         return t
 
 
-@none_on_truncation
+@none_on_refusal
 def _parse_fse_header(
     data: bytes, start: int, max_al: int, max_symbols: int
 ) -> tuple[list[int], int, int] | None:
@@ -206,7 +209,7 @@ def _parse_fse_header(
     bits = LsbBits(data, start * 8)
     al = bits.read(4) + 5
     if al > max_al:
-        return None
+        raise Refused("FSE accuracy log")
     remaining = (1 << al) + 1
     threshold = 1 << al
     nbits = al + 1
@@ -214,7 +217,7 @@ def _parse_fse_header(
     prev_zero = False
     while remaining > 1:
         if len(norm) > max_symbols:
-            return None
+            raise Refused("FSE symbol count")
         if prev_zero:
             # 2-bit repeat flags: 3 means "3 more zeros, read again"
             while True:
@@ -223,7 +226,7 @@ def _parse_fse_header(
                 if rep < 3:
                     break
                 if len(norm) > max_symbols:
-                    return None
+                    raise Refused("FSE symbol count")
             prev_zero = False
             continue
         maxv = (2 * threshold - 1) - remaining
@@ -242,33 +245,23 @@ def _parse_fse_header(
             nbits -= 1
             threshold >>= 1
     if remaining != 1 or len(norm) > max_symbols:
-        return None
+        raise Refused("FSE counts do not sum")
     return norm, al, (bits.pos + 7) // 8
 
 
-def _fse_decompress_weights(
-    data: bytes, max_out: int = 255
-) -> list[int] | None:
+def _fse_decompress_weights(data: bytes, max_out: int = 255) -> list[int]:
     """The FSE-compressed Huffman-weights stream: its own normalized-
     count header, then a backward bitstream decoded with TWO
     interleaved states; when the stream exhausts, each state flushes
     one final symbol."""
-    parsed = _parse_fse_header(data, 0, 6, 255)
-    if parsed is None:
-        return None
-    norm, al, off = parsed
-    try:
-        table = _FseTable(norm, al)
-    except ValueError:
-        return None
+    norm, al, off = _parse_fse_header.__wrapped__(data, 0, 6, 255)
+    table = _FseTable(norm, al)
     stream = data[off:]
     if not stream:
-        return None
+        raise Refused("empty weights stream")
     bits = _RevBits(stream)
     s1 = bits.read(al)
     s2 = bits.read(al)
-    if s1 is None or s2 is None:
-        return None
     out: list[int] = []
     while len(out) < max_out:
         out.append(table.sym[s1])
@@ -283,7 +276,7 @@ def _fse_decompress_weights(
         if done:
             out.append(table.sym[s1])
             return out
-    return None  # weights stream refused to end: corrupt
+    raise Refused("weights stream does not end")
 
 
 # ---------------------------------------------------------------------------
@@ -301,10 +294,10 @@ class _HufTable:
     def __init__(self, weights: list[int]) -> None:
         total = sum(1 << (w - 1) for w in weights if w > 0)
         if total == 0:
-            raise ValueError("empty tree")
+            raise Refused("empty tree")
         log = (total - 1).bit_length()
         if total != 1 << log or log > 11:
-            raise ValueError("weights do not sum to a power of two")
+            raise Refused("weights do not sum to a power of two")
         self.log = log
         size = 1 << log
         self.sym = [0] * size
@@ -321,12 +314,12 @@ class _HufTable:
                     self.nbits[k] = nb
                 pos += span
         if pos != size:
-            raise ValueError("incomplete tree")
+            raise Refused("incomplete tree")
 
-    def decode_stream(self, data: bytes, n_out: int) -> bytes | None:
+    def decode_stream(self, data: bytes, n_out: int) -> bytes:
         bits = _RevBits(data)
         if bits.pos < 0:
-            return None
+            raise Refused("no end marker")
         out = bytearray()
         log = self.log
         val = bits.val
@@ -349,23 +342,21 @@ class _HufTable:
             s = self.sym[got]
             pos -= self.nbits[got]
             if pos < 0:
-                return None  # consumed past the start: corrupt
+                raise Truncated  # consumed past the start: corrupt
             out.append(s)
         return bytes(out)
 
 
-def _read_huffman(
-    data: bytes, start: int
-) -> tuple[_HufTable, int] | None:
+def _read_huffman(data: bytes, start: int) -> tuple[_HufTable, int]:
     """Huffman_Tree_Description → (table, next_offset)."""
     if start >= len(data):
-        return None
+        raise Truncated
     hb = data[start]
     if hb >= 128:  # direct 4-bit weights
         n = hb - 127
         nbytes = (n + 1) // 2
         if start + 1 + nbytes > len(data):
-            return None
+            raise Truncated
         weights = []
         for i in range(n):
             b = data[start + 1 + i // 2]
@@ -373,26 +364,21 @@ def _read_huffman(
         off = start + 1 + nbytes
     else:  # FSE-compressed weights, hb = compressed size
         if start + 1 + hb > len(data):
-            return None
+            raise Truncated
         weights = _fse_decompress_weights(data[start + 1 : start + 1 + hb])
-        if weights is None:
-            return None
         off = start + 1 + hb
     # implied last weight completes the Kraft sum to a power of two
     total = sum(1 << (w - 1) for w in weights if w > 0)
     if total == 0:
-        return None
+        raise Refused("all Huffman weights zero")
     log = total.bit_length()  # floor(log2(total)) + 1
     missing = (1 << log) - total
     if missing & (missing - 1):
-        return None  # not a power of two: corrupt
+        raise Refused("Huffman weights miss a power of two")
     weights.append(missing.bit_length())
     if any(w > 11 for w in weights):
-        return None
-    try:
-        return _HufTable(weights), off
-    except ValueError:
-        return None
+        raise Refused("Huffman weight over 11")
+    return _HufTable(weights), off
 
 
 # ---------------------------------------------------------------------------
@@ -415,10 +401,10 @@ class _BlockState:
 
 def _decode_literals(
     block: bytes, state: _BlockState
-) -> tuple[bytes, int] | None:
+) -> tuple[bytes, int]:
     """Literals_Section → (literals, next_offset)."""
     if not block:
-        return None
+        raise Truncated
     hb = block[0]
     ltype = hb & 3
     sf = (hb >> 2) & 3
@@ -428,25 +414,25 @@ def _decode_literals(
             off = 1
         elif sf == 1:
             if len(block) < 2:
-                return None
+                raise Truncated
             size = (hb >> 4) | (block[1] << 4)
             off = 2
         else:
             if len(block) < 3:
-                return None
+                raise Truncated
             size = (hb >> 4) | (block[1] << 4) | (block[2] << 12)
             off = 3
         if ltype == 0:
             if off + size > len(block):
-                return None
+                raise Truncated
             return block[off : off + size], off + size
         if off + 1 > len(block):
-            return None
+            raise Truncated
         return bytes([block[off]]) * size, off + 1
     # Compressed / Treeless
     if sf == 0:
         if len(block) < 3:
-            return None
+            raise Truncated
         v = hb | (block[1] << 8) | (block[2] << 16)
         regen = (v >> 4) & 0x3FF
         comp = (v >> 14) & 0x3FF
@@ -454,7 +440,7 @@ def _decode_literals(
         streams = 1
     elif sf == 1:
         if len(block) < 3:
-            return None
+            raise Truncated
         v = hb | (block[1] << 8) | (block[2] << 16)
         regen = (v >> 4) & 0x3FF
         comp = (v >> 14) & 0x3FF
@@ -462,7 +448,7 @@ def _decode_literals(
         streams = 4
     elif sf == 2:
         if len(block) < 4:
-            return None
+            raise Truncated
         v = hb | (block[1] << 8) | (block[2] << 16) | (block[3] << 24)
         regen = (v >> 4) & 0x3FFF
         comp = (v >> 18) & 0x3FFF
@@ -470,7 +456,7 @@ def _decode_literals(
         streams = 4
     else:
         if len(block) < 5:
-            return None
+            raise Truncated
         v = (
             hb
             | (block[1] << 8)
@@ -483,32 +469,26 @@ def _decode_literals(
         off = 5
         streams = 4
     if off + comp > len(block):
-        return None
+        raise Truncated
     section_end = off + comp
     if ltype == 2:  # fresh tree; comp includes the tree description
-        got = _read_huffman(block, off)
-        if got is None:
-            return None
-        huf, off = got
+        huf, off = _read_huffman(block, off)
         state.huf = huf
     else:  # treeless: reuse
         huf = state.huf
         if huf is None:
-            return None
+            raise Refused("treeless literals with no tree")
     payload = block[off:section_end]
     if streams == 1:
-        lit = huf.decode_stream(payload, regen)
-        if lit is None or len(lit) != regen:
-            return None
-        return lit, section_end
+        return huf.decode_stream(payload, regen), section_end
     if len(payload) < 6:
-        return None
+        raise Truncated
     s1 = payload[0] | (payload[1] << 8)
     s2 = payload[2] | (payload[3] << 8)
     s3 = payload[4] | (payload[5] << 8)
     body = payload[6:]
     if s1 + s2 + s3 > len(body):
-        return None
+        raise Truncated
     per = (regen + 3) // 4
     parts = []
     cuts = [
@@ -518,12 +498,9 @@ def _decode_literals(
         (s1 + s2 + s3, len(body), regen - 3 * per),
     ]
     if regen - 3 * per < 0:
-        return None
+        raise Refused("four literal streams for under 3 bytes")
     for a, b, n in cuts:
-        lit = huf.decode_stream(body[a:b], n)
-        if lit is None or len(lit) != n:
-            return None
-        parts.append(lit)
+        parts.append(huf.decode_stream(body[a:b], n))
     return b"".join(parts), section_end
 
 
@@ -535,39 +512,32 @@ def _seq_table(
     max_al: int,
     max_symbols: int,
     prev: _FseTable | None,
-) -> tuple[_FseTable, int] | None:
+) -> tuple[_FseTable, int]:
     if mode == 0:  # predefined
         norm, al = defaults
         return _FseTable(norm, al), off
     if mode == 1:  # RLE: one byte = the only symbol
         if off >= len(block) or block[off] >= max_symbols:
-            return None
+            raise Refused("RLE sequence symbol")
         return _FseTable.rle(block[off]), off + 1
     if mode == 2:  # FSE-compressed
-        parsed = _parse_fse_header(block, off, max_al, max_symbols)
-        if parsed is None:
-            return None
-        norm, al, noff = parsed
-        try:
-            return _FseTable(norm, al), noff
-        except ValueError:
-            return None
+        norm, al, noff = _parse_fse_header.__wrapped__(
+            block, off, max_al, max_symbols
+        )
+        return _FseTable(norm, al), noff
     if prev is None:  # repeat with nothing to repeat: corrupt
-        return None
+        raise Refused("repeat mode with no table")
     return prev, off
 
 
 def _decode_block(
     block: bytes, window: bytearray, state: _BlockState, max_out: int
-) -> bool:
-    """Decode one Compressed_Block into ``window`` (appending).
-    Returns False on any corruption."""
-    got = _decode_literals(block, state)
-    if got is None:
-        return False
-    literals, off = got
+) -> None:
+    """Decode one Compressed_Block into ``window`` (appending);
+    ``Refused`` on any corruption."""
+    literals, off = _decode_literals(block, state)
     if off >= len(block):
-        return False
+        raise Truncated
     # sequence count
     b0 = block[off]
     if b0 < 128:
@@ -575,48 +545,37 @@ def _decode_block(
         off += 1
     elif b0 < 255:
         if off + 2 > len(block):
-            return False
+            raise Truncated
         nseq = ((b0 - 128) << 8) | block[off + 1]
         off += 2
     else:
         if off + 3 > len(block):
-            return False
+            raise Truncated
         nseq = block[off + 1] | (block[off + 2] << 8)
         nseq += 0x7F00
         off += 3
     if nseq == 0:
         if len(window) + len(literals) > max_out:
-            return False
+            raise Refused("over max_out")
         window += literals
-        return True
+        return
     if off >= len(block):
-        return False
+        raise Truncated
     modes = block[off]
     if modes & 3:
-        return False  # reserved bits
+        raise Refused("reserved sequence-mode bits")
     off += 1
     llm, ofm, mlm = (modes >> 6) & 3, (modes >> 4) & 3, (modes >> 2) & 3
-    got_t = _seq_table(llm, block, off, _LL_DEFAULTS, 9, 36, state.ll)
-    if got_t is None:
-        return False
-    ll_t, off = got_t
-    got_t = _seq_table(ofm, block, off, _OF_DEFAULTS, 8, 32, state.of)
-    if got_t is None:
-        return False
-    of_t, off = got_t
-    got_t = _seq_table(mlm, block, off, _ML_DEFAULTS, 9, 53, state.ml)
-    if got_t is None:
-        return False
-    ml_t, off = got_t
+    ll_t, off = _seq_table(llm, block, off, _LL_DEFAULTS, 9, 36, state.ll)
+    of_t, off = _seq_table(ofm, block, off, _OF_DEFAULTS, 8, 32, state.of)
+    ml_t, off = _seq_table(mlm, block, off, _ML_DEFAULTS, 9, 53, state.ml)
     state.ll, state.of, state.ml = ll_t, of_t, ml_t
     bits = _RevBits(block[off:])
     if bits.pos < 0:
-        return False
+        raise Refused("no end marker")
     ll_s = bits.read(ll_t.al)
     of_s = bits.read(of_t.al)
     ml_s = bits.read(ml_t.al)
-    if ll_s is None or of_s is None or ml_s is None:
-        return False
     lit_pos = 0
     reps = state.reps
     for i in range(nseq):
@@ -624,15 +583,10 @@ def _decode_block(
         ml_code = ml_t.sym[ml_s]
         ll_code = ll_t.sym[ll_s]
         if of_code > 31:
-            return False
-        of_bits = bits.read(of_code)
-        if of_bits is None:
-            return False
-        of_value = (1 << of_code) + of_bits
+            raise Refused("offset code")
+        of_value = (1 << of_code) + bits.read(of_code)
         ml = _ml_value(ml_code, bits)
         ll = _ll_value(ll_code, bits)
-        if ml is None or ll is None:
-            return False
         # repeat-offset resolution
         if of_value > 3:
             offset = of_value - 3
@@ -655,18 +609,18 @@ def _decode_block(
             else:
                 offset = reps[0] - 1
                 if offset == 0:
-                    return False
+                    raise Refused("zero repeat offset")
                 reps[2] = reps[1]
                 reps[1] = reps[0]
                 reps[0] = offset
         if lit_pos + ll > len(literals):
-            return False
+            raise Refused("sequence past the literals")
         if len(window) + ll + ml > max_out:
-            return False
+            raise Refused("over max_out")
         window += literals[lit_pos : lit_pos + ll]
         lit_pos += ll
         if offset > len(window):
-            return False
+            raise Refused("offset before the window")
         start = len(window) - offset
         if offset >= ml:
             window += window[start : start + ml]
@@ -674,24 +628,15 @@ def _decode_block(
             for k in range(ml):
                 window.append(window[start + k])
         if i + 1 < nseq:  # update states (LL, ML, OF order per spec)
-            got_b = bits.read(ll_t.nb[ll_s])
-            if got_b is None:
-                return False
-            ll_s = ll_t.base[ll_s] + got_b
-            got_b = bits.read(ml_t.nb[ml_s])
-            if got_b is None:
-                return False
-            ml_s = ml_t.base[ml_s] + got_b
-            got_b = bits.read(of_t.nb[of_s])
-            if got_b is None:
-                return False
-            of_s = of_t.base[of_s] + got_b
+            ll_s = ll_t.base[ll_s] + bits.read(ll_t.nb[ll_s])
+            ml_s = ml_t.base[ml_s] + bits.read(ml_t.nb[ml_s])
+            of_s = of_t.base[of_s] + bits.read(of_t.nb[of_s])
     if len(window) + len(literals) - lit_pos > max_out:
-        return False
+        raise Refused("over max_out")
     window += literals[lit_pos:]  # last literals
-    return True
 
 
+@none_on_refusal
 def zstd_decompress_frame(
     payload: bytes,
     offset: int = 0,
@@ -705,13 +650,13 @@ def zstd_decompress_frame(
 
     frames = zstd_frames(payload[offset:], max_frames=1)
     if not frames:
-        return None
+        raise Refused("no zstd frame")
     _o, comp, content, kind, _nb, cksum = frames[0]
     if kind == "skippable":
         return b""
     fhd = payload[offset + 4]
     if fhd & 3:
-        return None  # dictionary frames: honest seam (no dict content)
+        raise Refused("dictionary frames: honest seam")
     j = (
         offset
         + 5
@@ -728,24 +673,21 @@ def zstd_decompress_frame(
         last, btype, bsize = bh & 1, (bh >> 1) & 3, bh >> 3
         if btype == 0:
             if len(window) + bsize > max_out:
-                return None
+                raise Refused("over max_out")
             window += payload[j : j + bsize]
             j += bsize
         elif btype == 1:
             if len(window) + bsize > max_out:
-                return None
+                raise Refused("over max_out")
             window += payload[j : j + 1] * bsize
             j += 1
         elif btype == 2:
-            if not _decode_block(
-                payload[j : j + bsize], window, state, max_out
-            ):
-                return None
+            _decode_block(payload[j : j + bsize], window, state, max_out)
             j += bsize
         else:
-            return None
+            raise Refused("reserved block type")
         if last:
             break
     if content is not None and len(window) != content:
-        return None
+        raise Refused("content size mismatch")
     return bytes(window)

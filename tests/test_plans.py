@@ -358,6 +358,10 @@ _TINY_BROADCAST_OK = {
     # inherits both legs' scalar broadcasts: BM25's 1-row corpus stats
     # (as text_bm25_topk) + cosine's 1-row query vector
     "text_rrf_hybrid_search",
+    # 1-row dangling-mass scalar crossJoin(F.broadcast(dang)) into every
+    # node's update: a deliberate tiny-broadcast BNLJ (operators/pagerank.py)
+    "graph_pagerank",
+    "graph_ppr_nation",
 }
 
 
