@@ -359,7 +359,13 @@ def jbig2_generic_decode(
             gflags = payload[17]
             if gflags & 0x10:
                 raise Refused("EXTTEMPLATE (12 ATs)")
-            if w <= 0 or h <= 0 or w > 1 << 16 or w * h > _MAX_PIXELS:
+            if (
+                w <= 0
+                or h <= 0
+                or w > 1 << 16
+                or h > 1 << 16
+                or w * h > _MAX_PIXELS
+            ):
                 raise Refused("unsupported or malformed JBIG2 stream")
             if gflags & 1:  # MMR == T.6
                 arr = g4_decode.__wrapped__(payload[18:], w, h)

@@ -3580,7 +3580,7 @@ def _ima_adpcm_decode(
     out: list[int] = []
     n = len(data)
     if block_align < 4:
-        raise Refused("IMA ADPCM step index over 88")
+        raise Refused("IMA ADPCM block_align under the 4-byte header")
     for off in range(0, n - 3, block_align):
         blk = data[off : off + block_align]
         pred = int.from_bytes(blk[0:2], "little", signed=True)
@@ -3609,7 +3609,9 @@ def _ima_adpcm_decode(
                 elif idx > 88:
                     idx = 88
                 out.append(pred)
-    return np.array(out, dtype=np.int16) if out else None
+    if not out:
+        raise Refused("IMA ADPCM data chunk shorter than one block header")
+    return np.array(out, dtype=np.int16)
 
 
 @none_on_refusal

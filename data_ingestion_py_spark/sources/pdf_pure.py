@@ -459,7 +459,7 @@ def _hash_2b(password: bytes, salt: bytes, udata: bytes = b"") -> bytes:
 
 def _aesv3_file_key(
     enc: dict, resolve, password: bytes = b""
-) -> bytes | None:
+) -> bytes:
     """AES-256 file key for /V 5 /R 5 (AEL3, plain-SHA-256 hash) and
     /V 5 /R 6 (PDF 2.0, Algorithm 2.B), USER password — empty by
     default, caller-supplied via ``password`` (r15; UTF-8 bytes,
@@ -480,7 +480,7 @@ def _aesv3_file_key(
         or len(u) < 48
         or len(ue) != 32
     ):
-        raise Refused("user password does not verify")
+        raise Refused("AES-256 /R, /U or /UE malformed")
     pw = password[:127]
     vsalt, ksalt = u[32:40], u[40:48]
     if r == 6:
@@ -511,21 +511,21 @@ def _aesv3_file_key(
         if isinstance(p, int) and int.from_bytes(
             dec[:4], "little", signed=False
         ) != (p & 0xFFFFFFFF):
-            raise Refused("user password does not verify")
+            raise Refused("/Perms does not match /P")
     return key
 
 
 def _std_security_key(
     enc: dict, id0: bytes, password: bytes = b""
-) -> bytes | None:
+) -> bytes:
     """Standard security handler file key (PDF 32000-1 §7.6.3.3
     Algorithm 2) for RC4 revisions 2/3, VERIFYING the user password
     against /U (Algorithms 4/5 — the check that distinguishes the
     ubiquitous owner-locked-but-readable PDF, where the USER password
     is empty, from a genuinely password-protected one). Returns the
-    n-byte file key, or None when the revision is unsupported or the
-    password does not verify — the caller refuses the document rather
-    than emitting RC4 noise as text."""
+    n-byte file key; ``Refused`` when the revision is unsupported or the
+    password does not verify — the document is refused rather than
+    emitting RC4 noise as text."""
     import hashlib
 
     r = enc.get("R")
@@ -543,7 +543,7 @@ def _std_security_key(
         or len(o) != 32
         or len(u) < 16
     ):
-        raise Refused("user password does not verify")
+        raise Refused("unsupported RC4 revision or malformed /O /U /P")
     # /Length defaults to 40 for EVERY revision (PDF 32000-1 Table 20)
     # — but R3+ writers that omit it overwhelmingly mean 128, so when
     # the key is unspecified try both and let /U verification pick.
@@ -556,7 +556,7 @@ def _std_security_key(
             or length % 8
             or not 40 <= length <= 128
         ):
-            raise Refused("user password does not verify")
+            raise Refused("unsupported /Length")
         candidates = [length]
     padded = (password + _PW_PAD)[:32]
     suffix = b""
@@ -828,7 +828,7 @@ class _PdfDoc:
         generators hit constantly: Predictor-12 image XObjects and
         predictor'd xref/object streams). Predictor 2 = TIFF
         horizontal differencing (8-bit components — the only depth the
-        wild uses; sub-byte stays an honest None); 10–15 = PNG filters
+        wild uses; sub-byte is ``Refused``); 10–15 = PNG filters
         (one tag byte per row, inverted by the SAME row machinery as
         ``multimodal._png_unfilter`` — per PNG spec the per-row tag
         decides, so all six values decode identically). ``Refused`` on
@@ -1755,7 +1755,7 @@ def _setup_encryption(
         _expand_objstms(doc)
         return
     if id0 is None:
-        raise Refused("unsupported security handler")
+        raise Refused("RC4/AESV2 handler without a trailer /ID")
     aes = False
     if enc.get("V") == 4:
         # V4 routes through named crypt filters: only the ubiquitous
@@ -1786,7 +1786,7 @@ def _walk_pages(
     extractors); ``Refused`` when no catalog/page tree parses. Encrypted
     documents arm decryption when the standard handler verifies the
     USER password — empty by default, caller-supplied via
-    ``password`` (r15); otherwise honest None."""
+    ``password`` (r15); otherwise ``Refused``."""
     trailers = _find_trailer_dicts(doc)
     _setup_encryption(doc, trailers, password)
     root = None

@@ -699,6 +699,38 @@ def test_mq_coder_roundtrip_random():
         assert [dec.decode(cxd, lab) for lab in labels] == bits
 
 
+def test_jbig2_tall_narrow_region_refuses_before_decoding():
+    """A region taller than 2^16 rows refuses on its header even when
+    its pixel count is small: an all-white MMR line costs one bit, so
+    without the row bound 16 KB of 0xFF would decode 2^17 one-pixel
+    lines, one array each, before the stack."""
+    import tracemalloc
+
+    from data_ingestion_py_spark.sources.jbig2 import (
+        jbig2_generic_decode,
+    )
+
+    w, h = 1, 1 << 17
+
+    def seg(num, stype, payload):
+        return (num.to_bytes(4, "big") + bytes([stype]) + bytes([0])
+                + bytes([1]) + len(payload).to_bytes(4, "big") + payload)
+
+    pi = (w.to_bytes(4, "big") + h.to_bytes(4, "big") + bytes(8)
+          + bytes([0]) + bytes(2))
+    region = (w.to_bytes(4, "big") + h.to_bytes(4, "big") + bytes(8)
+              + bytes([0]) + bytes([1]) + b"\xff" * (h // 8))
+    stream = seg(0, 48, pi) + seg(1, 38, region)
+    tracemalloc.start()
+    try:
+        got = jbig2_generic_decode(stream)
+        _, peak = tracemalloc.get_traced_memory()
+    finally:
+        tracemalloc.stop()
+    assert got is None
+    assert peak < 1 << 20
+
+
 def test_jbig2_arith_generic_region_all_templates():
     """The generic region decoding procedure against the independent
     encoder: every GB template, TPGDON on/off (including rows that

@@ -458,8 +458,8 @@ def test_decode_wav_samples_codec_formats_end_to_end():
     import numpy as np
 
     from data_ingestion_py_spark.sources.multimodal import (
-        _ALAW_LUT, _ULAW_LUT, decode_wav_pcm, decode_wav_samples,
-        resample_wav,
+        _ALAW_LUT, _ULAW_LUT, decode_audio_pcm, decode_wav_pcm,
+        decode_wav_samples, resample_wav,
     )
 
     codes = bytes(range(256))
@@ -490,6 +490,13 @@ def test_decode_wav_samples_codec_formats_end_to_end():
     assert decode_wav_samples(
         _codec_wav(codes, audio_format=2, bits=4, block_align=12)
     ) is None  # MS-ADPCM: still the honest seam
+    # an IMA data chunk under one block header (cut after the header)
+    for data in (b"", b"\x01\x02\x03"):
+        short = _codec_wav(data, audio_format=0x11, bits=4, block_align=12)
+        assert decode_wav_samples(short) is None
+        assert decode_wav_pcm(short) is None
+        assert decode_audio_pcm(short) is None
+        assert resample_wav(short, 4000) is None
 
 
 def _png_multi(chunks: list[tuple[bytes, bytes]]) -> bytes:
@@ -930,8 +937,9 @@ def test_resample_audio_spark_roundtrip(spark):
     from data_ingestion_py_spark.sources import multimodal as mm
 
     wav = mm._encode_wav(8000, np.array([100, -200, 300, -400], "<i2"))
+    ima_cut = _codec_wav(b"", audio_format=0x11, bits=4, block_align=12)
     media = spark.createDataFrame(
-        [(1, wav), (2, b"junk"), (3, None)],
+        [(1, wav), (2, b"junk"), (3, None), (4, ima_cut)],
         "media_id long, payload binary",
     )
     got = {
@@ -941,6 +949,9 @@ def test_resample_audio_spark_roundtrip(spark):
     assert got[1] == (2, 300, 100**2 + 300**2)  # samples 0 and 2
     assert got[2] == (None, None, None)
     assert got[3] == (None, None, None)
+    assert got[4] == (None, None, None)
+    (row,) = mm.pcm_stats(media.where("media_id = 4")).collect()
+    assert (row.n_samples, row.peak_abs, row.energy) == (None, None, None)
 
 
 # ---------------------------------------------------------------- WARC
