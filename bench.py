@@ -1457,7 +1457,8 @@ def _bucket_join_bench(spark, sf_dir: str) -> dict:
 
 def _streaming_drain_bench(spark, sf_dir: str) -> dict:
     """Micro-batch drain throughput of the durable incremental rollup
-    stream (streaming/pipeline.run_rollup_stream): the sf events table
+    stream (streaming/pipeline.rollup_batch_processor through
+    run_stream over parquet_file_stream): the sf events table
     split into N files, drained one file per trigger under
     availableNow — N foreachBatch rounds, each an algebraic partial
     agg + idempotency probe + tiny state append. Streaming is
@@ -1487,8 +1488,10 @@ def _streaming_drain_bench(spark, sf_dir: str) -> dict:
 
     from data_ingestion_py_spark.io import load_table
     from data_ingestion_py_spark.streaming.pipeline import (
+        parquet_file_stream,
         read_rollup_state,
-        run_rollup_stream,
+        rollup_batch_processor,
+        run_stream,
     )
 
     ev = load_table(spark, sf_dir, "events")
@@ -1501,7 +1504,11 @@ def _streaming_drain_bench(spark, sf_dir: str) -> dict:
             src = base + "/events"
             df.repartition(n_batches).write.parquet(src)
             t0 = time.perf_counter()
-            q = run_rollup_stream(spark, src, base + "/state", base + "/ckpt")
+            q = run_stream(
+                parquet_file_stream(spark, src),
+                rollup_batch_processor(base + "/state"),
+                base + "/ckpt",
+            )
             finished = q.awaitTermination(1200)
             wall = time.perf_counter() - t0
             if not finished:

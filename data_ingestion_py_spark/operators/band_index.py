@@ -2,9 +2,9 @@
 
 ``SCALE.md`` ("Streaming state") promises that at cluster scale the
 corpus signature index behind incremental near-dedup is "a
-parquet/Delta table partitioned by band key, not driver memory". The
-in-session form (``streaming/pipeline.LshDedupState``) holds the state
-as pinned DataFrames; THIS module is the promised at-rest form:
+parquet/Delta table partitioned by band key, not driver memory". THIS
+module is that at-rest form (``streaming/pipeline.
+durable_lsh_batch_processor`` maintains it per micro-batch):
 
 - ``bands/``  — (doc_id, band_key) exploded band rows, partitioned by
   ``ingest_batch`` then ``band_bucket = pmod(xxhash64(band_key), B)``.
@@ -23,34 +23,32 @@ as pinned DataFrames; THIS module is the promised at-rest form:
   appended batches without it — i.e. probe cost tracked corpus size,
   exactly what an at-rest index must avoid).
 - ``markers/`` — one EMPTY file ``batch_<id>`` per committed batch,
-  created with a single atomic filesystem call AFTER both data writes.
-  Earlier layouts used the sigs batch directory itself as the commit
-  marker; that is NOT crash-safe — a parquet partition write commits
-  task files into ``ingest_batch=N`` one rename at a time, so a crash
-  mid-commit leaves a partial directory that LOOKS committed and the
-  re-delivered batch skips itself (silent signature loss). Under the
-  marker protocol a torn batch is unmarked: invisible to reads
-  (``corpus_sigs`` filters to marked batches) and repaired by the
-  re-delivered append (partial dirs deleted, rewritten, marked LAST).
-  Orphan band rows from a crash between the two data writes were
-  always harmless (candidates collapse in ``distinct`` and die in the
-  committed-only verify join); the marker closes the case that wasn't.
+  created with a single atomic filesystem call AFTER both data writes
+  (``MarkerCommitted``, shared with ``operators/ivf_index``). The
+  batch's own partition directory cannot serve as its marker: a
+  parquet partition write commits task files into ``ingest_batch=N``
+  one rename at a time, so a crash mid-commit leaves a partial
+  directory that LOOKS committed and the re-delivered batch would skip
+  itself (silent signature loss). Under the marker protocol a torn
+  batch is unmarked: invisible to reads (``corpus_sigs`` filters to
+  marked batches) and repaired by the re-delivered append (partial
+  dirs deleted, rewritten, marked LAST). Orphan band rows from a crash
+  between the two data writes are pruned by the same read-committed
+  filter.
 - ``flagged/`` — (new_doc_id, corpus_doc_id, jaccard) near-dup pairs
   per batch, partitioned by ``ingest_batch`` (the audit trail).
 - ``meta/``   — one row (bands, rows, n_buckets, marker_protocol),
   written once; re-opening the index restores the banding parameters
-  so a restarted job cannot silently probe with mismatched bands.
+  so a restarted job cannot silently probe with mismatched bands. An
+  index whose meta row lacks ``marker_protocol`` predates both the
+  marker protocol and the ``doc_bucket`` layout and is refused on
+  open.
 
 Restart contract: ``has_batch(batch_id)`` = "does the batch's commit
 marker exist" — the idempotency check lives in the INDEX, not in any
-driver-side holder, so it survives process restarts (the weaker
-in-session guard in ``LshDedupState.last_batch_id`` does not).
-Batch ids come from the stream checkpoint, so an index is tied to one
-checkpoint lineage. An index written by the pre-marker layout (meta
-row lacks ``marker_protocol``) reads under legacy semantics and is
-UPGRADED on its next append: markers are backfilled from the legacy
-batch record, then the marker protocol applies — one code path from
-then on.
+driver-side holder, so it survives process restarts. Batch ids come
+from the stream checkpoint, so an index is tied to one checkpoint
+lineage.
 
 Reference contrast: egorji/data_ingestion.py has no dedup state at all
 (its only dedup is the whole-collection name scan at :302-315); this
@@ -111,12 +109,108 @@ def _fs_list_names(spark: SparkSession, path: str) -> list[str]:
     return [st.getPath().getName() for st in fs.listStatus(p)]
 
 
-class BandIndex:
+class MarkerCommitted:
+    """The marker-last commit protocol of an at-rest index rooted at
+    ``path``: batch ``N``'s data lives in ``<dir>/ingest_batch=N``
+    partitions under each directory named in ``_batch_dirs``, and the
+    batch is committed iff the empty file ``markers/batch_N`` exists.
+    Readers see committed batches only; a batch whose data landed but
+    whose marker did not (a crash mid-commit) is invisible until its
+    re-delivery deletes the partial directories and rewrites them."""
+
+    _batch_dirs: tuple[str, ...] = ()
+
+    def __init__(self, spark: SparkSession, path: str) -> None:
+        self.spark = spark
+        self.path = path.rstrip("/")
+
+    @property
+    def _meta_path(self) -> str:
+        return f"{self.path}/meta"
+
+    @property
+    def _markers_path(self) -> str:
+        return f"{self.path}/markers"
+
+    def _marker_path(self, batch_id: int) -> str:
+        return f"{self._markers_path}/batch_{batch_id}"
+
+    def _read_meta(self):
+        """The meta row, or None for an index not laid down yet."""
+        if not _fs_exists(self.spark, self._meta_path):
+            return None
+        return self.spark.read.parquet(self._meta_path).first()
+
+    def has_batch(self, batch_id: int) -> bool:
+        """True iff ``batch_id``'s commit marker exists — the
+        restart-safe re-delivery guard. The marker is a separate
+        atomically-created file, NOT the batch's partition directory:
+        a crash during a (multi-file) partition write leaves a partial
+        directory, and treating that as committed would make the
+        re-delivered batch skip itself — silent data loss."""
+        return _fs_exists(self.spark, self._marker_path(batch_id))
+
+    def committed_batches(self) -> list[int]:
+        """Sorted committed batch ids — a driver metadata listing of
+        the marker files (one empty file per batch, never a data
+        scan)."""
+        return sorted(
+            int(name.removeprefix("batch_"))
+            for name in _fs_list_names(self.spark, self._markers_path)
+            if name.startswith("batch_")
+        )
+
+    def is_empty(self) -> bool:
+        """No COMMITTED batches (a torn first batch still counts as
+        empty — unreadable until repaired)."""
+        return not self.committed_batches()
+
+    def _read_committed(self, path: str) -> DataFrame:
+        """READ-COMMITTED scan of ``path``: ``ingest_batch`` is a
+        partition column, so the IN filter prunes torn-batch
+        directories at planning time."""
+        committed = self.committed_batches()
+        return self.spark.read.parquet(path).where(
+            F.col("ingest_batch").isin(committed)
+            if committed
+            else F.lit(False)
+        )
+
+    def _commit(self, batch_id: int, write) -> None:
+        """Delete any partial ``ingest_batch=<batch_id>`` directory a
+        crashed commit left, run ``write()``, then create the marker
+        LAST with one atomic filesystem call."""
+        for name in self._batch_dirs:
+            _fs_delete(
+                self.spark, f"{self.path}/{name}/ingest_batch={batch_id}"
+            )
+        write()
+        _fs_touch(self.spark, self._marker_path(batch_id))
+
+    def _collapse_into(self, out, verb: str, write):
+        """Rewrite this index into the fresh handle ``out`` as ONE
+        batch under the max committed batch id: ``write(hi)`` lands the
+        data, then ``out`` commits ``hi`` marker-last. That keeps
+        ``has_batch`` true for the only batch a restarted stream can
+        re-deliver (the last); older markers go with the fragmentation,
+        which is safe because the checkpoint never re-delivers batches
+        before the last committed one."""
+        batches = self.committed_batches()
+        if not batches:
+            raise ValueError(f"cannot {verb} an empty index")
+        hi = batches[-1]
+        out._commit(hi, lambda: write(hi))
+        return out
+
+
+class BandIndex(MarkerCommitted):
     """Handle on a durable band index rooted at ``path``.
 
     Open an existing index (parameters restored from ``meta/``) or lay
     down a new one on first ``append_batch``.
     """
+
+    _batch_dirs = ("bands", "sigs")
 
     def __init__(
         self,
@@ -126,21 +220,20 @@ class BandIndex:
         rows: int = dedup.ROWS_PER_BAND,
         n_buckets: int = N_BUCKETS,
     ) -> None:
-        self.spark = spark
-        self.path = path.rstrip("/")
+        super().__init__(spark, path)
         self.bands, self.rows, self.n_buckets = bands, rows, n_buckets
-        # new indexes speak the marker protocol; a pre-marker layout
-        # (meta without the field) reads legacy until its next append
-        # backfills markers (_ensure_marker_protocol)
-        self.marker_proto = True
-        if _fs_exists(spark, self._meta_path):
-            m = spark.read.parquet(self._meta_path).first().asDict()
+        m = self._read_meta()
+        if m is not None:
+            if not m.asDict().get("marker_protocol"):
+                raise ValueError(
+                    f"{self.path}: band index written before the marker "
+                    "commit protocol; rebuild it"
+                )
             self.bands, self.rows, self.n_buckets = (
                 m["bands"],
                 m["rows"],
                 m["n_buckets"],
             )
-            self.marker_proto = bool(m.get("marker_protocol", False))
 
     # -- layout ----------------------------------------------------------
     @property
@@ -155,53 +248,10 @@ class BandIndex:
     def _flagged_path(self) -> str:
         return f"{self.path}/flagged"
 
-    @property
-    def _meta_path(self) -> str:
-        return f"{self.path}/meta"
-
-    @property
-    def _markers_path(self) -> str:
-        return f"{self.path}/markers"
-
-    def _marker_path(self, batch_id: int) -> str:
-        return f"{self._markers_path}/batch_{batch_id}"
-
     # -- state inspection ------------------------------------------------
-    def is_empty(self) -> bool:
-        """No COMMITTED batches (under the marker protocol a torn
-        first batch still counts as empty — unreadable until
-        repaired)."""
-        if self.marker_proto:
-            return not self.committed_batches()
-        return not _fs_exists(self.spark, self._sigs_path)
-
-    def has_batch(self, batch_id: int) -> bool:
-        """True iff ``batch_id``'s commit marker exists — the
-        restart-safe re-delivery guard. The marker is a separate
-        atomically-created file, never the batch's own (multi-file,
-        non-atomic) partition directory; legacy pre-marker indexes
-        fall back to the directory check until their next append
-        upgrades them."""
-        if self.marker_proto:
-            return _fs_exists(self.spark, self._marker_path(batch_id))
-        return _fs_exists(
-            self.spark, f"{self._sigs_path}/ingest_batch={batch_id}"
-        )
-
     def corpus_sigs(self) -> DataFrame:
-        """READ-COMMITTED corpus signatures: under the marker protocol
-        only marked batches are visible (``ingest_batch`` is a
-        partition column — the IN filter prunes torn-batch directories
-        at planning time)."""
-        df = self.spark.read.parquet(self._sigs_path)
-        if self.marker_proto:
-            committed = self.committed_batches()
-            df = df.where(
-                F.col("ingest_batch").isin(committed)
-                if committed
-                else F.lit(False)
-            )
-        return df
+        """READ-COMMITTED corpus signatures: only marked batches."""
+        return self._read_committed(self._sigs_path)
 
     def admitted_ids(self) -> DataFrame:
         return self.corpus_sigs().select("doc_id")
@@ -235,26 +285,11 @@ class BandIndex:
         )
 
     # -- writes ----------------------------------------------------------
-    def _write_meta(self, path: str) -> None:
+    def _write_meta(self) -> None:
         self.spark.createDataFrame(
             [(self.bands, self.rows, self.n_buckets, True)],
             "bands int, rows int, n_buckets int, marker_protocol boolean",
-        ).write.mode("overwrite").parquet(path)
-
-    def _ensure_marker_protocol(self) -> None:
-        """Upgrade a pre-marker index in place: backfill one marker per
-        batch the legacy record (sigs batch directories) shows, then
-        rewrite meta with ``marker_protocol`` — from here on markers
-        are authoritative. A batch that was torn BEFORE the upgrade
-        gets wrongly marked, but the legacy layout had no record that
-        could tell it apart; the upgrade is no worse than legacy and
-        every later batch gets the real contract."""
-        if self.marker_proto:
-            return
-        for b in self.committed_batches():
-            _fs_touch(self.spark, self._marker_path(b))
-        self._write_meta(self._meta_path)
-        self.marker_proto = True
+        ).write.mode("overwrite").parquet(self._meta_path)
 
     def append_batch(self, sigs: DataFrame, batch_id: int) -> None:
         """Admit a batch of signed docs (doc_id, sig, shingles): band
@@ -262,31 +297,29 @@ class BandIndex:
         module doc). Already-marked batches no-op; a torn batch's
         partial partition directories are deleted and rewritten, so
         re-delivery is idempotent from either side of a crash."""
-        self._ensure_marker_protocol()
         if self.has_batch(batch_id):
             return
-        for base in (self._bands_path, self._sigs_path):
-            d = f"{base}/ingest_batch={batch_id}"
-            if _fs_exists(self.spark, d):
-                _fs_delete(self.spark, d)
-        if not _fs_exists(self.spark, self._meta_path):
-            self._write_meta(self._meta_path)
-        (
-            self._banded(sigs, "doc_id")
-            .withColumn("ingest_batch", F.lit(batch_id))
-            .write.mode("append")
-            .partitionBy("ingest_batch", "band_bucket")
-            .parquet(self._bands_path)
-        )
-        (
-            sigs.select("doc_id", "sig", "shingles")
-            .withColumn("ingest_batch", F.lit(batch_id))
-            .withColumn("doc_bucket", self._doc_bucket("doc_id"))
-            .write.mode("append")
-            .partitionBy("ingest_batch", "doc_bucket")
-            .parquet(self._sigs_path)
-        )
-        _fs_touch(self.spark, self._marker_path(batch_id))
+
+        def write() -> None:
+            if not _fs_exists(self.spark, self._meta_path):
+                self._write_meta()
+            (
+                self._banded(sigs, "doc_id")
+                .withColumn("ingest_batch", F.lit(batch_id))
+                .write.mode("append")
+                .partitionBy("ingest_batch", "band_bucket")
+                .parquet(self._bands_path)
+            )
+            (
+                sigs.select("doc_id", "sig", "shingles")
+                .withColumn("ingest_batch", F.lit(batch_id))
+                .withColumn("doc_bucket", self._doc_bucket("doc_id"))
+                .write.mode("append")
+                .partitionBy("ingest_batch", "doc_bucket")
+                .parquet(self._sigs_path)
+            )
+
+        self._commit(batch_id, write)
 
     def append_flagged(self, pairs: DataFrame, batch_id: int) -> None:
         (
@@ -298,27 +331,6 @@ class BandIndex:
         )
 
     # -- maintenance -----------------------------------------------------
-    def committed_batches(self) -> list[int]:
-        """Sorted committed batch ids — a driver metadata listing of
-        the marker files (one empty file per batch, never a data
-        scan); legacy pre-marker indexes fall back to the distinct
-        scan of their sigs record."""
-        if self.marker_proto:
-            return sorted(
-                int(name.removeprefix("batch_"))
-                for name in _fs_list_names(self.spark, self._markers_path)
-                if name.startswith("batch_")
-            )
-        if self.is_empty():
-            return []
-        return sorted(
-            r.ingest_batch
-            for r in self.spark.read.parquet(self._sigs_path)
-            .select("ingest_batch")
-            .distinct()
-            .collect()
-        )
-
     def compacted(self, new_path: str) -> "BandIndex":
         """Rewrite the index as a consolidated snapshot at ``new_path``
         and return a handle on it. Streaming appends fragment the
@@ -328,65 +340,49 @@ class BandIndex:
         maintenance pattern (``io.compact`` documents the same for
         plain tables — never rewrite in place).
 
-        All rows collapse under the MAX committed ingest_batch: that
-        preserves ``has_batch`` for the only batch a restarted stream
-        can re-deliver (the last one); older markers are dropped with
-        the fragmentation, which is safe because the checkpoint never
-        re-delivers batches before the last committed one. Band rows
-        re-partition to one file per bucket; adjust file counts at
-        cluster scale via a pre-write ``repartition`` if buckets grow
-        past single-file sizes.
-
-        Also the LAYOUT-MIGRATION path: an at-rest index written
-        before the ``doc_bucket`` partition column existed probes
-        correctly but unpruned (see ``probe``); compacting rewrites
-        sigs/ under the current (ingest_batch, doc_bucket) layout."""
-        batches = self.committed_batches()
-        if not batches:
-            raise ValueError("cannot compact an empty index")
-        hi = batches[-1]
+        All committed rows collapse under the MAX committed
+        ingest_batch (``_collapse_into``); a torn batch's orphan rows
+        are dropped with the fragmentation. Band rows re-partition to
+        one file per bucket; adjust file counts at cluster scale via a
+        pre-write ``repartition`` if buckets grow past single-file
+        sizes."""
         out = BandIndex(
             self.spark, new_path, self.bands, self.rows, self.n_buckets
         )
-        out._write_meta(out._meta_path)
-        bands_df = self.spark.read.parquet(self._bands_path)
-        if self.marker_proto:
-            # drop any torn batch's orphan band rows with the
-            # fragmentation — the snapshot holds committed data only
-            bands_df = bands_df.where(F.col("ingest_batch").isin(batches))
-        (
-            bands_df.select("doc_id", "band_key", "band_bucket")
-            .withColumn("ingest_batch", F.lit(hi))
-            .repartition("band_bucket")
-            .write.mode("overwrite")
-            .partitionBy("ingest_batch", "band_bucket")
-            .parquet(out._bands_path)
-        )
-        (
-            self.corpus_sigs()
-            .select("doc_id", "sig", "shingles")
-            .withColumn("ingest_batch", F.lit(hi))
-            .withColumn("doc_bucket", out._doc_bucket("doc_id"))
-            .repartition("doc_bucket")
-            .write.mode("overwrite")
-            .partitionBy("ingest_batch", "doc_bucket")
-            .parquet(out._sigs_path)
-        )
-        if _fs_exists(self.spark, self._flagged_path):
+
+        def write(hi: int) -> None:
+            out._write_meta()
             (
-                self.spark.read.parquet(self._flagged_path)
-                .select("new_doc_id", "corpus_doc_id", "jaccard")
+                self._read_committed(self._bands_path)
+                .select("doc_id", "band_key", "band_bucket")
                 .withColumn("ingest_batch", F.lit(hi))
-                .coalesce(1)
+                .repartition("band_bucket")
                 .write.mode("overwrite")
-                .partitionBy("ingest_batch")
-                .parquet(out._flagged_path)
+                .partitionBy("ingest_batch", "band_bucket")
+                .parquet(out._bands_path)
             )
-        # snapshot commits under the same marker-last protocol, keeping
-        # has_batch true for the only batch a restarted stream can
-        # re-deliver (the last)
-        _fs_touch(self.spark, out._marker_path(hi))
-        return out
+            (
+                self.corpus_sigs()
+                .select("doc_id", "sig", "shingles")
+                .withColumn("ingest_batch", F.lit(hi))
+                .withColumn("doc_bucket", out._doc_bucket("doc_id"))
+                .repartition("doc_bucket")
+                .write.mode("overwrite")
+                .partitionBy("ingest_batch", "doc_bucket")
+                .parquet(out._sigs_path)
+            )
+            if _fs_exists(self.spark, self._flagged_path):
+                (
+                    self.spark.read.parquet(self._flagged_path)
+                    .select("new_doc_id", "corpus_doc_id", "jaccard")
+                    .withColumn("ingest_batch", F.lit(hi))
+                    .coalesce(1)
+                    .write.mode("overwrite")
+                    .partitionBy("ingest_batch")
+                    .parquet(out._flagged_path)
+                )
+
+        return self._collapse_into(out, "compact", write)
 
     # -- probe -----------------------------------------------------------
     def probe_candidates(self, new_sigs: DataFrame) -> DataFrame:
@@ -395,25 +391,18 @@ class BandIndex:
         band_key, with the scan restricted to the batch's bucket set —
         a literal IN over ≤ n_buckets ints, so the parquet scan prunes
         partition directories (``PartitionFilters``), reading only the
-        buckets this batch can possibly collide in."""
+        buckets this batch can possibly collide in. Band rows are read
+        committed too: a torn batch's orphans would only die later in
+        the verify join, and pruning them here keeps the candidate set
+        (and its shuffle) honest."""
         new_banded = self._banded(new_sigs, "new_doc_id")
         buckets = sorted(
             r.band_bucket
             for r in new_banded.select("band_bucket").distinct().collect()
         )
-        idx = self.spark.read.parquet(self._bands_path).where(
+        idx = self._read_committed(self._bands_path).where(
             F.col("band_bucket").isin(buckets)
         )
-        if self.marker_proto:
-            # read-committed band rows too: a torn batch's orphans
-            # would only die later in the verify join — pruning them
-            # here keeps the candidate set (and its shuffle) honest
-            committed = self.committed_batches()
-            idx = idx.where(
-                F.col("ingest_batch").isin(committed)
-                if committed
-                else F.lit(False)
-            )
         return (
             new_banded.join(
                 idx.select(F.col("doc_id").alias("corpus_doc_id"), "band_key"),
@@ -454,14 +443,7 @@ class BandIndex:
             return self.spark.createDataFrame(
                 [], "new_doc_id long, corpus_doc_id long, jaccard double"
             )
-        corp = self.corpus_sigs()
-        if "doc_bucket" in corp.columns:
-            corp = corp.where(F.col("doc_bucket").isin(buckets))
-        # else: at-rest index written before the doc_bucket partition
-        # column existed (sigs/ partitioned by ingest_batch only).
-        # Fall back to the unpruned verify scan — correct, just not
-        # partition-pruned. Migration path: ``compacted()`` rewrites
-        # sigs/ with the doc_bucket layout, restoring pruned probes.
+        corp = self.corpus_sigs().where(F.col("doc_bucket").isin(buckets))
         return dedup.verify_incremental_pairs(
             cands, new_sigs, corp, threshold
         )

@@ -35,7 +35,8 @@ bytes. Layout:
   batches (partition-pruned IN on ``ingest_batch``), so a torn batch
   is INVISIBLE until its re-delivery deletes the partial directory and
   rewrites it — read-committed semantics, crash-tested in
-  ``tests/test_ivf_index.py``.
+  ``tests/test_ivf_index.py``. The protocol is
+  ``band_index.MarkerCommitted``, shared with the band index.
 - ``meta/`` — one row (k, n_train_iter); re-opening restores the
   parameters so a restarted job cannot silently mis-assign.
 
@@ -63,10 +64,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from data_ingestion_py_spark.operators.band_index import (
-    _fs_delete,
+    MarkerCommitted,
     _fs_exists,
-    _fs_list_names,
-    _fs_touch,
 )
 from data_ingestion_py_spark.operators.kmeans import (
     SCALE,
@@ -95,13 +94,15 @@ def _quantized(vectors: DataFrame, vec_col: str) -> DataFrame:
     )
 
 
-class IvfIndex:
+class IvfIndex(MarkerCommitted):
     """Handle on a durable IVF index rooted at ``path``.
 
     Open an existing index (parameters restored from ``meta/``) or lay
     one down with the first ``append_batch`` (which trains the coarse
     quantizer on that batch).
     """
+
+    _batch_dirs = ("vectors",)
 
     def __init__(
         self,
@@ -110,11 +111,10 @@ class IvfIndex:
         k: int = 8,
         n_train_iter: int = 3,
     ) -> None:
-        self.spark = spark
-        self.path = path.rstrip("/")
+        super().__init__(spark, path)
         self.k, self.n_train_iter = k, n_train_iter
-        if _fs_exists(spark, self._meta_path):
-            m = spark.read.parquet(self._meta_path).first()
+        m = self._read_meta()
+        if m is not None:
             self.k, self.n_train_iter = m.k, m.n_train_iter
 
     # -- layout ----------------------------------------------------------
@@ -126,62 +126,22 @@ class IvfIndex:
     def _vectors_path(self) -> str:
         return f"{self.path}/vectors"
 
-    @property
-    def _meta_path(self) -> str:
-        return f"{self.path}/meta"
-
-    @property
-    def _markers_path(self) -> str:
-        return f"{self.path}/markers"
-
-    def _marker_path(self, batch_id: int) -> str:
-        return f"{self._markers_path}/batch_{batch_id}"
-
-    def _batch_dir(self, batch_id: int) -> str:
-        return f"{self._vectors_path}/ingest_batch={batch_id}"
-
     # -- state inspection ------------------------------------------------
-    def is_empty(self) -> bool:
-        """No COMMITTED batches (a torn first batch still counts as
-        empty — its data is unreadable until repaired)."""
-        return not self.committed_batches()
-
-    def has_batch(self, batch_id: int) -> bool:
-        """True iff ``batch_id``'s commit marker exists — the
-        restart-safe re-delivery guard. The marker is a separate
-        atomically-created file, NOT the batch's partition directory:
-        a crash during the (multi-file) vectors job commit leaves a
-        partial directory, and treating that as committed would make
-        the re-delivered batch skip itself — silent vector loss."""
-        return _fs_exists(self.spark, self._marker_path(batch_id))
-
-    def committed_batches(self) -> list[int]:
-        """Sorted committed batch ids from the marker listing — driver
-        metadata only (one empty file per batch), never a data scan."""
-        return sorted(
-            int(name.removeprefix("batch_"))
-            for name in _fs_list_names(self.spark, self._markers_path)
-            if name.startswith("batch_")
-        )
-
     def centroids(self) -> DataFrame:
         return self.spark.read.parquet(self._centroids_path)
 
     def vectors(self) -> DataFrame:
         """READ-COMMITTED corpus view: only batches whose marker
-        exists. ``ingest_batch`` is a partition column, so the IN
-        filter prunes torn-batch directories at planning time — a
-        crash between data and marker is invisible to every probe
-        until the re-delivered batch repairs it."""
-        committed = self.committed_batches()
-        df = self.spark.read.parquet(self._vectors_path)
-        return df.where(
-            F.col("ingest_batch").isin(committed)
-            if committed
-            else F.lit(False)
-        )
+        exists — a crash between data and marker is invisible to every
+        probe until the re-delivered batch repairs it."""
+        return self._read_committed(self._vectors_path)
 
     # -- writes ----------------------------------------------------------
+    def _write_meta(self) -> None:
+        self.spark.createDataFrame(
+            [(self.k, self.n_train_iter)], "k int, n_train_iter int"
+        ).write.mode("overwrite").parquet(self._meta_path)
+
     def append_batch(
         self, vectors: DataFrame, batch_id: int, vec_col: str = "embedding"
     ) -> None:
@@ -190,19 +150,25 @@ class IvfIndex:
         k-means), persist centroids, then assign + write. Later
         batches assign against the FROZEN centroids.
 
-        Commit protocol per batch: (1) clear any torn partition
-        directory a previous crash left for this batch id, (2) write
-        the vectors, (3) atomically create the marker file LAST. A
-        crash anywhere before (3) leaves the batch unmarked — unread
-        by ``vectors()`` and repaired by this very method when the
-        checkpoint re-delivers it. Already-marked batches no-op, so
-        re-delivery is idempotent from either side of the crash."""
+        Commit protocol per batch (``MarkerCommitted._commit``): (1)
+        clear any torn partition directory a previous crash left for
+        this batch id, (2) write the vectors, (3) atomically create the
+        marker file LAST. A crash anywhere before (3) leaves the batch
+        unmarked — unread by ``vectors()`` and repaired by this very
+        method when the checkpoint re-delivers it. Already-marked
+        batches no-op, so re-delivery is idempotent from either side of
+        the crash."""
         if self.has_batch(batch_id):
             return
-        # torn-batch repair: a partial directory without a marker is
-        # leftover from a crashed commit of THIS batch — replace it
-        if _fs_exists(self.spark, self._batch_dir(batch_id)):
-            _fs_delete(self.spark, self._batch_dir(batch_id))
+        self._commit(
+            batch_id, lambda: self._write_vectors(vectors, batch_id, vec_col)
+        )
+
+    def _write_vectors(
+        self, vectors: DataFrame, batch_id: int, vec_col: str = "embedding"
+    ) -> None:
+        """Train the quantizer if none exists yet, then assign and write
+        ``vectors`` under ``ingest_batch=batch_id`` (no marker)."""
         vecs = vectors.select("vec_id", vec_col)
         # schema guard: later batches must store the SAME embedding
         # element type the first batch established — a float corpus
@@ -220,9 +186,7 @@ class IvfIndex:
                 vecs, k=self.k, n_iter=self.n_train_iter, vec_col=vec_col
             )
             if not _fs_exists(self.spark, self._meta_path):
-                self.spark.createDataFrame(
-                    [(self.k, self.n_train_iter)], "k int, n_train_iter int"
-                ).write.mode("overwrite").parquet(self._meta_path)
+                self._write_meta()
             # the trainer's own final k-row centroid table — persisting
             # recomputed per-cid means instead would drop clusters the
             # final assignment left empty (k centroids is the invariant
@@ -239,7 +203,6 @@ class IvfIndex:
             .partitionBy("ingest_batch", "cid")
             .parquet(self._vectors_path)
         )
-        _fs_touch(self.spark, self._marker_path(batch_id))
 
     # -- probe -----------------------------------------------------------
     def probe_clusters(
@@ -445,32 +408,27 @@ class IvfIndex:
         bit-identical to a from-scratch index built on the same rows:
         the trainer is order-independent (seeds by vec_id, exact
         integer math), which the retrain test pins."""
-        batches = self.committed_batches()
-        if not batches:
-            raise ValueError("cannot retrain an empty index")
-        hi = batches[-1]
         out = IvfIndex(self.spark, new_path, self.k, self.n_train_iter)
-        corpus = self.vectors().select("vec_id", "embedding")
-        if train_mod > 1:
-            sample = corpus.where(
-                F.pmod(F.col("vec_id"), F.lit(train_mod)) == 0
-            )
-            self.spark.createDataFrame(
-                [(self.k, self.n_train_iter)], "k int, n_train_iter int"
-            ).write.mode("overwrite").parquet(out._meta_path)
-            _, cents = kmeans_integer_model(
-                sample,
-                k=self.k,
-                n_iter=self.n_train_iter,
-                vec_col="embedding",
-            )
-            cents.write.mode("overwrite").parquet(out._centroids_path)
-        # append_batch does the rest: trains on the full corpus when no
-        # centroids were pre-seeded above, assigns every vector against
-        # the new quantizer, writes partitioned by (batch, cid), and
-        # creates the commit marker LAST.
-        out.append_batch(corpus, batch_id=hi)
-        return out
+
+        def write(hi: int) -> None:
+            corpus = self.vectors().select("vec_id", "embedding")
+            if train_mod > 1:
+                out._write_meta()
+                _, cents = kmeans_integer_model(
+                    corpus.where(
+                        F.pmod(F.col("vec_id"), F.lit(train_mod)) == 0
+                    ),
+                    k=self.k,
+                    n_iter=self.n_train_iter,
+                    vec_col="embedding",
+                )
+                cents.write.mode("overwrite").parquet(out._centroids_path)
+            # trains on the full corpus when no centroids were
+            # pre-seeded above, then assigns every vector against the
+            # new quantizer
+            out._write_vectors(corpus, hi)
+
+        return self._collapse_into(out, "retrain", write)
 
     def compacted(self, new_path: str) -> "IvfIndex":
         """Rewrite as a consolidated snapshot at ``new_path`` (same
@@ -482,25 +440,21 @@ class IvfIndex:
         swap — never rewrite in place. The snapshot commits under the
         same marker-last protocol, keeping ``has_batch`` true for the
         only batch a restarted stream can re-deliver (the last)."""
-        batches = self.committed_batches()
-        if not batches:
-            raise ValueError("cannot compact an empty index")
-        hi = batches[-1]
         out = IvfIndex(self.spark, new_path, self.k, self.n_train_iter)
-        self.spark.createDataFrame(
-            [(self.k, self.n_train_iter)], "k int, n_train_iter int"
-        ).write.mode("overwrite").parquet(out._meta_path)
-        self.centroids().write.mode("overwrite").parquet(
-            out._centroids_path
-        )
-        (
-            self.vectors()
-            .select("vec_id", "embedding", "cid")
-            .withColumn("ingest_batch", F.lit(hi))
-            .repartition("cid")
-            .write.mode("overwrite")
-            .partitionBy("ingest_batch", "cid")
-            .parquet(out._vectors_path)
-        )
-        _fs_touch(self.spark, out._marker_path(hi))
-        return out
+
+        def write(hi: int) -> None:
+            out._write_meta()
+            self.centroids().write.mode("overwrite").parquet(
+                out._centroids_path
+            )
+            (
+                self.vectors()
+                .select("vec_id", "embedding", "cid")
+                .withColumn("ingest_batch", F.lit(hi))
+                .repartition("cid")
+                .write.mode("overwrite")
+                .partitionBy("ingest_batch", "cid")
+                .parquet(out._vectors_path)
+            )
+
+        return self._collapse_into(out, "compact", write)

@@ -664,16 +664,23 @@ def _jl_project_sums(
     functions don't codegen, so the d_out×d_in fan-out was an
     interpreted per-row loop; r16).
 
-    BIT-IDENTICAL to the Catalyst expressions it replaces: the
-    accumulation is an explicit index-sequential vector fold
+    Input domain: rows whose ``v`` is exactly ``d_in`` FINITE doubles.
+    On that domain the stage is BIT-IDENTICAL to the Catalyst
+    expressions it replaces: the accumulation is an explicit
+    index-sequential vector fold
     (``acc = acc + x_i·sign_i``, the same IEEE-754 add order as
     ``aggregate()``'s left fold with 0.0 init), the normalization
     divides each element by ``sqrt(left-fold Σx_i²)`` exactly as
     ``l2_norm``, and the scale/round/cast stay in the JVM caller, so
     the DuckDB oracle replay is value-unchanged (pinned by the parity
-    test in tests/test_similarity.py). Rows whose vector is NULL or not
-    exactly ``d_in`` long yield all-NULL sums — zip_with's null-padding
-    would null every component for such rows too."""
+    test in tests/test_similarity.py). Every other row yields all-NULL
+    sums: a NULL vector, a wrong length or a NULL element nulls every
+    component on the Catalyst side too (zip_with's null padding, NULL
+    propagation), but a NaN or ±inf component does NOT — Catalyst
+    folds it to NaN/±inf components, which pandas→Arrow would turn
+    into NULL (NaN) or keep (inf) row by row. Non-finite rows are
+    therefore routed to all-NULL explicitly. (With ``normalize``, an
+    all-zero vector divides 0/0 and its NaN sums reach Arrow as NULL.)"""
     import numpy as np
     import pandas as pd
 
@@ -700,6 +707,12 @@ def _jl_project_sums(
                         if o
                     ]
                 )
+                # a NULL element is NaN in the float64 array, so one
+                # finiteness test covers NULL, NaN and ±inf elements
+                finite = np.isfinite(X).all(axis=1)
+                ok[ok] = finite
+                X = X[finite]
+            if ok.any():
                 if normalize:
                     acc = np.zeros(len(X), dtype=np.float64)
                     for i in range(d_in):

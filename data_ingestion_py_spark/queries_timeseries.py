@@ -520,7 +520,7 @@ def q_events_cms_heavy_hitters(spark: SparkSession, sf_dir: str) -> DataFrame:
     salted sketch state, unlike ``approx_count_distinct``/CountMinSketch
     in Spark, which cannot be oracle-checked). Cell construction is
     shared with the STREAMING maintainer (``functions/sketch.py``,
-    ``streaming.pipeline.run_cms_stream``) so the streamed state is
+    ``streaming.pipeline.cms_batch_processor``) so the streamed state is
     cell-identical to a batch rebuild."""
     from data_ingestion_py_spark.functions.sketch import (
         cms_bucket,

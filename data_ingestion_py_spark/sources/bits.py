@@ -48,6 +48,15 @@ import sys
 import zlib
 
 
+#: bound on the rows of one bilevel raster (a CCITT fax image, a JBIG2
+#: region): an all-white fax line costs one bit, so without it a few KB
+#: of input decode to hundreds of thousands of one-array-per-line rows
+MAX_ROWS = 1 << 16
+#: bound on the pixels of one raster (a 600-dpi A4 scan is ~35 Mpx): a
+#: few header bytes must not size a GB buffer
+MAX_PIXELS = 1 << 26
+
+
 class Refused(ValueError):
     """The decoder refuses these bytes: corrupt, unsupported, or over
     one of its size bounds."""

@@ -37,6 +37,7 @@ from bisect import bisect_right
 import numpy as np
 
 from data_ingestion_py_spark.sources.bits import (
+    MAX_ROWS,
     MsbBits,
     Refused,
     none_on_refusal,
@@ -144,6 +145,25 @@ def _read_run(bits: MsbBits, white: bool) -> int:
     raise Refused("too many make-up codes")
 
 
+def _row_limit(rows: int | None) -> int:
+    """Lines to decode at most: ``rows`` when the container states it
+    (refused above ``MAX_ROWS``), else one past ``MAX_ROWS`` so that an
+    over-tall stream reaches ``_stacked``'s refusal."""
+    if rows is not None and rows > MAX_ROWS:
+        raise Refused("fax row count over the bound")
+    return MAX_ROWS + 1 if rows is None else rows
+
+
+def _stacked(out: list[np.ndarray], rows: int | None) -> np.ndarray:
+    """The decoded lines as one raster; refused when their count is
+    over ``MAX_ROWS``, differs from the stated ``rows``, or is zero."""
+    if len(out) > MAX_ROWS or (rows is not None and len(out) != rows):
+        raise Refused("fax row count")
+    if not out:
+        raise Refused("no fax lines")
+    return np.stack(out)
+
+
 @none_on_refusal
 def g3_1d_decode(
     data: bytes,
@@ -164,7 +184,7 @@ def g3_1d_decode(
         raise Refused("fax line width")
     bits = MsbBits(data)
     out: list[np.ndarray] = []
-    max_rows = rows if rows is not None else 1 << 20
+    max_rows = _row_limit(rows)
     while len(out) < max_rows:
         if byte_align:
             bits.align()
@@ -184,11 +204,7 @@ def g3_1d_decode(
             total += run
             white = not white
         out.append(line)
-    if rows is not None and len(out) != rows:
-        raise Refused("fax row count")
-    if not out:
-        raise Refused("no fax lines")
-    return np.stack(out)
+    return _stacked(out, rows)
 
 
 @none_on_refusal
@@ -198,14 +214,15 @@ def g4_decode(
     """Group 4 (T.6, K<0) → (h, columns) uint8 raster, 0=black ink /
     255=white paper. ``rows`` bounds the output (PDF /Rows, TIFF
     ImageLength); decoding also stops at EOFB or stream end. None on
-    any malformed mode code, run overflow, or truncated line."""
+    any malformed mode code, run overflow, or truncated line, and on
+    more than ``bits.MAX_ROWS`` rows, stated or decoded."""
     if columns <= 0 or columns > 1 << 16:
         raise Refused("fax line width")
     bits = MsbBits(data)
     # reference transitions for the imaginary all-white line above
     ref: list[int] = [columns, columns]
     out: list[np.ndarray] = []
-    max_rows = rows if rows is not None else 1 << 20
+    max_rows = _row_limit(rows)
     while len(out) < max_rows:
         # encoder zero-padding to the byte boundary after the last line
         if bits.rest_is_zero():
@@ -216,11 +233,7 @@ def g4_decode(
         cur = _decode_2d_line(bits, ref, columns)
         out.append(_render_line(cur, columns))
         ref = cur + [columns, columns]
-    if rows is not None and len(out) != rows:
-        raise Refused("fax row count")
-    if not out:
-        raise Refused("no fax lines")
-    return np.stack(out)
+    return _stacked(out, rows)
 
 
 def _decode_2d_line(
@@ -350,7 +363,7 @@ def g3_2d_decode(
     bits = MsbBits(data)
     ref: list[int] | None = None  # no reference before the first line
     out: list[np.ndarray] = []
-    max_rows = rows if rows is not None else 1 << 20
+    max_rows = _row_limit(rows)
     while len(out) < max_rows:
         # FILL (zero bits) then EOL; a 1 before 11 zeros is garbage
         if bits.rest_is_zero():
@@ -373,8 +386,4 @@ def g3_2d_decode(
                                   columns)
         out.append(_render_line(cur, columns))
         ref = cur
-    if rows is not None and len(out) != rows:
-        raise Refused("fax row count")
-    if not out:
-        raise Refused("no fax lines")
-    return np.stack(out)
+    return _stacked(out, rows)

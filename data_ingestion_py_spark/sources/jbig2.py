@@ -36,15 +36,17 @@ from __future__ import annotations
 
 import numpy as np
 
-from data_ingestion_py_spark.sources.bits import Refused, none_on_refusal
+from data_ingestion_py_spark.sources.bits import (
+    MAX_PIXELS,
+    MAX_ROWS,
+    Refused,
+    none_on_refusal,
+)
 
 #: segment types (T.88 §7.3)
 _IMMEDIATE_GENERIC = (38, 39)  # immediate / immediate lossless
 _INTERMEDIATE_GENERIC = 36
 _PAGE_INFO = 48
-#: bound on the pixels of one region or of the page buffer (a 600-dpi
-#: A4 scan is ~35 Mpx): a few header bytes must not size a GB raster
-_MAX_PIXELS = 1 << 26
 
 # ---------------------------------------------------------------------
 # MQ arithmetic decoder (T.88 Annex E, software conventions): the
@@ -203,7 +205,7 @@ def generic_region_arith(
     convention — or None for bad geometry / out-of-range params.
     An AT pixel must not reference unseen data (dy > 0, or dy == 0
     with dx >= 0): refused."""
-    if template not in _GB_FIXED or w <= 0 or h <= 0 or w * h > _MAX_PIXELS:
+    if template not in _GB_FIXED or w <= 0 or h <= 0 or w * h > MAX_PIXELS:
         raise Refused("generic region geometry")
     ats = tuple(at) if at is not None else _AT_DEFAULTS[template]
     if len(ats) != len(_AT_DEFAULTS[template]):
@@ -363,8 +365,8 @@ def jbig2_generic_decode(
                 w <= 0
                 or h <= 0
                 or w > 1 << 16
-                or h > 1 << 16
-                or w * h > _MAX_PIXELS
+                or h > MAX_ROWS
+                or w * h > MAX_PIXELS
             ):
                 raise Refused("unsupported or malformed JBIG2 stream")
             if gflags & 1:  # MMR == T.6
@@ -404,7 +406,7 @@ def jbig2_generic_decode(
     for x, y, r in regions:
         if x + r.shape[1] > page_w or y + r.shape[0] > page_h:
             raise Refused("region outside the page")
-    if page_w * page_h > _MAX_PIXELS:
+    if page_w * page_h > MAX_PIXELS:
         raise Refused("page over the pixel bound")
     page = np.full((page_h, page_w), 255, dtype=np.uint8)
     for x, y, r in regions:

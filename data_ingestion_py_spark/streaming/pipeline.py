@@ -13,9 +13,13 @@ Two shapes:
    over an event stream (late data dropped past the watermark); the
    streaming twin of the batch ``events_hourly_rollup`` query.
 
-State between micro-batches lives in the caller-provided holder;
-in production each state table is Parquet/Delta and ``foreachBatch``
-overwrites/merges per batch with the same pure functions.
+Every stream drains through one runner, ``run_stream``, fed by a
+source (``read_command_stream``, or ``parquet_file_stream`` for one
+file per trigger) and a ``*_batch_processor`` foreachBatch handler.
+Each handler states its own re-delivery and restart contract. State
+between micro-batches lives in the caller-provided holder, in a
+durable index (``operators/band_index``, ``operators/ivf_index``), or
+in an append-only parquet log (``_append_log_processor``).
 """
 
 from __future__ import annotations
@@ -64,18 +68,47 @@ class StateHolder:
     last_batch_id: int = -1
 
 
-def read_command_stream(
-    spark: SparkSession, commands_dir: str, max_files_per_trigger: int = 40
-) -> DataFrame:
-    """JSON-file command source.
+#: files per micro-batch of the command stream — the streaming analog
+#: of the reference's queue capacity 40 (data_ingestion.py:37)
+COMMAND_FILES_PER_TRIGGER = 40
 
-    ``maxFilesPerTrigger`` bounds each micro-batch — the streaming analog
-    of the reference's queue capacity 40 (data_ingestion.py:37).
-    """
+
+def read_command_stream(spark: SparkSession, commands_dir: str) -> DataFrame:
+    """JSON-file command source; ``maxFilesPerTrigger`` bounds each
+    micro-batch at ``COMMAND_FILES_PER_TRIGGER``."""
     return (
         spark.readStream.schema(ACTION_SCHEMA)
-        .option("maxFilesPerTrigger", max_files_per_trigger)
+        .option("maxFilesPerTrigger", COMMAND_FILES_PER_TRIGGER)
         .json(commands_dir)
+    )
+
+
+def parquet_file_stream(spark: SparkSession, src_dir: str) -> DataFrame:
+    """Parquet-file source that delivers ONE file per trigger, with the
+    schema of the files already in ``src_dir``. Files land in
+    modification-time order, so a directory written file by file
+    replays as that sequence of micro-batches."""
+    schema = spark.read.parquet(src_dir).schema
+    return (
+        spark.readStream.schema(schema)
+        .option("maxFilesPerTrigger", 1)
+        .parquet(src_dir)
+    )
+
+
+def run_stream(stream: DataFrame, process, checkpoint_dir: str):
+    """Drain ``stream`` through the foreachBatch handler ``process``
+    under ``trigger(availableNow=True)``; returns the started query.
+    Every stream in the package runs here: the checkpoint at
+    ``checkpoint_dir`` makes a restart resume after the last finished
+    batch, and re-delivery of that batch is the handler's to absorb
+    (each ``*_batch_processor`` documents how)."""
+    return (
+        stream.writeStream.foreachBatch(process)
+        .option("checkpointLocation", checkpoint_dir)
+        .outputMode("update")
+        .trigger(availableNow=True)
+        .start()
     )
 
 
@@ -84,7 +117,6 @@ def run_command_stream(
     commands_dir: str,
     holder: StateHolder,
     checkpoint_dir: str,
-    available_now: bool = True,
 ):
     """Drain the command stream via foreachBatch; returns the query.
 
@@ -92,15 +124,11 @@ def run_command_stream(
     and appends the audit table to the holder. Batches must be applied
     in order — foreachBatch guarantees sequential batch_ids.
     """
-    stream = read_command_stream(spark, commands_dir)
-    writer = (
-        stream.writeStream.foreachBatch(command_batch_processor(holder))
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("update")
+    return run_stream(
+        read_command_stream(spark, commands_dir),
+        command_batch_processor(holder),
+        checkpoint_dir,
     )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
 
 
 def command_batch_processor(holder: StateHolder):
@@ -170,18 +198,15 @@ class CurationState:
     last_batch_id: int = -1  # idempotency under re-delivery (see StateHolder)
 
 
-def run_curation_stream(
-    spark: SparkSession,
-    docs_dir: str,
-    holder: CurationState,
-    checkpoint_dir: str,
-    available_now: bool = True,
-):
-    """Incremental corpus curation: each micro-batch of raw documents
-    passes the SAME quality gate as the batch cascade
-    (functions.text.quality_keep_condition), is exact-deduped within
-    the batch (first doc_id wins) AND against every previously accepted
-    batch (anti-join on md5(text)), then appended to the holder.
+def curation_batch_processor(holder: CurationState):
+    """foreachBatch handler for incremental corpus curation: each
+    micro-batch of raw documents passes the SAME quality gate as the
+    batch cascade (functions.text.quality_keep_condition), is
+    exact-deduped within the batch (first doc_id wins) AND against
+    every previously accepted batch (anti-join on md5(text)), then
+    appended to the holder. Run it over ``parquet_file_stream`` with
+    ``run_stream``; the factory form keeps the re-delivery guard
+    unit-testable.
 
     This is the steady-state shape of a crawl pipeline: the corpus
     grows monotonically, re-delivered or re-crawled content is dropped
@@ -196,29 +221,10 @@ def run_curation_stream(
     semantic (an already-published doc must not be retracted when a
     duplicate arrives), but it means an availableNow replay equals the
     batch cascade only when file delivery order is the doc_id order —
-    true for this source (one parquet file per trigger, files named in
-    id order) and pinned by the test; a re-crawl that delivers files
-    out of order diverges from batch mode by design.
+    true for a one-file-per-trigger source whose files are named in id
+    order, and pinned by the test; a re-crawl that delivers files out
+    of order diverges from batch mode by design.
     """
-    schema = spark.read.parquet(docs_dir).schema
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(docs_dir)
-    )
-    writer = (
-        stream.writeStream.foreachBatch(curation_batch_processor(holder))
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("update")
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
-
-
-def curation_batch_processor(holder: CurationState):
-    """foreachBatch handler for ``run_curation_stream`` (factory form so
-    the re-delivery guard is unit-testable)."""
     from data_ingestion_py_spark.functions.text import (
         quality_keep_condition,
         tokens,
@@ -252,142 +258,23 @@ def curation_batch_processor(holder: CurationState):
     return _process
 
 
-@dataclass
-class LshDedupState:
-    """Cross-batch state for streaming NEAR-dedup (the LSH twin of
-    ``CurationState``'s exact-hash set): the MinHash signature table of
-    every admitted document — at cluster scale a parquet/Delta table
-    partitioned by band key, appended per batch — plus the admitted
-    docs and the flagged (near-dup) pairs so far."""
-
-    corpus_sigs: DataFrame | None
-    admitted: list[DataFrame]
-    flagged: list[DataFrame]
-    last_batch_id: int = -1  # idempotency under re-delivery (see StateHolder)
-
-
-def run_incremental_lsh_stream(
-    spark: SparkSession,
-    docs_dir: str,
-    holder: LshDedupState,
-    checkpoint_dir: str,
-    threshold: float = 0.5,
-    available_now: bool = True,
-):
-    """Streaming near-dedup: each micro-batch is MinHash-signed ONCE,
-    self-deduped within the batch (lower doc_id wins a near-dup pair),
-    probed against the admitted corpus via the asymmetric band join
-    (``dedup.incremental_pairs_from_signatures`` — candidates are
-    batch × collisions, never corpus²), and only unmatched docs are
-    admitted; their signatures append to the cross-batch state. This is
-    the steady-state crawl-dedup shape: the expensive signing happens
-    once per document ever, and the corpus-side signature table is the
-    durable index.
-
-    First-delivered-wins across batches (same contract as
-    ``run_curation_stream``): an admitted doc keeps ownership; later
-    near-dups of it are flagged, never retracted.
-    """
-    schema = spark.read.parquet(docs_dir).schema
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(docs_dir)
-    )
-    writer = (
-        stream.writeStream.foreachBatch(lsh_batch_processor(holder, threshold))
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("update")
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
-
-
-def lsh_batch_processor(holder: LshDedupState, threshold: float = 0.5):
-    """foreachBatch handler for ``run_incremental_lsh_stream`` (factory
-    form so the re-delivery guard is unit-testable)."""
-    from data_ingestion_py_spark.operators import dedup
-
-    bands, rows = dedup.lsh_params(threshold)
-
-    def _process(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_id <= holder.last_batch_id:  # re-delivered after restart
-            return
-        holder.last_batch_id = batch_id
-        sigs = _pin(dedup.minhash_signatures(batch_df))
-        # intra-batch: drop the higher id of each near-dup pair
-        intra = dedup.incremental_pairs_from_signatures(
-            sigs, sigs, threshold, bands, rows
-        ).where(F.col("new_doc_id") > F.col("corpus_doc_id"))
-        batch_losers = intra.select(
-            F.col("new_doc_id").alias("doc_id")
-        ).distinct()
-        survivors = sigs.join(batch_losers, "doc_id", "left_anti")
-        if holder.corpus_sigs is None:
-            cross = None
-            fresh = survivors
-        else:
-            cross = dedup.incremental_pairs_from_signatures(
-                survivors, holder.corpus_sigs, threshold, bands, rows
-            )
-            cross = _pin(cross)
-            holder.flagged.append(cross)
-            fresh = survivors.join(
-                cross.select(F.col("new_doc_id").alias("doc_id")).distinct(),
-                "doc_id",
-                "left_anti",
-            )
-        fresh = _pin(fresh)
-        holder.admitted.append(fresh.select("doc_id"))
-        holder.corpus_sigs = (
-            fresh
-            if holder.corpus_sigs is None
-            else _pin(holder.corpus_sigs.unionByName(fresh))
-        )
-
-    return _process
-
-
-def run_durable_lsh_stream(
-    spark: SparkSession,
-    docs_dir: str,
-    index,
-    checkpoint_dir: str,
-    threshold: float = 0.5,
-    available_now: bool = True,
-):
-    """``run_incremental_lsh_stream`` with the dedup state AT REST: the
-    corpus signature index is an ``operators/band_index.BandIndex``
-    (partitioned parquet), not in-session DataFrames. Restarting the
-    process and re-opening the same index path resumes dedup exactly
-    where it stopped — admitted docs, their band rows, and the flagged
-    audit trail all live in the table; nothing is rebuilt or re-signed.
-    Re-delivered batches are skipped by the index's commit marker
-    (``has_batch``), which unlike ``LshDedupState.last_batch_id``
-    survives restarts."""
-    schema = spark.read.parquet(docs_dir).schema
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(docs_dir)
-    )
-    writer = (
-        stream.writeStream.foreachBatch(
-            durable_lsh_batch_processor(index, threshold)
-        )
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("update")
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
-
-
 def durable_lsh_batch_processor(index, threshold: float = 0.5):
-    """foreachBatch handler for ``run_durable_lsh_stream``: sign once,
-    intra-batch self-dedup, pruned probe against the at-rest index,
-    flag matches, admit the rest."""
+    """foreachBatch handler for streaming near-dedup with the state AT
+    REST in an ``operators/band_index.BandIndex``: each micro-batch is
+    MinHash-signed ONCE, self-deduped within the batch (lower doc_id
+    wins a near-dup pair), probed against the admitted corpus through
+    the index's pruned band probe (candidates are batch × collisions,
+    never corpus²), and only unmatched docs are admitted; matches land
+    in the index's flagged audit trail. The expensive signing happens
+    once per document ever.
+
+    First-delivered-wins across batches: an admitted doc keeps
+    ownership; later near-dups of it are flagged, never retracted.
+    Restart-safe: re-opening the same index path + checkpoint resumes
+    dedup exactly where it stopped — admitted docs, their band rows
+    and the flagged pairs all live in the table; nothing is rebuilt or
+    re-signed. A re-delivered batch is skipped by the index's commit
+    marker (``has_batch``), which survives restarts."""
     from data_ingestion_py_spark.operators import dedup
 
     bands, rows = index.bands, index.rows
@@ -418,9 +305,57 @@ def durable_lsh_batch_processor(index, threshold: float = 0.5):
     return _process
 
 
+def durable_ivf_batch_processor(index):
+    """foreachBatch handler that streams (vec_id, embedding) batches
+    into a durable ``operators/ivf_index.IvfIndex`` — the similarity
+    twin of ``durable_lsh_batch_processor``. The first micro-batch
+    trains the coarse quantizer (inside ``append_batch``); every later
+    batch assigns against the frozen centroids and lands under its own
+    commit marker. Restart-safe: re-opening the same index path +
+    checkpoint resumes ingestion exactly, and a re-delivered batch is
+    skipped by ``has_batch``. Queries probe the index CONCURRENTLY
+    with ingestion — each probe reads only committed batch partitions
+    of the probed clusters."""
+
+    def _process(batch_df: DataFrame, batch_id: int) -> None:
+        if index.has_batch(batch_id):  # re-delivered after restart
+            return
+        index.append_batch(
+            batch_df.select("vec_id", "embedding"), batch_id
+        )
+
+    return _process
+
+
 # ---------------------------------------------------------------------------
-# Durable incremental rollup (append-only partial-agg log, merge-on-read)
+# Append-only state logs (rollup partials, sketch cells, shard manifests)
 # ---------------------------------------------------------------------------
+
+
+def _append_log_processor(state_path: str, schema, cells):
+    """foreachBatch handler that appends ``cells(batch_df)``, tagged
+    with the batch id, to the at-rest parquet log at ``state_path``.
+
+    Idempotent under re-delivery: foreachBatch ids are monotonic per
+    checkpoint, so "the log already holds this id or a later one" is
+    the restart-safe guard — the marker IS the data, and the guard
+    stays correct after a compaction rewrites the log under its max
+    batch id. Restart-safe: re-opening the same state path +
+    checkpoint resumes exactly."""
+
+    def _process(batch_df: DataFrame, batch_id: int) -> None:
+        hi = _state_max_batch_id(batch_df.sparkSession, state_path, schema)
+        if hi is not None and batch_id <= hi:
+            return  # re-delivered after restart
+        (
+            cells(batch_df)
+            .withColumn("batch_id", F.lit(batch_id).cast("long"))
+            .write.mode("append")
+            .parquet(state_path)
+        )
+
+    return _process
+
 
 ROLLUP_STATE_SCHEMA = (
     "event_type string, n long, sum_cents long, min_cents long, "
@@ -442,12 +377,23 @@ def _batch_rollup(batch_df: DataFrame) -> DataFrame:
     )
 
 
+def _merge_rollup(log: DataFrame) -> DataFrame:
+    """Combine per-batch partials into one partial per event_type (the
+    same algebraic merge the batch query proves against a full
+    recompute)."""
+    return log.groupBy("event_type").agg(
+        F.sum("n").alias("n"),
+        F.sum("sum_cents").alias("sum_cents"),
+        F.min("min_cents").alias("min_cents"),
+        F.max("max_cents").alias("max_cents"),
+    )
+
+
 def rollup_batch_processor(state_path: str):
     """foreachBatch handler: append THIS batch's algebraic partial
     rollup (count/sum/min/max per event_type, cent-exact) to the
-    at-rest state log, tagged with batch_id. Idempotent under
-    re-delivery: a batch whose partials already landed is skipped
-    (the check survives restarts because the marker IS the data).
+    at-rest state log (``_append_log_processor``'s re-delivery and
+    restart contract).
 
     The state is an append-only partial-agg LOG, not a mutable table —
     the streaming twin of ``events_incremental_rollup``'s merge: each
@@ -455,68 +401,17 @@ def rollup_batch_processor(state_path: str):
     read-modify-write of the full state), and the current rollup is
     merge-on-read (``read_rollup_state``). At scale the log compacts
     periodically by rewriting merged partials under a new batch id
-    range — same algebra, applied lazily."""
-
-    def _process(batch_df: DataFrame, batch_id: int) -> None:
-        spark = batch_df.sparkSession
-        # foreachBatch ids are monotonic per checkpoint, so
-        # "already at or past this id" is the restart-safe guard —
-        # and it stays correct after compaction rewrites the log
-        # under the max compacted id.
-        hi = _state_max_batch_id(spark, state_path, ROLLUP_STATE_SCHEMA)
-        if hi is not None and batch_id <= hi:
-            return  # re-delivered after restart
-        (
-            _batch_rollup(batch_df)
-            .withColumn("batch_id", F.lit(batch_id).cast("long"))
-            .write.mode("append")
-            .parquet(state_path)
-        )
-
-    return _process
+    range — same algebra, applied lazily (``compact_rollup_state``)."""
+    return _append_log_processor(
+        state_path, ROLLUP_STATE_SCHEMA, _batch_rollup
+    )
 
 
 def read_rollup_state(spark: SparkSession, state_path: str) -> DataFrame:
-    """Merge-on-read of the partial-agg log: combine per-batch partials
-    into the current rollup (the same algebraic merge the batch query
-    proves against a full recompute)."""
-    return (
-        spark.read.schema(ROLLUP_STATE_SCHEMA)
-        .parquet(state_path)
-        .groupBy("event_type")
-        .agg(
-            F.sum("n").alias("n"),
-            F.sum("sum_cents").alias("sum_cents"),
-            F.min("min_cents").alias("min_cents"),
-            F.max("max_cents").alias("max_cents"),
-        )
+    """Merge-on-read of the partial-agg log: the current rollup."""
+    return _merge_rollup(
+        spark.read.schema(ROLLUP_STATE_SCHEMA).parquet(state_path)
     )
-
-
-def run_rollup_stream(
-    spark: SparkSession,
-    events_dir: str,
-    state_path: str,
-    checkpoint_dir: str,
-    available_now: bool = True,
-):
-    """events file stream → durable incremental rollup state (see
-    rollup_batch_processor). Restart-safe: re-opening the same state
-    path + checkpoint resumes exactly; re-delivered batches no-op."""
-    schema = spark.read.parquet(events_dir).schema
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(events_dir)
-    )
-    writer = (
-        stream.writeStream.foreachBatch(rollup_batch_processor(state_path))
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("update")
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
 
 
 def compact_rollup_state(
@@ -531,22 +426,12 @@ def compact_rollup_state(
     log = spark.read.schema(ROLLUP_STATE_SCHEMA).parquet(state_path)
     hi = log.agg(F.max("batch_id").alias("m")).collect()[0].m
     (
-        log.groupBy("event_type")
-        .agg(
-            F.sum("n").alias("n"),
-            F.sum("sum_cents").alias("sum_cents"),
-            F.min("min_cents").alias("min_cents"),
-            F.max("max_cents").alias("max_cents"),
-        )
+        _merge_rollup(log)
         .withColumn("batch_id", F.lit(hi).cast("long"))
         .write.mode("overwrite")
         .parquet(out_path)
     )
 
-
-# ---------------------------------------------------------------------------
-# Streaming count-min sketch maintenance
-# ---------------------------------------------------------------------------
 
 CMS_STATE_SCHEMA = "j INT, bucket BIGINT, cell BIGINT, batch_id BIGINT"
 
@@ -554,27 +439,15 @@ CMS_STATE_SCHEMA = "j INT, bucket BIGINT, cell BIGINT, batch_id BIGINT"
 def cms_batch_processor(state_path: str):
     """foreachBatch handler: append THIS batch's count-min cells
     (``functions/sketch.cms_cells`` — the same definition the batch
-    query uses) to the at-rest cell log, tagged with batch_id. The
-    rollup-log pattern applied to a SKETCH: cells merge by sum, so
-    each micro-batch costs one batch-sized fixed-key agg + a ≤ d·w-row
-    append, and the live sketch is merge-on-read
-    (``read_cms_state``). Idempotent under re-delivery via the same
-    monotonic-batch-id guard as ``rollup_batch_processor``."""
+    query uses) to the at-rest cell log. The rollup-log pattern applied
+    to a SKETCH: cells merge by sum, so each micro-batch costs one
+    batch-sized fixed-key agg + a ≤ d·w-row append regardless of event
+    volume, and the live sketch is merge-on-read (``read_cms_state``).
+    At 100 TB the sketch IS the bounded-state answer to "streaming
+    heavy hitters without per-key state"."""
     from data_ingestion_py_spark.functions.sketch import cms_cells
 
-    def _process(batch_df: DataFrame, batch_id: int) -> None:
-        spark = batch_df.sparkSession
-        hi = _state_max_batch_id(spark, state_path, CMS_STATE_SCHEMA)
-        if hi is not None and batch_id <= hi:
-            return  # re-delivered after restart
-        (
-            cms_cells(batch_df)
-            .withColumn("batch_id", F.lit(batch_id).cast("long"))
-            .write.mode("append")
-            .parquet(state_path)
-        )
-
-    return _process
+    return _append_log_processor(state_path, CMS_STATE_SCHEMA, cms_cells)
 
 
 def read_cms_state(spark: SparkSession, state_path: str) -> DataFrame:
@@ -589,70 +462,29 @@ def read_cms_state(spark: SparkSession, state_path: str) -> DataFrame:
     )
 
 
-def run_cms_stream(
-    spark: SparkSession,
-    events_dir: str,
-    state_path: str,
-    checkpoint_dir: str,
-    available_now: bool = True,
-):
-    """events file stream → durable count-min sketch state. Restart-
-    safe: same state path + checkpoint resumes; re-delivered batches
-    no-op. At 100 TB the appended cells are O(d·w) per batch regardless
-    of event volume — the sketch IS the bounded-state answer to
-    "streaming heavy hitters without per-key state"."""
-    schema = spark.read.parquet(events_dir).schema
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(events_dir)
-    )
-    writer = (
-        stream.writeStream.foreachBatch(cms_batch_processor(state_path))
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("update")
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
-
-
-# ---------------------------------------------------------------------------
-# Streaming HyperLogLog maintenance
-# ---------------------------------------------------------------------------
-
 HLL_STATE_SCHEMA = "event_type STRING, reg INT, r INT, batch_id BIGINT"
 
 
 def hll_batch_processor(state_path: str):
     """foreachBatch handler: append THIS batch's per-type HLL register
     table (``functions/sketch.hll_registers`` — the same definition the
-    batch query uses) to the at-rest register log, tagged with
-    batch_id. Registers merge by MAX, which is idempotent — unlike the
-    sum-merged CMS cells a double-appended batch could not corrupt the
-    estimate — but the monotonic-id guard is kept anyway so the log
-    stays bounded and all three state logs share one re-delivery
-    contract. Each micro-batch appends ≤ types·256 rows regardless of
-    event volume."""
+    batch query uses) to the at-rest register log. Registers merge by
+    MAX, which is idempotent — unlike the sum-merged CMS cells a
+    double-appended batch could not corrupt the estimate — but the log
+    keeps the shared re-delivery guard anyway so it stays bounded.
+    Each micro-batch appends ≤ types·256 rows regardless of event
+    volume: the streaming face of ``events_hll_distinct``, live
+    distinct-user cardinality per event type with no per-key store."""
     from data_ingestion_py_spark.functions.sketch import hll_registers
 
-    def _process(batch_df: DataFrame, batch_id: int) -> None:
-        spark = batch_df.sparkSession
-        hi = _state_max_batch_id(spark, state_path, HLL_STATE_SCHEMA)
-        if hi is not None and batch_id <= hi:
-            return  # re-delivered after restart
-        (
-            hll_registers(
-                batch_df.select("event_type", "user_id"),
-                F.col("user_id").cast("string"),
-                ["event_type"],
-            )
-            .withColumn("batch_id", F.lit(batch_id).cast("long"))
-            .write.mode("append")
-            .parquet(state_path)
+    def cells(batch_df: DataFrame) -> DataFrame:
+        return hll_registers(
+            batch_df.select("event_type", "user_id"),
+            F.col("user_id").cast("string"),
+            ["event_type"],
         )
 
-    return _process
+    return _append_log_processor(state_path, HLL_STATE_SCHEMA, cells)
 
 
 def read_hll_state(spark: SparkSession, state_path: str) -> DataFrame:
@@ -667,87 +499,6 @@ def read_hll_state(spark: SparkSession, state_path: str) -> DataFrame:
         .groupBy("event_type", "reg")
         .agg(F.max("r").cast("int").alias("r"))
     )
-
-
-def run_hll_stream(
-    spark: SparkSession,
-    events_dir: str,
-    state_path: str,
-    checkpoint_dir: str,
-    available_now: bool = True,
-):
-    """events file stream → durable HLL register state. Restart-safe:
-    same state path + checkpoint resumes; re-delivered batches no-op.
-    The streaming face of ``events_hll_distinct``: live distinct-user
-    cardinality per event type from O(types·256) ints of state, no
-    per-key store."""
-    schema = spark.read.parquet(events_dir).schema
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(events_dir)
-    )
-    writer = (
-        stream.writeStream.foreachBatch(hll_batch_processor(state_path))
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("update")
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
-
-
-# ---------------------------------------------------------------------------
-# Durable IVF ingestion (ANN corpus state at rest)
-# ---------------------------------------------------------------------------
-
-
-def run_durable_ivf_stream(
-    spark: SparkSession,
-    vectors_dir: str,
-    index,
-    checkpoint_dir: str,
-    available_now: bool = True,
-):
-    """Stream (vec_id, embedding) files into a durable
-    ``operators/ivf_index.IvfIndex`` — the similarity twin of
-    ``run_durable_lsh_stream``. The first micro-batch trains the
-    coarse quantizer (inside ``append_batch``); every later batch
-    assigns against the frozen centroids and lands under its own
-    commit marker, so restarting the process and re-opening the same
-    index path + checkpoint resumes ingestion exactly; re-delivered
-    batches are skipped by ``has_batch``. Queries probe the index
-    CONCURRENTLY with ingestion — each probe reads only committed
-    batch partitions of the probed clusters."""
-    schema = spark.read.parquet(vectors_dir).schema
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(vectors_dir)
-    )
-    writer = (
-        stream.writeStream.foreachBatch(durable_ivf_batch_processor(index))
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("update")
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
-
-
-def durable_ivf_batch_processor(index):
-    """foreachBatch handler for ``run_durable_ivf_stream``: skip
-    re-delivered batches, append the rest (train-on-first-batch and
-    the commit-marker contract live in the index itself)."""
-
-    def _process(batch_df: DataFrame, batch_id: int) -> None:
-        if index.has_batch(batch_id):  # re-delivered after restart
-            return
-        index.append_batch(
-            batch_df.select("vec_id", "embedding"), batch_id
-        )
-
-    return _process
 
 
 def _manifest_walkers():
@@ -784,32 +535,19 @@ def _manifest_state_schema(fmt: str):
 
 def manifest_batch_processor(state_path: str, fmt: str = "tar"):
     """foreachBatch handler for shard-manifest ingestion: run the
-    ``fmt`` walker (tar / zip / tfrecord / warc — the same pure-byte
-    kernels the batch queries use) over THIS batch's shard payloads
-    and append the manifest rows to the at-rest state log, tagged with
-    batch_id. Same idempotency contract as ``rollup_batch_processor``:
-    monotonic foreachBatch ids per checkpoint make "already at or past
-    this id" the restart-safe re-delivery guard, and the marker IS the
-    data. This is the streaming form of a WebDataset / Common Crawl
-    corpus intake — shards arrive continuously, the queryable member
-    index grows incrementally, and nothing re-parses old shards."""
+    ``fmt`` walker (tar / zip / tfrecord / warc / jsonl / zstd / lz4 /
+    ctar / orc — the same pure-byte kernels the batch queries use) over
+    THIS batch's (media_id, payload) shard rows and append the manifest
+    rows to the at-rest state log (``_append_log_processor``'s
+    re-delivery and restart contract). This is the streaming form of a
+    WebDataset / Common Crawl corpus intake — shards arrive
+    continuously, the queryable member index grows incrementally, and
+    nothing re-parses old shards."""
     walkers, _ = _manifest_walkers()
     walk, _schema = walkers[fmt]
-    state_schema = _manifest_state_schema(fmt)
-
-    def _process(batch_df: DataFrame, batch_id: int) -> None:
-        spark = batch_df.sparkSession
-        hi = _state_max_batch_id(spark, state_path, state_schema)
-        if hi is not None and batch_id <= hi:
-            return  # re-delivered after restart
-        (
-            walk(batch_df)
-            .withColumn("batch_id", F.lit(batch_id).cast("long"))
-            .write.mode("append")
-            .parquet(state_path)
-        )
-
-    return _process
+    return _append_log_processor(
+        state_path, _manifest_state_schema(fmt), walk
+    )
 
 
 def read_manifest_state(
@@ -841,33 +579,3 @@ def compact_manifest_state(
         .write.mode("overwrite")
         .parquet(new_path)
     )
-
-
-def run_manifest_stream(
-    spark: SparkSession,
-    shards_dir: str,
-    state_path: str,
-    checkpoint_dir: str,
-    available_now: bool = True,
-    fmt: str = "tar",
-):
-    """shard file stream (media_id, payload parquet) → durable member
-    index for any walker format (see manifest_batch_processor).
-    Restart-safe: re-opening the same state path + checkpoint resumes
-    exactly; re-delivered batches no-op."""
-    schema = spark.read.parquet(shards_dir).schema
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(shards_dir)
-    )
-    writer = (
-        stream.writeStream.foreachBatch(
-            manifest_batch_processor(state_path, fmt)
-        )
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("update")
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()

@@ -12,6 +12,7 @@ from __future__ import annotations
 
 import time
 
+import pytest
 from pyspark.sql import functions as F
 
 from data_ingestion_py_spark.io import load_table
@@ -20,7 +21,8 @@ from data_ingestion_py_spark.operators.band_index import BandIndex
 from data_ingestion_py_spark.plans import explain as E
 from data_ingestion_py_spark.streaming.pipeline import (
     durable_lsh_batch_processor,
-    run_durable_lsh_stream,
+    parquet_file_stream,
+    run_stream,
 )
 from tests.conftest import SF_SMOKE
 
@@ -72,7 +74,11 @@ def test_index_restart_resumes_and_skips_redelivery(spark, tmp_path):
 
     # ---- lifetime 1: admit batch 1 ----
     idx1 = BandIndex(spark, idx_path)
-    q = run_durable_lsh_stream(spark, src, idx1, ckpt)
+    q = run_stream(
+        parquet_file_stream(spark, src),
+        durable_lsh_batch_processor(idx1),
+        ckpt,
+    )
     q.awaitTermination(240)
     admitted_1 = {r.doc_id for r in idx1.admitted_ids().collect()}
     assert admitted_1  # something got admitted
@@ -88,7 +94,11 @@ def test_index_restart_resumes_and_skips_redelivery(spark, tmp_path):
     idx2 = BandIndex(spark, idx_path)  # re-open: meta restores params
     assert (idx2.bands, idx2.rows) == (idx1.bands, idx1.rows)
     assert idx2.has_batch(0)  # commit marker survived the "restart"
-    q = run_durable_lsh_stream(spark, src, idx2, ckpt)
+    q = run_stream(
+        parquet_file_stream(spark, src),
+        durable_lsh_batch_processor(idx2),
+        ckpt,
+    )
     q.awaitTermination(240)
 
     flagged_new = {r.new_doc_id for r in idx2.flagged().collect()}
@@ -106,51 +116,6 @@ def test_index_restart_resumes_and_skips_redelivery(spark, tmp_path):
     proc = durable_lsh_batch_processor(idx2, threshold=0.5)
     proc(b1, 0)  # same batch_id as lifetime 1
     assert idx2.admitted_ids().count() == n_before
-
-
-def test_legacy_index_without_doc_bucket_probes_and_migrates(spark, tmp_path):
-    """An at-rest index written BEFORE the doc_bucket partition column
-    existed (sigs/ partitioned by ingest_batch only) must still probe
-    correctly — unpruned fallback — and ``compacted()`` must migrate it
-    to the pruned layout with identical results."""
-    import shutil
-
-    idx = BandIndex(spark, str(tmp_path / "idx"))
-    corpus = _docs(spark).where(F.col("doc_id") < 300)
-    idx.append_batch(dedup.minhash_signatures(corpus), batch_id=0)
-
-    # Fabricate the legacy layout: same bands/meta, sigs/ rewritten
-    # without doc_bucket, partitioned by ingest_batch only.
-    legacy_root = tmp_path / "idx_legacy"
-    shutil.copytree(tmp_path / "idx", legacy_root)
-    shutil.rmtree(legacy_root / "sigs")
-    spark.read.parquet(str(tmp_path / "idx" / "sigs")).drop(
-        "doc_bucket"
-    ).write.partitionBy("ingest_batch").parquet(str(legacy_root / "sigs"))
-
-    legacy = BandIndex(spark, str(legacy_root))
-    assert "doc_bucket" not in legacy.corpus_sigs().columns
-
-    probe_batch = dedup.minhash_signatures(
-        _near_dups_of(corpus.where(F.col("doc_id") < 100))
-    )
-    want = {
-        (r.new_doc_id, r.corpus_doc_id)
-        for r in idx.probe(probe_batch, 0.5).collect()
-    }
-    got = {
-        (r.new_doc_id, r.corpus_doc_id)
-        for r in legacy.probe(probe_batch, 0.5).collect()
-    }
-    assert got == want and want  # unpruned fallback, same pairs
-
-    migrated = legacy.compacted(str(tmp_path / "idx_migrated"))
-    assert "doc_bucket" in migrated.corpus_sigs().columns
-    got_m = {
-        (r.new_doc_id, r.corpus_doc_id)
-        for r in migrated.probe(probe_batch, 0.5).collect()
-    }
-    assert got_m == want
 
 
 def test_compaction_preserves_dedup_state(spark, tmp_path):
@@ -251,49 +216,14 @@ def test_torn_batch_is_invisible_and_repaired(spark, tmp_path):
     assert any(c >= 150 for _, c in pairs_repaired)
 
 
-def test_premarker_index_upgrades_on_append(spark, tmp_path):
-    """An index written by the pre-marker layout (no markers/, meta
-    without marker_protocol) must read correctly under legacy
-    semantics, and its next append must backfill markers + upgrade
-    meta so the crash-safe contract applies from then on."""
-    import shutil
-
-    path = str(tmp_path / "idx")
-    idx = BandIndex(spark, path)
-    docs = _docs(spark)
-    for bid, lo, hi in ((0, 0, 150), (1, 150, 300)):
-        idx.append_batch(
-            dedup.minhash_signatures(
-                docs.where((F.col("doc_id") >= lo) & (F.col("doc_id") < hi))
-            ),
-            batch_id=bid,
-        )
-    n2 = idx.admitted_ids().count()
-
-    # fabricate the pre-marker layout: drop markers/, strip the meta field
-    legacy_root = str(tmp_path / "idx_legacy")
-    shutil.copytree(path, legacy_root)
-    shutil.rmtree(legacy_root + "/markers")
-    meta = spark.read.parquet(path + "/meta").drop("marker_protocol")
-    shutil.rmtree(legacy_root + "/meta")
-    meta.write.parquet(legacy_root + "/meta")
-
-    legacy = BandIndex(spark, legacy_root)
-    assert not legacy.marker_proto
-    assert legacy.has_batch(0) and legacy.has_batch(1)  # dir fallback
-    assert legacy.committed_batches() == [0, 1]
-    assert legacy.admitted_ids().count() == n2
-
-    # the upgrade: next append backfills markers and flips the meta
-    legacy.append_batch(
-        dedup.minhash_signatures(
-            docs.where((F.col("doc_id") >= 300) & (F.col("doc_id") < 450))
-        ),
-        batch_id=2,
-    )
-    assert legacy.marker_proto
-    assert legacy.committed_batches() == [0, 1, 2]
-    reopened = BandIndex(spark, legacy_root)
-    assert reopened.marker_proto  # sticky across process lifetimes
-    assert reopened.committed_batches() == [0, 1, 2]
-    assert reopened.admitted_ids().count() > n2
+def test_premarker_index_is_refused(spark, tmp_path):
+    """An index whose meta row lacks ``marker_protocol`` predates the
+    marker commit protocol (and the doc_bucket layout): opening it
+    raises a ValueError naming its path instead of reading it."""
+    path = str(tmp_path / "idx_legacy")
+    spark.createDataFrame(
+        [(dedup.BANDS, dedup.ROWS_PER_BAND, 64)],
+        "bands int, rows int, n_buckets int",
+    ).write.parquet(path + "/meta")
+    with pytest.raises(ValueError, match="idx_legacy"):
+        BandIndex(spark, path)

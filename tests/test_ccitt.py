@@ -201,6 +201,36 @@ def test_g4_decode_without_rows_uses_eofb():
     assert got is not None and got.shape == (9, 40) and (got == img).all()
 
 
+def test_fax_decoders_refuse_over_the_row_bound():
+    """More than 2^16 rows refuses, stated or decoded. An all-white G4
+    line costs one bit, so 16 KB of 0xFF stating 2^17 rows would
+    otherwise decode 2^17 one-pixel lines, one array each, before the
+    stack; a stated count over the bound refuses before decoding."""
+    import tracemalloc
+
+    from data_ingestion_py_spark.sources.ccitt import (
+        g3_1d_decode,
+        g3_2d_decode,
+    )
+
+    tracemalloc.start()
+    try:
+        got = g4_decode(b"\xff" * 16384, 1, 1 << 17)
+        _, peak = tracemalloc.get_traced_memory()
+    finally:
+        tracemalloc.stop()
+    assert got is None
+    assert peak < 1 << 20
+    assert g3_1d_decode(b"\xff" * 16, 8, 1 << 17) is None
+    assert g3_2d_decode(b"\xff" * 16, 8, 1 << 17) is None
+    # no stated rows: the stream itself runs past the bound
+    assert g4_decode(b"\xff" * ((1 << 16) // 8 + 1), 1, None) is None
+    assert g4_decode(b"\xff" * ((1 << 16) // 8), 1, None).shape == (
+        1 << 16,
+        1,
+    )
+
+
 def test_g4_glyph_page_reads_through_ocr_matcher():
     """The scanned-document composition: a bitmap-font glyph page G4
     round-trips and glyph-matches — fax-scan bilevel is exactly the

@@ -323,13 +323,34 @@ def test_jl_project_sums_bit_exact_vs_catalyst(spark):
     got_n = {r.vec_id: list(r.p) for r in numpy_comps(emb, True).collect()}
     assert got_n == want_n
 
-    # degenerate rows: NULL vector / wrong length → all-NULL components
-    # (zip_with's null padding nulls every fold)
+    # degenerate rows: NULL vector / wrong length / NULL element →
+    # all-NULL components (zip_with's null padding and NULL propagation
+    # null every fold); NaN / ±inf elements are outside the bit-exact
+    # domain and are routed to all-NULL too, in both variants
     weird = spark.createDataFrame(
-        [(1, None), (2, [1.0] * (d_in - 3)), (3, [0.5] * d_in)],
+        [
+            (1, None),
+            (2, [1.0] * (d_in - 3)),
+            (3, [0.5] * d_in),
+            (4, [1.0, float("nan")] + [0.5] * (d_in - 2)),
+            (5, [float("inf")] + [0.5] * (d_in - 1)),
+            (6, [0.5] * (d_in - 1) + [float("-inf")]),
+            (7, [0.5, None] + [0.5] * (d_in - 2)),
+        ],
         "vec_id bigint, v array<double>",
     )
-    rows = {r.vec_id: r.p for r in numpy_comps(weird, False).collect()}
-    assert list(rows[1]) == [None] * d_out
-    assert list(rows[2]) == [None] * d_out
-    assert all(x is not None for x in rows[3])
+    for normalize in (False, True):
+        rows = {
+            r.vec_id: r.p for r in numpy_comps(weird, normalize).collect()
+        }
+        for vid in (1, 2, 4, 5, 6, 7):
+            assert list(rows[vid]) == [None] * d_out, (normalize, vid)
+        assert all(x is not None for x in rows[3])
+    # the NULL-element row is NULL on the Catalyst side too
+    cat = {
+        r.vec_id: r.p
+        for r in weird.where(F.col("vec_id") == 7)
+        .select("vec_id", catalyst_comps(F.col("v")).alias("p"))
+        .collect()
+    }
+    assert list(cat[7]) == [None] * d_out

@@ -366,7 +366,9 @@ def test_incremental_curation_stream_matches_batch(spark, tmp_path):
     )
     from data_ingestion_py_spark.streaming.pipeline import (
         CurationState,
-        run_curation_stream,
+        curation_batch_processor,
+        parquet_file_stream,
+        run_stream,
     )
 
     docs = load_table(spark, SF_SMOKE, "documents").select("doc_id", "text")
@@ -387,7 +389,11 @@ def test_incremental_curation_stream_matches_batch(spark, tmp_path):
         seen_hashes=spark.createDataFrame([], "content_hash string"),
         accepted=[],
     )
-    q = run_curation_stream(spark, src, holder, str(tmp_path / "ckpt"))
+    q = run_stream(
+        parquet_file_stream(spark, src),
+        curation_batch_processor(holder),
+        str(tmp_path / "ckpt"),
+    )
     q.awaitTermination(240)
 
     got = {
@@ -417,12 +423,15 @@ def test_incremental_lsh_dedup_stream(spark, tmp_path):
     the first token dropped (near-dups, NOT exact dups — invisible to a
     content-hash gate) plus genuinely new docs. The stream must flag
     each near-dup against its batch-1 source, admit only the new docs,
-    and never re-sign the corpus (state carries signatures forward)."""
+    and never re-sign the corpus (the at-rest band index carries
+    signatures forward)."""
     import time
 
+    from data_ingestion_py_spark.operators.band_index import BandIndex
     from data_ingestion_py_spark.streaming.pipeline import (
-        LshDedupState,
-        run_incremental_lsh_stream,
+        durable_lsh_batch_processor,
+        parquet_file_stream,
+        run_stream,
     )
 
     docs = load_table(spark, SF_SMOKE, "documents").select("doc_id", "text")
@@ -438,23 +447,19 @@ def test_incremental_lsh_dedup_stream(spark, tmp_path):
         b.coalesce(1).write.mode("append").parquet(src)
         time.sleep(1.1)  # distinct file mtimes => stable batch order
 
-    holder = LshDedupState(corpus_sigs=None, admitted=[], flagged=[])
-    q = run_incremental_lsh_stream(
-        spark, src, holder, str(tmp_path / "ckpt_lsh")
+    index = BandIndex(spark, str(tmp_path / "idx"))
+    q = run_stream(
+        parquet_file_stream(spark, src),
+        durable_lsh_batch_processor(index),
+        str(tmp_path / "ckpt_lsh"),
     )
     q.awaitTermination(240)
 
-    admitted = {
-        r.doc_id for acc in holder.admitted for r in acc.collect()
-    }
-    flagged_new = {
-        r.new_doc_id for fl in holder.flagged for r in fl.collect()
-    }
+    admitted = {r.doc_id for r in index.admitted_ids().collect()}
     flagged_pairs = {
-        (r.new_doc_id, r.corpus_doc_id)
-        for fl in holder.flagged
-        for r in fl.collect()
+        (r.new_doc_id, r.corpus_doc_id) for r in index.flagged().collect()
     }
+    flagged_new = {a for a, _ in flagged_pairs}
 
     near_ids = {r.doc_id for r in near.collect()}
     # ≥90% of near-dup re-deliveries flagged (LSH recall at the planted
@@ -515,12 +520,12 @@ def test_session_window_touch_merge(spark):
 def test_foreach_batch_redelivery_is_idempotent(spark):
     """foreachBatch may re-deliver the last batch after a restart; the
     processors must skip batch_ids they already applied instead of
-    duplicating holder state (ADVICE r5)."""
+    duplicating holder state (ADVICE r5). The durable band index's
+    re-delivery guard is pinned by
+    ``tests/test_band_index.py::test_index_restart_resumes_and_skips_redelivery``."""
     from data_ingestion_py_spark.streaming.pipeline import (
         CurationState,
-        LshDedupState,
         curation_batch_processor,
-        lsh_batch_processor,
     )
 
     docs = load_table(spark, SF_SMOKE, "documents").select("doc_id", "text")
@@ -541,17 +546,6 @@ def test_foreach_batch_redelivery_is_idempotent(spark):
     proc(batch.limit(0), 1)  # next batch still applies
     assert len(cur.accepted) == n_accepted + 1
 
-    # LSH: re-delivering batch 0 must not re-sign or re-admit
-    lsh = LshDedupState(corpus_sigs=None, admitted=[], flagged=[])
-    lproc = lsh_batch_processor(lsh, threshold=0.5)
-    lproc(batch, 0)
-    n_admitted = len(lsh.admitted)
-    n_corpus = lsh.corpus_sigs.count()
-    lproc(batch, 0)  # re-delivery: without the guard this would flag
-    # every doc against its own first delivery and duplicate state
-    assert len(lsh.admitted) == n_admitted
-    assert lsh.corpus_sigs.count() == n_corpus
-
 
 def test_durable_rollup_stream_matches_batch_and_survives_restart(
     spark, tmp_path
@@ -561,9 +555,10 @@ def test_durable_rollup_stream_matches_batch_and_survives_restart(
     re-delivered batches must not double-count."""
     from data_ingestion_py_spark.streaming.pipeline import (
         _batch_rollup,
+        parquet_file_stream,
         read_rollup_state,
         rollup_batch_processor,
-        run_rollup_stream,
+        run_stream,
     )
 
     events = spark.read.parquet("/root/testdata/sf0.001/events.parquet")
@@ -575,7 +570,11 @@ def test_durable_rollup_stream_matches_batch_and_survives_restart(
     half1.coalesce(1).write.mode("append").parquet(src)
 
     # lifetime 1
-    q = run_rollup_stream(spark, src, state, ckpt)
+    q = run_stream(
+        parquet_file_stream(spark, src),
+        rollup_batch_processor(state),
+        ckpt,
+    )
     q.awaitTermination(240)
     got1 = {
         r.event_type: (r.n, r.sum_cents, r.min_cents, r.max_cents)
@@ -593,7 +592,11 @@ def test_durable_rollup_stream_matches_batch_and_survives_restart(
     _t.sleep(1.1)  # distinct mtime => stable file-batch order
     half2 = events.where(F.col("event_id") % 2 == 1)
     half2.coalesce(1).write.mode("append").parquet(src)
-    q = run_rollup_stream(spark, src, state, ckpt)
+    q = run_stream(
+        parquet_file_stream(spark, src),
+        rollup_batch_processor(state),
+        ckpt,
+    )
     q.awaitTermination(240)
     got2 = {
         r.event_type: (r.n, r.sum_cents, r.min_cents, r.max_cents)
@@ -710,8 +713,9 @@ def test_durable_cms_stream_matches_batch_and_survives_restart(
     from data_ingestion_py_spark.functions.sketch import cms_cells
     from data_ingestion_py_spark.streaming.pipeline import (
         cms_batch_processor,
+        parquet_file_stream,
         read_cms_state,
-        run_cms_stream,
+        run_stream,
     )
 
     events = spark.read.parquet("/root/testdata/sf0.001/events.parquet")
@@ -722,7 +726,11 @@ def test_durable_cms_stream_matches_batch_and_survives_restart(
     half1 = events.where(F.col("event_id") % 2 == 0)
     half1.coalesce(1).write.mode("append").parquet(src)
 
-    q = run_cms_stream(spark, src, state, ckpt)
+    q = run_stream(
+        parquet_file_stream(spark, src),
+        cms_batch_processor(state),
+        ckpt,
+    )
     q.awaitTermination(240)
     got1 = {
         (r.j, r.bucket): r.cell for r in read_cms_state(spark, state).collect()
@@ -735,7 +743,11 @@ def test_durable_cms_stream_matches_batch_and_survives_restart(
     _t.sleep(1.1)  # distinct mtime => stable file-batch order
     half2 = events.where(F.col("event_id") % 2 == 1)
     half2.coalesce(1).write.mode("append").parquet(src)
-    q = run_cms_stream(spark, src, state, ckpt)
+    q = run_stream(
+        parquet_file_stream(spark, src),
+        cms_batch_processor(state),
+        ckpt,
+    )
     q.awaitTermination(240)
     got2 = {
         (r.j, r.bucket): r.cell for r in read_cms_state(spark, state).collect()
@@ -859,8 +871,9 @@ def test_durable_hll_stream_matches_batch_and_survives_restart(
     from data_ingestion_py_spark.functions.sketch import hll_registers
     from data_ingestion_py_spark.streaming.pipeline import (
         hll_batch_processor,
+        parquet_file_stream,
         read_hll_state,
-        run_hll_stream,
+        run_stream,
     )
 
     events = spark.read.parquet("/root/testdata/sf0.001/events.parquet")
@@ -881,7 +894,11 @@ def test_durable_hll_stream_matches_batch_and_survives_restart(
     half1 = events.where(F.col("event_id") % 2 == 0)
     half1.coalesce(1).write.mode("append").parquet(src)
 
-    q = run_hll_stream(spark, src, state, ckpt)
+    q = run_stream(
+        parquet_file_stream(spark, src),
+        hll_batch_processor(state),
+        ckpt,
+    )
     q.awaitTermination(240)
     got1 = {
         (r.event_type, r.reg): r.r
@@ -894,7 +911,11 @@ def test_durable_hll_stream_matches_batch_and_survives_restart(
     _t.sleep(1.1)  # distinct mtime => stable file-batch order
     half2 = events.where(F.col("event_id") % 2 == 1)
     half2.coalesce(1).write.mode("append").parquet(src)
-    q = run_hll_stream(spark, src, state, ckpt)
+    q = run_stream(
+        parquet_file_stream(spark, src),
+        hll_batch_processor(state),
+        ckpt,
+    )
     q.awaitTermination(240)
     got2 = {
         (r.event_type, r.reg): r.r
@@ -921,7 +942,8 @@ def test_durable_ivf_stream_resumes_and_skips_redelivery(spark, tmp_path):
     from data_ingestion_py_spark.operators.ivf_index import IvfIndex
     from data_ingestion_py_spark.streaming.pipeline import (
         durable_ivf_batch_processor,
-        run_durable_ivf_stream,
+        parquet_file_stream,
+        run_stream,
     )
 
     emb = spark.read.parquet(
@@ -936,7 +958,11 @@ def test_durable_ivf_stream_resumes_and_skips_redelivery(spark, tmp_path):
 
     # lifetime 1 (trains the quantizer on the first micro-batch)
     idx1 = IvfIndex(spark, path, k=4)
-    q = run_durable_ivf_stream(spark, src, idx1, ckpt)
+    q = run_stream(
+        parquet_file_stream(spark, src),
+        durable_ivf_batch_processor(idx1),
+        ckpt,
+    )
     q.awaitTermination(240)
     assert idx1.vectors().count() == half1.count()
     cents1 = {r.cid: tuple(r.cvec) for r in idx1.centroids().collect()}
@@ -950,7 +976,11 @@ def test_durable_ivf_stream_resumes_and_skips_redelivery(spark, tmp_path):
     half2.coalesce(1).write.mode("append").parquet(src)
     idx2 = IvfIndex(spark, path)
     assert idx2.k == 4  # restored from meta, not the default
-    q = run_durable_ivf_stream(spark, src, idx2, ckpt)
+    q = run_stream(
+        parquet_file_stream(spark, src),
+        durable_ivf_batch_processor(idx2),
+        ckpt,
+    )
     q.awaitTermination(240)
     assert idx2.vectors().count() == emb.count()
     cents2 = {r.cid: tuple(r.cvec) for r in idx2.centroids().collect()}
@@ -980,8 +1010,9 @@ def test_manifest_stream_matches_batch_and_resumes(spark, tmp_path):
     from data_ingestion_py_spark.sources.archive import tar_manifest
     from data_ingestion_py_spark.streaming.pipeline import (
         manifest_batch_processor,
+        parquet_file_stream,
         read_manifest_state,
-        run_manifest_stream,
+        run_stream,
     )
 
     def shard(names_and_data):
@@ -1003,7 +1034,11 @@ def test_manifest_stream_matches_batch_and_resumes(spark, tmp_path):
     df1 = spark.createDataFrame(rows1, "media_id long, payload binary")
     df1.coalesce(1).write.parquet(shards_dir)
 
-    q = run_manifest_stream(spark, shards_dir, state, ckpt)
+    q = run_stream(
+        parquet_file_stream(spark, shards_dir),
+        manifest_batch_processor(state),
+        ckpt,
+    )
     assert q.awaitTermination(300)
 
     def canon(df):
@@ -1025,7 +1060,11 @@ def test_manifest_stream_matches_batch_and_resumes(spark, tmp_path):
     spark.createDataFrame(rows2, "media_id long, payload binary").coalesce(
         1
     ).write.mode("append").parquet(shards_dir)
-    q2 = run_manifest_stream(spark, shards_dir, state, ckpt)
+    q2 = run_stream(
+        parquet_file_stream(spark, shards_dir),
+        manifest_batch_processor(state),
+        ckpt,
+    )
     assert q2.awaitTermination(300)
     got2 = canon(read_manifest_state(spark, state))
     assert len(got2) == 4
@@ -1044,8 +1083,10 @@ def test_manifest_stream_warc_and_compaction(spark, tmp_path):
     from data_ingestion_py_spark.sources.web import warc_manifest
     from data_ingestion_py_spark.streaming.pipeline import (
         compact_manifest_state,
+        manifest_batch_processor,
+        parquet_file_stream,
         read_manifest_state,
-        run_manifest_stream,
+        run_stream,
     )
 
     def warc(recs):
@@ -1068,7 +1109,11 @@ def test_manifest_stream_warc_and_compaction(spark, tmp_path):
     df = spark.createDataFrame(rows, "media_id long, payload binary")
     df.coalesce(1).write.parquet(shards_dir)
 
-    q = run_manifest_stream(spark, shards_dir, state, ckpt, fmt="warc")
+    q = run_stream(
+        parquet_file_stream(spark, shards_dir),
+        manifest_batch_processor(state, fmt="warc"),
+        ckpt,
+    )
     assert q.awaitTermination(300)
 
     def canon(d):
@@ -1112,8 +1157,9 @@ def test_manifest_stream_jsonl_zst_corpus_intake(spark, tmp_path):
     )
     from data_ingestion_py_spark.streaming.pipeline import (
         manifest_batch_processor,
+        parquet_file_stream,
         read_manifest_state,
-        run_manifest_stream,
+        run_stream,
     )
 
     def shard(recs):
@@ -1133,7 +1179,11 @@ def test_manifest_stream_jsonl_zst_corpus_intake(spark, tmp_path):
 
     state_j = str(tmp_path / "state_jsonl")
     ckpt_j = str(tmp_path / "ckpt_jsonl")
-    q = run_manifest_stream(spark, shards_dir, state_j, ckpt_j, fmt="jsonl")
+    q = run_stream(
+        parquet_file_stream(spark, shards_dir),
+        manifest_batch_processor(state_j, fmt="jsonl"),
+        ckpt_j,
+    )
     assert q.awaitTermination(300)
 
     def canon(df):
@@ -1154,7 +1204,11 @@ def test_manifest_stream_jsonl_zst_corpus_intake(spark, tmp_path):
     spark.createDataFrame(rows2, "media_id long, payload binary").coalesce(
         1
     ).write.mode("append").parquet(shards_dir)
-    q2 = run_manifest_stream(spark, shards_dir, state_j, ckpt_j, fmt="jsonl")
+    q2 = run_stream(
+        parquet_file_stream(spark, shards_dir),
+        manifest_batch_processor(state_j, fmt="jsonl"),
+        ckpt_j,
+    )
     assert q2.awaitTermination(300)
     got2 = canon(read_manifest_state(spark, state_j, fmt="jsonl"))
     assert len(got2) == 4 and got2 == canon(
@@ -1168,7 +1222,11 @@ def test_manifest_stream_jsonl_zst_corpus_intake(spark, tmp_path):
     # the zstd frame split plan streams through the same machinery
     state_z = str(tmp_path / "state_zstd")
     ckpt_z = str(tmp_path / "ckpt_zstd")
-    qz = run_manifest_stream(spark, shards_dir, state_z, ckpt_z, fmt="zstd")
+    qz = run_stream(
+        parquet_file_stream(spark, shards_dir),
+        manifest_batch_processor(state_z, fmt="zstd"),
+        ckpt_z,
+    )
     assert qz.awaitTermination(300)
     gz = sorted(
         (r.media_id, r.frame_index, r.comp_size, r.content_size)
