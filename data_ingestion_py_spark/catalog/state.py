@@ -18,6 +18,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from data_ingestion_py_spark.io import read_parquet
 from data_ingestion_py_spark.operators.snippetize import snippetize
 
 CATEGORY_SCHEMA = T.StructType(
@@ -114,7 +115,7 @@ class CatalogState:
         for name in ("categories", "documents", "pages"):
             p = f"{path}/{name}"
             getattr(self, name).write.mode("overwrite").parquet(p)
-            tables[name] = spark.read.parquet(p)
+            tables[name] = read_parquet(spark, p)
         return CatalogState(**tables)
 
     def snippets(self) -> DataFrame:

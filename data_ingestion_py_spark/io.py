@@ -34,18 +34,18 @@ def _footer_schema(spark: SparkSession, path: str):
     """(spark_schema | None, nano_ts_columns) from one parquet file's
     footer, read with pyarrow (no Spark job).
 
-    ``spark_schema`` is the StructType ``spark.read.parquet(path)``
-    would infer, passed back via ``spark.read.schema`` so the read runs
-    no schema-inference job. Types map through pyspark's own
+    ``spark_schema`` is the StructType Spark's inference would derive
+    from this footer (``read_parquet`` passes it back through
+    ``spark.read.schema``, for a single file and for the file Spark
+    infers a directory's schema from). Types map through pyspark's own
     ``from_arrow_type``; nested nullability may come out stricter than
     inference, which does not matter because Spark reads a file source
     with its schema made nullable. It is ``None`` — fall back to
-    inference — for a directory (partition discovery, multi-file merge),
-    an unreadable footer, a type ``from_arrow_type`` rejects (unsigned
-    ints, ...), or a leaf whose Spark reading depends on session
-    settings or that Spark reads differently: INT96 timestamps, binary
-    (``binaryAsString``), TIME, and timestamps nested below the top
-    level.
+    inference — for an unreadable footer (a torn file), a
+    type ``from_arrow_type`` rejects (unsigned ints, ...), or a leaf
+    whose Spark reading depends on session settings or that Spark reads
+    differently: INT96 timestamps, binary (``binaryAsString``), TIME,
+    and timestamps nested below the top level.
 
     What this module owns is the top-level INT64 timestamp rule:
     ``isAdjustedToUTC`` reads as TIMESTAMP, otherwise as TIMESTAMP_NTZ
@@ -97,12 +97,79 @@ def _footer_schema(spark: SparkSession, path: str):
     return T.StructType(fields), nano
 
 
-def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    """Load one fixture table. Plain parquet scan → full pushdown/pruning.
+_SUMMARY_FILES = ("_metadata", "_common_metadata")
 
-    A single-file table is read with the schema derived from its
-    parquet footer (``_footer_schema``), so loading runs no Spark job;
-    a directory keeps Spark's schema inference (partition discovery).
+
+def _listed(name: str) -> bool:
+    """Spark's listing filter (``HadoopFSUtils.shouldFilterOutPathName``):
+    names starting with ``_`` (unless they contain ``=``) or ``.``, and
+    names ending in ``._COPYING_``, are not listed — except names
+    starting with a summary file's name."""
+    hidden = (
+        (name.startswith("_") and "=" not in name)
+        or name.startswith(".")
+        or name.endswith("._COPYING_")
+    )
+    return not hidden or name.startswith(_SUMMARY_FILES)
+
+
+def _schema_file(spark: SparkSession, path: str) -> tuple[str | None, set]:
+    """The local file whose footer Spark's inference reads for ``path``
+    (``None``: leave the schema to Spark), and the lower-cased partition
+    column names found in the directory names below ``path``.
+
+    A file is itself. For a directory, Spark 4.1's
+    ``ParquetUtils.inferSchema`` with ``mergeSchema`` off reads a
+    ``_common_metadata``, else a ``_metadata`` summary file, else the
+    first listed data file in full-path string order (``splitFiles``
+    sorts the leaves by ``getPath.toString``). The data files are every
+    leaf of a partitioned directory, and only the files directly under
+    an unpartitioned one (``PartitioningAwareFileIndex.allFiles``).
+
+    The walk lists what Spark lists (``_listed``) and defers to Spark
+    when the read would not come from that first data file: a summary
+    file exists, ``spark.sql.parquet.mergeSchema`` is on, a streaming
+    sink's ``_spark_metadata`` log names the files, or there is no data
+    file (so the error stays Spark's own). A glob pattern, a non-local
+    path and a missing path also stay with Spark."""
+    if any(c in path for c in "*?[]{}\\"):
+        return None, set()
+    if os.path.isfile(path):
+        return path, set()
+    if (
+        not os.path.isdir(path)
+        or os.path.isdir(os.path.join(path, "_spark_metadata"))
+        or spark.conf.get("spark.sql.parquet.mergeSchema", "false").lower()
+        == "true"
+    ):
+        return None, set()
+    top, files, parts = [], [], set()
+    stack = [path]
+    while stack:
+        d = stack.pop()
+        for e in os.scandir(d):
+            if not _listed(e.name):
+                continue
+            if e.name in _SUMMARY_FILES:
+                return None, set()
+            if e.is_dir():
+                if "=" in e.name:
+                    parts.add(e.name.split("=", 1)[0].lower())
+                stack.append(e.path)
+            else:
+                (top if d == path else files).append(e.path)
+    files = files + top if parts else top
+    return (min(files) if files else None), parts
+
+
+def read_parquet(spark: SparkSession, path: str) -> DataFrame:
+    """Read a parquet file or directory with the schema Spark would
+    infer, taken from one footer (``_schema_file``, ``_footer_schema``)
+    and passed through ``spark.read.schema`` — so building the
+    DataFrame runs no Spark job. Partition columns are not passed:
+    Spark discovers them from the directory names, as it does when it
+    infers. Where the schema cannot be taken from a footer, or a data
+    column shares a partition column's name, Spark infers it.
 
     Nano-precision timestamp columns (e.g. ``events.ts``) are read as
     long and restored to microsecond timestamps (the fixtures carry no
@@ -115,10 +182,10 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     from pyspark.sql import functions as F
     from pyspark.sql.types import TimestampNTZType
 
-    path = os.path.join(sf_dir, f"{name}.parquet")
-    schema, nano_cols = (
-        _footer_schema(spark, path) if os.path.isfile(path) else (None, [])
-    )
+    src, parts = _schema_file(spark, path)
+    schema, nano_cols = (None, []) if src is None else _footer_schema(spark, src)
+    if schema is not None and parts & {n.lower() for n in schema.names}:
+        schema = None
     if nano_cols and schema is None:
         key = "spark.sql.legacy.parquet.nanosAsLong"
         prior = spark.conf.get(key, None)
@@ -151,7 +218,7 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
             import warnings
 
             warnings.warn(
-                f"load_table: session timezone {tz!r} would shift "
+                f"read_parquet: session timezone {tz!r} would shift "
                 f"TIMESTAMP_NTZ columns {ntz_cols} during the cast; "
                 "setting spark.sql.session.timeZone=UTC to keep values "
                 "oracle-identical",
@@ -161,6 +228,16 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     for c in ntz_cols:
         df = df.withColumn(c, F.col(c).cast("timestamp"))
     return df
+
+
+def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
+    """Load one fixture table, ``<sf_dir>/<name>.parquet``, through
+    ``read_parquet``: a plain parquet scan (full pushdown/pruning) whose
+    schema comes from one footer, so loading runs no Spark job — for a
+    single file, and for a directory too (the footer of the first data
+    file, the one Spark's inference reads; summary files, mergeSchema
+    and the other cases ``_schema_file`` names leave it to Spark)."""
+    return read_parquet(spark, os.path.join(sf_dir, f"{name}.parquet"))
 
 
 def load_tables(
@@ -210,7 +287,7 @@ def compact(
     subdir swap is intentionally NOT done here — at scale compaction
     writes a new snapshot and swaps a table pointer atomically).
     """
-    df = spark.read.parquet(path)
+    df = read_parquet(spark, path)
     n_now = df.rdd.getNumPartitions()
     out = out_path or (path.rstrip("/") + "_compacted")
     if target_files < n_now:

@@ -61,6 +61,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from data_ingestion_py_spark.functions.text import band_keys
+from data_ingestion_py_spark.io import read_parquet
 from data_ingestion_py_spark.operators import dedup
 
 N_BUCKETS = 64
@@ -139,7 +140,7 @@ class MarkerCommitted:
         """The meta row, or None for an index not laid down yet."""
         if not _fs_exists(self.spark, self._meta_path):
             return None
-        return self.spark.read.parquet(self._meta_path).first()
+        return read_parquet(self.spark, self._meta_path).first()
 
     def has_batch(self, batch_id: int) -> bool:
         """True iff ``batch_id``'s commit marker exists — the
@@ -170,7 +171,7 @@ class MarkerCommitted:
         partition column, so the IN filter prunes torn-batch
         directories at planning time."""
         committed = self.committed_batches()
-        return self.spark.read.parquet(path).where(
+        return read_parquet(self.spark, path).where(
             F.col("ingest_batch").isin(committed)
             if committed
             else F.lit(False)
@@ -261,7 +262,7 @@ class BandIndex(MarkerCommitted):
             return self.spark.createDataFrame(
                 [], "new_doc_id long, corpus_doc_id long, jaccard double"
             )
-        return self.spark.read.parquet(self._flagged_path).select(
+        return read_parquet(self.spark, self._flagged_path).select(
             "new_doc_id", "corpus_doc_id", "jaccard"
         )
 
@@ -373,7 +374,7 @@ class BandIndex(MarkerCommitted):
             )
             if _fs_exists(self.spark, self._flagged_path):
                 (
-                    self.spark.read.parquet(self._flagged_path)
+                    read_parquet(self.spark, self._flagged_path)
                     .select("new_doc_id", "corpus_doc_id", "jaccard")
                     .withColumn("ingest_batch", F.lit(hi))
                     .coalesce(1)

@@ -63,6 +63,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
+from data_ingestion_py_spark.io import read_parquet
 from data_ingestion_py_spark.operators.band_index import (
     MarkerCommitted,
     _fs_exists,
@@ -128,7 +129,7 @@ class IvfIndex(MarkerCommitted):
 
     # -- state inspection ------------------------------------------------
     def centroids(self) -> DataFrame:
-        return self.spark.read.parquet(self._centroids_path)
+        return read_parquet(self.spark, self._centroids_path)
 
     def vectors(self) -> DataFrame:
         """READ-COMMITTED corpus view: only batches whose marker
@@ -175,7 +176,7 @@ class IvfIndex(MarkerCommitted):
         # appended with double batches leaves mixed parquet schemas
         # that fail at read time (footer metadata check, no data scan)
         if _fs_exists(self.spark, self._vectors_path):
-            want = self.spark.read.parquet(self._vectors_path).schema[
+            want = read_parquet(self.spark, self._vectors_path).schema[
                 "embedding"
             ].dataType
             vecs = vecs.select(

@@ -74,6 +74,16 @@ def _centroid_array(cents: DataFrame) -> DataFrame:
     )
 
 
+def _first_min(dist):
+    """Row-wise column index of the first minimum under Spark's double
+    ordering, where NaN sorts above +inf and equals NaN: the first
+    minimum of the non-NaN values, or 0 for an all-NaN row."""
+    import numpy as np
+
+    low = np.where(np.isnan(dist), np.inf, dist).min(axis=1)
+    return np.argmax(dist == low[:, None], axis=1)
+
+
 def _assign(vq: DataFrame, cent_row: DataFrame) -> DataFrame:
     """(vec_id, v) × centroid array → (vec_id, v, cid) by exact
     squared-L2 argmin, ties to the lower cid.
@@ -84,18 +94,37 @@ def _assign(vq: DataFrame, cent_row: DataFrame) -> DataFrame:
     similarity_ivf_kmeans). The centroid table is k×dim — driver-small
     by the same argument that makes it broadcastable (the seed sweep
     already inlines it as literals) — so it is collected once per
-    round and closed over. BIT-identical to the old array_min
-    expression: every distance is a sum of integer products ≤ ~2.6e14
-    (exact in doubles in ANY summation order, so the matmul is safe),
-    and np.argmin's first-minimum over cid-ascending columns is the
-    same ties-to-lower-cid rule as the lexicographic struct min.
-    Degenerate rows (NULL / wrong-length vector) resolve to the lowest
-    cid, matching the nulls-first struct ordering of the old
-    expression. Pinned by tests/test_kmeans.py parity test."""
+    round and closed over.
+
+    BIT-identical to the old ``array_min`` over (d, cid) structs on
+    this domain: centroids are non-NULL vectors of one length with no
+    NULL component (any other centroid raises ``ValueError``: the
+    struct min would put its NULL distance below every number), and
+    vector components are any doubles or NULL.
+    - Finite quantized input: every distance is a sum of integer
+      products ≤ ~2.6e14, exact in doubles in ANY summation order, so
+      the matmul is safe; the first minimum over cid-ascending columns
+      is the struct min's ties-to-lower-cid rule.
+    - NaN and ±inf propagate to the same distances in any order
+      (a NaN anywhere, or +inf meeting −inf, gives NaN). Spark orders
+      NaN above +inf, so ``_first_min`` takes the first minimum of
+      the non-NaN distances, and the lowest cid when all are NaN (all
+      NaN tie).
+    - A NULL component arrives in the stage as NaN; in Catalyst it
+      makes every distance NULL, which ties on every cid, and the
+      all-NaN row gives the same lowest cid.
+    - NULL or wrong-length vectors resolve to the lowest cid, matching
+      the all-NULL distances of the struct min.
+    Pinned by the tests/test_kmeans.py parity test."""
     import numpy as np
     import pandas as pd
 
     cents = cent_row.collect()[0]["cents"]  # cid-ascending (array_sort)
+    for c in cents:
+        if c["cc"] is None:
+            raise ValueError(
+                f"centroid {c['cid']} is NULL or has a NULL component"
+            )
     mat = np.array([list(c["cvec"]) for c in cents], dtype=np.float64)
     cc = np.array([float(c["cc"]) for c in cents], dtype=np.float64)
     cids = np.array([int(c["cid"]) for c in cents], dtype=np.int32)
@@ -124,7 +153,7 @@ def _assign(vq: DataFrame, cent_row: DataFrame) -> DataFrame:
                     - 2.0 * (V @ mat.T)
                     + cc[None, :]
                 )
-                cid[ok] = cids[np.argmin(dist, axis=1)]
+                cid[ok] = cids[_first_min(dist)]
             yield pd.DataFrame(
                 {"vec_id": pdf["vec_id"], "v": vecs, "cid": cid}
             )

@@ -31,6 +31,7 @@ from pyspark.errors import AnalysisException
 
 from data_ingestion_py_spark.catalog.actions import apply_actions
 from data_ingestion_py_spark.catalog.state import ACTION_SCHEMA, CatalogState
+from data_ingestion_py_spark.io import read_parquet
 
 
 def _state_max_batch_id(
@@ -88,7 +89,7 @@ def parquet_file_stream(spark: SparkSession, src_dir: str) -> DataFrame:
     schema of the files already in ``src_dir``. Files land in
     modification-time order, so a directory written file by file
     replays as that sequence of micro-batches."""
-    schema = spark.read.parquet(src_dir).schema
+    schema = read_parquet(spark, src_dir).schema
     return (
         spark.readStream.schema(schema)
         .option("maxFilesPerTrigger", 1)

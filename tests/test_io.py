@@ -1,6 +1,6 @@
-"""``io.load_table`` passes the schema it derives from the parquet footer:
-it must equal what Spark infers, and a single-file table must load
-without running a Spark job."""
+"""``io.read_parquet`` (and ``io.load_table`` through it) passes the schema
+it derives from one parquet footer: it must equal what Spark infers, and a
+single file or a directory must load without running a Spark job."""
 
 from __future__ import annotations
 
@@ -96,17 +96,185 @@ def test_every_mapped_type_equals_inferred(spark, tmp_path):
     assert "u" in io.load_table(spark, str(tmp_path), "typed").columns
 
 
-def test_directory_keeps_inference(spark, tmp_path):
-    # a partitioned directory falls back to Spark's schema inference
-    # (partition discovery adds the partition column)
+def _spark_error(fn):
+    """The exception ``fn`` raises (the test fails if it returns)."""
+    with pytest.raises(Exception) as info:
+        fn()
+    return info.value
+
+
+def test_partitioned_directory_is_job_free(spark, tmp_path):
+    """A ``partitionBy`` directory loads with exactly the schema Spark
+    infers — the partition column and its inferred type included — and
+    runs no Spark job; Spark's ``_SUCCESS`` and ``.crc`` files are not
+    taken for the first data file."""
     out = tmp_path / "docs.parquet"
-    io.load_table(spark, SF_SMOKE, "documents").write.partitionBy("lang").parquet(
-        str(out)
+    io.load_table(spark, SF_SMOKE, "documents").write.partitionBy(
+        "lang"
+    ).parquet(str(out))
+    names = {p.name for p in out.rglob("*")}
+    assert "_SUCCESS" in names and any(n.endswith(".crc") for n in names)
+    src, parts = io._schema_file(spark, str(out))
+    first = min(
+        str(p)
+        for p in out.rglob("*.parquet")
+        if not p.name.startswith((".", "_"))
     )
-    assert io._footer_schema(spark, str(out))[0] is None
-    df = io.load_table(spark, str(tmp_path), "docs")
+    assert (src, parts) == (first, {"lang"})
+    df, jobs = _jobs_in(spark, lambda: io.load_table(spark, str(tmp_path), "docs"))
+    assert jobs == 0
     assert df.schema == spark.read.parquet(str(out)).schema
     assert "lang" in df.columns
+    want = io.load_table(spark, SF_SMOKE, "documents").select(df.columns)
+    assert sorted(df.collect(), key=str) == sorted(want.collect(), key=str)
+
+
+def test_first_file_follows_full_path_order(spark, tmp_path):
+    """Spark infers a directory's schema from the first data file in
+    full-path string order: ``k=a-b/x`` sorts before ``k=a/x`` (``-`` <
+    ``/``) although the directory ``k=a`` sorts before ``k=a-b``. Files
+    in a subdirectory of an unpartitioned directory are not data files."""
+    root = tmp_path / "t"
+    for sub, typ in (("k=a", pa.int32()), ("k=a-b", pa.int64())):
+        (root / sub).mkdir(parents=True)
+        pq.write_table(
+            pa.table({"v": pa.array([1, 2], typ)}), root / sub / "x.parquet"
+        )
+    want = str(root / "k=a-b" / "x.parquet")
+    assert io._schema_file(spark, str(root)) == (want, {"k"})
+    inferred = spark.read.parquet(str(root)).schema
+    assert inferred["v"].dataType.simpleString() == "bigint"
+    df, jobs = _jobs_in(spark, lambda: io.read_parquet(spark, str(root)))
+    assert jobs == 0 and df.schema == inferred
+    flat = tmp_path / "flat"
+    (flat / "sub").mkdir(parents=True)
+    pq.write_table(pa.table({"v": pa.array([1], pa.int32())}), flat / "z.parquet")
+    pq.write_table(pa.table({"w": pa.array([1], pa.int64())}), flat / "sub" / "a.parquet")
+    assert io._schema_file(spark, str(flat))[0] == str(flat / "z.parquet")
+    df, jobs = _jobs_in(spark, lambda: io.read_parquet(spark, str(flat)))
+    assert jobs == 0 and df.schema == spark.read.parquet(str(flat)).schema
+
+
+def test_summary_file_and_merge_schema_keep_inference(spark, tmp_path):
+    """A ``_common_metadata`` summary file is what Spark infers from, and
+    ``mergeSchema`` merges every footer: both give Spark's own result."""
+    root = tmp_path / "t"
+    root.mkdir()
+    pq.write_table(pa.table({"a": pa.array([1], pa.int32())}), root / "p0.parquet")
+    pq.write_table(
+        pa.table({"a": pa.array([2], pa.int32()), "b": pa.array(["x"])}),
+        root / "p1.parquet",
+    )
+    assert io.read_parquet(spark, str(root)).columns == ["a"]
+    key = "spark.sql.parquet.mergeSchema"
+    before = spark.conf.get(key)
+    try:
+        spark.conf.set(key, "true")
+        assert io._schema_file(spark, str(root))[0] is None
+        merged = io.read_parquet(spark, str(root)).schema
+        assert merged == spark.read.parquet(str(root)).schema
+        assert merged.names == ["a", "b"]
+    finally:
+        spark.conf.set(key, before)
+    pq.write_metadata(
+        pa.schema([("a", pa.int64()), ("c", pa.float64())]),
+        root / "_common_metadata",
+    )
+    assert io._schema_file(spark, str(root))[0] is None
+    df = io.read_parquet(spark, str(root))
+    assert df.schema == spark.read.parquet(str(root)).schema
+    assert df.columns == ["a", "c"]
+    sink = tmp_path / "sink"
+    (sink / "_spark_metadata").mkdir(parents=True)
+    pq.write_table(pa.table({"a": pa.array([1])}), sink / "p0.parquet")
+    assert io._schema_file(spark, str(sink))[0] is None
+
+
+def test_data_column_named_like_partition_keeps_inference(spark, tmp_path):
+    """A file that stores a column under a partition column's name: Spark
+    places it at the file's position with the type read from the path,
+    so the schema is left to Spark."""
+    root = tmp_path / "t"
+    (root / "k=1").mkdir(parents=True)
+    pq.write_table(
+        pa.table({"k": pa.array(["x"]), "v": pa.array([1.5])}),
+        root / "k=1" / "f.parquet",
+    )
+    df = io.read_parquet(spark, str(root))
+    assert df.schema == spark.read.parquet(str(root)).schema
+    assert df.columns == ["k", "v"]
+
+
+def test_empty_directory_raises_sparks_error(spark, tmp_path):
+    (tmp_path / "empty.parquet").mkdir()
+    (tmp_path / "empty.parquet" / "_SUCCESS").touch()
+    path = str(tmp_path / "empty.parquet")
+    want = _spark_error(lambda: spark.read.parquet(path))
+    got = _spark_error(lambda: io.load_table(spark, str(tmp_path), "empty"))
+    assert type(got) is type(want)
+    assert got.getCondition() == want.getCondition()
+
+
+def test_nanos_in_partitioned_directory(spark, tmp_path):
+    """TIMESTAMP(NANOS) in a partitioned directory: the footer schema
+    reads it as long, job-free, and the load restores the microsecond
+    timestamps without touching nanosAsLong."""
+    micros = pa.array(
+        [1_600_000_000_000_001, None, 1_600_000_000_123_456], pa.timestamp("us")
+    )
+    base = {"k": pa.array([1, 1, 2]), "x": pa.array(["p", "q", "r"])}
+    for name, ts in (("nanos", micros.cast(pa.timestamp("ns"))), ("want", micros)):
+        pq.write_to_dataset(
+            pa.table({**base, "ts": ts}),
+            str(tmp_path / f"{name}.parquet"),
+            partition_cols=["k"],
+        )
+    src, parts = io._schema_file(spark, str(tmp_path / "nanos.parquet"))
+    assert parts == {"k"} and io._footer_schema(spark, src)[1] == ["ts"]
+    key = "spark.sql.legacy.parquet.nanosAsLong"
+    before = spark.conf.get(key)
+    try:
+        spark.conf.set(key, "false")
+        df, jobs = _jobs_in(
+            spark, lambda: io.load_table(spark, str(tmp_path), "nanos")
+        )
+        assert jobs == 0
+        assert spark.conf.get(key) == "false"
+        want = io.load_table(spark, str(tmp_path), "want")
+        assert df.schema == want.schema
+        assert sorted(df.collect(), key=str) == sorted(want.collect(), key=str)
+    finally:
+        spark.conf.set(key, before)
+
+
+def test_index_reads_are_job_free(spark, tmp_path):
+    """The durable indexes read their partitioned directories through
+    ``read_parquet``: building the read-committed corpus view and the
+    centroid table runs no Spark job."""
+    from pyspark.sql import functions as F
+
+    from data_ingestion_py_spark.operators import dedup
+    from data_ingestion_py_spark.operators.band_index import BandIndex
+    from data_ingestion_py_spark.operators.ivf_index import IvfIndex
+
+    band = BandIndex(spark, str(tmp_path / "band"))
+    docs = io.load_table(spark, SF_SMOKE, "documents").where(F.col("doc_id") < 5)
+    band.append_batch(dedup.minhash_signatures(docs.select("doc_id", "text")), 0)
+    ivf = IvfIndex(spark, str(tmp_path / "ivf"), k=2)
+    ivf.append_batch(
+        io.load_table(spark, SF_SMOKE, "embeddings")
+        .where(F.col("vec_id") < 20)
+        .select("vec_id", "embedding"),
+        0,
+    )
+    for build in (
+        lambda: band._read_committed(band._sigs_path),
+        ivf.centroids,
+        ivf.vectors,
+    ):
+        df, jobs = _jobs_in(spark, build)
+        assert jobs == 0
+        assert df.count() > 0
 
 
 def test_inference_fallback_restores_nanos_as_long(spark, tmp_path):
@@ -151,3 +319,30 @@ def test_inference_fallback_restores_nanos_as_long(spark, tmp_path):
             spark.conf.unset(key)
         else:
             spark.conf.set(key, before)
+
+
+def test_package_reads_parquet_through_one_reader():
+    """Outside ``io.py`` the package never calls ``.read.parquet(`` with
+    no ``.schema(``: that form infers the schema with a Spark job, which
+    ``io.read_parquet`` avoids. Strings and comments are not code."""
+    import re
+    import tokenize
+    from pathlib import Path
+
+    pkg = Path(io.__file__).parent
+    skip = {tokenize.STRING, tokenize.COMMENT}
+    if hasattr(tokenize, "FSTRING_MIDDLE"):
+        skip.add(tokenize.FSTRING_MIDDLE)
+    offenders = []
+    for path in sorted(pkg.rglob("*.py")):
+        if path == Path(io.__file__):
+            continue
+        with path.open("rb") as f:
+            code = "".join(
+                t.string
+                for t in tokenize.tokenize(f.readline)
+                if t.type not in skip
+            )
+        if re.search(r"\.read\s*\.parquet\s*\(", code):
+            offenders.append(str(path.relative_to(pkg)))
+    assert offenders == []

@@ -260,3 +260,56 @@ def test_assign_numpy_matches_catalyst_argmin(spark):
         r.vec_id: r.cid for r in catalyst_assign(weird, cent_row).collect()
     }
     assert got_w == want_w
+
+    # non-finite input: Spark orders NaN above +inf (and NaN == NaN),
+    # a NULL component makes every Catalyst distance NULL; ±inf meets
+    # centroid components of either sign, so a row's distances mix
+    # +inf and NaN. The NaN centroid takes the lowest cid, where a
+    # first-NaN argmin would send every row to it.
+    nan, inf = float("nan"), float("inf")
+    base = list(cents.orderBy("cid").first().cvec)
+
+    def with_(**at):
+        v = list(base)
+        for i, x in at.items():
+            v[int(i[1:])] = x
+        return v
+
+    edge = spark.createDataFrame(
+        [
+            (200, with_(i0=nan)),
+            (201, with_(i0=inf)),
+            (202, with_(i0=-inf)),
+            (203, with_(i0=None)),
+            (204, with_(i0=inf, i1=-inf)),
+            (205, with_(i3=inf)),
+            (206, with_(i5=-inf)),
+            (207, [nan] * len(base)),
+        ],
+        "vec_id bigint, v array<double>",
+    )
+    nan_cents = cents.select(
+        (F.col("cid") + 1).alias("cid"), "cvec"
+    ).unionByName(
+        spark.createDataFrame(
+            [(0, with_(i2=nan))], "cid int, cvec array<double>"
+        )
+    )
+    for rows in (edge, vq, weird):
+        for row in (cent_row, _centroid_array(nan_cents)):
+            got_e = {r.vec_id: r.cid for r in _assign(rows, row).collect()}
+            want_e = {
+                r.vec_id: r.cid for r in catalyst_assign(rows, row).collect()
+            }
+            assert got_e == want_e
+    assert {
+        r.vec_id: r.cid
+        for r in _assign(edge, _centroid_array(nan_cents)).collect()
+    }[207] == 0
+    null_cents = nan_cents.unionByName(
+        spark.createDataFrame(
+            [(9, with_(i0=None))], "cid int, cvec array<double>"
+        )
+    )
+    with pytest.raises(ValueError, match="centroid 9"):
+        _assign(edge, _centroid_array(null_cents))
