@@ -36,6 +36,7 @@ from data_ingestion_py_spark.functions.text import (
     tokens,
 )
 from data_ingestion_py_spark.operators.materialize import pin
+from data_ingestion_py_spark.sources.spread import spread_for_kernel
 
 SHINGLE_K = 3
 N_HASHES = 32
@@ -168,13 +169,12 @@ def minhash_signatures(
     constructing its literal coefficient structs through py4j was most
     of the dedup query's build time.
 
-    Input is rebalanced to the cluster's parallelism first: corpora
-    often arrive as few fat files (the fixture is ONE parquet file →
-    2 tasks), and signature hashing is the CPU-bound stage worth
-    spreading across every core.
+    The projected (doc_id, text) input is rebalanced to the cluster's
+    parallelism first (``spread_for_kernel``): corpora often arrive as
+    few fat files (the fixture is ONE parquet file → 2 tasks), and
+    signature hashing is the CPU-bound stage worth spreading across
+    every core.
     """
-    spark = docs.sparkSession
-    target = spark.sparkContext.defaultParallelism
     # Docs too short to shingle (size(tokens) < k → empty shingle array)
     # are dropped, matching the oracle's WHERE len(toks) >= k. Without
     # this they'd emit sentinel signatures AND share identical band keys,
@@ -183,13 +183,11 @@ def minhash_signatures(
     # repartition, so the 2-task scan stage does one split per row and
     # the kernel stage sees only shingle-able docs.
     docs = docs.where(F.size(tokens(F.col(text_col))) >= k)
-    # Rebalance only when the input arrives under-partitioned (the
-    # fixture is ONE parquet file → 2 tasks); a multi-file corpus that
-    # already spans the cluster must not pay a gratuitous full shuffle.
-    if docs.rdd.getNumPartitions() < target:
-        docs = docs.repartition(target)
-    id_type = docs.schema["doc_id"].dataType.simpleString()
-    return docs.select("doc_id", F.col(text_col).alias("text")).mapInPandas(
+    src = spread_for_kernel(
+        docs.select("doc_id", F.col(text_col).alias("text"))
+    )
+    id_type = src.schema["doc_id"].dataType.simpleString()
+    return src.mapInPandas(
         _minhash_kernel(k, n_hashes),
         f"doc_id {id_type}, sig array<bigint>, shingles array<string>",
     )

@@ -73,26 +73,19 @@ from data_ingestion_py_spark.operators.kmeans import (
     _assign,
     _centroid_array,
     kmeans_integer_model,
+    micro_units,
 )
 from data_ingestion_py_spark.operators.similarity import (
     _to_double,
+    cosine,
     dot,
-    l2_norm,
 )
 
 
 def _quantized(vectors: DataFrame, vec_col: str) -> DataFrame:
     """(vec_id, v) with components floor-quantized to kmeans' integer
     micro-units — the shared metric space of trainer and appender."""
-    return vectors.select(
-        "vec_id",
-        F.transform(
-            vec_col,
-            lambda x: F.floor(x.cast("double") * SCALE)
-            .cast("long")
-            .cast("double"),
-        ).alias("v"),
-    )
+    return vectors.select("vec_id", micro_units(vec_col).alias("v"))
 
 
 class IvfIndex(MarkerCommitted):
@@ -239,7 +232,7 @@ class IvfIndex(MarkerCommitted):
         pr = self.probe_clusters(query_vec, nprobe)
         qlit = F.array(*[F.lit(float(x)) for x in query_vec])
         vec = _to_double(F.col("embedding"))
-        sim = dot(vec, qlit) / (l2_norm(vec) * l2_norm(qlit))
+        sim = cosine(vec, qlit)
         return (
             self.vectors()
             .where(F.col("cid").isin(pr))
@@ -329,9 +322,7 @@ class IvfIndex(MarkerCommitted):
             .join(qvecs, "query_id")
         )
         vec = _to_double(F.col("embedding"))
-        sim = dot(vec, F.col("qvec")) / (
-            l2_norm(vec) * l2_norm(F.col("qvec"))
-        )
+        sim = cosine(vec, F.col("qvec"))
         w = Window.partitionBy("query_id").orderBy(
             F.desc("cosine_sim"), F.asc("vec_id")
         )

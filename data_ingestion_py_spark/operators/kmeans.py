@@ -57,6 +57,18 @@ from data_ingestion_py_spark.operators.similarity import dot
 SCALE = 1_000_000
 
 
+def micro_units(vec) -> F.Column:
+    """The components of array column ``vec`` floor-quantized to integer
+    micro-units, ``floor(x·SCALE)``, held as doubles: the metric space
+    k-means, the IVF index and their DuckDB twins share."""
+    return F.transform(
+        vec,
+        lambda x: F.floor(x.cast("double") * SCALE)
+        .cast("long")
+        .cast("double"),
+    )
+
+
 def _centroid_array(cents: DataFrame) -> DataFrame:
     """k-row (cid, cvec) table → 1-row array<struct<cid, cvec, cc>>
     ordered by cid, with each centroid's self-dot precomputed."""
@@ -176,7 +188,16 @@ def _farthest_first_seeds(vq: DataFrame, k: int) -> list[list[float]]:
     seeds 0..i — the rule itself is sequential and the seeds must be
     driver literals. Each lazily checkpointed round adds its AQE stage
     jobs. Fewer, fatter rounds need a different seed rule (k-means||,
-    with its DuckDB twin changed alongside)."""
+    with its DuckDB twin changed alongside); a numpy ``mapInPandas``
+    pass per round under this rule measured 2.1× slower than the
+    chain below (1.28 → 2.66 s for k=8 at sf0.1, 4-core box).
+
+    Fault tolerance: the k−1 rounds are a chain of lazy
+    ``localCheckpoint``s, whose blocks live only in executor storage
+    and whose lineage is cut. Losing an executor that holds one fails
+    the query: Spark cannot recompute the block. No round unpersists
+    its predecessor; the blocks stay until Spark's cleaner collects
+    their RDDs."""
     first = vq.orderBy("vec_id").limit(1).collect()[0]
     seeds: list[list[float]] = [list(first.v)]
 
@@ -293,13 +314,7 @@ def kmeans_integer_model(
     # parallelizes with the scan.
     vq = pin(
         embeddings.select(
-            F.col(id_col).alias("vec_id"),
-            F.transform(
-                vec_col,
-                lambda x: F.floor(x.cast("double") * SCALE)
-                .cast("long")
-                .cast("double"),
-            ).alias("v"),
+            F.col(id_col).alias("vec_id"), micro_units(vec_col).alias("v")
         ),
         storage_level,
     )

@@ -41,6 +41,12 @@ def l2_norm(a) -> F.Column:
     )
 
 
+def cosine(a, b) -> F.Column:
+    """dot(a, b) / (‖a‖·‖b‖) — the one spelling of the cosine, so every
+    caller plans the expression its DuckDB twin mirrors."""
+    return dot(a, b) / (l2_norm(a) * l2_norm(b))
+
+
 def cosine_topk(
     embeddings: DataFrame,
     query_vec_id: int,
@@ -60,9 +66,7 @@ def cosine_topk(
     corpus = embeddings.select(
         "vec_id", "label", _to_double(F.col(vec_col)).alias("vec")
     )
-    sim = dot(F.col("vec"), F.col("qvec")) / (
-        l2_norm(F.col("vec")) * l2_norm(F.col("qvec"))
-    )
+    sim = cosine(F.col("vec"), F.col("qvec"))
     return (
         corpus.crossJoin(F.broadcast(q))
         .where(F.col("vec_id") != query_vec_id)
@@ -102,9 +106,7 @@ def knn_join(
     c = corpus.select(
         "vec_id", "label", _to_double(F.col(vec_col)).alias("vec")
     )
-    sim = dot(F.col("vec"), F.col("qvec")) / (
-        l2_norm(F.col("vec")) * l2_norm(F.col("qvec"))
-    )
+    sim = cosine(F.col("vec"), F.col("qvec"))
     scored = c.crossJoin(F.broadcast(q)).select(
         query_id,
         "vec_id",
@@ -149,9 +151,7 @@ def semantic_dedup_pairs(
         F.col("vec_id").alias("vec_b"),
         F.col(vec_col).alias("_vb"),
     )
-    sim = dot(F.col("_va"), F.col("_vb")) / (
-        l2_norm(F.col("_va")) * l2_norm(F.col("_vb"))
-    )
+    sim = cosine(F.col("_va"), F.col("_vb"))
     return (
         a.join(b, "cluster")
         .where(F.col("vec_a") < F.col("vec_b"))
@@ -242,9 +242,7 @@ def ivf_topk(
     q = base.where(F.col("vec_id") == query_vec_id).select(
         F.col("vec").alias("qvec")
     )
-    cent_sim = dot(F.col("cv"), F.col("qvec")) / (
-        l2_norm(F.col("cv")) * l2_norm(F.col("qvec"))
-    )
+    cent_sim = cosine(F.col("cv"), F.col("qvec"))
     probed = (
         label_centroids(base)
         .crossJoin(F.broadcast(q))
@@ -253,9 +251,7 @@ def ivf_topk(
         .limit(nprobe)
         .select("label")
     )
-    sim = dot(F.col("vec"), F.col("qvec")) / (
-        l2_norm(F.col("vec")) * l2_norm(F.col("qvec"))
-    )
+    sim = cosine(F.col("vec"), F.col("qvec"))
     return (
         base.join(F.broadcast(probed), "label")
         .crossJoin(F.broadcast(q))
@@ -301,9 +297,7 @@ def active_snippet_topk(
         F.col("vec").alias("qvec")
     )
     active = docs.where(F.col(status_col) == "Active").select(id_col, text_col)
-    sim = dot(F.col("vec"), F.col("qvec")) / (
-        l2_norm(F.col("vec")) * l2_norm(F.col("qvec"))
-    )
+    sim = cosine(F.col("vec"), F.col("qvec"))
     top_docs = (
         active.join(base, active[id_col] == base["vec_id"])
         .crossJoin(F.broadcast(q))
@@ -389,9 +383,7 @@ def embedding_near_duplicates(
     )
     va = corpus.select(F.col(id_col).alias("vec_a"), F.col(vec_col).alias("va"))
     vb = corpus.select(F.col(id_col).alias("vec_b"), F.col(vec_col).alias("vb"))
-    sim = dot(F.col("va"), F.col("vb")) / (
-        l2_norm(F.col("va")) * l2_norm(F.col("vb"))
-    )
+    sim = cosine(F.col("va"), F.col("vb"))
     return (
         cand.join(va, "vec_a")
         .join(vb, "vec_b")
@@ -419,9 +411,7 @@ def lsh_bucketed_ann(
     q = with_bucket.where(F.col("vec_id") == query_vec_id).select(
         F.col("vec").alias("qvec"), F.col("bucket").alias("qbucket")
     )
-    sim = dot(F.col("vec"), F.col("qvec")) / (
-        l2_norm(F.col("vec")) * l2_norm(F.col("qvec"))
-    )
+    sim = cosine(F.col("vec"), F.col("qvec"))
     return (
         with_bucket.join(
             F.broadcast(q), F.col("bucket") == F.col("qbucket"), "inner"
@@ -523,9 +513,7 @@ def pq_topk(
     q = base.where(F.col("vec_id") == query_vec_id).select(
         F.col("vec").alias("qvec")
     )
-    sim = dot(F.col("vec"), F.col("qvec")) / (
-        l2_norm(F.col("vec")) * l2_norm(F.col("qvec"))
-    )
+    sim = cosine(F.col("vec"), F.col("qvec"))
     return (
         base.join(short.select("vec_id", "approx_d2"), "vec_id")
         .crossJoin(F.broadcast(q))
@@ -577,9 +565,7 @@ def mmr_diversify(
     q = base.where(F.col("vec_id") == query_vec_id).select(
         F.col("v").alias("qvec")
     )
-    rel = dot(F.col("v"), F.col("qvec")) / (
-        l2_norm(F.col("v")) * l2_norm(F.col("qvec"))
-    )
+    rel = cosine(F.col("v"), F.col("qvec"))
     cand = (
         base.where(F.col("vec_id") != query_vec_id)
         .crossJoin(F.broadcast(q))
@@ -597,9 +583,7 @@ def mmr_diversify(
     b = cand.select(
         F.col("vec_id").alias("bi"), F.col("v").alias("vb")
     )
-    psim = dot(F.col("va"), F.col("vb")) / (
-        l2_norm(F.col("va")) * l2_norm(F.col("vb"))
-    )
+    psim = cosine(F.col("va"), F.col("vb"))
     pairs = (
         a.join(F.broadcast(b), F.col("ai") != F.col("bi"))
         .select(
@@ -873,9 +857,7 @@ def rp_topk(
     q = base.where(F.col("vec_id") == query_vec_id).select(
         F.col("v").alias("qvec")
     )
-    sim = dot(F.col("v"), F.col("qvec")) / (
-        l2_norm(F.col("v")) * l2_norm(F.col("qvec"))
-    )
+    sim = cosine(F.col("v"), F.col("qvec"))
     return (
         base.join(short, "vec_id")
         .crossJoin(F.broadcast(q))

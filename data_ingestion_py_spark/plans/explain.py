@@ -14,8 +14,12 @@ import re
 from pyspark.sql import DataFrame
 
 
-def executed_plan(df: DataFrame) -> str:
-    """Final (post-AQE-planning) physical plan as text."""
+def executed_plan(df: DataFrame | str) -> str:
+    """Final (post-AQE-planning) physical plan as text. A ``str`` is
+    plan text read earlier and passes through, so the text predicates
+    below also judge a plan read before its query ran."""
+    if isinstance(df, str):
+        return df
     return df._jdf.queryExecution().executedPlan().toString()
 
 
@@ -59,7 +63,7 @@ def num_exchanges(df: DataFrame) -> int:
     return len(re.findall(r"\bExchange (?:hashpartitioning|rangepartitioning|RoundRobinPartitioning|SinglePartition)", plan))
 
 
-def uses_python_eval(df: DataFrame) -> bool:
+def uses_python_eval(df: DataFrame | str) -> bool:
     """Any Python evaluation node: row-at-a-time or Arrow UDFs, and the
     Arrow batch stages (``mapInPandas`` / ``mapInArrow``)."""
     plan = executed_plan(df)
@@ -79,7 +83,7 @@ def codegen_stage_count(df: DataFrame) -> int:
     return len(set(ids))
 
 
-def single_partition_windows(df: DataFrame) -> int:
+def single_partition_windows(df: DataFrame | str) -> int:
     """Window operators fed by an Exchange SinglePartition — i.e.
     partition-less windows that move their whole input to one task.
     Legit only over provably bounded inputs (year tables, per-range
@@ -162,22 +166,14 @@ def _first_rowcount(node) -> int | None:
 
 
 def single_partition_window_input_rows(df: DataFrame) -> list[int]:
-    """EXECUTE ``df`` and return the ACTUAL input row count of every
-    partition-less Window/WindowGroupLimit in the final plan (the
-    nearest measured descendant: the feeding exchange's
-    shuffleRecordsWritten, else the first numOutputRows below).
-
-    This is the measured contract behind the bounded-global-window
-    allowlist: an allowlisted name claims its partition-less windows
-    run over a bounded (calendar/partition-count/shortlist-sized)
-    input — this measures the claim on the executed plan, exactly and
-    without text heuristics (partitionSpec is read off the node), so a
-    window whose input silently grows row-proportional fails the lint
-    even though the plan SHAPE still matches the allowlist."""
-    qe = df._jdf.queryExecution()
-    df.collect()  # populate SQL metrics on this exact plan instance
+    """The measured input rows of every partition-less
+    Window/WindowGroupLimit in the final plan of ``df``, which must
+    already have run: an action on ``df`` itself fills the SQL metrics
+    read here (``_first_rowcount`` below each window). ``partitionSpec``
+    is read off the node, so no text heuristic decides which windows
+    are partition-less."""
     rows: list[int] = []
-    for node in _iter_physical_nodes(qe.executedPlan()):
+    for node in _iter_physical_nodes(df._jdf.queryExecution().executedPlan()):
         if node.nodeName() not in ("Window", "WindowGroupLimit"):
             continue
         if node.partitionSpec().size() != 0:
@@ -193,25 +189,15 @@ def single_partition_window_input_rows(df: DataFrame) -> list[int]:
 
 
 def bnlj_broadcast_rows(df: DataFrame) -> list[int]:
-    """EXECUTE ``df`` and return the actual broadcast row count of
-    every BroadcastNestedLoopJoin's build side (numOutputRows of the
-    BroadcastExchange feeding it).
-
-    This is the checked contract behind the tiny-broadcast lint
-    allowlist: a name on the allowlist claims its BNLJ broadcasts an
-    O(1)/tiny relation — this measures the claim instead of trusting
-    the name forever, so an allowlisted query whose broadcast side
-    silently grows to corpus size fails the lint again.
-    """
-    qe = df._jdf.queryExecution()
-    df.collect()  # populate SQL metrics on this exact plan instance
+    """The measured broadcast rows of every BroadcastNestedLoopJoin's
+    build side (numOutputRows of the BroadcastExchange feeding it) in
+    the final plan of ``df``, which must already have run."""
     rows: list[int] = []
-    for node in _iter_physical_nodes(qe.executedPlan()):
+    for node in _iter_physical_nodes(df._jdf.queryExecution().executedPlan()):
         if node.nodeName() != "BroadcastNestedLoopJoin":
             continue
         side = node.buildSide().toString()
-        ch = node.children()
-        build = ch.apply(0) if side == "BuildLeft" else ch.apply(1)
+        build = node.left() if side == "BuildLeft" else node.right()
         for sub in _iter_physical_nodes(build):
             if sub.nodeName() == "BroadcastExchange":
                 rows.append(

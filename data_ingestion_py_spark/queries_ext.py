@@ -646,21 +646,13 @@ LIMIT {_K}
         composition (unrolled k-means CTEs + floor-mean centroid CTEs
         + probe + rerank)."""
         from data_ingestion_py_spark.operators.kmeans import (
-            SCALE,
             kmeans_integer,
+            micro_units,
         )
-        from data_ingestion_py_spark.operators.similarity import dot, l2_norm
+        from data_ingestion_py_spark.operators.similarity import cosine
 
         emb = load_table(spark, sf_dir, "embeddings")
-        vq = emb.select(
-            "vec_id",
-            F.transform(
-                "embedding",
-                lambda x: F.floor(x.cast("double") * SCALE)
-                .cast("long")
-                .cast("double"),
-            ).alias("v"),
-        )
+        vq = emb.select("vec_id", micro_units("embedding").alias("v"))
         base = vq.join(kmeans_integer(emb, k=8, n_iter=2), "vec_id")
         n = F.count(F.lit(1))
         s = F.sum("val").cast("long")
@@ -676,9 +668,7 @@ LIMIT {_K}
             ).alias("cv")
         )
         qv = vq.where(F.col("vec_id") == _QID).select(F.col("v").alias("q"))
-        csim = dot(F.col("cv"), F.col("q")) / (
-            l2_norm(F.col("cv")) * l2_norm(F.col("q"))
-        )
+        csim = cosine(F.col("cv"), F.col("q"))
         probed = (
             cents.crossJoin(F.broadcast(qv))
             .select("cid", csim.alias("csim"))
@@ -686,9 +676,7 @@ LIMIT {_K}
             .limit(_NPROBE)
             .select("cid")
         )
-        sim = dot(F.col("v"), F.col("q")) / (
-            l2_norm(F.col("v")) * l2_norm(F.col("q"))
-        )
+        sim = cosine(F.col("v"), F.col("q"))
         return (
             base.join(F.broadcast(probed), "cid")
             .crossJoin(F.broadcast(qv))

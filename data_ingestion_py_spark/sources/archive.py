@@ -29,6 +29,8 @@ from data_ingestion_py_spark.sources.bits import (
     bounded_decompress,
     decompress_members,
     none_on_refusal,
+    read_varint,
+    zigzag,
 )
 from data_ingestion_py_spark.sources.spread import kernel_rows
 
@@ -301,21 +303,12 @@ def tfrecord_manifest(
     )
 
 
-def _avro_varint(payload: bytes, i: int) -> tuple[int, int]:
-    """Avro zigzag-varint long at offset ``i`` → (value, next_offset).
-    ``Refused`` on truncation or overlong (>10 byte) encodings."""
-    shift = 0
-    acc = 0
-    n = len(payload)
-    for k in range(10):
-        if i + k >= n:
-            raise Truncated
-        b = payload[i + k]
-        acc |= (b & 0x7F) << shift
-        if not b & 0x80:
-            return (acc >> 1) ^ -(acc & 1), i + k + 1  # zigzag decode
-        shift += 7
-    raise Refused("varint longer than 10 bytes")
+def _zigzag_varint(payload: bytes, i: int) -> tuple[int, int]:
+    """Zigzag-varint long (Avro ``long``, thrift-compact i16/i32/i64)
+    at offset ``i`` → (value, next_offset); ``Refused`` on truncation
+    or overlong (>10 byte) encodings."""
+    u, i = read_varint(payload, i)
+    return zigzag(u), i
 
 
 AVRO_BLOCK_SCHEMA = T.StructType(
@@ -353,19 +346,19 @@ def avro_blocks(
     i = 4
     codec = "null"
     while True:  # metadata map blocks
-        count, i = _avro_varint(payload, i)
+        count, i = _zigzag_varint(payload, i)
         if count == 0:
             break
         if count < 0:  # block-size form: |count| entries, size long first
             count = -count
-            _, i = _avro_varint(payload, i)
+            _, i = _zigzag_varint(payload, i)
         for _ in range(count):
-            klen, i = _avro_varint(payload, i)
+            klen, i = _zigzag_varint(payload, i)
             if klen < 0 or i + klen > n:
                 return None
             key = payload[i : i + klen]
             i += klen
-            vlen, i = _avro_varint(payload, i)
+            vlen, i = _zigzag_varint(payload, i)
             if vlen < 0 or i + vlen > n:
                 return None
             if key == b"avro.codec":
@@ -378,8 +371,8 @@ def avro_blocks(
     blocks: list[tuple[int, int, int, int]] = []
     while i < n and len(blocks) < max_blocks:
         try:
-            n_recs, j = _avro_varint(payload, i)
-            size, j = _avro_varint(payload, j)
+            n_recs, j = _zigzag_varint(payload, i)
+            size, j = _zigzag_varint(payload, j)
         except Refused:
             break  # torn block header: the manifest ends before it
         if n_recs < 0 or size < 0 or j + size + 16 > n:
@@ -406,27 +399,6 @@ def avro_block_manifest(media: DataFrame, max_blocks: int = 256) -> DataFrame:
     )
 
 
-def _tc_varint(payload: bytes, i: int) -> tuple[int, int]:
-    """Unsigned LEB128 varint (thrift compact) → (value, next)."""
-    acc = 0
-    shift = 0
-    n = len(payload)
-    for k in range(10):
-        if i + k >= n:
-            raise Truncated
-        b = payload[i + k]
-        acc |= (b & 0x7F) << shift
-        if not b & 0x80:
-            return acc, i + k + 1
-        shift += 7
-    raise Refused("varint longer than 10 bytes")
-
-
-def _tc_zigzag(payload: bytes, i: int) -> tuple[int, int]:
-    u, i = _tc_varint(payload, i)
-    return (u >> 1) ^ -(u & 1), i
-
-
 def _tc_in(payload: bytes, end: int) -> int:
     """``end`` when it lies inside ``payload``, else ``Truncated``."""
     if end > len(payload):
@@ -444,11 +416,11 @@ def _tc_skip(payload: bytes, i: int, ftype: int) -> int:
     if ftype == 3:  # BYTE
         return _tc_in(payload, i + 1)
     if ftype in (4, 5, 6):  # I16 / I32 / I64: zigzag varint
-        return _tc_zigzag(payload, i)[1]
+        return _zigzag_varint(payload, i)[1]
     if ftype == 7:  # DOUBLE: fixed 8 bytes
         return _tc_in(payload, i + 8)
     if ftype == 8:  # BINARY: varint length + bytes
-        ln, i = _tc_varint(payload, i)
+        ln, i = read_varint(payload, i)
         return _tc_in(payload, i + ln)
     if ftype in (9, 10):  # LIST / SET
         if i >= len(payload):
@@ -458,7 +430,7 @@ def _tc_skip(payload: bytes, i: int, ftype: int) -> int:
         size = hdr >> 4
         etype = hdr & 0x0F
         if size == 15:
-            size, i = _tc_varint(payload, i)
+            size, i = read_varint(payload, i)
         if size > len(payload) - i:
             # Every element consumes >= 1 byte (bool COLLECTION
             # elements occupy one 0x01/0x02 byte each, unlike bool
@@ -473,7 +445,7 @@ def _tc_skip(payload: bytes, i: int, ftype: int) -> int:
             i = _tc_skip(payload, i, etype)
         return i
     if ftype == 11:  # MAP: varint size, then key/val type byte + pairs
-        size, i = _tc_varint(payload, i)
+        size, i = read_varint(payload, i)
         if size == 0:
             return i
         if i >= len(payload):
@@ -518,7 +490,7 @@ def _tc_fields(payload: bytes, i: int):
             fid += delta
         else:
             try:
-                fid, i = _tc_zigzag(payload, i)
+                fid, i = _zigzag_varint(payload, i)
             except Refused:
                 return  # a torn field header ends the walk
         consumed = yield fid, ftype, i
@@ -591,7 +563,7 @@ def parquet_row_groups(payload: bytes | None) -> dict | None:
                 size = hdr >> 4
                 etype = hdr & 0x0F
                 if size == 15:
-                    size, j = _tc_varint(payload, j)
+                    size, j = read_varint(payload, j)
                 if etype != 12 or size > len(payload) - j:
                     # ColumnChunk elements are structs (>= 1 byte each);
                     # anything else — including a declared size beyond
@@ -603,10 +575,10 @@ def parquet_row_groups(payload: bytes | None) -> dict | None:
                     j = _tc_skip(payload, j, etype)
                 gen.send(j)
             elif fid == 2 and ftype == 6:
-                rg_bytes, j = _tc_zigzag(payload, off)
+                rg_bytes, j = _zigzag_varint(payload, off)
                 gen.send(j)
             elif fid == 3 and ftype == 6:
-                rg_rows, j = _tc_zigzag(payload, off)
+                rg_rows, j = _zigzag_varint(payload, off)
                 gen.send(j)
         raise Truncated
 
@@ -615,7 +587,7 @@ def parquet_row_groups(payload: bytes | None) -> dict | None:
         if fid is None:
             break
         if fid == 3 and ftype == 6:  # FileMetaData.num_rows
-            num_rows, j = _tc_zigzag(payload, off)
+            num_rows, j = _zigzag_varint(payload, off)
             gen.send(j)
         elif fid == 4 and ftype == 9:  # row_groups list<RowGroup>
             if off >= len(payload):
@@ -625,7 +597,7 @@ def parquet_row_groups(payload: bytes | None) -> dict | None:
             size = hdr >> 4
             etype = hdr & 0x0F
             if size == 15:
-                size, j = _tc_varint(payload, j)
+                size, j = read_varint(payload, j)
             if etype != 12 or size > len(payload) - j:
                 return None
             for _ in range(size):
@@ -787,50 +759,31 @@ _ORC_COMPRESSION = {
 }
 
 
-def _pb_varint(payload: bytes, i: int, end: int) -> tuple[int, int] | None:
-    """Protobuf base-128 varint at ``payload[i:end]`` → (value, next_i);
-    bounded at 10 bytes (the 64-bit maximum) and at ``end`` so a crafted
-    footer can neither run away nor read past its message."""
-    v = 0
-    for k in range(10):
-        if i + k >= end:
-            return None
-        b = payload[i + k]
-        v |= (b & 0x7F) << (7 * k)
-        if not b & 0x80:
-            return v, i + k + 1
-    return None
-
-
 def _pb_fields(payload: bytes, start: int, end: int):
     """Iterate protobuf fields of the message at ``payload[start:end]``
     as ``(field_no, wire_type, value)`` — varints decoded, length-
     delimited fields yielded as (offset, length) into ``payload``,
     fixed32/fixed64 skipped with their exact width (the forward-
     compatible walk: unknown fields never desync known ones). Yields
-    nothing further on any malformed field."""
+    nothing further on any malformed field: the varint reads are
+    bounded at 10 bytes and at ``end``, so a crafted footer can
+    neither run away nor read past its message."""
     i = start
     while i < end:
-        tag = _pb_varint(payload, i, end)
-        if tag is None:
+        try:
+            key, i = read_varint(payload, i, end)
+            fno, wt = key >> 3, key & 7
+            if wt in (0, 2):  # a varint value, or a length
+                v, i = read_varint(payload, i, end)
+        except Refused:
             return
-        key, i = tag
-        fno, wt = key >> 3, key & 7
         if wt == 0:
-            got = _pb_varint(payload, i, end)
-            if got is None:
-                return
-            v, i = got
             yield fno, wt, v
         elif wt == 2:
-            got = _pb_varint(payload, i, end)
-            if got is None:
+            if i + v > end:
                 return
-            ln, i = got
-            if i + ln > end:
-                return
-            yield fno, wt, (i, ln)
-            i += ln
+            yield fno, wt, (i, v)
+            i += v
         elif wt == 1:
             if i + 8 > end:
                 return
@@ -887,13 +840,13 @@ def _orc_decompress(
             if piece is None:
                 raise Refused("undecodable or over-cap deflate chunk")
         elif kind == "snappy":
-            got = _pb_varint(chunk, 0, len(chunk))
-            if got is None or got[0] > max_bytes - len(out):
-                raise Refused("snappy length missing or over the cap")
+            size, _ = read_varint(chunk, 0)  # snappy leads with its size
+            if size > max_bytes - len(out):
+                raise Refused("snappy length over the cap")
             import pyarrow as pa
 
             try:
-                piece = bytes(pa.Codec("snappy").decompress(chunk, got[0]))
+                piece = bytes(pa.Codec("snappy").decompress(chunk, size))
             except Exception:
                 raise Refused("undecodable snappy chunk") from None
         elif kind == "lz4":
@@ -1082,13 +1035,16 @@ def avro_block_decompress(
         import zlib
 
         body, crc = raw[:-4], int.from_bytes(raw[-4:], "big")
-        got = _pb_varint(body, 0, len(body))  # snappy leads with its size
-        if got is None or got[0] > max_bytes:
+        try:
+            size, _ = read_varint(body, 0)  # snappy leads with its size
+        except Refused:
+            return None
+        if size > max_bytes:
             return None
         import pyarrow as pa
 
         try:
-            out = bytes(pa.Codec("snappy").decompress(body, got[0]))
+            out = bytes(pa.Codec("snappy").decompress(body, size))
         except Exception:
             return None
         return out if zlib.crc32(out) == crc else None

@@ -4,6 +4,8 @@
   RBSP syntax with its Exp-Golomb codes, FLAC frames), with a prefix-
   code walk over the tries ``prefix_trie`` builds.
 - ``LsbBits``: LSB-first bit reader (WebP lossless, zstd FSE headers).
+- ``read_varint`` / ``zigzag``: LEB128 varints (ORC's protobuf
+  footers, parquet's thrift-compact footers, Avro container headers).
 - ``rbsp_unescape``: H.264 emulation-prevention removal.
 - ``bounded_decompress`` / ``decompress_members``: zlib / bz2 / xz
   inflation that stops one byte past an output cap, so a few hundred
@@ -215,6 +217,30 @@ class LsbBits:
         self.pos = end
         chunk = int.from_bytes(self.data[p >> 3 : (end + 7) >> 3], "little")
         return (chunk >> (p & 7)) & ((1 << k) - 1)
+
+
+def read_varint(
+    data: bytes, i: int, end: int | None = None
+) -> tuple[int, int]:
+    """Unsigned LEB128 varint (protobuf, thrift compact, Avro longs) at
+    ``data[i:end]`` → (value, next offset). ``Truncated`` when it runs
+    past ``end`` (default: the end of ``data``); ``Refused`` when it is
+    longer than 10 bytes, the 64-bit maximum."""
+    end = len(data) if end is None else end
+    v = 0
+    for k in range(10):
+        if i + k >= end:
+            raise Truncated
+        b = data[i + k]
+        v |= (b & 0x7F) << (7 * k)
+        if not b & 0x80:
+            return v, i + k + 1
+    raise Refused("varint longer than 10 bytes")
+
+
+def zigzag(u: int) -> int:
+    """Zigzag-decode a varint's value: 0, 1, 2, 3, … → 0, −1, 1, −2, …"""
+    return (u >> 1) ^ -(u & 1)
 
 
 def prefix_trie(codes) -> dict:

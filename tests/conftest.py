@@ -1,8 +1,11 @@
-"""Shared fixtures: one SparkSession per test session, DuckDB oracle conn."""
+"""Shared fixtures: one SparkSession per test session, DuckDB oracle
+conn, and the registry runs that oracle parity and the plan lints share."""
 
 from __future__ import annotations
 
+import contextlib
 import sys
+from collections import Counter, namedtuple
 from pathlib import Path
 
 import duckdb
@@ -13,7 +16,6 @@ if str(REPO) not in sys.path:
     sys.path.insert(0, str(REPO))
 
 SF_SMOKE = "/root/testdata/sf0.001"
-SF_ORACLE = "/root/testdata/sf0.01"
 
 TABLES = (
     "region",
@@ -59,8 +61,56 @@ def duck_smoke():
     con.close()
 
 
+# What the plan lints read off one run of a query: the initial physical
+# plan text (read before the run), then the measured input rows of each
+# partition-less window and the broadcast rows of each nested-loop join.
+PlanFacts = namedtuple("PlanFacts", "plan window_rows bnlj_rows")
+
+
+def run_and_read(df):
+    """Run ``df`` once with ``toPandas()`` → (its ``PlanFacts``, the
+    frame); the measured facts come off the run's ``QueryExecution``."""
+    from data_ingestion_py_spark.plans import explain as E
+
+    plan = E.executed_plan(df)
+    pdf = df.toPandas()
+    windows = E.single_partition_window_input_rows(df)
+    return PlanFacts(plan, windows, E.bnlj_broadcast_rows(df)), pdf
+
+
+class RegistryRuns:
+    """Each registry query built and run once at SF_SMOKE: ``run``
+    returns the frame for the oracle comparison and keeps only the
+    query's ``PlanFacts``, or the exception it failed with; ``facts``
+    serves those, running the query on a miss. ``builds`` counts the
+    builds of each query."""
+
+    def __init__(self, spark) -> None:
+        self.spark, self.builds, self._facts = spark, Counter(), {}
+
+    def run(self, name: str):
+        from data_ingestion_py_spark.queries import QUERIES
+
+        self.builds[name] += 1
+        try:
+            df = QUERIES[name].spark(self.spark, SF_SMOKE)
+            self._facts[name], pdf = run_and_read(df)
+        except Exception as exc:
+            self._facts[name] = exc
+            raise
+        return pdf
+
+    def facts(self, name: str) -> PlanFacts:
+        if name not in self._facts:
+            with contextlib.suppress(Exception):
+                self.run(name)
+        if isinstance(got := self._facts[name], Exception):
+            raise got
+        return got
+
+
 @pytest.fixture(scope="session")
-def duck_oracle():
-    con = make_duck(SF_ORACLE)
-    yield con
-    con.close()
+def registry_runs(spark):
+    import data_ingestion_py_spark.queries_ext  # noqa: F401  (extends QUERIES)
+
+    return RegistryRuns(spark)

@@ -21,11 +21,14 @@ from data_ingestion_py_spark.sources.archive import avro_block_decompress
 from data_ingestion_py_spark.sources.bits import (
     LsbBits,
     MsbBits,
+    Refused,
     Truncated,
     bounded_decompress,
     decompress_members,
     prefix_trie,
     rbsp_unescape,
+    read_varint,
+    zigzag,
 )
 from data_ingestion_py_spark.sources.multimodal import decode_png_array
 
@@ -109,6 +112,21 @@ def test_rbsp_unescape_drops_emulation_prevention():
     )
     assert rbsp_unescape(b"\x00\x00\x00\x03\x00") == b"\x00\x00\x00\x00"
     assert rbsp_unescape(b"\x00\x03\x00") == b"\x00\x03\x00"
+
+
+def test_varint_bounds_and_zigzag():
+    assert read_varint(b"\x00", 0) == (0, 1)
+    assert read_varint(b"\xff\xac\x02\x05", 1) == (300, 3)
+    top = b"\xff" * 9 + b"\x01"  # 2**64 - 1, the 10-byte maximum
+    assert read_varint(top, 0) == (2**64 - 1, 10)
+    with pytest.raises(Refused):
+        read_varint(b"\x80" * 10 + b"\x01", 0)  # an 11-byte encoding
+    with pytest.raises(Truncated):
+        read_varint(b"\xac\x02", 0, end=1)  # runs past ``end``
+    with pytest.raises(Truncated):
+        read_varint(b"\xac", 0)
+    assert [zigzag(u) for u in range(5)] == [0, -1, 1, -2, 2]
+    assert zigzag(2**64 - 1) == -(2**63)
 
 
 def test_bounded_decompress_cap_and_members():

@@ -11,17 +11,15 @@ import pytest
 
 import data_ingestion_py_spark.queries_ext  # noqa: F401  (extends QUERIES)
 from data_ingestion_py_spark.queries import QUERIES
-from tests.conftest import SF_SMOKE
 from tests.oracle_utils import assert_frames_match
 
 ORACLE_QUERIES = sorted(n for n, q in QUERIES.items() if q.oracle is not None)
 
 
 @pytest.mark.parametrize("name", ORACLE_QUERIES)
-def test_query_matches_oracle(spark, duck_smoke, name):
-    q = QUERIES[name]
-    spark_pdf = q.spark(spark, SF_SMOKE).toPandas()
-    duck_pdf = duck_smoke.execute(q.oracle).fetchdf()
+def test_query_matches_oracle(registry_runs, duck_smoke, name):
+    spark_pdf = registry_runs.run(name)
+    duck_pdf = duck_smoke.execute(QUERIES[name].oracle).fetchdf()
     assert_frames_match(spark_pdf, duck_pdf, name)
 
 

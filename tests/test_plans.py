@@ -7,17 +7,30 @@ runtime on the 60k-row fixture.
 
 from __future__ import annotations
 
-import pytest
-from pyspark.sql import functions as F
+from pyspark.sql import Window, functions as F
 
 import data_ingestion_py_spark.queries_ext  # noqa: F401
 from data_ingestion_py_spark.plans import explain as E
 from data_ingestion_py_spark.queries import QUERIES
-from tests.conftest import SF_SMOKE
+from tests.conftest import SF_SMOKE, run_and_read
 
 
 def _q(spark, name):
     return QUERIES[name].spark(spark, SF_SMOKE)
+
+
+def _sweep(registry_runs, names, faults):
+    """Run the generator ``faults(name, facts)`` over each query's
+    ``PlanFacts``. A query that fails to build or run is reported as
+    that query's failure, without hiding the lint result for the rest."""
+    failures: list[str] = []
+    for name in names:
+        try:
+            facts = registry_runs.facts(name)
+            failures += [f"{name}: {f}" for f in faults(name, facts)]
+        except Exception as exc:  # noqa: BLE001 — collect, don't abort
+            failures.append(f"{name}: BROKEN ({type(exc).__name__}: {exc})")
+    assert not failures, "\n".join(failures)
 
 
 def test_q6_filters_pushed_to_scan(spark):
@@ -66,7 +79,6 @@ def test_q5_six_way_join_limits_shuffles(spark):
 def test_snippetize_is_narrow_and_jvm_only(spark):
     df = _q(spark, "snippets_flat")
     assert E.num_exchanges(df) == 0, "snippetize must not shuffle"
-    assert not E.uses_python_eval(df)
     assert E.codegen_stage_count(df) >= 1
 
 
@@ -74,21 +86,17 @@ def test_flagship_agg_single_shuffle(spark):
     df = _q(spark, "snippet_stats_by_lang")
     # countDistinct adds an expand/second agg pass; ≤2 exchanges total
     assert E.num_exchanges(df) <= 2
-    assert not E.uses_python_eval(df)
 
 
 def test_similarity_topk_no_shuffle_before_topk(spark):
     df = _q(spark, "similarity_cosine_topk")
-    assert not E.uses_python_eval(df)
     # broadcast of the query vector, TakeOrdered on top — corpus side
     # must not shuffle
     assert E.num_exchanges(df) == 0, E.executed_plan(df)
 
 
 def test_dedup_exact_single_shuffle(spark):
-    df = _q(spark, "dedup_exact")
-    assert E.num_exchanges(df) <= 1
-    assert not E.uses_python_eval(df)
+    assert E.num_exchanges(_q(spark, "dedup_exact")) <= 1
 
 
 # Non-multimodal queries whose Arrow (mapInPandas) stage is by design.
@@ -131,59 +139,45 @@ ARROW_BY_DESIGN = frozenset(
 )
 
 
-@pytest.mark.slow  # registry-wide plan sweep (~1-3 min; r16: the
-# five whole-registry lints were 37% of suite wall time and pushed
-# the driver's pytest past its window — run explicitly with
-# `pytest -m slow` or `-m ''`; the builder's close sweep does)
-def test_no_python_udfs_anywhere_in_registry(spark):
+_ARROW_STAGE = ARROW_BY_DESIGN | {
+    n for n, q in QUERIES.items() if "multimodal" in q.tags
+}
+
+
+def _python_eval_faults(name, facts):
+    plan = facts.plan
+    if name in _ARROW_STAGE:
+        if "MapInPandas" not in plan:
+            yield "lost its Arrow stage"
+        if "BatchEvalPython" in plan:
+            yield "row-at-a-time Python"
+        if name in ARROW_BY_DESIGN and "ArrowEvalPython" in plan:
+            yield "Arrow UDF beside its stage"
+    elif E.uses_python_eval(plan):
+        yield "uses Python eval"
+
+
+def test_no_python_udfs_anywhere_in_registry(registry_runs):
     """Every registered query stays JVM-side, except the multimodal
     entries and the ``ARROW_BY_DESIGN`` names, whose stage is BY DESIGN
     an Arrow-batched mapInPandas (never row-at-a-time BatchEvalPython).
     An ``ARROW_BY_DESIGN`` query may not add a scalar Arrow UDF
-    (ArrowEvalPython) beside its stage either.
-
-    Error-isolated: a query that fails to even build is reported as
-    that query's failure, without hiding the lint result for the rest
-    of the registry (round-4 lesson: 3 broken queries took down 4
-    lints)."""
-    failures: list[str] = []
-    for name, q in QUERIES.items():
-        try:
-            df = q.spark(spark, SF_SMOKE)
-            if "multimodal" in q.tags or name in ARROW_BY_DESIGN:
-                plan = E.executed_plan(df)
-                if "MapInPandas" not in plan:
-                    failures.append(f"{name}: lost its Arrow stage")
-                if "BatchEvalPython" in plan:
-                    failures.append(f"{name}: row-at-a-time Python")
-                if name in ARROW_BY_DESIGN and "ArrowEvalPython" in plan:
-                    failures.append(f"{name}: Arrow UDF beside its stage")
-            elif E.uses_python_eval(df):
-                failures.append(f"{name}: uses Python eval")
-        except Exception as exc:  # noqa: BLE001 — collect, don't abort
-            failures.append(f"{name}: BROKEN ({type(exc).__name__}: {exc})")
-    assert not failures, "\n".join(failures)
+    (ArrowEvalPython) beside its stage either."""
+    _sweep(registry_runs, QUERIES, _python_eval_faults)
 
 
 def test_embedding_near_dup_no_crossjoin(spark):
     """The LSH candidate join must be a real equi-join on band keys —
     a crossJoin here is the O(n²) plan that dies at scale."""
-    df = _q(spark, "dedup_embedding_cosine")
-    plan = E.executed_plan(df)
-    assert "CartesianProduct" not in plan
+    plan = E.executed_plan(_q(spark, "dedup_embedding_cosine"))
     assert "BroadcastNestedLoopJoin" not in plan
-    assert not E.uses_python_eval(df)
 
 
 def test_asof_join_single_shuffle_no_python(spark):
     """The as-of join must stay a union + one keyed window: one
     exchange, no cartesian/range join, no Python."""
-    df = _q(spark, "events_asof_join")
-    plan = E.executed_plan(df)
-    assert E.num_exchanges(df) == 1, plan
-    assert "CartesianProduct" not in plan
-    assert "BroadcastNestedLoopJoin" not in plan
-    assert not E.uses_python_eval(df)
+    plan = E.executed_plan(_q(spark, "events_asof_join"))
+    assert E.num_exchanges(plan) == 1, plan
 
 
 def test_bucketed_join_eliminates_shuffle(spark, tmp_path):
@@ -192,8 +186,6 @@ def test_bucketed_join_eliminates_shuffle(spark, tmp_path):
     pre-shuffled data. This is the deploy-time answer to the
     lineitem⋈orders shuffles the plan tests above merely bound."""
     from data_ingestion_py_spark.io import load_table
-    from tests.conftest import SF_SMOKE
-
     spark.sql("DROP TABLE IF EXISTS li_b")
     spark.sql("DROP TABLE IF EXISTS ord_b")
     load_table(spark, SF_SMOKE, "lineitem").write.bucketBy(
@@ -224,12 +216,8 @@ def test_range_join_is_banded_equi_join(spark):
     """The bounded-distance join must execute as an equi-join on
     (key, bin) — a BroadcastNestedLoopJoin here is the O(n·m) plan
     the banding exists to prevent."""
-    df = _q(spark, "events_range_join_pairs")
-    plan = E.executed_plan(df)
-    assert "CartesianProduct" not in plan
-    assert "BroadcastNestedLoopJoin" not in plan
-    assert E.num_exchanges(df) <= 2, plan
-    assert not E.uses_python_eval(df)
+    plan = E.executed_plan(_q(spark, "events_range_join_pairs"))
+    assert E.num_exchanges(plan) <= 2, plan
 
 
 def test_salted_join_equals_plain_join_and_distributes(spark):
@@ -238,8 +226,6 @@ def test_salted_join_equals_plain_join_and_distributes(spark):
     physical join key includes the salt."""
     from data_ingestion_py_spark.io import load_table
     from data_ingestion_py_spark.operators.skew import salted_join
-    from tests.conftest import SF_SMOKE
-
     li = load_table(spark, SF_SMOKE, "lineitem").select(
         "l_orderkey", "l_partkey", "l_quantity"
     )
@@ -268,8 +254,6 @@ def test_partitioned_write_prunes_partitions(spark, tmp_path):
     only the matching partition directories (PartitionFilters in the
     scan, not a post-scan Filter over everything)."""
     from data_ingestion_py_spark.io import load_table, write_partitioned
-    from tests.conftest import SF_SMOKE
-
     docs = load_table(spark, SF_SMOKE, "documents")
     out = str(tmp_path / "docs_by_lang")
     write_partitioned(docs, out, partition_by=["lang"])
@@ -365,32 +349,33 @@ _TINY_BROADCAST_OK = {
 }
 
 
-@pytest.mark.slow  # registry-wide plan sweep (~1-3 min; r16: the
-# five whole-registry lints were 37% of suite wall time and pushed
-# the driver's pytest past its window — run explicitly with
-# `pytest -m slow` or `-m ''`; the builder's close sweep does)
-def test_no_accidental_cartesian_anywhere(spark):
+def _cartesian_faults(name, facts):
+    if "CartesianProduct" in facts.plan:
+        yield "has a cartesian"
+    if name not in _TINY_BROADCAST_OK and "BroadcastNestedLoopJoin" in facts.plan:
+        yield "unexpected nested-loop join"
+
+
+def test_no_accidental_cartesian_anywhere(registry_runs):
     """No registry query may contain a CartesianProduct, and
     BroadcastNestedLoopJoin only where a deliberate 1-row/tiny
-    broadcast is part of the algorithm. Error-isolated per query."""
-    failures: list[str] = []
-    for name, q in QUERIES.items():
-        try:
-            plan = E.executed_plan(q.spark(spark, SF_SMOKE))
-            if "CartesianProduct" in plan:
-                failures.append(f"{name}: has a cartesian")
-            if name not in _TINY_BROADCAST_OK and "BroadcastNestedLoopJoin" in plan:
-                failures.append(f"{name}: unexpected nested-loop join")
-        except Exception as exc:  # noqa: BLE001 — collect, don't abort
-            failures.append(f"{name}: BROKEN ({type(exc).__name__}: {exc})")
-    assert not failures, "\n".join(failures)
+    broadcast is part of the algorithm."""
+    _sweep(registry_runs, QUERIES, _cartesian_faults)
 
 
-@pytest.mark.slow  # registry-wide plan sweep (~1-3 min; r16: the
-# five whole-registry lints were 37% of suite wall time and pushed
-# the driver's pytest past its window — run explicitly with
-# `pytest -m slow` or `-m ''`; the builder's close sweep does)
-def test_tiny_broadcast_allowlist_is_actually_tiny(spark):
+# events_kmv_set_overlap's broadcast is the distinct-type-pair scaffold
+# (types², 792 rows at SF_SMOKE) — bounded by event-type cardinality,
+# which does NOT grow with data volume
+_BROADCAST_BOUNDS = {"events_kmv_set_overlap": 4096}
+
+
+def _broadcast_faults(name, facts):
+    bound = _BROADCAST_BOUNDS.get(name, 1000)
+    if oversized := [r for r in facts.bnlj_rows if r > bound]:
+        yield f"broadcast side(s) {oversized} exceed {bound} rows"
+
+
+def test_tiny_broadcast_allowlist_is_actually_tiny(registry_runs):
     """The BNLJ allowlist is a CHECKED contract, not a trust-forever
     list: execute every allowlisted query and measure the actual
     broadcast row count of each BroadcastNestedLoopJoin build side
@@ -400,26 +385,9 @@ def test_tiny_broadcast_allowlist_is_actually_tiny(spark):
 
     Bound: 1000 rows — an order of magnitude above the biggest
     legitimate scalar/shortlist broadcast (k-row shortlists, 10-row
-    anchors) and far below any data-sized relation even at SF_SMOKE.
-    events_kmv_set_overlap gets a documented higher bound: its
-    broadcast is the distinct-type-pair scaffold (types², 792 rows at
-    SF_SMOKE) — bounded by event-type cardinality, which does NOT grow
-    with data volume."""
-    bounds = {"events_kmv_set_overlap": 4096}
-    failures: list[str] = []
-    for name in sorted(_TINY_BROADCAST_OK):
-        bound = bounds.get(name, 1000)
-        try:
-            rows = E.bnlj_broadcast_rows(QUERIES[name].spark(spark, SF_SMOKE))
-        except Exception as exc:  # noqa: BLE001 — collect, don't abort
-            failures.append(f"{name}: BROKEN ({type(exc).__name__}: {exc})")
-            continue
-        oversized = [r for r in rows if r > bound]
-        if oversized:
-            failures.append(
-                f"{name}: broadcast side(s) {oversized} exceed {bound} rows"
-            )
-    assert not failures, "\n".join(failures)
+    anchors) and far below any data-sized relation even at SF_SMOKE;
+    ``_BROADCAST_BOUNDS`` holds the documented higher bounds."""
+    _sweep(registry_runs, sorted(_TINY_BROADCAST_OK), _broadcast_faults)
 
 
 def test_knn_join_uses_partial_window_group_limit(spark):
@@ -442,14 +410,12 @@ def test_deterministic_sample_is_scan_side(spark):
     defeats its own purpose."""
     df = _q(spark, "sample_deterministic_pct")
     assert E.num_exchanges(df) == 0, E.executed_plan(df)
-    assert not E.uses_python_eval(df)
 
 
 def test_pii_redaction_stays_codegen(spark):
     """Regex scrub is a pure map stage: zero shuffles, zero Python."""
     df = _q(spark, "text_redact_pii")
     assert E.num_exchanges(df) == 0, E.executed_plan(df)
-    assert not E.uses_python_eval(df)
     assert E.codegen_stage_count(df) >= 1
 
 
@@ -458,7 +424,6 @@ def test_merge_upsert_single_shuffle(spark):
     partitionBy); updates and base co-shuffle in the same exchange."""
     df = _q(spark, "documents_merge_upsert")
     assert E.num_exchanges(df) <= 1, E.executed_plan(df)
-    assert not E.uses_python_eval(df)
 
 
 def test_grouping_sets_single_expand_pass(spark):
@@ -559,11 +524,28 @@ _BOUNDED_GLOBAL_WINDOW_OK = {
 }
 
 
-@pytest.mark.slow  # registry-wide plan sweep (~1-3 min; r16: the
-# five whole-registry lints were 37% of suite wall time and pushed
-# the driver's pytest past its window — run explicitly with
-# `pytest -m slow` or `-m ''`; the builder's close sweep does)
-def test_single_partition_window_inputs_measured_bounded(spark):
+# calendar-grain overrides: the gap-fill spine is one row per 10-minute
+# bin over the generator's FIXED event time span — measured 4274 at
+# every SF (more data densifies the bins, it doesn't lengthen the
+# calendar), so the input is constant in data volume; the override
+# leaves room for a longer planted span while still tripping on
+# anything data-proportional.
+_WINDOW_INPUT_BOUNDS = {
+    "events_gap_fill_locf": 65536,
+    "events_gap_fill_interp": 65536,
+}
+
+
+def _window_input_faults(name, facts):
+    bound = _WINDOW_INPUT_BOUNDS.get(name, 4096)
+    if oversized := [r for r in facts.window_rows if r > bound]:
+        yield (
+            f"partition-less window input(s) {oversized} exceed {bound} "
+            "rows — use the two-phase global-rank/offsets form"
+        )
+
+
+def test_single_partition_window_inputs_measured_bounded(registry_runs):
     """The bounded-window allowlist as a MEASURED contract (the
     bnlj-broadcast-lint pattern applied to windows): execute EVERY
     registry query at SF_SMOKE and read the actual input row count of
@@ -577,56 +559,50 @@ def test_single_partition_window_inputs_measured_bounded(spark):
     shortlists) no matter which query it hides in; a future window
     over a corpus-proportional input fails here even if its query
     name is allowlisted for plan SHAPE above."""
-    # calendar-grain overrides: the gap-fill spine is one row per
-    # 10-minute bin over the generator's FIXED event time span —
-    # measured 4274 at every SF (more data densifies the bins, it
-    # doesn't lengthen the calendar), so the input is constant in data
-    # volume; the override leaves room for a longer planted span while
-    # still tripping on anything data-proportional.
-    bounds = {
-        "events_gap_fill_locf": 65536,
-        "events_gap_fill_interp": 65536,
-    }
-    failures: list[str] = []
-    for name, q in QUERIES.items():
-        bound = bounds.get(name, 4096)
-        try:
-            rows = E.single_partition_window_input_rows(
-                q.spark(spark, SF_SMOKE)
-            )
-        except Exception as exc:  # noqa: BLE001 — collect, don't abort
-            failures.append(f"{name}: BROKEN ({type(exc).__name__}: {exc})")
-            continue
-        oversized = [r for r in rows if r > bound]
-        if oversized:
-            failures.append(
-                f"{name}: partition-less window input(s) {oversized} "
-                f"exceed {bound} rows — use the two-phase "
-                "global-rank/offsets form"
-            )
-    assert not failures, "\n".join(failures)
+    _sweep(registry_runs, QUERIES, _window_input_faults)
 
 
-@pytest.mark.slow  # registry-wide plan sweep (~1-3 min; r16: the
-# five whole-registry lints were 37% of suite wall time and pushed
-# the driver's pytest past its window — run explicitly with
-# `pytest -m slow` or `-m ''`; the builder's close sweep does)
-def test_no_unbounded_single_partition_windows(spark):
+def _window_count_faults(name, facts):
+    n = E.single_partition_windows(facts.plan)
+    if n > (cap := _BOUNDED_GLOBAL_WINDOW_OK.get(name, 0)):
+        yield (
+            f"{n} single-partition Window(s), allowed {cap} — "
+            "use the two-phase global-rank/offsets form"
+        )
+
+
+def test_no_unbounded_single_partition_windows(registry_runs):
     """No registry query may single-partition a row-proportional input
     through a partition-less Window. The allowlist above enumerates the
     windows that run over bounded aggregates (the correct two-phase
     form); anything else must use operators/ranking.py or
     operators/packing.py. This pins VERDICT r2 finding #2 permanently."""
-    failures: list[str] = []
-    for name, q in QUERIES.items():
-        try:
-            n = E.single_partition_windows(q.spark(spark, SF_SMOKE))
-            cap = _BOUNDED_GLOBAL_WINDOW_OK.get(name, 0)
-            if n > cap:
-                failures.append(
-                    f"{name}: {n} single-partition Window(s), allowed {cap} — "
-                    "use the two-phase global-rank/offsets form"
-                )
-        except Exception as exc:  # noqa: BLE001 — collect, don't abort
-            failures.append(f"{name}: BROKEN ({type(exc).__name__}: {exc})")
-    assert not failures, "\n".join(failures)
+    _sweep(registry_runs, QUERIES, _window_count_faults)
+
+
+def test_registry_is_built_once_per_session(registry_runs):
+    """Oracle parity and the five lints above share one build and one
+    run of each registry query (``registry_runs``)."""
+    for name in QUERIES:
+        registry_runs.facts(name)
+    assert set(registry_runs.builds.values()) == {1}, registry_runs.builds
+
+
+def test_lints_flag_bad_plans(spark):
+    """Deliberately bad plans, read the way the memo reads a registry
+    query, are flagged by the same fault functions the lints apply."""
+    r = spark.range
+    udf = F.udf(lambda x: x + 1, "long")
+    big = F.broadcast(r(2000).withColumnRenamed("id", "b"))
+    for df, checks in [
+        (r(3).crossJoin(r(3)), [_cartesian_faults]),
+        (r(3).select(udf("id")), [_python_eval_faults]),
+        (
+            r(5000).select(F.row_number().over(Window.orderBy("id"))),
+            [_window_input_faults, _window_count_faults],
+        ),
+        (r(10).join(big, F.col("id") + F.col("b") == 5), [_broadcast_faults]),
+    ]:
+        facts, _ = run_and_read(df)
+        for faults in checks:
+            assert list(faults("bad_plan", facts)), (faults.__name__, facts)

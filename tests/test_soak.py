@@ -51,7 +51,7 @@ def _batch(spark, i: int):
     )
 
 
-@pytest.mark.slow  # ~1.5 min 50-batch soak (see test_plans note)
+@pytest.mark.slow  # ~1.5 min 50-batch soak (see the pyproject.toml note)
 def test_50_batch_soak_bounded_plan(spark, tmp_path):
     state = empty_state(spark).with_(categories=seed_categories(spark))
     sizes = []
