@@ -5,127 +5,43 @@ Used by tests/test_plans.py to pin the physical properties that matter
 at scale: filters reaching the parquet scan, column pruning, dimension
 joins broadcasting (not shuffling), hot paths staying inside
 whole-stage codegen, and shuffle counts not regressing.
+
+Every fact is read off the physical nodes of ``df``'s executed plan by
+one walker, ``nodes``; no helper parses plan text. The walker runs
+nothing on an un-executed plan: an AdaptiveSparkPlan is read as it is
+currently planned (the initial plan before the query runs, the final
+plan after), and the walk follows AdaptiveSparkPlan, QueryStage and
+ReusedExchange nodes into the plans they wrap. ``executed_plan`` is
+the plan text, kept for assertion messages and expression-level checks.
 """
 
 from __future__ import annotations
 
-import re
+from collections import Counter
 
 from pyspark.sql import DataFrame
 
+# Python evaluation nodes: row-at-a-time and Arrow UDFs, and the Arrow
+# batch stages of ``mapInPandas`` / ``mapInArrow``.
+PYTHON_EVAL_OPS = ("BatchEvalPython", "ArrowEvalPython", "MapInPandas", "MapInArrow")
 
-def executed_plan(df: DataFrame | str) -> str:
-    """Final (post-AQE-planning) physical plan as text. A ``str`` is
-    plan text read earlier and passes through, so the text predicates
-    below also judge a plan read before its query ran."""
-    if isinstance(df, str):
-        return df
+
+def executed_plan(df: DataFrame) -> str:
+    """Final (post-AQE-planning) physical plan as text."""
     return df._jdf.queryExecution().executedPlan().toString()
 
 
-def formatted_plan(df: DataFrame) -> str:
-    """explain('formatted') output (scan details incl. PushedFilters)."""
-    return df._sc._jvm.PythonSQLUtils.explainString(
-        df._jdf.queryExecution(), "formatted"
-    )
+def _seq(s) -> list:
+    """A Scala ``Seq`` read over py4j as a list."""
+    return [s.apply(i) for i in range(s.size())]
 
 
-def pushed_filters(df: DataFrame) -> list[str]:
-    """All PushedFilters entries across scans."""
-    out: list[str] = []
-    for m in re.finditer(r"PushedFilters: \[([^\]]*)\]", formatted_plan(df)):
-        out.extend(s.strip() for s in m.group(1).split(",") if s.strip())
-    return out
-
-
-def read_schemas(df: DataFrame) -> list[str]:
-    """ReadSchema struct strings per scan (column pruning evidence)."""
-    return re.findall(r"ReadSchema: (struct<[^>]*>)", formatted_plan(df))
-
-
-def count_ops(df: DataFrame, op: str) -> int:
-    return len(re.findall(rf"\b{re.escape(op)}\b", executed_plan(df)))
-
-
-def has_broadcast_join(df: DataFrame) -> bool:
-    return count_ops(df, "BroadcastHashJoin") > 0 or count_ops(
-        df, "BroadcastNestedLoopJoin"
-    ) > 0
-
-
-def has_sort_merge_join(df: DataFrame) -> bool:
-    return count_ops(df, "SortMergeJoin") > 0
-
-
-def num_exchanges(df: DataFrame) -> int:
-    """Shuffle exchanges in the plan (broadcast exchanges excluded)."""
-    plan = executed_plan(df)
-    return len(re.findall(r"\bExchange (?:hashpartitioning|rangepartitioning|RoundRobinPartitioning|SinglePartition)", plan))
-
-
-def uses_python_eval(df: DataFrame | str) -> bool:
-    """Any Python evaluation node: row-at-a-time or Arrow UDFs, and the
-    Arrow batch stages (``mapInPandas`` / ``mapInArrow``)."""
-    plan = executed_plan(df)
-    return any(
-        op in plan
-        for op in (
-            "BatchEvalPython", "ArrowEvalPython", "MapInPandas", "MapInArrow"
-        )
-    )
-
-
-def codegen_stage_count(df: DataFrame) -> int:
-    """Distinct whole-stage-codegen stages ("*(N)" or "WholeStageCodegen (N)")."""
-    plan = executed_plan(df)
-    ids = re.findall(r"WholeStageCodegen \((\d+)\)", plan)
-    ids += re.findall(r"\*\((\d+)\)", plan)
-    return len(set(ids))
-
-
-def single_partition_windows(df: DataFrame | str) -> int:
-    """Window operators fed by an Exchange SinglePartition — i.e.
-    partition-less windows that move their whole input to one task.
-    Legit only over provably bounded inputs (year tables, per-range
-    offset tables); a registry query whose window input is
-    row-proportional must use the two-phase form in
-    ``operators/ranking.py`` / ``operators/packing.py`` instead.
-    AQE may interpose ShuffleQueryStage/AQEShuffleRead between the
-    Window's Sort and the exchange, so we look a few lines ahead.
-    """
-    lines = executed_plan(df).splitlines()
-    hits = 0
-    for i, line in enumerate(lines):
-        if re.search(r"\bWindow(?:GroupLimit)? ", line) and "WindowGroupLimit" not in line:
-            window = len(lines)
-            for j in range(i + 1, min(i + 6, window)):
-                if "SinglePartition" in lines[j]:
-                    hits += 1
-                    break
-                # a partitioned exchange or a deeper operator means
-                # we've left this Window's input chain
-                if re.search(
-                    # no \b before Join: SortMergeJoin/BroadcastHashJoin
-                    # etc. have no word boundary in front of "Join";
-                    # aggregates render as "HashAggregate(keys=..." (a
-                    # parenthesis, not a trailing space) and come in
-                    # Hash/ObjectHash/Sort variants
-                    r"Exchange (?:hash|range)partitioning"
-                    r"|(?:Hash|ObjectHash|Sort)Aggregate\(|Join |\bWindow ",
-                    lines[j],
-                ):
-                    break
-    return hits
-
-
-def _node_children(node):
-    """Children of an executed SparkPlan node via py4j, following the
-    indirections a plain ``children()`` walk would stop at:
-    AdaptiveSparkPlan's current plan, QueryStage wrappers' inner plan,
-    and ReusedExchange's original exchange (the node that actually
-    holds the populated SQL metrics). The adaptive plan is read with
-    ``executedPlan()``, which runs nothing: before the query runs it is
-    the initial plan, after it runs it is the final plan
+def _children(node) -> list:
+    """Children of a SparkPlan node, following the indirections a plain
+    ``children()`` walk would stop at: AdaptiveSparkPlan's current plan,
+    QueryStage wrappers' inner plan, and ReusedExchange's original
+    exchange (the node that holds the populated SQL metrics). The
+    adaptive plan is read with ``executedPlan()``, which runs nothing
     (``finalPhysicalPlan()`` would run the query stages)."""
     name = node.nodeName()
     if name == "AdaptiveSparkPlan":
@@ -134,58 +50,125 @@ def _node_children(node):
         return [node.plan()]
     if name == "ReusedExchange":
         return [node.child()]
-    ch = node.children()
-    return [ch.apply(i) for i in range(ch.size())]
+    return _seq(node.children())
 
 
-def _iter_physical_nodes(node):
-    """Pre-order walk of an executed SparkPlan via py4j (see
-    ``_node_children`` for the followed indirections)."""
+def _walk(node):
     yield node
-    for k in _node_children(node):
-        yield from _iter_physical_nodes(k)
+    for k in _children(node):
+        yield from _walk(k)
 
 
-def _first_rowcount(node) -> int | None:
-    """Rows flowing out of the nearest descendant that measures them:
-    a shuffle Exchange's ``shuffleRecordsWritten``, else the first
-    ``numOutputRows`` metric. Multiple measured branches (a join
-    feeding the operator directly) sum."""
+def nodes(df: DataFrame):
+    """Pre-order walk of the physical plan of ``df`` via py4j."""
+    return _walk(df._jdf.queryExecution().executedPlan())
+
+
+def op_counts(df: DataFrame) -> Counter:
+    """Node name → number of such nodes in the plan."""
+    return Counter(n.nodeName() for n in nodes(df))
+
+
+def count_ops(df: DataFrame, op: str) -> int:
+    return op_counts(df)[op]
+
+
+def has_broadcast_join(df: DataFrame) -> bool:
+    ops = op_counts(df)
+    return ops["BroadcastHashJoin"] + ops["BroadcastNestedLoopJoin"] > 0
+
+
+def has_sort_merge_join(df: DataFrame) -> bool:
+    return count_ops(df, "SortMergeJoin") > 0
+
+
+def num_exchanges(df: DataFrame) -> int:
+    """Shuffle exchanges in the plan (broadcast exchanges excluded)."""
+    return count_ops(df, "Exchange")
+
+
+def uses_python_eval(df: DataFrame) -> bool:
+    ops = op_counts(df)
+    return any(ops[op] for op in PYTHON_EVAL_OPS)
+
+
+def codegen_stage_count(df: DataFrame) -> int:
+    """Distinct whole-stage-codegen stages."""
+    return len(
+        {
+            n.codegenStageId()
+            for n in nodes(df)
+            if n.nodeName().startswith("WholeStageCodegen")
+        }
+    )
+
+
+def _file_scans(df: DataFrame) -> list:
+    return [
+        n for n in nodes(df)
+        if n.getClass().getSimpleName() == "FileSourceScanExec"
+    ]
+
+
+def pushed_filters(df: DataFrame) -> list[str]:
+    """All PushedFilters entries across file scans, one per filter."""
+    return [
+        f.toString() for s in _file_scans(df) for f in _seq(s.pushedDownFilters())
+    ]
+
+
+def partition_filters(df: DataFrame) -> list[str]:
+    """All PartitionFilters entries across file scans, one per filter."""
+    return [
+        f.toString() for s in _file_scans(df) for f in _seq(s.partitionFilters())
+    ]
+
+
+def read_schemas(df: DataFrame) -> list[str]:
+    """ReadSchema struct strings per file scan (column pruning evidence)."""
+    return [s.metadata().apply("ReadSchema") for s in _file_scans(df)]
+
+
+def _single_task_window(node) -> bool:
+    """A partition-less window: every row of its input goes to one
+    task. A map-side (Partial) WindowGroupLimit runs per input
+    partition, so it is not one, even with an empty partitionSpec."""
+    name = node.nodeName()
+    if name == "WindowGroupLimit" and node.mode().toString() == "Partial":
+        return False
+    return name in ("Window", "WindowGroupLimit") and (
+        node.partitionSpec().size() == 0
+    )
+
+
+def _rows_out(node) -> int | None:
+    """Rows flowing out of ``node``, read off the nearest node at or
+    below it that measures them: a shuffle Exchange's
+    ``shuffleRecordsWritten``, else a ``numOutputRows`` metric."""
     m = node.metrics()
-    if m.contains("shuffleRecordsWritten"):
-        return int(m.apply("shuffleRecordsWritten").value())
-    if m.contains("numOutputRows"):
-        return int(m.apply("numOutputRows").value())
-    total, found = 0, False
-    for k in _node_children(node):
-        v = _first_rowcount(k)
-        if v is not None:
-            total += v
-            found = True
-    return total if found else None
+    for key in ("shuffleRecordsWritten", "numOutputRows"):
+        if m.contains(key):
+            return int(m.apply(key).value())
+    return _rows_in(node)
 
 
-def single_partition_window_input_rows(df: DataFrame) -> list[int]:
-    """The measured input rows of every partition-less
-    Window/WindowGroupLimit in the final plan of ``df``, which must
-    already have run: an action on ``df`` itself fills the SQL metrics
-    read here (``_first_rowcount`` below each window). ``partitionSpec``
-    is read off the node, so no text heuristic decides which windows
-    are partition-less."""
-    rows: list[int] = []
-    for node in _iter_physical_nodes(df._jdf.queryExecution().executedPlan()):
-        if node.nodeName() not in ("Window", "WindowGroupLimit"):
-            continue
-        if node.partitionSpec().size() != 0:
-            continue
-        got = None
-        for k in _node_children(node):
-            v = _first_rowcount(k)
-            if v is not None:
-                got = (got or 0) + v
-        if got is not None:
-            rows.append(got)
-    return rows
+def _rows_in(node) -> int | None:
+    """Rows flowing into ``node``: its measured children's rows summed
+    (a join feeding it directly has two), or None if none is measured."""
+    got = [v for k in _children(node) if (v := _rows_out(k)) is not None]
+    return sum(got) if got else None
+
+
+def single_partition_window_input_rows(df: DataFrame) -> list[int | None]:
+    """One entry per partition-less window (a Window, or a final
+    WindowGroupLimit, with an empty ``partitionSpec``) in the plan of
+    ``df``: its measured input rows, or None where nothing below it
+    measures rows. Legit only over provably bounded inputs; a
+    row-proportional input must use the two-phase form in
+    ``operators/ranking.py`` / ``operators/packing.py``. The rows come
+    from SQL metrics, so ``df`` must already have run for them to be
+    filled (an action on ``df`` itself)."""
+    return [_rows_in(n) for n in nodes(df) if _single_task_window(n)]
 
 
 def bnlj_broadcast_rows(df: DataFrame) -> list[int]:
@@ -193,12 +176,12 @@ def bnlj_broadcast_rows(df: DataFrame) -> list[int]:
     build side (numOutputRows of the BroadcastExchange feeding it) in
     the final plan of ``df``, which must already have run."""
     rows: list[int] = []
-    for node in _iter_physical_nodes(df._jdf.queryExecution().executedPlan()):
+    for node in nodes(df):
         if node.nodeName() != "BroadcastNestedLoopJoin":
             continue
         side = node.buildSide().toString()
         build = node.left() if side == "BuildLeft" else node.right()
-        for sub in _iter_physical_nodes(build):
+        for sub in _walk(build):
             if sub.nodeName() == "BroadcastExchange":
                 rows.append(
                     int(sub.metrics().apply("numOutputRows").value())

@@ -38,7 +38,7 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import types as T
 
-from data_ingestion_py_spark.plans.explain import _iter_physical_nodes
+from data_ingestion_py_spark.plans.explain import nodes
 
 _NULLABLE_INT = {
     T.ByteType: "Int8",
@@ -74,8 +74,7 @@ def spread_for_kernel(df: DataFrame) -> DataFrame:
     stream side, so only a node named ``Exchange`` skips the spread."""
     if df.isStreaming:
         return df
-    plan = df._jdf.queryExecution().executedPlan()
-    if any(n.nodeName() == "Exchange" for n in _iter_physical_nodes(plan)):
+    if any(n.nodeName() == "Exchange" for n in nodes(df)):
         return df
     target = df.sparkSession.sparkContext.defaultParallelism
     if df.rdd.getNumPartitions() < target:

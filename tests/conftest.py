@@ -4,7 +4,9 @@ conn, and the registry runs that oracle parity and the plan lints share."""
 from __future__ import annotations
 
 import contextlib
+import re
 import sys
+import tokenize
 from collections import Counter, namedtuple
 from pathlib import Path
 
@@ -54,6 +56,29 @@ def make_duck(sf_dir: str) -> duckdb.DuckDBPyConnection:
     return con
 
 
+def code_matches(pattern: str, roots, exempt) -> list[str]:
+    """The ``.py`` files under ``roots``, except the file ``exempt``,
+    whose code matches the regex ``pattern``. Code is the file's tokens
+    joined, strings and comments dropped."""
+    skip = {tokenize.STRING, tokenize.COMMENT}
+    if hasattr(tokenize, "FSTRING_MIDDLE"):
+        skip.add(tokenize.FSTRING_MIDDLE)
+    found = []
+    for root in map(Path, roots):
+        for path in sorted(root.rglob("*.py")):
+            if path == Path(exempt):
+                continue
+            with path.open("rb") as f:
+                code = "".join(
+                    t.string
+                    for t in tokenize.tokenize(f.readline)
+                    if t.type not in skip
+                )
+            if re.search(pattern, code):
+                found.append(str(path.relative_to(root)))
+    return found
+
+
 @pytest.fixture(scope="session")
 def duck_smoke():
     con = make_duck(SF_SMOKE)
@@ -61,10 +86,12 @@ def duck_smoke():
     con.close()
 
 
-# What the plan lints read off one run of a query: the initial physical
-# plan text (read before the run), then the measured input rows of each
-# partition-less window and the broadcast rows of each nested-loop join.
-PlanFacts = namedtuple("PlanFacts", "plan window_rows bnlj_rows")
+# What the plan lints read off one run of a query: the node names of the
+# initial physical plan (read before the run, since AQE may re-plan joins
+# while it runs), then, off the final plan, the measured input rows of each
+# partition-less window (None where none is measured) and the broadcast
+# rows of each nested-loop join.
+PlanFacts = namedtuple("PlanFacts", "ops windows bnlj_rows")
 
 
 def run_and_read(df):
@@ -72,10 +99,10 @@ def run_and_read(df):
     frame); the measured facts come off the run's ``QueryExecution``."""
     from data_ingestion_py_spark.plans import explain as E
 
-    plan = E.executed_plan(df)
+    ops = E.op_counts(df)
     pdf = df.toPandas()
     windows = E.single_partition_window_input_rows(df)
-    return PlanFacts(plan, windows, E.bnlj_broadcast_rows(df)), pdf
+    return PlanFacts(ops, windows, E.bnlj_broadcast_rows(df)), pdf
 
 
 class RegistryRuns:

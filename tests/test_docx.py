@@ -7,6 +7,7 @@ from __future__ import annotations
 import io
 import zipfile
 
+from data_ingestion_py_spark.plans import explain as E
 from data_ingestion_py_spark.sources.docx import (
     docx_document_xml,
     docx_paragraphs,
@@ -110,8 +111,8 @@ def test_docx_paragraph_rows_spark(spark):
     )
     assert rows == [(0, 0, "alpha"), (0, 1, "beta"), (1, 0, "gamma")]
     # plan lint: one Arrow stage, no shuffle before the scan rows land
-    plan = flat._jdf.queryExecution().executedPlan().toString()
-    assert "Exchange" not in plan
+    exchanges = [n for n in E.nodes(flat) if "Exchange" in n.nodeName()]
+    assert exchanges == [], E.executed_plan(flat)
     n = docx_paragraph_rows(
         media.withColumn("payload", F.lit(None).cast("binary"))
     ).count()

@@ -5,6 +5,7 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from data_ingestion_py_spark.plans import explain as E
 from data_ingestion_py_spark.sources import files
 
 DOC_SCHEMA = T.StructType(
@@ -78,5 +79,6 @@ def test_quarantine_branch_prunes_from_same_scan(spark, tmp_path):
     p = tmp_path / "docs.jsonl"
     p.write_text('{"doc_id": 1, "text": "alpha", "lang": "en"}\n')
     good, _ = files.read_jsonl(spark, str(p), DOC_SCHEMA)
-    plan = good.select("doc_id")._jdf.queryExecution().executedPlan().toString()
-    assert "FileScan text" in plan
+    df = good.select("doc_id")
+    # Spark names a text file scan node "Scan text "
+    assert E.count_ops(df, "Scan text ") == 1, E.executed_plan(df)

@@ -6,13 +6,14 @@ from __future__ import annotations
 
 import datetime
 import decimal
+from pathlib import Path
 
 import pyarrow as pa
 import pyarrow.parquet as pq
 import pytest
 
 from data_ingestion_py_spark import io
-from tests.conftest import SF_SMOKE, TABLES
+from tests.conftest import SF_SMOKE, TABLES, code_matches
 
 
 def _jobs_in(spark, fn):
@@ -325,24 +326,5 @@ def test_package_reads_parquet_through_one_reader():
     """Outside ``io.py`` the package never calls ``.read.parquet(`` with
     no ``.schema(``: that form infers the schema with a Spark job, which
     ``io.read_parquet`` avoids. Strings and comments are not code."""
-    import re
-    import tokenize
-    from pathlib import Path
-
     pkg = Path(io.__file__).parent
-    skip = {tokenize.STRING, tokenize.COMMENT}
-    if hasattr(tokenize, "FSTRING_MIDDLE"):
-        skip.add(tokenize.FSTRING_MIDDLE)
-    offenders = []
-    for path in sorted(pkg.rglob("*.py")):
-        if path == Path(io.__file__):
-            continue
-        with path.open("rb") as f:
-            code = "".join(
-                t.string
-                for t in tokenize.tokenize(f.readline)
-                if t.type not in skip
-            )
-        if re.search(r"\.read\s*\.parquet\s*\(", code):
-            offenders.append(str(path.relative_to(pkg)))
-    assert offenders == []
+    assert code_matches(r"\.read\s*\.parquet\s*\(", [pkg], io.__file__) == []

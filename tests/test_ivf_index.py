@@ -105,12 +105,9 @@ def test_probe_scan_prunes_cluster_partitions(spark, tmp_path):
     unprobed clusters' directories are never read."""
     idx = IvfIndex(spark, str(tmp_path / "idx"), k=4)
     idx.append_batch(_emb(spark), batch_id=0)
-    plan = E.formatted_plan(idx.probe(_query_vec(spark), k=5, nprobe=1))
-    assert "PartitionFilters" in plan
-    import re
-
-    filters = re.findall(r"PartitionFilters: \[([^\]]*)\]", plan)
-    assert any("cid" in f for f in filters), plan
+    probe = idx.probe(_query_vec(spark), k=5, nprobe=1)
+    filters = E.partition_filters(probe)
+    assert any("cid" in f for f in filters), E.executed_plan(probe)
 
 
 def test_restart_freezes_centroids_and_skips_redelivery(spark, tmp_path):
@@ -264,11 +261,9 @@ def test_probe_batch_matches_sequential_probes(spark, tmp_path):
             ), (r.vec_id, rank)
     assert len(got) == 3 * 5
 
-    plan = E.formatted_plan(idx.probe_batch(queries, k=5, nprobe=2))
-    import re
-
-    filters = re.findall(r"PartitionFilters: \[([^\]]*)\]", plan)
-    assert any("cid" in f for f in filters), plan
+    batch = idx.probe_batch(queries, k=5, nprobe=2)
+    filters = E.partition_filters(batch)
+    assert any("cid" in f for f in filters), E.executed_plan(batch)
 
 
 def test_skew_metric_and_retrain_signal(spark, tmp_path):

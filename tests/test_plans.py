@@ -7,12 +7,14 @@ runtime on the 60k-row fixture.
 
 from __future__ import annotations
 
+from pathlib import Path
+
 from pyspark.sql import Window, functions as F
 
 import data_ingestion_py_spark.queries_ext  # noqa: F401
 from data_ingestion_py_spark.plans import explain as E
 from data_ingestion_py_spark.queries import QUERIES
-from tests.conftest import SF_SMOKE, run_and_read
+from tests.conftest import SF_SMOKE, code_matches, run_and_read
 
 
 def _q(spark, name):
@@ -35,9 +37,11 @@ def _sweep(registry_runs, names, faults):
 
 def test_q6_filters_pushed_to_scan(spark):
     df = _q(spark, "q6_revenue_filter")
-    pushed = " ".join(E.pushed_filters(df))
+    pushed = E.pushed_filters(df)
     for col in ("l_shipdate", "l_discount", "l_quantity"):
-        assert col in pushed, f"{col} not pushed: {pushed}"
+        assert any(col in f for f in pushed), f"{col} not pushed: {pushed}"
+    # one entry per filter, whole: a literal's comma does not split it
+    assert "GreaterThanOrEqual(l_shipdate,1996-01-01 00:00:00.0)" in pushed
 
 
 def test_q6_column_pruning(spark):
@@ -45,6 +49,16 @@ def test_q6_column_pruning(spark):
     assert schemas, "no scan found"
     # only the 4 referenced columns are read, not all 11
     assert all(s.count(":") <= 4 for s in schemas), schemas
+
+
+def test_read_schema_keeps_nested_types(spark):
+    """A ReadSchema with a nested type is read whole, not cut at the
+    first ``>``."""
+    from data_ingestion_py_spark.io import load_table
+
+    assert E.read_schemas(load_table(spark, SF_SMOKE, "embeddings")) == [
+        "struct<vec_id:bigint,embedding:array<float>,label:int>"
+    ]
 
 
 def test_filter_eq_project_prunes_and_pushes(spark):
@@ -145,15 +159,15 @@ _ARROW_STAGE = ARROW_BY_DESIGN | {
 
 
 def _python_eval_faults(name, facts):
-    plan = facts.plan
+    ops = facts.ops
     if name in _ARROW_STAGE:
-        if "MapInPandas" not in plan:
+        if not ops["MapInPandas"]:
             yield "lost its Arrow stage"
-        if "BatchEvalPython" in plan:
+        if ops["BatchEvalPython"]:
             yield "row-at-a-time Python"
-        if name in ARROW_BY_DESIGN and "ArrowEvalPython" in plan:
+        if name in ARROW_BY_DESIGN and ops["ArrowEvalPython"]:
             yield "Arrow UDF beside its stage"
-    elif E.uses_python_eval(plan):
+    elif any(ops[op] for op in E.PYTHON_EVAL_OPS):
         yield "uses Python eval"
 
 
@@ -169,15 +183,15 @@ def test_no_python_udfs_anywhere_in_registry(registry_runs):
 def test_embedding_near_dup_no_crossjoin(spark):
     """The LSH candidate join must be a real equi-join on band keys —
     a crossJoin here is the O(n²) plan that dies at scale."""
-    plan = E.executed_plan(_q(spark, "dedup_embedding_cosine"))
-    assert "BroadcastNestedLoopJoin" not in plan
+    df = _q(spark, "dedup_embedding_cosine")
+    assert E.count_ops(df, "BroadcastNestedLoopJoin") == 0, E.executed_plan(df)
 
 
 def test_asof_join_single_shuffle_no_python(spark):
     """The as-of join must stay a union + one keyed window: one
     exchange, no cartesian/range join, no Python."""
-    plan = E.executed_plan(_q(spark, "events_asof_join"))
-    assert E.num_exchanges(plan) == 1, plan
+    df = _q(spark, "events_asof_join")
+    assert E.num_exchanges(df) == 1, E.executed_plan(df)
 
 
 def test_bucketed_join_eliminates_shuffle(spark, tmp_path):
@@ -204,7 +218,8 @@ def test_bucketed_join_eliminates_shuffle(spark, tmp_path):
         try:
             plan = E.executed_plan(joined)
             assert E.num_exchanges(joined) <= 1, plan  # only the final agg
-            assert "SortMergeJoin" in plan or "ShuffledHashJoin" in plan
+            ops = E.op_counts(joined)
+            assert ops["SortMergeJoin"] + ops["ShuffledHashJoin"] > 0, plan
         finally:
             spark.conf.unset("spark.sql.autoBroadcastJoinThreshold")
     finally:
@@ -216,8 +231,8 @@ def test_range_join_is_banded_equi_join(spark):
     """The bounded-distance join must execute as an equi-join on
     (key, bin) — a BroadcastNestedLoopJoin here is the O(n·m) plan
     the banding exists to prevent."""
-    plan = E.executed_plan(_q(spark, "events_range_join_pairs"))
-    assert E.num_exchanges(plan) <= 2, plan
+    df = _q(spark, "events_range_join_pairs")
+    assert E.num_exchanges(df) <= 2, E.executed_plan(df)
 
 
 def test_salted_join_equals_plain_join_and_distributes(spark):
@@ -258,12 +273,8 @@ def test_partitioned_write_prunes_partitions(spark, tmp_path):
     out = str(tmp_path / "docs_by_lang")
     write_partitioned(docs, out, partition_by=["lang"])
     back = spark.read.parquet(out).where(F.col("lang") == "en")
-    plan = E.formatted_plan(back)
-    assert "PartitionFilters" in plan
-    import re as _re
-
-    m = _re.search(r"PartitionFilters: \[([^\]]*)\]", plan)
-    assert m and "lang" in m.group(1), plan
+    filters = E.partition_filters(back)
+    assert any("lang" in f for f in filters), E.executed_plan(back)
     assert back.count() > 0
 
 
@@ -290,7 +301,6 @@ _TINY_BROADCAST_OK = {
     "q15_top_supplier",
     "q22_dormant_rich_customers",
     "text_tfidf_top_terms",
-    "dedup_embedding_cosine",
     "similarity_knn_join",
     "embedding_kmeans_assign",
     "dedup_semdedup_kmeans",
@@ -350,9 +360,9 @@ _TINY_BROADCAST_OK = {
 
 
 def _cartesian_faults(name, facts):
-    if "CartesianProduct" in facts.plan:
+    if facts.ops["CartesianProduct"]:
         yield "has a cartesian"
-    if name not in _TINY_BROADCAST_OK and "BroadcastNestedLoopJoin" in facts.plan:
+    if name not in _TINY_BROADCAST_OK and facts.ops["BroadcastNestedLoopJoin"]:
         yield "unexpected nested-loop join"
 
 
@@ -399,8 +409,8 @@ def test_knn_join_uses_partial_window_group_limit(spark):
     the partial limit disappears and this pins the regression."""
     df = _q(spark, "similarity_knn_join")
     plan = E.executed_plan(df)
-    assert "WindowGroupLimit" in plan, plan
-    assert "Partial" in plan, plan
+    limits = [n for n in E.nodes(df) if n.nodeName() == "WindowGroupLimit"]
+    assert "Partial" in [n.mode().toString() for n in limits], plan
     assert E.num_exchanges(df) == 1, plan
 
 
@@ -431,7 +441,7 @@ def test_grouping_sets_single_expand_pass(spark):
     not one job per dimension."""
     df = _q(spark, "events_grouping_sets")
     plan = E.executed_plan(df)
-    assert plan.count("Expand") >= 1, plan
+    assert E.count_ops(df, "Expand") >= 1, plan
     # one shuffle for the (expanded) group keys
     assert E.num_exchanges(df) <= 1, plan
 
@@ -471,9 +481,14 @@ def test_runtime_bloom_filter_injected_on_selective_join(spark):
             spark.conf.set(k, v)
 
 
-# queries whose executed plan legitimately contains partition-less
-# Window operators — every entry's window input is provably BOUNDED
-# (calendar-sized or partition-count-sized), never row-proportional:
+# queries whose plan legitimately contains partition-less windows — a
+# Window, or a final WindowGroupLimit, with an empty partitionSpec (a
+# map-side Partial limit runs per partition and does not count). Every
+# such node counts, wherever it sits: one fed by an Exchange
+# SinglePartition, one stacked directly on another window in the same
+# task, one over a single-partition input with no Exchange below it.
+# Every entry's window input is provably BOUNDED (calendar-sized or
+# partition-count-sized), never row-proportional:
 #   orders_yoy_revenue        lag over the year rollup (rows = years)
 #   orders_rolling_7d_revenue range window over the day rollup
 #                             (rows = calendar days)
@@ -498,7 +513,9 @@ _BOUNDED_GLOBAL_WINDOW_OK = {
     "corpus_pack_sequences": 1,
     "customer_rfm_segments": 3,
     "orders_pareto_revenue": 1,
-    "orders_exact_quantiles": 1,
+    # second node: a window stacked on the first in the same task
+    # (measured inputs [1, 1])
+    "orders_exact_quantiles": 2,
     # two-phase global rank: offsets window runs over the bounded
     # per-partition-count aggregate (operators/ranking.py:94-98)
     "corpus_global_shuffle": 1,
@@ -509,18 +526,26 @@ _BOUNDED_GLOBAL_WINDOW_OK = {
     # budget planning: rank+cumsum over the SOURCE-cardinality
     # aggregate (~1e2-1e4 rows at any corpus size)
     "corpus_token_budget_allocation": 1,
-    # Gini rank formula over the same source-cardinality rollup
-    "corpus_source_gini": 1,
+    # Gini rank formula over the same source-cardinality rollup; the
+    # second node is a window stacked on the first in the same task
+    # (measured inputs [20, 20])
+    "corpus_source_gini": 2,
     # per-group quantile transform: with_global_rank offsets table
     # surfaces its prefix and total windows (#partitions-row input)
     "customer_quantile_normalize": 2,
     # decile gains: 2 offsets windows (with_global_rank) + the cumsum
-    # over the 10-row decile rollup
-    "customer_decile_gains": 3,
+    # over the 10-row decile rollup; two more windows stacked directly
+    # on others in the same task (measured inputs [10, 1, 1, 1, 1])
+    "customer_decile_gains": 5,
     # sorted-neighborhood linkage: one with_global_rank whose offsets
     # table surfaces both its prefix and total windows in this plan —
     # both run over the #partitions-row aggregate
     "parts_sorted_neighborhood": 2,
+    # one window over the single-partition calendar spine (a Generate,
+    # no Exchange below it; measured input 4274), bounded by the
+    # _WINDOW_INPUT_BOUNDS entries below
+    "events_gap_fill_locf": 1,
+    "events_gap_fill_interp": 1,
 }
 
 
@@ -538,7 +563,8 @@ _WINDOW_INPUT_BOUNDS = {
 
 def _window_input_faults(name, facts):
     bound = _WINDOW_INPUT_BOUNDS.get(name, 4096)
-    if oversized := [r for r in facts.window_rows if r > bound]:
+    rows = [r for r in facts.windows if r is not None]
+    if oversized := [r for r in rows if r > bound]:
         yield (
             f"partition-less window input(s) {oversized} exceed {bound} "
             "rows — use the two-phase global-rank/offsets form"
@@ -549,11 +575,9 @@ def test_single_partition_window_inputs_measured_bounded(registry_runs):
     """The bounded-window allowlist as a MEASURED contract (the
     bnlj-broadcast-lint pattern applied to windows): execute EVERY
     registry query at SF_SMOKE and read the actual input row count of
-    every partition-less Window/WindowGroupLimit off the executed
-    plan's SQL metrics — partitionSpec is read from the node itself,
-    so this also catches partition-less windows the text walk above
-    can't see (e.g. fed by pre-materialized single-partition inputs).
-    Every such window must stay under a grain constant (4096 rows —
+    every partition-less window (the same nodes the count lint below
+    counts) off the final plan's SQL metrics. Every such window must
+    stay under a grain constant (4096 rows —
     an order of magnitude above the biggest legitimate bounded input:
     calendar-day spines, #shuffle-partitions offset tables, top-k
     shortlists) no matter which query it hides in; a future window
@@ -563,10 +587,10 @@ def test_single_partition_window_inputs_measured_bounded(registry_runs):
 
 
 def _window_count_faults(name, facts):
-    n = E.single_partition_windows(facts.plan)
+    n = len(facts.windows)
     if n > (cap := _BOUNDED_GLOBAL_WINDOW_OK.get(name, 0)):
         yield (
-            f"{n} single-partition Window(s), allowed {cap} — "
+            f"{n} partition-less window(s), allowed {cap} — "
             "use the two-phase global-rank/offsets form"
         )
 
@@ -580,6 +604,14 @@ def test_no_unbounded_single_partition_windows(registry_runs):
     _sweep(registry_runs, QUERIES, _window_count_faults)
 
 
+def test_plans_are_read_through_explain():
+    """Outside ``plans/explain.py`` neither the package nor the tests
+    call ``.executedPlan()``: every plan fact goes through its one node
+    walker. Strings and comments are not code."""
+    roots = [Path(E.__file__).parents[1], Path(__file__).parent]
+    assert code_matches(r"\.executedPlan\s*\(", roots, E.__file__) == []
+
+
 def test_registry_is_built_once_per_session(registry_runs):
     """Oracle parity and the five lints above share one build and one
     run of each registry query (``registry_runs``)."""
@@ -590,19 +622,33 @@ def test_registry_is_built_once_per_session(registry_runs):
 
 def test_lints_flag_bad_plans(spark):
     """Deliberately bad plans, read the way the memo reads a registry
-    query, are flagged by the same fault functions the lints apply."""
+    query, are flagged by the same fault functions the lints apply; a
+    fault function listed as clean for a plan must not flag it."""
     r = spark.range
     udf = F.udf(lambda x: x + 1, "long")
     big = F.broadcast(r(2000).withColumnRenamed("id", "b"))
-    for df, checks in [
-        (r(3).crossJoin(r(3)), [_cartesian_faults]),
-        (r(3).select(udf("id")), [_python_eval_faults]),
+    # global top-k by rank, in an order each partition has to sort: a
+    # Window over a final WindowGroupLimit, both partition-less, fed by
+    # map-side Partial limits that cut each partition to 5 rows first
+    rk = F.rank().over(Window.orderBy((F.col("id") * 7919) % 5000))
+    topk = r(5000).select(rk.alias("rk")).where("rk <= 5")
+    for df, flagged, clean in [
+        (r(3).crossJoin(r(3)), [_cartesian_faults], []),
+        (r(3).select(udf("id")), [_python_eval_faults], []),
         (
             r(5000).select(F.row_number().over(Window.orderBy("id"))),
             [_window_input_faults, _window_count_faults],
+            [],
         ),
-        (r(10).join(big, F.col("id") + F.col("b") == 5), [_broadcast_faults]),
+        (topk, [_window_count_faults], [_window_input_faults]),
+        (
+            r(10).join(big, F.col("id") + F.col("b") == 5),
+            [_broadcast_faults],
+            [],
+        ),
     ]:
         facts, _ = run_and_read(df)
-        for faults in checks:
+        for faults in flagged:
             assert list(faults("bad_plan", facts)), (faults.__name__, facts)
+        for faults in clean:
+            assert not list(faults("bad_plan", facts)), (faults.__name__, facts)

@@ -6,6 +6,7 @@ from pyspark.sql import functions as F
 
 from data_ingestion_py_spark.io import load_table
 from data_ingestion_py_spark.operators import similarity
+from data_ingestion_py_spark.plans import explain as E
 from tests.conftest import SF_SMOKE
 
 
@@ -144,14 +145,8 @@ def test_active_snippet_topk_drops_expired(spark):
 
 def test_bruteforce_stays_jvm_side(spark):
     emb = load_table(spark, SF_SMOKE, "embeddings")
-    plan = (
-        similarity.cosine_topk(emb, 0, 10)
-        ._jdf.queryExecution()
-        .executedPlan()
-        .toString()
-    )
-    assert "BatchEvalPython" not in plan
-    assert "ArrowEvalPython" not in plan
+    df = similarity.cosine_topk(emb, 0, 10)
+    assert not E.uses_python_eval(df), E.executed_plan(df)
 
 
 def test_pq_topk_recall_and_exact_sims(spark):

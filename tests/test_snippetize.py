@@ -24,6 +24,7 @@ from data_ingestion_py_spark.operators.snippetize import (
     STRIDE,
     snippetize,
 )
+from data_ingestion_py_spark.plans import explain as E
 
 
 def model_snippets(text: str) -> list[tuple[int, str]]:
@@ -127,9 +128,8 @@ def test_no_python_udf_in_plan(spark):
     """The operator must stay JVM-side: no BatchEvalPython/ArrowEval in
     the physical plan."""
     df = spark.createDataFrame([(1, "a b c")], "doc_id long, text string")
-    plan = snippetize(df)._jdf.queryExecution().executedPlan().toString()
-    assert "BatchEvalPython" not in plan
-    assert "ArrowEvalPython" not in plan
+    out = snippetize(df)
+    assert not E.uses_python_eval(out), E.executed_plan(out)
 
 
 # --- hypothesis property tests (SURVEY §5.2) -------------------------------

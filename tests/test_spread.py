@@ -4,14 +4,17 @@ probe."""
 
 from __future__ import annotations
 
+from pyspark.sql import Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from data_ingestion_py_spark.plans.explain import _iter_physical_nodes
+from data_ingestion_py_spark.io import load_table
+from data_ingestion_py_spark.plans import explain as E
 from data_ingestion_py_spark.sources.spread import (
     kernel_rows,
     spread_for_kernel,
 )
+from tests.conftest import SF_SMOKE
 
 
 def _jobs(spark, group, fn):
@@ -76,16 +79,40 @@ def test_kernel_rows_empty_output_keeps_schema(spark):
 def test_spread_probe_runs_no_jobs(spark):
     """An un-executed adaptive plan is walked as planned: the node walk
     sees the shuffle Exchange and runs zero jobs, and the probe skips
-    the spread on it."""
+    the spread on it. Every ``explain`` helper reads such a plan
+    without a job too."""
     g = spark.range(100).groupBy((F.col("id") % 3).alias("k")).count()
-    plan = g._jdf.queryExecution().executedPlan()
     names, jobs = _jobs(
         spark,
         "test-spread-walk",
-        lambda: [n.nodeName() for n in _iter_physical_nodes(plan)],
+        lambda: [n.nodeName() for n in E.nodes(g)],
     )
     assert jobs == 0
     assert names[0] == "AdaptiveSparkPlan" and "Exchange" in names
+    orders = load_table(spark, SF_SMOKE, "orders").where("o_custkey < 10")
+    top = orders.withColumn(
+        "rk", F.rank().over(Window.orderBy("o_totalprice"))
+    ).where("rk <= 3")
+    df = top.join(orders.select("o_orderkey"), "o_orderkey").crossJoin(g)
+    helpers = [
+        E.executed_plan, E.op_counts, E.has_broadcast_join,
+        E.has_sort_merge_join, E.num_exchanges, E.uses_python_eval,
+        E.codegen_stage_count, E.pushed_filters, E.partition_filters,
+        E.read_schemas, E.single_partition_window_input_rows,
+        E.bnlj_broadcast_rows,
+    ]
+    got, jobs = _jobs(
+        spark,
+        "test-explain-helpers",
+        lambda: {h.__name__: h(df) for h in helpers},
+    )
+    assert jobs == 0
+    assert got["op_counts"]["AdaptiveSparkPlan"] == 1, got
+    assert got["pushed_filters"] and got["read_schemas"], got
+    # a Window over a final WindowGroupLimit, and one BNLJ; nothing ran,
+    # so their metrics read 0
+    assert got["single_partition_window_input_rows"] == [0, 0], got
+    assert got["bnlj_broadcast_rows"] == [0], got
     out, jobs = _jobs(spark, "test-spread-probe", lambda: spread_for_kernel(g))
     assert jobs == 0
     assert out is g
@@ -97,10 +124,7 @@ def test_broadcast_only_plan_still_spreads(spark):
     stream = spark.range(0, 200, 1, 1)
     small = spark.range(10).withColumnRenamed("id", "k")
     df = stream.join(F.broadcast(small), stream["id"] == small["k"])
-    names = [
-        n.nodeName()
-        for n in _iter_physical_nodes(df._jdf.queryExecution().executedPlan())
-    ]
+    names = [n.nodeName() for n in E.nodes(df)]
     assert "BroadcastExchange" in names and "Exchange" not in names
     target = spark.sparkContext.defaultParallelism
     assert df.rdd.getNumPartitions() < target

@@ -685,9 +685,9 @@ def test_stream_static_broadcast_enrichment_matches_batch(spark, tmp_path):
     assert expect
 
     # the static dim joins as a broadcast in the streaming plan too
-    from data_ingestion_py_spark.plans.explain import executed_plan
+    from data_ingestion_py_spark.plans.explain import count_ops
 
-    assert "BroadcastHashJoin" in executed_plan(enrich(static))
+    assert count_ops(enrich(static), "BroadcastHashJoin") >= 1
 
     stream = spark.readStream.schema(static.schema).parquet(src)
     out = []
