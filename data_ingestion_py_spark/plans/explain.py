@@ -10,9 +10,14 @@ Every fact is read off the physical nodes of ``df``'s executed plan by
 one walker, ``nodes``; no helper parses plan text. The walker runs
 nothing on an un-executed plan: an AdaptiveSparkPlan is read as it is
 currently planned (the initial plan before the query runs, the final
-plan after), and the walk follows AdaptiveSparkPlan, QueryStage and
-ReusedExchange nodes into the plans they wrap. ``executed_plan`` is
-the plan text, kept for assertion messages and expression-level checks.
+plan after). It visits each node the plan text prints, once: it
+follows AdaptiveSparkPlan and QueryStage nodes into the plans they
+wrap, and a node's inner children (a subquery's plan, a cached
+relation's plan below its InMemoryTableScan). A ReusedExchange is a
+leaf there, since its exchange is visited where it first appears;
+row counts are read through it, off that exchange's metrics.
+``executed_plan`` is the plan text, kept for assertion messages and
+expression-level checks.
 """
 
 from __future__ import annotations
@@ -23,7 +28,7 @@ from pyspark.sql import DataFrame
 
 # Python evaluation nodes: row-at-a-time and Arrow UDFs, and the Arrow
 # batch stages of ``mapInPandas`` / ``mapInArrow``.
-PYTHON_EVAL_OPS = ("BatchEvalPython", "ArrowEvalPython", "MapInPandas", "MapInArrow")
+_PYTHON_EVAL_OPS = ("BatchEvalPython", "ArrowEvalPython", "MapInPandas", "MapInArrow")
 
 
 def executed_plan(df: DataFrame) -> str:
@@ -36,13 +41,14 @@ def _seq(s) -> list:
     return [s.apply(i) for i in range(s.size())]
 
 
-def _children(node) -> list:
-    """Children of a SparkPlan node, following the indirections a plain
-    ``children()`` walk would stop at: AdaptiveSparkPlan's current plan,
-    QueryStage wrappers' inner plan, and ReusedExchange's original
-    exchange (the node that holds the populated SQL metrics). The
-    adaptive plan is read with ``executedPlan()``, which runs nothing
-    (``finalPhysicalPlan()`` would run the query stages)."""
+def _inputs(node) -> list:
+    """The nodes whose rows flow into ``node``: its children, following
+    the indirections a plain ``children()`` walk would stop at:
+    AdaptiveSparkPlan's current plan, QueryStage wrappers' inner plan,
+    and ReusedExchange's original exchange (the node that holds the
+    populated SQL metrics). The adaptive plan is read with
+    ``executedPlan()``, which runs nothing (``finalPhysicalPlan()``
+    would run the query stages)."""
     name = node.nodeName()
     if name == "AdaptiveSparkPlan":
         return [node.executedPlan()]
@@ -53,15 +59,24 @@ def _children(node) -> list:
     return _seq(node.children())
 
 
-def _walk(node):
+def _printed(node) -> list:
+    """The nodes the plan text prints below ``node``: its inputs, but
+    none under a ReusedExchange, plus its inner children."""
+    if node.nodeName() == "ReusedExchange":
+        return []
+    return _inputs(node) + _seq(node.innerChildren())
+
+
+def _walk(node, below):
     yield node
-    for k in _children(node):
-        yield from _walk(k)
+    for k in below(node):
+        yield from _walk(k, below)
 
 
 def nodes(df: DataFrame):
-    """Pre-order walk of the physical plan of ``df`` via py4j."""
-    return _walk(df._jdf.queryExecution().executedPlan())
+    """Pre-order walk of the physical plan of ``df`` via py4j, visiting
+    each node the plan text prints once."""
+    return _walk(df._jdf.queryExecution().executedPlan(), _printed)
 
 
 def op_counts(df: DataFrame) -> Counter:
@@ -87,9 +102,13 @@ def num_exchanges(df: DataFrame) -> int:
     return count_ops(df, "Exchange")
 
 
+def python_eval_in(ops: Counter) -> bool:
+    """Whether node-name counts ``ops`` hold a Python evaluation node."""
+    return any(ops[op] for op in _PYTHON_EVAL_OPS)
+
+
 def uses_python_eval(df: DataFrame) -> bool:
-    ops = op_counts(df)
-    return any(ops[op] for op in PYTHON_EVAL_OPS)
+    return python_eval_in(op_counts(df))
 
 
 def codegen_stage_count(df: DataFrame) -> int:
@@ -155,7 +174,7 @@ def _rows_out(node) -> int | None:
 def _rows_in(node) -> int | None:
     """Rows flowing into ``node``: its measured children's rows summed
     (a join feeding it directly has two), or None if none is measured."""
-    got = [v for k in _children(node) if (v := _rows_out(k)) is not None]
+    got = [v for k in _inputs(node) if (v := _rows_out(k)) is not None]
     return sum(got) if got else None
 
 
@@ -181,7 +200,7 @@ def bnlj_broadcast_rows(df: DataFrame) -> list[int]:
             continue
         side = node.buildSide().toString()
         build = node.left() if side == "BuildLeft" else node.right()
-        for sub in _walk(build):
+        for sub in _walk(build, _inputs):
             if sub.nodeName() == "BroadcastExchange":
                 rows.append(
                     int(sub.metrics().apply("numOutputRows").value())

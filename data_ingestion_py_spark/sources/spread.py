@@ -70,7 +70,8 @@ def spread_for_kernel(df: DataFrame) -> DataFrame:
     Python stage) build their RDD lazily, so the probe is job-free
     there. The probe walks the current physical plan's nodes (an
     un-executed adaptive plan is walked as planned, without running
-    its query stages); a BroadcastExchange does NOT redistribute the
+    its query stages; subquery and cached-input plans are walked too,
+    as ``explain.nodes`` does); a BroadcastExchange does NOT redistribute the
     stream side, so only a node named ``Exchange`` skips the spread."""
     if df.isStreaming:
         return df

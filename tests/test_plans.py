@@ -167,7 +167,7 @@ def _python_eval_faults(name, facts):
             yield "row-at-a-time Python"
         if name in ARROW_BY_DESIGN and ops["ArrowEvalPython"]:
             yield "Arrow UDF beside its stage"
-    elif any(ops[op] for op in E.PYTHON_EVAL_OPS):
+    elif E.python_eval_in(ops):
         yield "uses Python eval"
 
 
@@ -487,8 +487,10 @@ def test_runtime_bloom_filter_injected_on_selective_join(spark):
 # such node counts, wherever it sits: one fed by an Exchange
 # SinglePartition, one stacked directly on another window in the same
 # task, one over a single-partition input with no Exchange below it.
-# Every entry's window input is provably BOUNDED (calendar-sized or
-# partition-count-sized), never row-proportional:
+# They are counted in the final plan, where a window below a reused
+# exchange runs, and counts, once. Every entry's window input is
+# provably BOUNDED (calendar-sized or partition-count-sized), never
+# row-proportional:
 #   orders_yoy_revenue        lag over the year rollup (rows = years)
 #   orders_rolling_7d_revenue range window over the day rollup
 #                             (rows = calendar days)
@@ -534,9 +536,8 @@ _BOUNDED_GLOBAL_WINDOW_OK = {
     # surfaces its prefix and total windows (#partitions-row input)
     "customer_quantile_normalize": 2,
     # decile gains: 2 offsets windows (with_global_rank) + the cumsum
-    # over the 10-row decile rollup; two more windows stacked directly
-    # on others in the same task (measured inputs [10, 1, 1, 1, 1])
-    "customer_decile_gains": 5,
+    # over the 10-row decile rollup
+    "customer_decile_gains": 3,
     # sorted-neighborhood linkage: one with_global_rank whose offsets
     # table surfaces both its prefix and total windows in this plan —
     # both run over the #partitions-row aggregate
@@ -632,23 +633,49 @@ def test_lints_flag_bad_plans(spark):
     # map-side Partial limits that cut each partition to 5 rows first
     rk = F.rank().over(Window.orderBy((F.col("id") * 7919) % 5000))
     topk = r(5000).select(rk.alias("rk")).where("rk <= 5")
-    for df, flagged, clean in [
-        (r(3).crossJoin(r(3)), [_cartesian_faults], []),
-        (r(3).select(udf("id")), [_python_eval_faults], []),
-        (
-            r(5000).select(F.row_number().over(Window.orderBy("id"))),
-            [_window_input_faults, _window_count_faults],
-            [],
-        ),
-        (topk, [_window_count_faults], [_window_input_faults]),
-        (
-            r(10).join(big, F.col("id") + F.col("b") == 5),
-            [_broadcast_faults],
-            [],
-        ),
-    ]:
-        facts, _ = run_and_read(df)
-        for faults in flagged:
-            assert list(faults("bad_plan", facts)), (faults.__name__, facts)
-        for faults in clean:
-            assert not list(faults("bad_plan", facts)), (faults.__name__, facts)
+    # a UDF and a cartesian inside a cached input, below its
+    # InMemoryTableScan (over r(7): no case above is served from it)
+    cached = r(7).select(udf("id").alias("u")).crossJoin(r(7)).persist()
+    try:
+        for df, flagged, clean in [
+            (r(3).crossJoin(r(3)), [_cartesian_faults], []),
+            (r(3).select(udf("id")), [_python_eval_faults], []),
+            (
+                r(5000).select(F.row_number().over(Window.orderBy("id"))),
+                [_window_input_faults, _window_count_faults],
+                [],
+            ),
+            (topk, [_window_count_faults], [_window_input_faults]),
+            (
+                r(10).join(big, F.col("id") + F.col("b") == 5),
+                [_broadcast_faults],
+                [],
+            ),
+            (
+                cached.groupBy().count(),
+                [_python_eval_faults, _cartesian_faults],
+                [],
+            ),
+        ]:
+            facts, _ = run_and_read(df)
+            for f in flagged:
+                assert list(f("bad_plan", facts)), (f.__name__, facts)
+            for f in clean:
+                assert not list(f("bad_plan", facts)), (f.__name__, facts)
+    finally:
+        cached.unpersist()
+
+
+def test_reused_exchange_is_walked_once(spark):
+    """A self-join whose second side AQE reuses: the window below the
+    reused exchange runs once, so the final plan holds one window (its
+    input measured once) and two shuffle exchanges, not the reused
+    subtree a second time."""
+    rn = F.row_number().over(Window.orderBy("id")) % 7
+    side = spark.range(3000).select(rn.alias("k")).repartition(4, "k")
+    side = side.groupBy("k").count()
+    df = side.alias("l").join(side.alias("r").hint("merge"), "k")
+    facts, _ = run_and_read(df)
+    ops, plan = E.op_counts(df), E.executed_plan(df)
+    assert ops["ReusedExchange"] == 1 and facts.windows == [3000], plan
+    assert ops["Window"] == 1 and ops["Exchange"] == 2, plan

@@ -89,7 +89,9 @@ def test_spread_probe_runs_no_jobs(spark):
     )
     assert jobs == 0
     assert names[0] == "AdaptiveSparkPlan" and "Exchange" in names
+    # a cached input: its scan is read inside the cached plan
     orders = load_table(spark, SF_SMOKE, "orders").where("o_custkey < 10")
+    orders = orders.persist()
     top = orders.withColumn(
         "rk", F.rank().over(Window.orderBy("o_totalprice"))
     ).where("rk <= 3")
@@ -106,8 +108,10 @@ def test_spread_probe_runs_no_jobs(spark):
         "test-explain-helpers",
         lambda: {h.__name__: h(df) for h in helpers},
     )
+    orders.unpersist()
     assert jobs == 0
     assert got["op_counts"]["AdaptiveSparkPlan"] == 1, got
+    assert got["op_counts"]["InMemoryRelation"] == 2, got
     assert got["pushed_filters"] and got["read_schemas"], got
     # a Window over a final WindowGroupLimit, and one BNLJ; nothing ran,
     # so their metrics read 0
