@@ -480,13 +480,12 @@ def _phash_kernel_bench(spark, sf_dir: str) -> dict:
 
 
 def _jpeg_kernel_bench(spark, sf_dir: str) -> dict:
-    """Decode throughput of the r12 extras-free baseline JPEG kernel
+    """Decode throughput of the r12 pure-Python baseline JPEG kernel
     (Huffman + dequant + IDCT) on a realistic AC-dense 0.2 MP image
     produced by the INDEPENDENT reference encoder in tests/test_jpeg —
-    the honest number for the interpreted fallback path (bit-exactness
-    vs the independent IDCT is pinned in pytest; in an ``[ingest]``
-    container the PIL-first dispatch routes JPEG to the C decoder and
-    this kernel never runs in the hot path). ``hashes_identical``
+    the one JPEG decode path ``decode_image_pixels`` runs
+    (bit-exactness vs the independent IDCT is pinned in pytest).
+    ``hashes_identical``
     confirms the decoded raster feeds the phash pipeline consistently
     (hash of the JPEG == hash of its decoded raster re-encoded
     lossless)."""
@@ -541,8 +540,8 @@ def _pdf_kernel_bench(spark, sf_dir: str) -> dict:
     """Throughput of the r12 pure-byte PDF text parser
     (sources/pdf_pure.parse_pdf_text) on a 64-page document with
     FlateDecoded content streams built by the INDEPENDENT test writer
-    — pages/s for the extras-free S1 path (with fitz installed the
-    dispatch never runs this kernel). ``text_ok`` pins the first and
+    — pages/s for the S1 path, the one text-layer extractor
+    ``extract_pages`` runs. ``text_ok`` pins the first and
     last page strings so the number can't be bought by skipping
     work."""
     from data_ingestion_py_spark.sources.pdf_pure import parse_pdf_text

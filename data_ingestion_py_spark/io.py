@@ -240,13 +240,6 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     return read_parquet(spark, os.path.join(sf_dir, f"{name}.parquet"))
 
 
-def load_tables(
-    spark: SparkSession, sf_dir: str, names: tuple[str, ...] = TABLE_NAMES
-) -> dict[str, DataFrame]:
-    """Load several tables as a dict (lazy DataFrames; nothing is read yet)."""
-    return {name: load_table(spark, sf_dir, name) for name in names}
-
-
 def register_views(spark: SparkSession, sf_dir: str) -> None:
     """Register every fixture table as a temp view for ``spark.sql`` use."""
     for name in TABLE_NAMES:

@@ -9,10 +9,9 @@ thing: BinaryType columns through Arrow into pandas batches and back,
 decoded by REAL pure-byte kernels (netpbm/PCM/AVI-frame pixel decode,
 PNG/JPEG/TIFF/WAV/MP4/AVI header walks, tar/zip/TFRecord/WARC shard
 manifests — see sources/multimodal.py, sources/archive.py,
-sources/web.py). Only compressed codecs stay stubbed in this
-container (Pillow behind the ``[ingest]`` extras; ffmpeg the one
-honest seam); for those, schema, batch shape, fan-out, and hashing
-are still the production plumbing.
+sources/web.py). Only compressed video/audio codecs stay stubbed
+(ffmpeg the one honest seam); for those, schema, batch shape,
+fan-out, and hashing are still the production plumbing.
 
 Reference tie-in: the PDF page images of data_ingestion.py:148-155 are
 exactly (id, page, image_bytes) rows; this module is that shape done
@@ -221,8 +220,8 @@ def q_multimodal_resize_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
     stage (sources/multimodal.resize_plan): integer-only target-dim
     math, never upscaling. Source dims are synthesized deterministically
     into meta.width/height (the slot the real header parse fills) so
-    the oracle can recompute the plan; the pixel resample itself stays
-    at the documented decoder='real' stub seam."""
+    the oracle can recompute the plan; planning reads no pixels
+    (resize_images does the resample)."""
     d = load_table(spark, sf_dir, "documents").where(F.col("doc_id") % 3 == 0)
     media = d.select(
         F.col("doc_id").alias("media_id"),
@@ -3872,7 +3871,7 @@ def q_multimodal_webp_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
     alpha 255, and distance, then 64 one-bit pixels). Only three byte
     runs vary per row (the two 8-bit gray symbols straddling bytes 6-8
     and the 8 pixel-bit bytes), so the whole 40-byte file is exact
-    column arithmetic. decode_image_pixels_free routes the bytes
+    column arithmetic. decode_image_pixels routes the bytes
     through decode_webp_array into pixel_checksums; the oracle
     recomputes Σp and Σ(k+1)·p from the planted bits — a decoder that
     flips the canonical symbol order, mis-walks the simple-code
@@ -4279,8 +4278,8 @@ def q_pdf_scanned_text_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
     five digits in the house bitmap font (3×2 cells of 8×8 flat
     blocks per glyph, restart markers resetting DC prediction so every
     block is one of two 2-byte constants). extract_pages finds zero
-    text (the P9 predicate), falls into the OCR branch, and — with no
-    pytesseract in the container — runs OCR-lite: XObject walk →
+    text (the P9 predicate), falls into the OCR branch, and runs
+    OCR-lite: XObject walk →
     filter chain → JPEG kernel decode → strict glyph-grid match
     (sources/ocr_pure). The recovered text then runs through the REAL
     snippetize operator (T2), closing scanned PDF → raster → text →

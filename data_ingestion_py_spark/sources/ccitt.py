@@ -26,7 +26,7 @@ rasters remain the callers' documented seam.
 The code tables are transcribed from ITU-T T.4 Tables 2/3 (terminating
 and make-up codes) and the shared extended make-up set; the pytest
 suite round-trips against an independent from-the-spec encoder, and a
-skipif-gated extras test cross-checks against Pillow's libtiff G4
+test skipped without Pillow cross-checks against libtiff's G4
 writer where available.
 """
 

@@ -7,9 +7,10 @@ NOT be re-constructed per row or per batch:
   data_ingestion.py:171-176 constructs it per call);
 - OCR via a tesseract handle (data_ingestion.py:136-168).
 
-Neither library ships in this container, so those kernels are honest
-``NotImplementedError`` seams (``sources/pdf.py``). What CAN be
-executed — and is, by ``tests/test_model_seam.py`` — is the seam
+This engine replaces both with pure kernels (the punctuation/token
+sentence modes in ``operators/snippetize.py``; OCR-lite in
+``sources/pdf.py``), so no model library is imported. What this module
+keeps — and ``tests/test_model_seam.py`` executes — is the seam
 contract itself: under ``mapInPandas`` the model is constructed at
 most ONCE per Python worker process regardless of how many batches,
 partitions, or successive jobs flow through it, held in a module-level
@@ -18,8 +19,8 @@ by default, so one worker serves many tasks).
 
 The stand-in "model" is a compiled-regex token-class table —
 deterministic, import-free, but shaped like the real thing (expensive
-to build, cheap to apply, immutable). Swapping in spaCy/tesseract is
-one loader function; the distribution pattern, batch shape, and
+to build, cheap to apply, immutable). Any per-worker model is one
+loader function; the distribution pattern, batch shape, and
 observability hooks do not change.
 
 Observability: every output row carries the worker's pid and the
@@ -104,8 +105,7 @@ TOKEN_CLASS_SCHEMA = (
 
 
 def _build_token_class_model() -> Any:
-    """The 'expensive' construction: compile a pattern table once. A
-    real spaCy or tesseract loader slots in here unchanged."""
+    """The 'expensive' construction: compile a pattern table once."""
     import re
 
     return {
@@ -138,68 +138,4 @@ def tag_token_classes(docs: DataFrame, text_col: str = "text") -> DataFrame:
         _build_token_class_model,
         _apply,
         TOKEN_CLASS_SCHEMA,
-    )
-
-
-# ---------------------------------------------------------------------------
-# Real spaCy kernel behind the same seam (optional [ingest] extras)
-# ---------------------------------------------------------------------------
-
-try:  # optional: spaCy (reference's en_core_web_sm, data_ingestion.py:171-176)
-    import spacy  # type: ignore
-
-    HAVE_SPACY = True
-except Exception:  # pragma: no cover - env without spaCy
-    spacy = None
-    HAVE_SPACY = False
-
-SENTENCE_ROW_SCHEMA = (
-    "doc_id long, sent_idx int, sentence string, "
-    "worker_pid long, model_loads long"
-)
-
-
-def segment_sentences_spacy(
-    docs: DataFrame,
-    text_col: str = "text",
-    model: str = "en_core_web_sm",
-) -> DataFrame:
-    """REAL spaCy sentence segmentation through the load-once seam —
-    the kernel the reference constructs per call
-    (data_ingestion.py:171-176), here loaded once per executor worker
-    and applied over Arrow batches.
-
-    Requires the ``[ingest]`` extras (pip install
-    'data-ingestion-py-spark[ingest]' plus the spaCy model download);
-    in environments without spaCy this raises ImportError at plan
-    build time — the regex/token modes in ``operators/snippetize.py``
-    are the always-available equivalents. Exercised by the
-    skipif-gated ``tests/test_optional_kernels.py`` wherever the libs
-    exist."""
-    if not HAVE_SPACY:
-        raise ImportError(
-            "segment_sentences_spacy requires spaCy "
-            "(pip install 'data-ingestion-py-spark[ingest]'); use "
-            "snippetize's token/punctuation sentence modes otherwise"
-        )
-
-    def _loader() -> Any:
-        # parser gives .sents; everything else is dead weight per-row
-        return spacy.load(model, exclude=["ner", "lemmatizer", "tagger"])
-
-    def _apply(nlp: Any, pdf: pd.DataFrame) -> pd.DataFrame:
-        rows: dict[str, list] = {"doc_id": [], "sent_idx": [], "sentence": []}
-        for doc_id, text in zip(pdf["doc_id"], pdf[text_col]):
-            for i, sent in enumerate(nlp(str(text or "")).sents):
-                rows["doc_id"].append(int(doc_id))
-                rows["sent_idx"].append(i)
-                rows["sentence"].append(sent.text)
-        return pd.DataFrame(rows)
-
-    return apply_model(
-        docs.select("doc_id", text_col),
-        f"spacy:{model}",
-        _loader,
-        _apply,
-        SENTENCE_ROW_SCHEMA,
     )

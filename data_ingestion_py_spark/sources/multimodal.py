@@ -4,21 +4,15 @@ The design a 100 TB training-data pipeline needs: media stays an opaque
 ``binary`` column with a typed metadata struct alongside; decode /
 feature-extraction / resize / frame-sampling run as Arrow-batched
 ``mapInPandas`` stages so the heavy per-item work parallelizes with the
-scan and never touches the driver. Decode coverage is layered by what
-needs a codec library:
+scan and never touches the driver. Every format has one decode path,
+a pure-Python kernel with no codec library:
 
-- REAL, codec-free, always on: netpbm pixel decode (``decode_pnm``),
-  WAV/PCM sample decode, PNG chunk walk, header dimension parses,
-  AVI container walk + uncompressed-DIB frame decode
+- REAL: netpbm, PNG, GIF, JPEG, BMP, TIFF and WebP-lossless pixel
+  decode (``decode_image_pixels``), WAV/PCM sample decode, header
+  dimension parses, AVI container walk + uncompressed-DIB frame decode
   (``decode_avi_frames``), nearest-neighbor resample
   (numpy-vectorized).
-- REAL behind the ``[ingest]`` extras (Pillow): compressed-image pixel
-  decode (JPEG/PNG/GIF/...) via ``_pil_decode_gray`` — the
-  ``decoder="real"`` seam in ``extract_features`` / ``resize_plan`` /
-  ``resize_images``; in this container (no Pillow) the seam raises the
-  documented NotImplementedError, skipif-gated tests run it where the
-  extras exist.
-- Honest STUB (the one remaining seam): ffmpeg COMPRESSED audio/video
+- Honest STUB (the one remaining seam): COMPRESSED audio/video
   decode (H.264/VP9/AAC/Vorbis...) — frame sampling slices bytes
   deterministically there so the schema/fan-out plumbing stays tested.
   Uncompressed AVI no longer needs it (above); neither does Motion-JPEG
@@ -40,6 +34,7 @@ from data_ingestion_py_spark.sources.bits import (
     rbsp_unescape,
 )
 from data_ingestion_py_spark.sources.spread import kernel_rows
+from data_ingestion_py_spark.sources.vp8l import decode_webp_array
 
 import hashlib
 from collections.abc import Iterator
@@ -47,14 +42,6 @@ from collections.abc import Iterator
 import numpy as np
 from pyspark.sql import DataFrame, functions as F
 from pyspark.sql import types as T
-
-try:  # optional codec kernel — pyproject [ingest] extras
-    from PIL import Image as _PILImage
-
-    HAVE_PIL = True
-except ImportError:  # pragma: no cover - exercised in the graded container
-    _PILImage = None
-    HAVE_PIL = False
 
 MEDIA_SCHEMA = T.StructType(
     [
@@ -812,8 +799,8 @@ def decode_png_array(
     stream is zlib (RFC 1950/1951, inflated no further than the
     scanline bytes IHDR implies) under five
     per-scanline byte filters (PNG spec §9): this closes the
-    compressed-image seam for the most common format without the
-    ``[ingest]`` extras. Returns (width, height, grayscale uint8
+    compressed-image seam for the most common format with no codec
+    library. Returns (width, height, grayscale uint8
     ndarray row-major) or None for anything it can't decode honestly:
     non-PNG bytes, Adam7 at non-8 depths, truncated/corrupt zlib
     streams, a palette image without a (whole) PLTE, or a raster whose
@@ -825,9 +812,8 @@ def decode_png_array(
     scatter back onto the raster (spec §8.2 grid).
 
     Grayscale uses the SAME integer (r+g+b)//3 as every other decode
-    path (netpbm, Pillow, AVI DIB), so checksums and phashes are
-    decoder-independent; alpha channels are dropped (what
-    ``convert("RGB")`` does in the Pillow kernel). Filters None/Sub/Up
+    path (netpbm, GIF, JPEG, AVI DIB), so checksums and phashes are
+    decoder-independent; alpha channels are dropped. Filters None/Sub/Up
     reconstruct vectorized (Sub is a per-channel-lane uint8 cumulative
     sum — mod-256 wraps for free); Average/Paeth carry a true
     left-neighbor dependency and reconstruct per-pixel within the
@@ -1518,7 +1504,7 @@ def decode_jpeg_array(
     ``decode_png_array`` / ``decode_gif_array``, closing the last
     in-container compressed-image seam (the reference's own OCR path
     rasterizes PDF pages to .jpg — data_ingestion.py:148-155 — so a
-    faithful extras-free S2 pixel path needs exactly this format).
+    faithful library-free S2 pixel path needs exactly this format).
 
     Supported, honestly: baseline and extended-sequential Huffman DCT
     (SOF0/SOF1) AND progressive Huffman DCT (SOF2, r12 — spectral
@@ -1825,102 +1811,38 @@ def decode_jpeg_array(
     return w, h, np.ascontiguousarray(gray).reshape(-1)
 
 
-def _pil_decode_gray(
-    payload: bytes | None,
-) -> tuple[int, int, "np.ndarray"] | None:
-    """REAL compressed-codec decode (JPEG/PNG/GIF/...) via Pillow,
-    available behind the ``[ingest]`` extras — the kernel that closes
-    the last codec seam where the library exists. Grayscale uses the
-    SAME integer (r+g+b)//3 definition as the netpbm path (NOT PIL's
-    luma convert, which weights channels and rounds differently), so
-    every downstream checksum/hash is decoder-independent for any
-    image both paths can read. Returns None for undecodable bytes."""
-    if not HAVE_PIL or payload is None:  # pragma: no cover - extras-gated
-        return None
-    import io
-
-    try:
-        img = _PILImage.open(io.BytesIO(payload))
-        img.load()
-    except Exception:
-        return None
-    arr = np.asarray(img.convert("RGB"), dtype=np.int16)
-    gray = (arr.sum(axis=2, dtype=np.int16) // 3).astype(np.uint8)
-    h, w = gray.shape
-    return w, h, gray.reshape(-1)
-
-
 def decode_image_pixels(
     payload: bytes | None,
 ) -> tuple[int, int, "np.ndarray"] | None:
-    """Grayscale pixel decode across ALL supported image formats:
-    netpbm first (codec-free, cheapest, and identical under every
-    decoder), then — when the ``[ingest]`` extras are installed — the
-    Pillow C decoders for the compressed codecs, falling back to the
-    pure interpreted kernels (stdlib-zlib PNG, byte-LZW GIF, baseline
-    Huffman+IDCT JPEG) only where Pillow is absent or declines the
-    bytes. PIL-first is the r12 dispatch fix: in a production
-    container the interpreted kernels would route megapixel
-    Paeth-filtered PNGs and every GIF through per-pixel Python when a
-    C decoder is one call away; PNG/GIF decompression is lossless and
-    both paths share the exact integer (r+g+b)//3 gray rule, so the
-    swap is hash-invariant by construction (pinned by the skipif-gated
-    PIL-vs-pure bit-identity test). In THIS container (no Pillow) the
-    dispatch is unchanged: the pure kernels are the only path. The
-    ``decoder="real"`` seam in ``extract_features`` / ``resize_images``
-    routes here."""
-    decoded = decode_pnm_array(payload)
-    if decoded is not None:
-        return decoded
-    if HAVE_PIL:
-        decoded = _pil_decode_gray(payload)
-        if decoded is not None:
-            return decoded
-    return decode_image_pixels_free(payload)
-
-
-def decode_image_pixels_free(
-    payload: bytes | None,
-) -> tuple[int, int, "np.ndarray"] | None:
-    """The EXTRAS-FREE decode set — netpbm, stdlib-zlib PNG, the
-    pure-byte GIF LZW kernel, baseline AND progressive JPEG (Huffman +
-    dequant + IDCT, ``decode_jpeg_array``), standalone BMP (the AVI
-    DIB raster behind a 'BM' file header), strip-based TIFF
+    """Grayscale pixel decode across every supported image format, the
+    one dispatcher the pixel kernels share: netpbm, stdlib-zlib PNG,
+    the pure-byte GIF LZW kernel, baseline AND progressive JPEG
+    (Huffman + dequant + IDCT, ``decode_jpeg_array``), standalone BMP
+    (the AVI DIB raster behind a 'BM' file header), strip-based TIFF
     (``decode_tiff_array``), and WebP-lossless via the pure VP8L
     decoder (``sources/vp8l.decode_webp_array`` — prefix codes, LZ77
     plane codes, color cache, all four transforms; lossy VP8 stays the
-    honest codec seam) — i.e. every format this container
-    really decodes with no optional dependency, and the oracle-pinned
-    reference path the PIL swap must match bit-for-bit. The
-    ``decoder="stub"`` paths route here so compressed images get real
-    pixels everywhere netpbm does."""
-    decoded = decode_pnm_array(payload)
-    if decoded is not None:
-        return decoded
-    decoded = decode_png_array(payload)
-    if decoded is not None:
-        return decoded
-    decoded = decode_gif_array(payload)
-    if decoded is not None:
-        return decoded
-    decoded = decode_jpeg_array(payload)
-    if decoded is not None:
-        return decoded
-    decoded = decode_bmp_array(payload)
-    if decoded is not None:
-        return decoded
-    decoded = decode_tiff_array(payload)
-    if decoded is not None:
-        return decoded
-    from data_ingestion_py_spark.sources.vp8l import decode_webp_array
-
-    return decode_webp_array(payload)
+    honest codec seam). Every kernel shares the integer (r+g+b)//3
+    gray rule, so checksums and hashes agree across formats. None for
+    bytes no kernel reads."""
+    for kernel in (
+        decode_pnm_array,
+        decode_png_array,
+        decode_gif_array,
+        decode_jpeg_array,
+        decode_bmp_array,
+        decode_tiff_array,
+        decode_webp_array,
+    ):
+        decoded = kernel(payload)
+        if decoded is not None:
+            return decoded
+    return None
 
 
 def average_hash(payload: bytes | None, grid: int = 4) -> int | None:
-    """Perceptual hash (average-hash) over any decodable raster
-    (netpbm codec-free; PNG via the stdlib-zlib kernel; other
-    compressed codecs behind ``[ingest]``):
+    """Perceptual hash (average-hash) over any raster
+    ``decode_image_pixels`` reads:
     downsample to ``grid×grid`` integer block sums, then bit b = 1 iff
     block b's mean exceeds the global mean — compared cross-multiplied
     (``block_sum·total_pixels > total_sum·block_pixels``) so the whole
@@ -2523,7 +2445,7 @@ def decode_avi_frames(
     payload: bytes | None, max_frames: int
 ) -> list[bytes] | None:
     """REAL video-frame decode for uncompressed AND Motion-JPEG AVI —
-    the extras-free slice of the ffmpeg seam, always on: walks the
+    the library-free slice of the ffmpeg seam, always on: walks the
     'movi' LIST for '..db'/'..dc' frame chunks and decodes
 
     - BI_RGB (biCompression=0) DIB rasters at 24 or 8 bits/pixel —
@@ -3325,52 +3247,18 @@ def _fake_feature(payload: bytes, dim: int = 8) -> list[float]:
     return [((h[i % 16] / 255.0) * 2.0 - 1.0) for i in range(dim)]
 
 
-def _block_mean_feature(pix: "np.ndarray", dim: int) -> list[float]:
-    """Deterministic pixel-derived embedding: the raster split into
-    ``dim`` positional blocks, each block's mean scaled to [-1, 1] —
-    the real-decode replacement for the md5 pseudo-feature (same
-    shape/range, but it reflects actual image content, so near-dup
-    images land near each other)."""
-    blocks = np.array_split(pix.astype(np.float64), dim)
-    return [
-        float(b.mean()) / 127.5 - 1.0 if b.size else 0.0 for b in blocks
-    ]
-
-
-def extract_features(
-    media: DataFrame, decoder: str = "stub", dim: int = 8
-) -> DataFrame:
-    """Per-item feature extraction over binary payloads (mapInPandas).
-
-    ``decoder="real"`` runs the full pixel decode — netpbm natively,
-    compressed codecs (JPEG/PNG/...) through the Pillow kernel behind
-    the ``[ingest]`` extras — and emits pixel-derived block-mean
-    features; without the extras installed it raises the honest
-    NotImplementedError (audio/video decode stays at the ffmpeg seam
-    either way). ``decoder="stub"`` keeps the md5 pseudo-feature and
-    header-parse dimensions — all the Spark plumbing, none of the
-    codecs."""
-    if decoder == "real" and not HAVE_PIL:
-        raise NotImplementedError(
-            "real compressed-image decode needs the [ingest] extras "
-            "(pillow); this container lacks them — use decoder='stub' "
-            "(audio/video decode additionally needs ffmpeg: still a seam)"
-        )
-    real = decoder == "real"
+def extract_features(media: DataFrame, dim: int = 8) -> DataFrame:
+    """Per-item feature extraction over binary payloads (mapInPandas):
+    the md5 pseudo-feature plus header-parse image dimensions — all the
+    Spark plumbing, none of the codecs (audio/video decode stays at the
+    ffmpeg seam)."""
 
     def _features(mid, kind, payload):
         p = b"" if payload is None else payload
-        # image dims: real pixel decode when requested+possible,
-        # header parse otherwise; audio/video stay at the stub seam
-        r = decode_image_pixels(p) if real and kind == "image" else None
-        if r is not None:
-            dims, feature = (r[0], r[1]), _block_mean_feature(r[2], dim)
-        else:
-            dims = image_dimensions(p) if kind == "image" else None
-            feature = _fake_feature(p, dim)
+        dims = image_dimensions(p) if kind == "image" else None
         return [
-            (mid, kind, len(p), hashlib.md5(p).hexdigest(), feature,
-             *(dims or (None, None)))
+            (mid, kind, len(p), hashlib.md5(p).hexdigest(),
+             _fake_feature(p, dim), *(dims or (None, None)))
         ]
 
     return kernel_rows(
@@ -3382,72 +3270,23 @@ def extract_features(
     )
 
 
-def _pil_sample_frames(
-    payload: bytes, max_frames: int
-) -> list[bytes] | None:
-    """REAL frame sampling for the multi-frame formats Pillow decodes
-    (animated GIF/WebP, multi-page TIFF): up to ``max_frames`` frames
-    at a deterministic even stride across the animation, each decoded
-    to grayscale ((r+g+b)//3, the shared convention) and re-encoded as
-    a valid binary PGM — so sampled frames flow straight into the
-    netpbm pixel kernels (checksums, resize, perceptual hash). None
-    when Pillow is absent or the payload isn't a decodable animation
-    (single-frame stills sample as their one frame)."""
-    if not HAVE_PIL:  # pragma: no cover - extras-gated
-        return None
-    import io
-
-    try:
-        img = _PILImage.open(io.BytesIO(payload))
-        n = getattr(img, "n_frames", 1)
-    except Exception:
-        return None
-    out: list[bytes] = []
-    step = max(1, n // max_frames)
-    for fidx in range(0, n, step):
-        if len(out) == max_frames:
-            break
-        img.seek(fidx)
-        arr = np.asarray(img.convert("RGB"), dtype=np.int16)
-        gray = (arr.sum(axis=2, dtype=np.int16) // 3).astype(np.uint8)
-        h, w = gray.shape
-        out.append(b"P5\n%d %d\n255\n" % (w, h) + gray.tobytes())
-    return out
-
-
 def sample_frames(
     media: DataFrame,
     every_n_bytes: int = 1024,
     max_frames: int = 4,
-    decoder: str = "stub",
 ) -> DataFrame:
-    """Video frame sampling. ``decoder="stub"`` slices the payload at
-    fixed byte strides — one input row → ≤ max_frames output rows, the
-    schema/fan-out contract without any codec. Uncompressed AVI
-    payloads (RIFF/BI_RGB DIB frames) decode for REAL under either
-    decoder — pure-Python, no extras (``decode_avi_frames``).
-    payloads AND Motion-JPEG AVI (r12: per-frame JPEGs through the
-    in-container Huffman+IDCT kernel). ``decoder="real"``
-    additionally decodes the animation formats Pillow reads
-    (GIF/WebP/TIFF — the ``[ingest]`` extras). All real frames emit
-    as valid PGM payloads; containers neither path can open
-    (compressed MP4/H.264 etc.) fall back to the stub slices — that
-    remaining step is the honest ffmpeg seam."""
-    if decoder == "real" and not HAVE_PIL:
-        raise NotImplementedError(
-            "real frame decode needs the [ingest] extras (pillow for "
-            "GIF/WebP/TIFF animations; MP4 additionally needs ffmpeg: "
-            "still a seam); this container lacks them — use "
-            "decoder='stub'"
-        )
-    real = decoder == "real"
+    """Video frame sampling, one input row → ≤ max_frames output rows.
+    Uncompressed AVI (RIFF/BI_RGB DIB frames) and Motion-JPEG AVI
+    (per-frame JPEGs through the Huffman+IDCT kernel) decode for REAL
+    (``decode_avi_frames``) and emit valid PGM payloads; other
+    containers (compressed MP4/H.264 etc.) are sliced at fixed byte
+    strides — the schema/fan-out contract without a codec, the honest
+    ffmpeg seam."""
 
     def _frames(mid, kind, payload):
         if kind != "video" or payload is None:
             return None
         decoded = decode_avi_frames(payload, max_frames)
-        if decoded is None and real:
-            decoded = _pil_sample_frames(payload, max_frames)
         if not decoded:
             n = min(max_frames, max(len(payload) // every_n_bytes, 1))
             decoded = [
@@ -3481,9 +3320,7 @@ RESIZE_SCHEMA = T.StructType(
 )
 
 
-def resize_plan(
-    media: DataFrame, max_w: int, max_h: int, decoder: str = "stub"
-) -> DataFrame:
+def resize_plan(media: DataFrame, max_w: int, max_h: int) -> DataFrame:
     """Fit-in-box resize planning over image rows (mapInPandas).
 
     Target dimensions use integer-only math (never upscale; the binding
@@ -3491,27 +3328,11 @@ def resize_plan(
     axis floors) so every engine — and the DuckDB oracle — agrees
     exactly. Source dims come from ``meta.width/height`` (populated by
     the real header parse in ``extract_features`` or upstream
-    metadata). ``decoder="real"`` is the seam where the actual pixel
-    resample (Pillow, ``[ingest]`` extras) plugs in; planning does not
-    need it — but ``decoder="real"`` additionally verifies the source
-    dims against an ACTUAL pixel decode (netpbm natively, compressed
-    codecs via Pillow), so a lying metadata struct cannot mis-size the
-    plan. Without the extras it raises the honest NotImplementedError.
-    """
-    if decoder == "real" and not HAVE_PIL:
-        raise NotImplementedError(
-            "real pixel decode needs the [ingest] extras (pillow); "
-            "this container lacks them — use decoder='stub' "
-            "(planning math is exact either way)"
-        )
-    real = decoder == "real"
+    metadata); planning reads no pixels — ``resize_images`` does the
+    resample."""
 
-    def _plan(mid, meta, payload):
-        d = decode_image_pixels(payload) if real else None
-        if d is not None:
-            w, h = d[0], d[1]
-        else:
-            w, h = int(meta["width"]), int(meta["height"])
+    def _plan(mid, meta, _payload):
+        w, h = int(meta["width"]), int(meta["height"])
         if w <= max_w and h <= max_h:
             tw, th = w, h
         elif w * max_h >= h * max_w:  # width is binding
@@ -3623,7 +3444,7 @@ def decode_wav_samples(
     ``decode_pnm_array``'s pixel raster (header walk done by the same
     RIFF rules as ``media_duration_ms``).
 
-    Decodes, extras-free:
+    Decodes, with no codec library:
 
     - audio_format 1, 16-bit PCM — one numpy ``frombuffer``, never a
       per-sample Python loop;
@@ -4134,28 +3955,15 @@ def _resample_to_pgm(
     return b"P5\n%d %d\n255\n" % (tw, th) + out
 
 
-def resize_images(
-    media: DataFrame, tw: int, th: int, decoder: str = "stub"
-) -> DataFrame:
+def resize_images(media: DataFrame, tw: int, th: int) -> DataFrame:
     """(media_id, payload) → (media_id, width, height, payload) with
-    the payload REALLY resized to ``tw×th`` where decodable (valid PGM
-    out — round-trips through decode_pnm), NULLs where not. Arrow
-    mapInPandas, one narrow pass. ``decoder="stub"`` resizes the
-    codec-free netpbm formats; ``decoder="real"`` additionally decodes
-    compressed codecs (JPEG/PNG/...) through the Pillow kernel behind
-    the ``[ingest]`` extras — the RESAMPLER is the same deterministic
-    integer nearest-neighbor either way, only the decode differs."""
-    if decoder == "real" and not HAVE_PIL:
-        raise NotImplementedError(
-            "real compressed-image decode needs the [ingest] extras "
-            "(pillow); this container lacks them — use decoder='stub'"
-        )
-    decode = (
-        decode_image_pixels if decoder == "real" else decode_image_pixels_free
-    )
+    the payload REALLY resized to ``tw×th`` where ``decode_image_pixels``
+    reads it (valid PGM out — round-trips through decode_pnm), NULLs
+    where not. Arrow mapInPandas, one narrow pass; the resampler is
+    deterministic integer nearest-neighbor."""
 
     def _resize(mid, payload):
-        decoded = decode(payload) if tw > 0 and th > 0 else None
+        decoded = decode_image_pixels(payload) if tw > 0 and th > 0 else None
         if decoded is None:
             return [(mid, None, None, None)]
         return [(mid, tw, th, _resample_to_pgm(decoded, tw, th))]
@@ -4183,11 +3991,11 @@ def pixel_checksums(media: DataFrame) -> DataFrame:
     off-by-one is visible, not just brightness changes). Chained after
     ``resize_images`` this round-trips the resized payload through
     decode_pnm — proving the resize emits VALID images, not just
-    plausible bytes. Accepts every extras-free format (netpbm + the
-    stdlib-zlib PNG kernel)."""
+    plausible bytes. Accepts every format ``decode_image_pixels``
+    reads."""
 
     def _checksums(mid, payload):
-        decoded = decode_image_pixels_free(payload)
+        decoded = decode_image_pixels(payload)
         if decoded is None:
             return [(mid, None, None, None, None)]
         w, h, pix = decoded

@@ -16,8 +16,8 @@ expected text an oracle recomputes arithmetically).
 
 Honesty contract: this is NOT general OCR. ``match_glyph_grid`` in
 strict mode returns None unless every glyph cell matches a font
-template EXACTLY after thresholding — a real-world scan falls through
-to the documented pytesseract seam instead of yielding garbage. The
+template EXACTLY after thresholding — a real-world scan is refused
+(``extract_pages`` leaves its text empty) instead of yielding garbage. The
 non-strict mode (nearest template by Hamming distance with a bounded
 reject) exists for rasters that went through a lossy-but-flat-block
 round trip.
@@ -58,8 +58,8 @@ DIGIT_TEMPLATES: dict[str, tuple[tuple[int, ...], ...]] = {
 #: with a space glyph (all-paper) a strictly-blank region reads as
 #: whitespace instead of refusing, which is the right behavior only
 #: when the caller KNOWS the page is typeset in this font — the PDF
-#: ingestion fallback keeps the digits-only font so unknown scans
-#: still fall through to the pytesseract seam.
+#: ingestion fallback tries only the strict digit and A-Z/0-9 fonts so
+#: unknown scans are still refused.
 TEXT_TEMPLATES: dict[str, tuple[tuple[int, ...], ...]] = {
     **DIGIT_TEMPLATES,
     ".": ((0, 0), (0, 0), (1, 0)),
@@ -148,10 +148,9 @@ def match_glyph_grid(
     against every template. ``strict=True`` (the default — and the only
     mode the PDF ingestion fallback uses): ANY window that is not an
     exact template match fails the whole page with None, so real-world
-    scans fall through to the pytesseract seam instead of reading as
-    garbage. ``strict=False``: nearest template by Hamming distance,
-    ties to the lexicographically smaller char, distance >
-    ``max_hamming`` → ``'?'``. Rows of glyphs join with ``'\\n'``."""
+    scans are refused instead of reading as garbage. ``strict=False``:
+    nearest template by Hamming distance, ties to the lexicographically
+    smaller char, distance > ``max_hamming`` → ``'?'``. Rows of glyphs join with ``'\\n'``."""
     if templates is None:
         templates = DIGIT_TEMPLATES
     if gray.ndim != 2:
@@ -207,10 +206,9 @@ def ocr_pdf_pages(
     rasters decoded exactly ONCE either way (r14: the two-font
     fallback used to re-run the whole extraction per font). Returns
     per-page text (images on a page join with ``'\\n'``) or None when
-    no font reads every page — the caller's cue to fall through to the
-    pytesseract seam. This is the reference's OCR loop
-    (data_ingestion.py:136-168) made executable in-container for
-    bitmap-font scans."""
+    no font reads every page — the caller's cue to refuse the scan.
+    This is the reference's OCR loop (data_ingestion.py:136-168) made
+    executable with no OCR library, for bitmap-font scans."""
     from data_ingestion_py_spark.sources.multimodal import decode_jpeg_array
     from data_ingestion_py_spark.sources.pdf_pure import (
         extract_page_images,

@@ -7,18 +7,18 @@ cv2) — serially, through one shared temp file.
 
 Spark design: ``spark.read.format("binaryFile")`` scans the directory
 (distributed, whole files as BinaryType rows) → ``mapInPandas`` runs the
-extraction library per executor with Arrow-batched transfer. The OCR
-fallback is decided by the P9 predicate (total extracted text length ==
-0 per document) INSIDE the UDF, so each document makes one pass. The
-heavyweight libs load once per worker (module scope) — not once per page
-like the reference (:171).
+extraction per executor with Arrow-batched transfer. The OCR fallback is
+decided by the P9 predicate (total extracted text length == 0 per
+document) INSIDE the UDF, so each document makes one pass.
 
-The container has no fitz/pytesseract: both engines are optional
-imports. Without them the extractor uses a deterministic fallback that
-treats the binary payload as UTF-8 text with form-feed page breaks —
-keeping the Spark plumbing (schema, batching, page numbering, link
-derivation) real and testable. OCR without pytesseract raises
-NotImplementedError only for docs that genuinely need it.
+Extraction has one path per step, with no PDF or OCR library: the
+pure-byte parser (``sources/pdf_pure``) reads the text layer
+(``extractor='pure-byte'``), and scanned documents go through OCR-lite,
+strict bitmap-font glyph matching over the decoded page images
+(``sources/ocr_pure``, ``extractor='ocr-lite'``). Payloads that are not
+PDFs read as UTF-8 text with form-feed page breaks
+(``extractor='fallback-utf8'``, the planted test fixtures). A scan
+OCR-lite cannot read keeps its empty text and its ``needs_ocr`` flag.
 """
 
 from __future__ import annotations
@@ -42,36 +42,14 @@ PAGE_ROW_SCHEMA = T.StructType(
     ]
 )
 
-try:  # optional: PyMuPDF (reference's fitz, :110)
-    import fitz  # type: ignore
 
-    HAVE_FITZ = True
-except Exception:  # pragma: no cover - env without PyMuPDF
-    fitz = None
-    HAVE_FITZ = False
-
-try:  # optional: OCR stack (reference :136-168)
-    import pytesseract  # type: ignore
-
-    HAVE_OCR = True
-except Exception:  # pragma: no cover
-    pytesseract = None
-    HAVE_OCR = False
-
-
-def _extract_pages_fitz(content: bytes) -> tuple[list[str], dict]:
-    doc = fitz.open(stream=content, filetype="pdf")
-    meta = {k: str(v) for k, v in (doc.metadata or {}).items() if v is not None}
-    return [page.get_text() for page in doc], meta
-
-
-def _extract_pages_fallback(
+def _extract_pages(
     content: bytes, password: bytes = b""
 ) -> tuple[list[str], dict]:
-    """Extras-free extraction: REAL pure-byte PDF parse first (object
+    """Text-layer extraction: REAL pure-byte PDF parse first (object
     scan → page tree → FlateDecode content streams → Tj/TJ/'/\" text
-    operators, sources/pdf_pure.py — the in-container kernel for the
-    reference's core fitz loop, data_ingestion.py:110-135), then the
+    operators, sources/pdf_pure.py — the kernel for the reference's
+    core fitz loop, data_ingestion.py:110-135), then the
     deterministic UTF-8/form-feed stand-in for non-PDF payloads (the
     planted test fixtures)."""
     if content.startswith(b"%PDF-"):
@@ -90,51 +68,34 @@ def _extract_pages_fallback(
 
 
 def _ocr_pages(content: bytes) -> list[str]:
-    """Real OCR kernel: rasterize each page with PyMuPDF, run
-    tesseract on the pixmap. Executable wherever the ``[ingest]``
-    extras (pymupdf + pytesseract + pillow, see pyproject.toml) are
-    installed. Without them (this container), the extras-free OCR-lite
-    path runs first (r13): extract the page image XObjects
+    """OCR-lite (r13): extract the page image XObjects
     (``pdf_pure.extract_page_images`` — /DCTDecode streams decode
-    through the in-container JPEG kernel), then STRICT bitmap-font
-    glyph matching (``sources/ocr_pure``) — strict meaning any page
-    whose rasters don't match the font exactly falls through to the
-    honest NotImplementedError seam rather than reading as garbage.
-    The reference does the same work serially through one shared temp
-    file (data_ingestion.py:136-168); here the rasterize+OCR runs per
-    document inside the Arrow-batched mapInPandas, no temp files.
+    through the JPEG kernel), then STRICT bitmap-font glyph matching
+    (``sources/ocr_pure``) — strict meaning any page whose rasters
+    don't match the font exactly raises NotImplementedError rather
+    than reading as garbage. The reference does the same work serially
+    through one shared temp file (data_ingestion.py:136-168); here the
+    rasterize+OCR runs per document inside the Arrow-batched
+    mapInPandas, no temp files.
     """
-    if not (HAVE_OCR and HAVE_FITZ):  # env seam: try OCR-lite first
-        from data_ingestion_py_spark.sources.ocr_pure import (
-            ALNUM_TEMPLATES,
-            ocr_pdf_pages,
-        )
+    from data_ingestion_py_spark.sources.ocr_pure import (
+        ALNUM_TEMPLATES,
+        ocr_pdf_pages,
+    )
 
-        # try the digits font then the full A-Z/0-9 font (r14 —
-        # real WORDS from scanned prose); one parse + raster decode
-        # for both, and strict still refuses off-font scans
-        lite = ocr_pdf_pages(
-            content, strict=True, templates=[None, ALNUM_TEMPLATES]
-        )
-        if lite is not None:
-            return lite
+    # try the digits font then the full A-Z/0-9 font (r14 — real
+    # WORDS from scanned prose); one parse + raster decode for both,
+    # and strict still refuses off-font scans
+    lite = ocr_pdf_pages(
+        content, strict=True, templates=[None, ALNUM_TEMPLATES]
+    )
+    if lite is None:
         raise NotImplementedError(
-            "OCR fallback requires pytesseract + pymupdf + pillow "
-            "(pip install 'data-ingestion-py-spark[ingest]'); not "
-            "available in this environment, and the document's page "
-            "images are not bitmap-font rasters the extras-free "
-            "OCR-lite path recognizes "
-            "(reference: data_ingestion.py:136-168)"
+            "OCR-lite reads only bitmap-font page rasters; this "
+            "document's page images are not ones it recognizes "
+            "(reference OCR: data_ingestion.py:136-168)"
         )
-    from PIL import Image  # pragma: no cover - exercised via extras
-
-    doc = fitz.open(stream=content, filetype="pdf")  # pragma: no cover
-    out: list[str] = []  # pragma: no cover
-    for page in doc:  # pragma: no cover
-        pix = page.get_pixmap(dpi=150)
-        img = Image.frombytes("RGB", (pix.width, pix.height), pix.samples)
-        out.append(pytesseract.image_to_string(img))
-    return out  # pragma: no cover
+    return lite
 
 
 def scan_pdf_directory(spark: SparkSession, path: str, glob: str = "*.pdf") -> DataFrame:
@@ -157,28 +118,23 @@ def extract_pages(
 ) -> DataFrame:
     """binaryFile rows → one row per page (S1 + P9 OCR-need flag).
 
-    Arrow-batched mapInPandas; the extraction lib is loaded once per
-    executor process at module import (vs per-page in the reference,
-    data_ingestion.py:171). ``password`` (r15) is the corpus-level
-    USER password for encrypted documents — a plan-time constant
-    captured into the Arrow stage (the common whole-archive-one-
-    password shape); per-document passwords would be a join column,
-    deliberately out of scope. Wrong-password documents fall through
-    exactly like unparseable ones: empty text, needs_ocr set, honest.
+    Arrow-batched mapInPandas, one pass per document. ``password``
+    (r15) is the corpus-level USER password for encrypted documents —
+    a plan-time constant captured into the Arrow stage (the common
+    whole-archive-one-password shape); per-document passwords would be
+    a join column, deliberately out of scope. Wrong-password documents
+    fall through exactly like unparseable ones: empty text, needs_ocr
+    set, honest.
     """
 
     def _pages(path, content):
-        if HAVE_FITZ:
-            pages, meta = _extract_pages_fitz(content)
-        else:
-            pages, meta = _extract_pages_fallback(content, password)
+        pages, meta = _extract_pages(content, password)
         # P9: whole-document empty-text predicate decides OCR
         needs_ocr = sum(len(p.strip()) for p in pages) == 0
         if needs_ocr:
             try:
                 pages = _ocr_pages(content)
-                meta = {**meta, "extractor": "ocr"
-                        if HAVE_OCR else "ocr-lite"}
+                meta = {**meta, "extractor": "ocr-lite"}
             except NotImplementedError:
                 pass  # honest: text stays empty, flag stays set
         name = path.rsplit("/", 1)[-1]
@@ -255,8 +211,8 @@ def extract_scanned_text(
     scanned PDF: the dedicated stage for corpora KNOWN to be typeset
     in a bitmap font (pass ``ocr_pure.TEXT_TEMPLATES`` for digits +
     '.'/' ' running text). Unlike ``extract_pages`` — whose OCR branch
-    keeps the digits-only default so unknown scans fall through to the
-    pytesseract seam — this stage lets the caller choose the font.
+    tries the digits and A-Z/0-9 fonts and leaves unknown scans empty —
+    this stage lets the caller choose the font.
     Documents with no recognizable page images emit no rows. One
     narrow Arrow stage, no shuffle."""
     from data_ingestion_py_spark.sources.ocr_pure import ocr_pdf_pages

@@ -59,7 +59,10 @@ def make_duck(sf_dir: str) -> duckdb.DuckDBPyConnection:
 def code_matches(pattern: str, roots, exempt) -> list[str]:
     """The ``.py`` files under ``roots``, except the file ``exempt``,
     whose code matches the regex ``pattern``. Code is the file's tokens
-    joined, strings and comments dropped."""
+    joined by single spaces, strings and comments dropped, so a
+    pattern sees every word boundary (``import fitz as f`` reads
+    ``import fitz as f``, ``a.b()`` reads ``a . b ( )``; a line break
+    inside brackets is a newline token)."""
     skip = {tokenize.STRING, tokenize.COMMENT}
     if hasattr(tokenize, "FSTRING_MIDDLE"):
         skip.add(tokenize.FSTRING_MIDDLE)
@@ -69,7 +72,7 @@ def code_matches(pattern: str, roots, exempt) -> list[str]:
             if path == Path(exempt):
                 continue
             with path.open("rb") as f:
-                code = "".join(
+                code = " ".join(
                     t.string
                     for t in tokenize.tokenize(f.readline)
                     if t.type not in skip

@@ -327,4 +327,4 @@ def test_package_reads_parquet_through_one_reader():
     no ``.schema(``: that form infers the schema with a Spark job, which
     ``io.read_parquet`` avoids. Strings and comments are not code."""
     pkg = Path(io.__file__).parent
-    assert code_matches(r"\.read\s*\.parquet\s*\(", [pkg], io.__file__) == []
+    assert code_matches(r"\.\s*read\s*\.\s*parquet\s*\(", [pkg], io.__file__) == []

@@ -9,7 +9,7 @@ IDCT rounding, plane assembly, upsampling, color conversion).
 
 Reference tie-in: the reference's OCR fallback rasterizes PDF pages to
 .jpg and re-reads them (data_ingestion.py:148-155) — this kernel is
-what makes that pixel path real in-container, with no [ingest] extras.
+what makes that pixel path real with no codec library.
 """
 
 from __future__ import annotations
@@ -24,7 +24,6 @@ from data_ingestion_py_spark.sources.multimodal import (
     decode_avi_frames,
     decode_bmp_array,
     decode_image_pixels,
-    decode_image_pixels_free,
     decode_jpeg_array,
     decode_pnm_array,
 )
@@ -412,12 +411,12 @@ def test_jpeg_crafted_huge_sof_rejected_before_allocation():
 def test_jpeg_flows_through_dispatch_and_phash():
     raster = _rng_raster(32, 32, 12)
     payload, (qc,) = _jpeg_bytes([raster], [(1, 1)], 32, 32)
-    # extras-free dispatch routes JPEG to the pure kernel
-    got = decode_image_pixels_free(payload)
+    # the one dispatcher routes JPEG to the pure kernel
+    got = decode_image_pixels(payload)
     assert got is not None and got[0] == 32
     expect = _expected_plane(qc, _QTABLE)
     assert (got[2].reshape(32, 32) == expect).all()
-    # and the phash pipeline accepts JPEG with no extras
+    # and the phash pipeline accepts JPEG
     hv = average_hash(payload)
     assert hv is not None and 0 <= hv < (1 << 16)
     # the hash equals the hash of the DECODED raster re-encoded as PGM
@@ -583,58 +582,17 @@ def test_bmp_honest_nones():
     assert decode_bmp_array(bytes(rle)) is None
 
 
-def test_decode_image_pixels_prefers_pil_when_extras_present(monkeypatch):
-    """Dispatch-order contract (r12): with [ingest] extras the Pillow
-    C decoder handles compressed formats BEFORE the interpreted
-    kernels; netpbm stays first (codec-free either way). Simulated via
-    monkeypatch so the contract is pinned even in this extras-free
-    container; the bit-identity of the two paths is pinned by the
-    skipif-gated test below where Pillow exists."""
-    from data_ingestion_py_spark.sources import multimodal as mm
-
-    raster = _rng_raster(16, 16, 30)
-    payload, _ = _jpeg_bytes([raster], [(1, 1)], 16, 16)
-    calls = []
-
-    def fake_pil(p):
-        calls.append("pil")
-        return 16, 16, np.zeros(256, dtype=np.uint8)
-
-    monkeypatch.setattr(mm, "HAVE_PIL", True)
-    monkeypatch.setattr(mm, "_pil_decode_gray", fake_pil)
-    got = mm.decode_image_pixels(payload)
-    assert calls == ["pil"]  # PIL consulted first for compressed bytes
-    assert (got[2] == 0).all()  # and its result is used
-    # netpbm bytes never reach PIL — the codec-free kernel wins
-    calls.clear()
-    pgm = b"P5\n4 4\n255\n" + bytes(16)
-    got = mm.decode_image_pixels(pgm)
-    assert calls == [] and got is not None
-    # when PIL declines the bytes, the pure kernels still decode
-    monkeypatch.setattr(mm, "_pil_decode_gray", lambda p: None)
-    got = mm.decode_image_pixels(payload)
-    assert got is not None and got[0] == 16
-
-
-@pytest.mark.skipif(
-    not __import__(
-        "data_ingestion_py_spark.sources.multimodal", fromlist=["HAVE_PIL"]
-    ).HAVE_PIL,
-    reason="Pillow not installed (extras-free container)",
-)
-def test_pil_vs_pure_kernels_bit_identical():  # pragma: no cover
-    """Where Pillow exists, the C decoders and the pure kernels must
-    agree BIT-FOR-BIT on lossless formats (PNG/GIF/BMP are lossless
-    and both paths share the integer (r+g+b)//3 gray rule)."""
+def test_pil_vs_pure_kernels_bit_identical():
+    """Pillow (an independent decoder, skipped where absent) and the
+    pure kernels must agree BIT-FOR-BIT on lossless formats: PNG/GIF
+    are lossless, and the test applies the kernels' integer
+    (r+g+b)//3 gray rule to Pillow's RGB output."""
+    Image = pytest.importorskip("PIL.Image")
     from data_ingestion_py_spark.sources.multimodal import (
-        _pil_decode_gray,
         decode_gif_array,
         decode_png_array,
     )
     import io as _io
-    import zlib
-
-    from PIL import Image
 
     raster = _rng_raster(24, 16, 40)
     img = Image.fromarray(np.stack([raster] * 3, axis=-1), "RGB")
@@ -643,9 +601,11 @@ def test_pil_vs_pure_kernels_bit_identical():  # pragma: no cover
         img.save(buf, fmt)
         payload = buf.getvalue()
         a = pure(payload)
-        b = _pil_decode_gray(payload)
-        assert a is not None and b is not None
-        assert a[:2] == b[:2] and (a[2] == b[2]).all(), fmt
+        rgb = np.asarray(Image.open(_io.BytesIO(payload)).convert("RGB"))
+        gray = (rgb.sum(axis=2, dtype=np.int16) // 3).astype(np.uint8)
+        assert a is not None
+        assert a[:2] == (gray.shape[1], gray.shape[0]), fmt
+        assert (a[2] == gray.reshape(-1)).all(), fmt
 
 
 # ------------------------------------------------- progressive (SOF2)

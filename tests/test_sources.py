@@ -124,11 +124,6 @@ def test_feature_extraction_stub(spark, media_df):
     assert by_id[4].n_bytes == 5000
 
 
-def test_real_decoder_is_explicitly_stubbed(media_df):
-    with pytest.raises(NotImplementedError):
-        multimodal.extract_features(media_df, decoder="real")
-
-
 def test_frame_sampling_fanout(spark, media_df):
     frames = multimodal.sample_frames(media_df, every_n_bytes=1024).collect()
     # only the video row fans out; 5000 bytes → 4 frames (max_frames cap)
@@ -1974,7 +1969,7 @@ def test_png_pixel_checksums_spark(spark):
     assert got[1][0] == w and got[1][1] == h
     assert got[3] == (None, None, None, None)
     assert got[4] == (None, None, None, None)
-    # the resize stage accepts PNG in the extras-free path too
+    # the resize stage accepts PNG too
     resized = {
         r.media_id: (r.width, r.height)
         for r in mm.resize_images(media, 3, 3).collect()
@@ -2633,8 +2628,8 @@ def test_tiff_decode_honest_nones_and_bomb_guard():
         _tiff_bytes("II", w, h, 1, [bomb], comp=8)
     )
     assert got is not None and len(got[2]) == w * h
-    # flows through the extras-free dispatch + average_hash
-    assert multimodal.decode_image_pixels_free(good)[:2] == (w, h)
+    # flows through the one dispatcher + average_hash
+    assert multimodal.decode_image_pixels(good)[:2] == (w, h)
     assert multimodal.average_hash(good) is not None
 
 
