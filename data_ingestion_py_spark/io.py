@@ -30,7 +30,7 @@ TABLE_NAMES = (
 DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
 
-def _footer_schema(spark: SparkSession, path: str):
+def _footer_schema(path: str):
     """(spark_schema | None, nano_ts_columns) from one parquet file's
     footer, read with pyarrow (no Spark job).
 
@@ -47,10 +47,12 @@ def _footer_schema(spark: SparkSession, path: str):
     differently: INT96 timestamps, binary (``binaryAsString``), TIME,
     and timestamps nested below the top level.
 
-    What this module owns is the top-level INT64 timestamp rule:
-    ``isAdjustedToUTC`` reads as TIMESTAMP, otherwise as TIMESTAMP_NTZ
-    iff ``inferTimestampNTZ`` is on, and ``nano_ts_columns`` — the
-    columns stored as TIMESTAMP(NANOS) — read as long: Spark's reader
+    What this module owns is the top-level INT64 timestamp rule: every
+    such column reads as TIMESTAMP, ``isAdjustedToUTC`` or not — what
+    Spark infers with ``inferTimestampNTZ`` off, whatever the session
+    says (a naive column read as TIMESTAMP keeps its stored micros, as
+    the DuckDB oracle reads them) — and ``nano_ts_columns``, the
+    columns stored as TIMESTAMP(NANOS), read as long: Spark's reader
     rejects them outright (PARQUET_TYPE_ILLEGAL), so they take the
     nanosAsLong path + an explicit restore to TimestampType."""
     import json
@@ -80,16 +82,13 @@ def _footer_schema(spark: SparkSession, path: str):
             nano.append(col.path)
     if unmapped:
         return None, nano
-    ntz = spark.conf.get(
-        "spark.sql.parquet.inferTimestampNTZ.enabled", "true"
-    ).lower() == "true"
     fields = []
     for f in arrow:
         try:
             dt = (
                 T.LongType()
                 if f.name in nano
-                else from_arrow_type(f.type, prefer_timestamp_ntz=ntz)
+                else from_arrow_type(f.type, prefer_timestamp_ntz=False)
             )
         except PySparkTypeError:
             return None, nano
@@ -178,12 +177,17 @@ def read_parquet(spark: SparkSession, path: str) -> DataFrame:
     schema inference needs ``spark.sql.legacy.parquet.nanosAsLong``, so
     on that fallback the conf is set around the inference call alone,
     then restored, and the table is read with the inferred schema.
+
+    Top-level INT64 timestamps read as TIMESTAMP (``_footer_schema``);
+    where inference reads one as TIMESTAMP_NTZ (``inferTimestampNTZ``
+    on), the table is read again with that column typed TIMESTAMP. No
+    session conf is changed by the read.
     """
     from pyspark.sql import functions as F
-    from pyspark.sql.types import TimestampNTZType
+    from pyspark.sql import types as T
 
     src, parts = _schema_file(spark, path)
-    schema, nano_cols = (None, []) if src is None else _footer_schema(spark, src)
+    schema, nano_cols = (None, []) if src is None else _footer_schema(src)
     if schema is not None and parts & {n.lower() for n in schema.names}:
         schema = None
     if nano_cols and schema is None:
@@ -199,34 +203,20 @@ def read_parquet(spark: SparkSession, path: str) -> DataFrame:
                 spark.conf.set(key, prior)
     reader = spark.read if schema is None else spark.read.schema(schema)
     df = reader.parquet(path)
+    fields = df.schema.fields if schema is None else schema.fields
+    if any(isinstance(f.dataType, T.TimestampNTZType) for f in fields):
+        df = spark.read.schema(
+            T.StructType(
+                [
+                    T.StructField(f.name, T.TimestampType(), f.nullable)
+                    if isinstance(f.dataType, T.TimestampNTZType)
+                    else f
+                    for f in fields
+                ]
+            )
+        ).parquet(path)
     for c in nano_cols:
         df = df.withColumn(c, F.timestamp_micros(F.expr(f"`{c}` div 1000")))
-    # Belt-and-braces for sessions built outside get_spark() (which pins
-    # inferTimestampNTZ=false): normalize any TIMESTAMP_NTZ column to
-    # plain TIMESTAMP so unix_micros()/withWatermark() work downstream.
-    # The session timezone is UTC, so the cast is value-preserving and
-    # matches the DuckDB oracle's naive-timestamp reading byte-for-byte.
-    fields = df.schema.fields if schema is None else schema.fields
-    ntz_cols = [f.name for f in fields if isinstance(f.dataType, TimestampNTZType)]
-    if ntz_cols:
-        # The NTZ→TIMESTAMP cast is value-preserving ONLY under a UTC
-        # session timezone; this path exists precisely for sessions
-        # built outside get_spark() (which pins UTC), so pin it here
-        # too rather than silently shifting values under a local zone.
-        tz = spark.conf.get("spark.sql.session.timeZone")
-        if tz not in ("UTC", "Etc/UTC", "GMT", "+00:00", "Z"):
-            import warnings
-
-            warnings.warn(
-                f"read_parquet: session timezone {tz!r} would shift "
-                f"TIMESTAMP_NTZ columns {ntz_cols} during the cast; "
-                "setting spark.sql.session.timeZone=UTC to keep values "
-                "oracle-identical",
-                stacklevel=2,
-            )
-            spark.conf.set("spark.sql.session.timeZone", "UTC")
-    for c in ntz_cols:
-        df = df.withColumn(c, F.col(c).cast("timestamp"))
     return df
 
 

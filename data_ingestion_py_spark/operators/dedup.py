@@ -14,6 +14,12 @@ All tiers shuffle-efficient and oracle-reproducible:
                share fingerprints (or differ in ≤ h bits).
 - n-gram Jaccard: exact pairwise verify, for candidate sets only.
 
+The minhash tiers pin their signature tables (each read more than once)
+by an eager ``localCheckpoint`` at the call site, the package's one
+way to pin an intermediate: lineage is cut and the blocks are
+unreplicated and executor-local, so losing an executor that holds them
+fails the query (SCALE.md, "Materialization control").
+
 (Embedding-space tiers — sign-band LSH, SemDeDup cluster-bounded — live
 in operators/similarity.py; k-means for the cluster assignment in
 operators/kmeans.py.)
@@ -35,7 +41,6 @@ from data_ingestion_py_spark.functions.text import (
     shingles,
     tokens,
 )
-from data_ingestion_py_spark.operators.materialize import pin
 from data_ingestion_py_spark.sources.spread import spread_for_kernel
 
 SHINGLE_K = 3
@@ -256,32 +261,28 @@ def near_duplicates_minhash(
     n_hashes: int = N_HASHES,
     bands: int | None = None,
     rows: int | None = None,
-    storage_level: str | None = None,
 ) -> DataFrame:
     """Full MinHash+LSH near-dedup: returns (doc_a, doc_b, jaccard).
 
     (bands, rows) default to the S-curve fit for ``threshold``
     (lsh_params), so recall at the threshold is ≥0.9 by construction.
 
-    Signatures are materialized once (``operators/materialize.pin``):
-    the plan references them three times (banding + both sides of the
+    Signatures are pinned once by an eager ``localCheckpoint``: the
+    plan references them three times (banding + both sides of the
     verify join) and would otherwise run the whole shingle/md5 pipeline
     3×. Unlike ``.cache()`` (which parks an entry in the CacheManager
     until someone remembers to unpersist — a leak in long-lived
-    sessions), the default checkpoint blocks are released automatically
-    when the DataFrame is garbage-collected after the consumer
-    materializes. Eager, because a lazy checkpoint lets the three
-    consumer branches race ahead of materialization and recompute the
-    pipeline per branch (measured 2.4x on the LSH bench).
-
-    At 100 TB the signature table is corpus-sized: pass
-    ``storage_level="DISK_ONLY"`` (or ``"DISK_ONLY_2"`` on preemptible
-    fleets) to keep it off executor storage memory and retain a
-    recompute path — see ``materialize.pin``.
+    sessions), the checkpoint blocks are released automatically when
+    the DataFrame is garbage-collected after the consumer materializes.
+    Eager, because a lazy checkpoint lets the three consumer branches
+    race ahead of materialization and recompute the pipeline per branch
+    (measured 2.4x on the LSH bench).
     """
     if bands is None or rows is None:
         bands, rows = lsh_params(threshold, n_hashes)
-    sigs = pin(minhash_signatures(docs, text_col, k, n_hashes), storage_level)
+    sigs = minhash_signatures(docs, text_col, k, n_hashes).localCheckpoint(
+        eager=True
+    )
     cands = lsh_candidate_pairs(sigs.select("doc_id", "sig"), bands, rows)
     return jaccard_verify(cands, sigs.select("doc_id", "shingles"), threshold)
 
@@ -295,7 +296,6 @@ def incremental_near_duplicates(
     n_hashes: int = N_HASHES,
     bands: int | None = None,
     rows: int | None = None,
-    storage_level: str | None = None,
 ) -> DataFrame:
     """New-batch vs existing-corpus near-dedup — the ingestion-time
     gate a production pipeline actually runs per batch (full-corpus
@@ -307,17 +307,17 @@ def incremental_near_duplicates(
     (batch × collision rate), never corpus². At 100 TB the corpus-side
     banded signature table is computed ONCE and kept at rest
     (partitioned by band_key, so each batch's probe join co-locates);
-    here both sides build inline and pin via ``materialize.pin``
-    (``storage_level="DISK_ONLY"`` for the corpus side at scale).
+    here both sides build inline, each pinned by an eager
+    ``localCheckpoint``.
     """
     if bands is None or rows is None:
         bands, rows = lsh_params(threshold, n_hashes)
-    new_sigs = pin(
-        minhash_signatures(new_docs, text_col, k, n_hashes), storage_level
-    )
-    corp_sigs = pin(
-        minhash_signatures(corpus_docs, text_col, k, n_hashes), storage_level
-    )
+    new_sigs = minhash_signatures(
+        new_docs, text_col, k, n_hashes
+    ).localCheckpoint(eager=True)
+    corp_sigs = minhash_signatures(
+        corpus_docs, text_col, k, n_hashes
+    ).localCheckpoint(eager=True)
     return incremental_pairs_from_signatures(
         new_sigs, corp_sigs, threshold, bands, rows
     )

@@ -395,7 +395,7 @@ class IvfIndex(MarkerCommitted):
         ``train_mod`` > 1 trains the quantizer on the deterministic
         ``vec_id % train_mod == 0`` sample (k-means cost shrinks by
         ~train_mod while assignment still covers every vector) — the
-        100 TB form, where k seeding passes over the full corpus would
+        100 TB form, where k seed passes over the full corpus would
         dominate. With the default (train on everything) the result is
         bit-identical to a from-scratch index built on the same rows:
         the trainer is order-independent (seeds by vec_id, exact

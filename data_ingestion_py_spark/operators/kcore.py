@@ -19,6 +19,9 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+#: Peel rounds between lineage truncations (``kcore_alive``).
+CHECKPOINT_EVERY = 3
+
 
 def kcore_alive(
     sym: DataFrame,
@@ -26,14 +29,13 @@ def kcore_alive(
     rounds: int,
     u: str = "u",
     v: str = "v",
-    checkpoint_every: int = 3,
 ) -> DataFrame:
     """(node,) members of the k-core after ``rounds`` peels of the
     SYMMETRIC edge list ``sym`` (every undirected edge present in both
     directions; no self-loops). ``rounds`` past the fixpoint are
     no-ops — size it to the peel depth you can afford, not to n.
 
-    Lineage is truncated every ``checkpoint_every`` rounds, not every
+    Lineage is truncated every ``CHECKPOINT_EVERY`` rounds, not every
     round: ``localCheckpoint`` is EAGER (one job per call), so a
     per-round checkpoint made a 6-round peel of a 25-node graph cost
     8 job submissions (~9 s wall at sf0.01) when the plan itself is
@@ -51,7 +53,7 @@ def kcore_alive(
             .where(F.col("deg") >= k)
             .select(F.col(u).alias("node"))
         )
-        if (i + 1) % checkpoint_every == 0 and (i + 1) < rounds:
+        if (i + 1) % CHECKPOINT_EVERY == 0 and (i + 1) < rounds:
             alive = alive.localCheckpoint()
     return alive
 

@@ -19,11 +19,10 @@ embedding components quantize to integer micro-units
 - seeds are DETERMINISTIC farthest-first (k-means++ without the RNG):
   seed 0 = lowest ``vec_id``; seed i = the point maximizing the exact
   squared-L2 distance to its nearest chosen seed, ties → lower
-  vec_id. Lowest-id-only seeding (``seeding="lowid"``, the legacy
-  mode) can land every seed in one region when ids correlate with
-  insertion order, collapsing Lloyd's into a poor local optimum —
-  pinned by the planted two-blob test where lowid demonstrably fails
-  and farthest-first separates. ``cid`` = seed selection order;
+  vec_id. A lowest-id-only seed rule would land every seed in one
+  region when ids correlate with insertion order, collapsing Lloyd's
+  into a poor local optimum — the planted three-blob test pins that
+  farthest-first separates them. ``cid`` = seed selection order;
 - ties in the assignment argmin break on the lower cid
 
 — so the full iteration replays bit-identically as unrolled DuckDB
@@ -42,8 +41,9 @@ one narrow map over the corpus (argmin via ``array_min`` over k
 (distance, cid) structs — JVM column algebra, no UDF); the update is
 posexplode → one hash-agg keyed (cid, pos) with map-side integer
 partial sums. Per-round ``localCheckpoint`` of the k-row centroid
-table keeps plan depth constant; the quantized corpus pins once
-(``materialize.pin`` — pass ``storage_level="DISK_ONLY"`` at 100 TB).
+table keeps plan depth constant; the quantized corpus pins once, by
+an eager ``localCheckpoint`` (unreplicated executor-local blocks,
+lineage cut: losing an executor that holds them fails the query).
 Empty clusters keep their previous centroid (standard Lloyd's guard).
 """
 
@@ -51,7 +51,6 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, functions as F
 
-from data_ingestion_py_spark.operators.materialize import pin
 from data_ingestion_py_spark.operators.similarity import dot
 
 SCALE = 1_000_000
@@ -271,17 +270,12 @@ def kmeans_integer(
     n_iter: int = 3,
     vec_col: str = "embedding",
     id_col: str = "vec_id",
-    storage_level: str | None = None,
-    seeding: str = "farthest",
 ) -> DataFrame:
     """(vec_id, cid) after ``n_iter`` assignment rounds (with
     ``n_iter − 1`` centroid updates between them) of deterministic
-    integer Lloyd's k-means. ``cid`` is 0..k−1 by seed order —
-    selection order for ``seeding="farthest"`` (default), vec_id order
-    of the k lowest ids for the legacy ``seeding="lowid"``."""
-    assigned, _ = kmeans_integer_model(
-        embeddings, k, n_iter, vec_col, id_col, storage_level, seeding
-    )
+    integer Lloyd's k-means. ``cid`` is 0..k−1 in farthest-first seed
+    selection order."""
+    assigned, _ = kmeans_integer_model(embeddings, k, n_iter, vec_col, id_col)
     return assigned
 
 
@@ -291,8 +285,6 @@ def kmeans_integer_model(
     n_iter: int = 3,
     vec_col: str = "embedding",
     id_col: str = "vec_id",
-    storage_level: str | None = None,
-    seeding: str = "farthest",
 ) -> tuple[DataFrame, DataFrame]:
     """``kmeans_integer`` plus the trained quantizer itself:
     (assignment (vec_id, cid), final centroids (cid, cvec)). The
@@ -312,34 +304,13 @@ def kmeans_integer_model(
     # argmin compute it parallelized was trivial. At 100 TB the corpus
     # arrives multi-file (already spread) and the interpreted argmin
     # parallelizes with the scan.
-    vq = pin(
-        embeddings.select(
-            F.col(id_col).alias("vec_id"), micro_units(vec_col).alias("v")
-        ),
-        storage_level,
+    vq = embeddings.select(
+        F.col(id_col).alias("vec_id"), micro_units(vec_col).alias("v")
+    ).localCheckpoint(eager=True)
+    cents = embeddings.sparkSession.createDataFrame(
+        [(i, sv) for i, sv in enumerate(_farthest_first_seeds(vq, k))],
+        "cid int, cvec array<double>",
     )
-    spark = embeddings.sparkSession
-    if seeding == "farthest":
-        cents = spark.createDataFrame(
-            [(i, sv) for i, sv in enumerate(_farthest_first_seeds(vq, k))],
-            "cid int, cvec array<double>",
-        )
-    elif seeding == "lowid":
-        seeds = vq.orderBy("vec_id").limit(k)
-        # cid = position in the vec_id-sorted seed array (posexplode index)
-        cents = (
-            seeds.agg(
-                F.array_sort(F.collect_list(F.struct("vec_id", "v"))).alias("_s")
-            )
-            .select(F.posexplode(F.col("_s")).alias("cid", "s"))
-            .select(
-                F.col("cid").cast("int").alias("cid"),
-                F.col("s")["v"].alias("cvec"),
-            )
-            .localCheckpoint(eager=True)
-        )
-    else:
-        raise ValueError(f"unknown seeding {seeding!r}")
     assigned = _assign(vq, _centroid_array(cents))
     for _ in range(n_iter - 1):
         n = F.count(F.lit(1))
@@ -374,15 +345,14 @@ def kmeans_ctes(
     n_iter: int = 3,
     vec_col: str = "embedding",
     id_col: str = "vec_id",
-    seeding: str = "farthest",
 ) -> tuple[str, str]:
     """The unrolled k-means CTE chain, composable into larger oracle
     queries. Returns (ctes, final_assignment_name): the caller prepends
     its own CTEs (e.g. a planted-dup corpus) and selects from the
-    returned assignment relation (vec_id, v, cid). ``seeding`` must
-    match the Spark side (farthest-first unrolls as one seed-pick CTE
-    per seed; the max-distance pick is the same correlated-min ORDER
-    BY the assignment argmin uses)."""
+    returned assignment relation (vec_id, v, cid). The farthest-first
+    seed sweep unrolls as one seed-pick CTE per seed; the max-distance
+    pick is the same correlated-min ORDER BY the assignment argmin
+    uses."""
     d2 = (
         "(list_dot_product(q.v, q.v) - 2 * list_dot_product(q.v, c.cvec)"
         " + list_dot_product(c.cvec, c.cvec))"
@@ -396,19 +366,18 @@ def kmeans_ctes(
     FROM {embeddings_rel}
 )""",
     ]
-    if seeding == "farthest":
-        d2_seed = (
-            "(list_dot_product(q.v, q.v) - 2 * list_dot_product(q.v, p.v)"
-            " + list_dot_product(p.v, p.v))"
-        )
-        parts.append(
-            """p0 AS (
+    d2_seed = (
+        "(list_dot_product(q.v, q.v) - 2 * list_dot_product(q.v, p.v)"
+        " + list_dot_product(p.v, p.v))"
+    )
+    parts.append(
+        """p0 AS (
     SELECT 0 AS cid, vec_id, v FROM vq ORDER BY vec_id LIMIT 1
 )"""
-        )
-        for i in range(1, k):
-            parts.append(
-                f"""p{i} AS (
+    )
+    for i in range(1, k):
+        parts.append(
+            f"""p{i} AS (
     SELECT cid, vec_id, v FROM p{i - 1}
     UNION ALL
     SELECT {i} AS cid, vec_id, v FROM (
@@ -416,22 +385,12 @@ def kmeans_ctes(
         ORDER BY (SELECT min({d2_seed}) FROM p{i - 1} p) DESC, q.vec_id
         LIMIT 1)
 )"""
-            )
-        parts.append(
-            f"""c0 AS (
+        )
+    parts.append(
+        f"""c0 AS (
     SELECT CAST(cid AS INT) AS cid, v AS cvec FROM p{k - 1}
 )"""
-        )
-    elif seeding == "lowid":
-        parts.append(
-            f"""c0 AS (
-    SELECT CAST(row_number() OVER (ORDER BY vec_id) - 1 AS INT) AS cid,
-           v AS cvec
-    FROM (SELECT vec_id, v FROM vq ORDER BY vec_id LIMIT {k})
-)"""
-        )
-    else:
-        raise ValueError(f"unknown seeding {seeding!r}")
+    )
     prev_c = "c0"
     for i in range(1, n_iter + 1):
         parts.append(
@@ -476,15 +435,12 @@ def kmeans_oracle_sql(
     n_iter: int = 3,
     vec_col: str = "embedding",
     id_col: str = "vec_id",
-    seeding: str = "farthest",
 ) -> str:
     """DuckDB SQL replaying ``kmeans_integer`` exactly — quantize,
-    seed (farthest-first sweep by default), then alternate assignment
+    seed (farthest-first sweep), then alternate assignment
     (correlated argmin over the k centroids, ties to lower cid) and
     floor-division centroid update, unrolled as chained CTEs."""
-    ctes, final = kmeans_ctes(
-        embeddings_rel, k, n_iter, vec_col, id_col, seeding
-    )
+    ctes, final = kmeans_ctes(embeddings_rel, k, n_iter, vec_col, id_col)
     return f"""
 WITH {ctes}
 SELECT vec_id, cid FROM {final}

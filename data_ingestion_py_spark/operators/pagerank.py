@@ -58,8 +58,6 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from data_ingestion_py_spark.operators.materialize import pin
-
 SCALE = 1_000_000
 
 
@@ -84,10 +82,12 @@ def pagerank_integer(
     proximity to the seeds, not global authority. Seeds are driver-side
     literals (a seed set is query-sized, never data-sized), so the
     per-node teleport term stays a narrow CASE, no extra join."""
-    e = pin(
+    e = (
         edges.select(
             F.col(src).alias("src"), F.col(dst).alias("dst"), F.col(weight).alias("w")
-        ).withColumn("out_w", F.sum("w").over(Window.partitionBy("src")))
+        )
+        .withColumn("out_w", F.sum("w").over(Window.partitionBy("src")))
+        .localCheckpoint(eager=True)
     )
     # n and the dangling test from ONE exact, distributed aggregate: a
     # node is dangling iff it is never a src, so dangling nodes exist
@@ -121,9 +121,11 @@ def pagerank_integer(
     # with dangling nodes (no outgoing edges) every round reads the node
     # list and the static dangling set twice: pin both (module docstring)
     if has_dangling:
-        nodes = pin(nodes)
+        nodes = nodes.localCheckpoint(eager=True)
         srcs = e.select("src").distinct()
-        dangling = pin(nodes.join(srcs, nodes["node"] == srcs["src"], "left_anti"))
+        dangling = nodes.join(
+            srcs, nodes["node"] == srcs["src"], "left_anti"
+        ).localCheckpoint(eager=True)
     ranks = nodes.withColumn("rank_micro", init_col)
     for i in range(n_iter):
         contrib = (

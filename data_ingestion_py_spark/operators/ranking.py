@@ -18,7 +18,11 @@ generalized to arbitrary sort keys):
    ``global = partition_offset + local``.
 
 The big table shuffles twice (range + window hash on the partition id)
-but both are parallel shuffles; nothing ever single-partitions.
+but both are parallel shuffles; nothing ever single-partitions. The
+range-shuffled input is pinned by an eager ``localCheckpoint`` so both
+branches read one set of range boundaries; its fault-tolerance cost is
+the usual one (lineage cut, unreplicated executor-local blocks: losing
+an executor that holds them fails the query).
 
 ``ntile_expr`` then derives exact SQL ``NTILE(b)`` buckets from the
 global rank — the closed form over (rank, total), bit-identical to the
@@ -32,8 +36,6 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from data_ingestion_py_spark.operators.materialize import pin
-
 _PID = "_gr_pid"
 _CNT = "_gr_cnt"
 _ROFF = "_gr_rank_off"
@@ -46,8 +48,6 @@ def with_global_rank(
     rank_col: str = "rnk",
     cumsum: dict[str, Column] | None = None,
     total_col: str | None = None,
-    num_partitions: int | None = None,
-    storage_level: str | None = None,
 ) -> DataFrame:
     """df + ``rank_col`` (global row_number over ``order_by``) and, for
     each ``cumsum`` entry ``name -> col``, a running inclusive sum in
@@ -57,28 +57,18 @@ def with_global_rank(
     every row (needed by ``ntile_expr``) — it rides the same broadcast,
     no extra pass.
 
-    The range-shuffled input materializes once (corpus-sized when
-    ``df`` is corpus-sized): pass ``storage_level="DISK_ONLY"`` to keep
-    those blocks off executor storage memory at 100 TB — see
-    ``operators/materialize.pin`` (including the note on
-    range-boundary stability under recompute).
-
     Build-time jobs: that pin runs at construction (the boundary sample
     plus the range shuffle), so each call costs jobs before the caller's
-    action. It cannot be dropped — see the comment at ``pin`` below —
+    action. It cannot be dropped — see the comment at the pin below —
     and callers ranking on different keys (the three RFM ntiles) cannot
-    share one. ``num_partitions=None`` leaves the range shuffle's
-    partition count to AQE, which coalesces the near-empty partitions
-    of a small input; an explicit ``num_partitions`` is honoured as is.
+    share one. The range shuffle's partition count is left to AQE,
+    which coalesces the near-empty partitions of a small input.
     """
     cumsum = cumsum or {}
-    # With no explicit count the range shuffle is REPARTITION_BY_NONE, so
-    # AQE may coalesce its (mostly near-empty, at small inputs) partitions.
-    # Coalescing merges only CONTIGUOUS reducer ranges, in order, so
-    # spark_partition_id() stays monotone in the sort order and the
-    # offsets below stay correct. An explicit count pins the exchange
-    # (REPARTITION_BY_NUM) and AQE leaves it alone.
-    parts = [] if num_partitions is None else [num_partitions]
+    # The range shuffle is REPARTITION_BY_NONE, so AQE may coalesce its
+    # (mostly near-empty, at small inputs) partitions. Coalescing merges
+    # only CONTIGUOUS reducer ranges, in order, so spark_partition_id()
+    # stays monotone in the sort order and the offsets below stay correct.
     # EAGER localCheckpoint pins ONE materialization of the range shuffle:
     # RangePartitioner samples boundaries with an rdd-id-dependent seed,
     # so if the offsets branch and the window branch each re-executed the
@@ -86,11 +76,10 @@ def with_global_rank(
     # disagree between branches and ranks near boundaries would be off
     # (observed at sf0.1 where boundary sampling is partial). Both
     # branches must read the same blocks, not the same plan.
-    ranged = pin(
-        df.repartitionByRange(*parts, *order_by).withColumn(
-            _PID, F.spark_partition_id()
-        ),
-        storage_level,
+    ranged = (
+        df.repartitionByRange(*order_by)
+        .withColumn(_PID, F.spark_partition_id())
+        .localCheckpoint(eager=True)
     )
     sums = [F.sum(c).alias(f"_gr_s_{n}") for n, c in cumsum.items()]
     pstats = ranged.groupBy(_PID).agg(F.count(F.lit(1)).alias(_CNT), *sums)

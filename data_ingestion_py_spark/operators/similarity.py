@@ -350,21 +350,21 @@ def embedding_near_duplicates(
     of ≥1 band collide; near-identical vectors differ in few sign bits,
     so with bands*rows = dim a near-dup pair can only be missed if
     flipped bits land in every band. At 100 TB: raise `rows` to keep
-    buckets small, pre-partition the corpus by band key, and persist
-    `corpus` so the three references don't rescan.
+    buckets small and pre-partition the corpus by band key.
 
     Capability the reference declares but stubs (FAISS index,
     README.md:3, data_ingestion.py:283-289) — recast as set-based dedup.
     """
     # the plan references corpus 3× (banding + both verify sides);
-    # without this the whole upstream pipeline runs three times. At
-    # 100 TB use StorageLevel.DISK_ONLY or a materialized table.
+    # without this the whole upstream pipeline runs three times. An
+    # eager localCheckpoint, not persist(): a persisted corpus stays in
+    # the CacheManager after the query and changes later queries' plans.
     # NOTE(r15): a spread_for_kernel rebalance here was A/B-measured
     # and REVERTED (1.27–1.58 s without vs 1.53–2.73 s with at sf0.1):
     # the extra exchange + lazily-cached shuffle output cost more than
     # the banding projections it parallelized at candidate-bounded
     # sizes; a 100 TB corpus arrives multi-file (already spread).
-    corpus = corpus.persist()
+    corpus = corpus.localCheckpoint(eager=True)
     banded = corpus.select(
         id_col,
         F.posexplode(sign_band_keys(F.col(vec_col), bands, rows)).alias(

@@ -521,7 +521,7 @@ def bpe_merges(docs: DataFrame, rounds: int = BPE_ROUNDS) -> DataFrame:
     applying the merge is a 1-row broadcast + narrow map. Round
     lineage grows linearly and re-derives the vocab agg per round —
     at production vocabulary sizes the vocab table would be pinned
-    (operators/materialize.pin) between rounds like kmeans does.
+    (an eager localCheckpoint) between rounds like kmeans does.
     """
     merges, _ = bpe_learn(docs, rounds)
     return merges

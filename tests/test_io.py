@@ -6,6 +6,7 @@ from __future__ import annotations
 
 import datetime
 import decimal
+import warnings
 from pathlib import Path
 
 import pyarrow as pa
@@ -30,7 +31,7 @@ def _jobs_in(spark, fn):
 @pytest.mark.parametrize("name", TABLES)
 def test_footer_schema_equals_inferred(spark, name):
     path = f"{SF_SMOKE}/{name}.parquet"
-    schema, nano = io._footer_schema(spark, path)
+    schema, nano = io._footer_schema(path)
     assert nano == []
     assert schema == spark.read.parquet(path).schema
     df, jobs = _jobs_in(spark, lambda: io.load_table(spark, SF_SMOKE, name))
@@ -52,7 +53,7 @@ def test_nanos_events_take_nanos_as_long_path(spark, tmp_path):
     before = spark.conf.get(key)
     try:
         spark.conf.set(key, "false")
-        schema, nano = io._footer_schema(spark, path)
+        schema, nano = io._footer_schema(path)
         assert nano == ["ts"]
         df, jobs = _jobs_in(
             spark, lambda: io.load_table(spark, str(tmp_path), "events")
@@ -88,12 +89,12 @@ def test_every_mapped_type_equals_inferred(spark, tmp_path):
     )
     pq.write_table(t, tmp_path / "typed.parquet")
     path = str(tmp_path / "typed.parquet")
-    schema, _ = io._footer_schema(spark, path)
+    schema, _ = io._footer_schema(path)
     assert schema == spark.read.parquet(path).schema
     df, jobs = _jobs_in(spark, lambda: io.load_table(spark, str(tmp_path), "typed"))
     assert jobs == 0 and len(df.collect()) == 2
     pq.write_table(t.append_column("u", pa.array([1, 2], pa.uint32())), path)
-    assert io._footer_schema(spark, path)[0] is None
+    assert io._footer_schema(path)[0] is None
     assert "u" in io.load_table(spark, str(tmp_path), "typed").columns
 
 
@@ -231,7 +232,7 @@ def test_nanos_in_partitioned_directory(spark, tmp_path):
             partition_cols=["k"],
         )
     src, parts = io._schema_file(spark, str(tmp_path / "nanos.parquet"))
-    assert parts == {"k"} and io._footer_schema(spark, src)[1] == ["ts"]
+    assert parts == {"k"} and io._footer_schema(src)[1] == ["ts"]
     key = "spark.sql.legacy.parquet.nanosAsLong"
     before = spark.conf.get(key)
     try:
@@ -296,7 +297,7 @@ def test_inference_fallback_restores_nanos_as_long(spark, tmp_path):
         pa.table({"u": pa.array([1, 2], pa.int64()), "ts": micros}),
         tmp_path / "want.parquet",
     )
-    assert io._footer_schema(spark, str(tmp_path / "mixed.parquet")) == (
+    assert io._footer_schema(str(tmp_path / "mixed.parquet")) == (
         None,
         ["ts"],
     )
@@ -320,6 +321,42 @@ def test_inference_fallback_restores_nanos_as_long(spark, tmp_path):
             spark.conf.unset(key)
         else:
             spark.conf.set(key, before)
+
+
+def test_naive_timestamps_read_without_touching_the_session(spark, tmp_path):
+    """On a non-UTC session that infers TIMESTAMP_NTZ, a naive (not
+    ``isAdjustedToUTC``) timestamp column loads as TIMESTAMP holding
+    the stored micros — through the footer schema and on the inference
+    fallback (an unsigned column beside it) — with no warning, and the
+    session's timezone and inference conf are as they were."""
+    from pyspark.sql import functions as F
+    from pyspark.sql import types as T
+
+    ts = pa.array([1_600_000_000_000_001, None], pa.timestamp("us"))
+    pq.write_table(pa.table({"ts": ts}), tmp_path / "naive.parquet")
+    pq.write_table(
+        pa.table({"u": pa.array([1, 2], pa.uint32()), "ts": ts}),
+        tmp_path / "fallback.parquet",
+    )
+    conf = {
+        "spark.sql.session.timeZone": "America/New_York",
+        "spark.sql.parquet.inferTimestampNTZ.enabled": "true",
+    }
+    before = {k: spark.conf.get(k) for k in conf}
+    try:
+        for k, v in conf.items():
+            spark.conf.set(k, v)
+        for name in ("naive", "fallback"):
+            with warnings.catch_warnings():
+                warnings.simplefilter("error")
+                df = io.load_table(spark, str(tmp_path), name)
+            assert df.schema["ts"].dataType == T.TimestampType()
+            got = [r[0] for r in df.select(F.unix_micros("ts")).collect()]
+            assert got == [1_600_000_000_000_001, None]
+            assert {k: spark.conf.get(k) for k in conf} == conf
+    finally:
+        for k, v in before.items():
+            spark.conf.set(k, v)
 
 
 def test_package_reads_parquet_through_one_reader():

@@ -8,7 +8,9 @@ import duckdb
 import pytest
 
 from data_ingestion_py_spark.operators.kmeans import (
+    SCALE,
     kmeans_integer,
+    kmeans_integer_model,
     kmeans_oracle_sql,
 )
 
@@ -31,43 +33,32 @@ def test_two_blobs_separate(spark):
 
 
 def test_empty_cluster_keeps_previous_centroid(spark):
-    # LEGACY lowid seeding picks seeds 0 and 1 — IDENTICAL points:
-    # round-1 ties all break to cid 0, so seed 1's cluster is empty at
-    # the first update — the coalesce guard must keep its centroid (at
-    # the duplicate point) instead of crashing or shrinking k. The
-    # orphaned centroid then legitimately wins the duplicates back in
-    # round 2 (it sits at distance 0 while cid 0's centroid moved
-    # toward point 3). (Farthest-first never picks duplicate seeds
-    # while distinct points remain, so lowid is the mode that
-    # exercises the guard.)
-    rows = [
-        (0, [1.0, 1.0]),
-        (1, [1.0, 1.0]),
-        (2, [-1.0, -1.0]),
-        (3, [0.99, 1.01]),
-        (4, [-0.98, -1.02]),
-    ]
-    out = kmeans_integer(_emb(spark, rows), k=3, n_iter=3, seeding="lowid")
-    got = {r.vec_id: r.cid for r in out.collect()}
-    assert len(got) == 5
-    assert got[0] == got[1]          # duplicates stay together
-    assert got[2] == got[4]          # far blob stays together
-    assert got[2] not in {got[0], got[3]}
+    # farthest-first picks ids 0 and 2; then every point sits at
+    # distance 0 from a seed, so the tie goes to the lowest id and seed
+    # 2 duplicates seed 0. Round-1 ties all break to cid 0, so cid 2's
+    # cluster is empty at the first update — the coalesce guard must
+    # keep its centroid instead of crashing or shrinking the model
+    # below k.
+    rows = [(0, [1.0, 1.0]), (1, [1.0, 1.0]), (2, [-1.0, -1.0])]
+    assigned, cents = kmeans_integer_model(_emb(spark, rows), k=3, n_iter=3)
+    assert {r.vec_id: r.cid for r in assigned.collect()} == {0: 0, 1: 0, 2: 1}
+    one = float(SCALE)
+    assert {r.cid: list(r.cvec) for r in cents.collect()} == {
+        0: [one, one],
+        1: [-one, -one],
+        2: [one, one],
+    }
 
 
 def test_farthest_seeding_separates_where_lowid_fails(spark):
     # Planted adversarial corpus (VERDICT r5 #5): ids correlate with
     # position — ALL low ids sit in one tight blob; blobs B and C
-    # start at ids 100/200. lowid puts all 3 seeds in blob A: Lloyd's
-    # then splits A across two centroids and merges B∪C under the
-    # third (a stable bad optimum — the A-centroids never see B/C
-    # points again). Farthest-first's sweep jumps blob-to-blob by
-    # construction. All coordinates are multiples of 1/64 — exactly
-    # representable in float32, so both engines and the quantizer see
-    # identical values.
-    # A's seeds differ only in x, while B and C differ from each other
-    # only in y — so under lowid every B AND C point picks the same
-    # (max-x) seed and the two blobs fuse under one centroid forever.
+    # start at ids 100/200. A lowest-id seed rule would put all 3 seeds
+    # in blob A, and since A's points differ only in x while B and C
+    # differ only in y, B and C would fuse under one centroid for
+    # good. Farthest-first's sweep jumps blob-to-blob by construction.
+    # All coordinates are multiples of 1/64 — exactly representable in
+    # float32, so both engines and the quantizer see identical values.
     blob_a = [(i, [0.125 + i / 64.0, 0.125]) for i in range(8)]
     blob_b = [(100 + i, [9.0 + i / 64.0, 9.0]) for i in range(8)]
     blob_c = [(200 + i, [9.0 + i / 64.0, -9.0]) for i in range(8)]
@@ -80,18 +71,6 @@ def test_farthest_seeding_separates_where_lowid_fails(spark):
     ]
     assert all(len(s) == 1 for s in cid_sets)
     assert len(set().union(*cid_sets)) == 3  # three distinct clusters
-
-    low = {r.vec_id: r.cid for r in
-           kmeans_integer(corpus, k=3, n_iter=3, seeding="lowid").collect()}
-    low_sets = [
-        {low[i] for i, _ in blob} for blob in (blob_a, blob_b, blob_c)
-    ]
-    # the legacy mode demonstrably fails to produce the 3-way
-    # separation here — pins that the new default is not cosmetic
-    assert not (
-        all(len(s) == 1 for s in low_sets)
-        and len(set().union(*low_sets)) == 3
-    )
 
 
 def test_farthest_seeding_matches_oracle(spark):

@@ -9,6 +9,7 @@ from the driver via the telemetry columns every seam output carries.
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import functions as F
 
 from data_ingestion_py_spark.io import load_table
@@ -40,16 +41,22 @@ def test_model_loads_once_per_worker(spark):
 
 def test_model_survives_across_jobs(spark):
     """Worker reuse (spark.python.worker.reuse, default on) means a
-    SECOND job over the seam must not rebuild the model in workers
-    that already hold it: every load count stays exactly 1."""
+    later job over the seam must not rebuild the model in workers that
+    already hold it: every load count stays exactly 1.
+
+    Idle workers are handed out first-in first-out, so when earlier
+    Spark work left more idle workers than one job takes, the next job
+    runs on the others. Jobs repeat until one runs on a worker that an
+    earlier job used — the reuse the "stays 1" assertion must see."""
     docs = load_table(spark, SF, "documents").repartition(4)
-    first = _loads_by_worker(tag_token_classes(docs))
-    second = _loads_by_worker(tag_token_classes(docs))
-    assert all(v == 1 for v in first.values()), first
-    assert all(v == 1 for v in second.values()), second
-    # at least one worker from the first job served the second one —
-    # i.e. the "stays 1" assertion actually exercised a reused cache
-    assert set(first) & set(second), (first, second)
+    seen: set[int] = set()
+    for _ in range(16):
+        loads = _loads_by_worker(tag_token_classes(docs))
+        assert loads and all(v == 1 for v in loads.values()), loads
+        if seen & set(loads):
+            return
+        seen |= set(loads)
+    pytest.fail(f"no worker served two jobs: {sorted(seen)}")
 
 
 def test_token_class_counts_correct(spark):

@@ -187,6 +187,23 @@ def test_embedding_near_dup_no_crossjoin(spark):
     assert E.count_ops(df, "BroadcastNestedLoopJoin") == 0, E.executed_plan(df)
 
 
+def test_embedding_near_dup_leaves_no_cache_entry(spark):
+    """``dedup_embedding_cosine`` pins its corpus by an eager
+    ``localCheckpoint``: once it has run, the CacheManager holds no
+    entry, and ``dedup_semdedup_kmeans`` (same planted corpus) plans
+    as before — a persisted corpus would serve it from an
+    ``InMemoryTableScan``."""
+    cache = spark._jsparkSession.sharedState().cacheManager()
+    spark.catalog.clearCache()
+    before = E.op_counts(_q(spark, "dedup_semdedup_kmeans"))
+    _q(spark, "dedup_embedding_cosine").write.format("noop").mode(
+        "overwrite"
+    ).save()
+    assert cache.isEmpty()
+    after = E.op_counts(_q(spark, "dedup_semdedup_kmeans"))
+    assert after == before and after["InMemoryTableScan"] == 0, after
+
+
 def test_asof_join_single_shuffle_no_python(spark):
     """The as-of join must stay a union + one keyed window: one
     exchange, no cartesian/range join, no Python."""
@@ -624,6 +641,17 @@ def test_package_has_one_decode_path():
     imports = rf"\b(?:from|import(?: [\w. ]+ ,)*) {libs}\b"
     assert code_matches(imports, [pkg], "") == []
     assert code_matches(r"\bHAVE_\w", [pkg], "") == []
+
+
+def test_intermediates_pin_by_local_checkpoint():
+    """The package pins an intermediate one way: an eager
+    ``localCheckpoint`` at the call site. No module calls ``.persist(``
+    or ``.cache(`` or names a ``storage_level``, except
+    ``catalog/actions.py``'s command cache, which its caller releases.
+    Strings and comments are not code."""
+    pkg = Path(E.__file__).parents[1]
+    pattern = r"\.\s*(?:persist|cache)\s*\(|\bstorage_level\b"
+    assert code_matches(pattern, [pkg], pkg / "catalog" / "actions.py") == []
 
 
 def test_registry_is_built_once_per_session(registry_runs):

@@ -1,11 +1,9 @@
 """Two-phase global rank (operators/ranking.with_global_rank) against a
 single-partition ``row_number()`` window — the definition it replaces.
 
-With no ``num_partitions`` the range shuffle's partition count is left
-to AQE, which coalesces contiguous ranges; the rank must not depend on
-that (skewed keys, an input far smaller than the shuffle partition
-count, AQE on and off), and an explicit ``num_partitions`` must still
-fix the range partition count.
+The range shuffle's partition count is left to AQE, which coalesces
+contiguous ranges; the rank must not depend on that (skewed keys, an
+input far smaller than the shuffle partition count, AQE on and off).
 """
 
 from __future__ import annotations
@@ -14,6 +12,7 @@ from contextlib import contextmanager
 
 import pytest
 from pyspark.sql import functions as F
+from pyspark.sql.classic.dataframe import DataFrame
 from pyspark.sql.window import Window
 
 from data_ingestion_py_spark.operators import ranking
@@ -34,16 +33,17 @@ def _conf(spark, **kv):
 @pytest.fixture
 def pinned_parts(monkeypatch):
     """Partition count of every range-shuffled input ``with_global_rank``
-    pins."""
+    pins: the partitions of each eager ``localCheckpoint`` it takes
+    (the operator's one)."""
     seen: list[int] = []
-    real_pin = ranking.pin
+    real = DataFrame.localCheckpoint
 
-    def spy(df, storage_level=None):
-        out = real_pin(df, storage_level)
+    def spy(df, *args, **kwargs):
+        out = real(df, *args, **kwargs)
         seen.append(out.rdd.getNumPartitions())
         return out
 
-    monkeypatch.setattr(ranking, "pin", spy)
+    monkeypatch.setattr(DataFrame, "localCheckpoint", spy)
     return seen
 
 
@@ -58,10 +58,10 @@ def _skewed(spark, n: int):
     )
 
 
-def _check(df, **kw):
+def _check(df):
     order = [F.asc("k"), F.desc("id")]
     got = ranking.with_global_rank(
-        df, order, cumsum={"run": F.col("v")}, total_col="tot", **kw
+        df, order, cumsum={"run": F.col("v")}, total_col="tot"
     )
     w = Window.orderBy(*order)
     want = df.select(
@@ -111,10 +111,3 @@ def test_input_smaller_than_shuffle_partitions(spark, aqe, pinned_parts):
     ):
         _check(_skewed(spark, 40).repartition(4))
     assert pinned_parts[0] < 64
-
-
-@pytest.mark.parametrize("aqe", ["true", "false"])
-def test_explicit_num_partitions_honoured(spark, aqe, pinned_parts):
-    with _conf(spark, **{"spark.sql.adaptive.enabled": aqe}):
-        _check(_skewed(spark, 3000), num_partitions=5)
-    assert pinned_parts == [5]
