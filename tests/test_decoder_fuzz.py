@@ -62,6 +62,7 @@ from tests.test_sources import (
     _gif_bytes,
     _id3,
     _id3_frame,
+    _mp4,
     _mp4_with_stbl,
     _png_bytes,
     _sps_bytes,
@@ -202,14 +203,26 @@ def _seeds() -> dict:
         images["gif"])
     add("probe_metadata-jpeg", mm.probe_metadata, (), (1, "image"), jpeg)
     add("chunk_inventory-png", mm.chunk_inventory, (), (1,), images["png"])
-    add("exif_probe-tiff", mm.exif_probe, (), (1,),
-        _exif_tiff("II", 6, "CAM42", "Mk7", 4032, 3024))
+    exif = _exif_tiff("II", 6, "CAM42", "Mk7", 4032, 3024)
+    add("exif_probe-tiff", mm.exif_probe, (), (1,), exif)
+    app1 = b"Exif\x00\x00" + exif
+    add("exif_probe-jpeg", mm.exif_probe, (), (1,),
+        b"\xff\xd8\xff\xe1" + struct.pack(">H", 2 + len(app1)) + app1
+        + jpeg[2:])
+    for fmt in ("tiff_g4", "webp"):
+        add(f"probe_metadata-{fmt}", mm.probe_metadata, (), (1, "image"),
+            images[fmt])
     for fmt, data in audio.items():
         add(f"pcm_stats-{fmt}", mm.pcm_stats, (), (1,), data)
         add(f"resample_audio-{fmt}", mm.resample_audio, (4000,), (1,), data)
     add("pcm_stats-flac", mm.pcm_stats, (), (1,), flac)
     add("probe_metadata-wav", mm.probe_metadata, (), (1, "audio"),
         audio["pcm"])
+    add("probe_metadata-flac", mm.probe_metadata, (), (1, "audio"), flac)
+    add("probe_metadata-mp4", mm.probe_metadata, (), (1, "video"),
+        _mp4(600, 1500))
+    add("probe_metadata-avi", mm.probe_metadata, (), (1, "video"),
+        _avi([list(range(16)), [v * 5 % 251 for v in range(16)]]))
     add("id3_probe", mm.id3_probe, (), (1,),
         _id3([_id3_frame("TIT2", "Hello"), _id3_frame("TPE1", "Band")]))
     add("sample_frames-avi", mm.sample_frames, (), (1, "video"),
