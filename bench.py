@@ -1078,7 +1078,7 @@ def _iter_slope_bench(spark, sf_dir: str) -> dict:
     Three shapes, matching the registry's iterative families:
     - pagerank: integer power iteration (fixed 5 rounds) on an
       orders-derived bipartite customer→order-slot graph;
-    - components: large-star/small-star alternation on the same edges;
+    - components: min-label propagation on the same edges;
     - rank: the two-phase global rank + exact NTILE rollup that
       customer_decile_gains runs (range shuffle + per-partition
       windows + broadcast offsets)."""
@@ -1183,14 +1183,10 @@ def _iter_slope_bench(spark, sf_dir: str) -> dict:
             ),
             "components": (
                 lambda: _noop(
-                    connected_components(
-                        e1.select("src", "dst"), "src", "dst", method="star"
-                    )
+                    connected_components(e1.select("src", "dst"), "src", "dst")
                 ),
                 lambda: _noop(
-                    connected_components(
-                        e10.select("src", "dst"), "src", "dst", method="star"
-                    )
+                    connected_components(e10.select("src", "dst"), "src", "dst")
                 ),
             ),
             "rank": (lambda: run_rank(1), lambda: run_rank(10)),

@@ -11,6 +11,8 @@ with itself; each round a node adopts the minimum label among itself
 and its neighbors; fixpoint = components. Rounds needed = graph
 diameter, and near-dup graphs are shallow (clusters are cliques or
 short chains from transitive similarity), so 3-5 rounds is typical.
+Long chains cost more rounds, and on power-law graphs a hub is a hot
+key: its neighbors' labels shuffle through it every round.
 
 Scale design, per round: one shuffle join (edges ⋈ labels on dst) +
 one min-aggregation — both keyed joins AQE handles; no driver-side
@@ -20,20 +22,6 @@ pattern as catalog.state.materialize). The per-round convergence check
 is one ``count`` action — the standard driver-side control loop of
 iterative graph algorithms (GraphX/Pregel does the same under the
 hood).
-
-Two methods, same output contract:
-
-- ``method="propagation"`` (default): min-label propagation, rounds =
-  graph diameter. Right for shallow near-dup graphs (cliques / short
-  chains); degrades on long chains AND on power-law graphs, where the
-  hub's min label must flow through the hub every round (hot key).
-- ``method="star"``: the large-star/small-star alternation (Kiveris
-  et al., "Connected Components in MapReduce and Beyond", SOCC'14) —
-  O(log² n) rounds regardless of diameter, and each round RESHAPES the
-  edge set toward stars rooted at component minima, so a high-degree
-  hub's edges disperse to the root instead of re-shuffling through the
-  hub forever. This is the 100 TB swap for the power-law similarity
-  graphs LSH pair output produces.
 """
 
 from __future__ import annotations
@@ -47,22 +35,13 @@ def connected_components(
     src: str = "doc_a",
     dst: str = "doc_b",
     max_iter: int = 25,
-    method: str = "propagation",
 ) -> DataFrame:
     """(node, component) for every node appearing in ``pairs``.
 
     ``component`` is the minimum node id in the node's connected
     component — a stable, engine-independent canonical representative
     (the same doc survives dedup on every run and every engine).
-
-    ``method="star"`` switches to the large-star/small-star
-    alternation (see module docstring); identical output, different
-    round complexity — pinned equal by ``tests/test_components.py``.
     """
-    if method == "star":
-        return _connected_components_star(pairs, src, dst, max_iter)
-    if method != "propagation":
-        raise ValueError(f"unknown method {method!r}")
     e = pairs.select(F.col(src).alias("src"), F.col(dst).alias("dst"))
     # undirected: propagate both ways; localCheckpoint so the (possibly
     # expensive) upstream LSH pipeline computes once, not once per round
@@ -99,98 +78,6 @@ def connected_components(
         if n_changed == 0:
             break
     return labels
-
-
-def _connected_components_star(
-    pairs: DataFrame,
-    src: str = "doc_a",
-    dst: str = "doc_b",
-    max_iter: int = 50,
-) -> DataFrame:
-    """Large-star/small-star alternation (Kiveris et al., SOCC'14).
-
-    Per round (both halves are one shuffle join + one keyed min agg —
-    the same per-round plan shape as propagation, no driver data):
-
-    - LARGE-STAR: for every node u, connect each STRICTLY LARGER
-      neighbor v > u to m = min(N(u) ∪ {u}). Detaches high-degree
-      hubs' big neighbors and re-roots them at the local minimum.
-    - SMALL-STAR: orient edges (u, v) with u > v; connect u and all
-      its smaller neighbors to their minimum. Flattens chains by
-      doubling the label-reach per round.
-
-    Both halves preserve connectivity (every emitted edge stays within
-    the component) and the alternation converges to star graphs rooted
-    at each component's minimum in O(log² n) rounds — the fixpoint
-    edge set IS the (node → component-min) mapping. Convergence is
-    detected by an order-insensitive edge-set checksum (count +
-    sum(xxhash64)), one scalar action per round; ``localCheckpoint``
-    truncates lineage per round as in propagation.
-    """
-    p = pairs.select(F.col(src).alias("u"), F.col(dst).alias("v"))
-    # node set from the UNFILTERED pairs: a node seen only in a
-    # self-loop still gets a (node, node) row, as in propagation
-    nodes = (
-        p.select(F.col("u").alias("node"))
-        .unionByName(p.select(F.col("v").alias("node")))
-        .distinct()
-        .localCheckpoint()
-    )
-    edges = p.where(F.col("u") != F.col("v")).distinct().localCheckpoint()
-    prev_sig = None
-    for _ in range(max_iter):
-        # ---- large-star ----
-        nbrs = edges.unionByName(
-            edges.select(F.col("v").alias("u"), F.col("u").alias("v"))
-        )
-        mins = nbrs.groupBy("u").agg(F.min("v").alias("_mn")).select(
-            "u", F.least("_mn", "u").alias("m")
-        )
-        large = (
-            nbrs.join(mins, "u")
-            .where(F.col("v") > F.col("u"))
-            .select(F.col("v").alias("u"), F.col("m").alias("v"))
-            .where(F.col("u") != F.col("v"))
-            .distinct()
-        )
-        # ---- small-star (input edges already satisfy u > v ≥ m, but
-        # orient defensively so the half is correct standalone) ----
-        oriented = large.select(
-            F.greatest("u", "v").alias("u"), F.least("u", "v").alias("v")
-        )
-        smins = oriented.groupBy("u").agg(F.min("v").alias("m"))
-        to_min = (
-            oriented.join(smins, "u")
-            .where(F.col("v") != F.col("m"))
-            .select(F.col("v").alias("u"), F.col("m").alias("v"))
-        )
-        center = smins.select("u", F.col("m").alias("v"))
-        edges = (
-            to_min.unionByName(center)
-            .where(F.col("u") != F.col("v"))
-            .distinct()
-            .localCheckpoint()
-        )
-        sig_row = edges.select(
-            F.count(F.lit(1)).alias("c"),
-            # bit_xor: order-insensitive, overflow-free under ANSI mode
-            # (edges are distinct, so xor-cancellation can't collide)
-            F.bit_xor(
-                F.xxhash64(F.least("u", "v"), F.greatest("u", "v"))
-            ).alias("h"),
-        ).first()
-        sig = (sig_row.c, sig_row.h)
-        if sig == prev_sig:
-            break
-        prev_sig = sig
-    # fixpoint: every edge points a node at its component min; nodes
-    # absent as a source are the minima themselves (or isolated)
-    comp = edges.select(
-        F.greatest("u", "v").alias("node"), F.least("u", "v").alias("component")
-    ).groupBy("node").agg(F.min("component").alias("component"))
-    return nodes.join(comp, "node", "left").select(
-        "node", F.coalesce("component", "node").alias("component")
-    )
 
 
 def dedup_clusters(

@@ -5887,32 +5887,6 @@ _JB2A_DIGIT_HEX = {
 }
 
 
-def _jbig2_wrap_arith_hex(body_hex: str, w: int, h: int) -> str:
-    """Embed one ARITHMETIC generic region (template 0, nominal AT
-    pixels serialized per T.88 §7.4.6.3) in the embedded-JBIG2
-    segment format: page-info segment + one immediate generic
-    region. Plan-time constant per MQ body."""
-    body = bytes.fromhex(body_hex)
-    at = bytes([0x03, 0xFF, 0xFD, 0xFF, 0x02, 0xFE, 0xFE, 0xFE])
-
-    def seg(num: int, stype: int, payload: bytes) -> bytes:
-        return (
-            num.to_bytes(4, "big") + bytes([stype]) + bytes([0])
-            + bytes([1]) + len(payload).to_bytes(4, "big") + payload
-        )
-
-    pi = (
-        w.to_bytes(4, "big") + h.to_bytes(4, "big") + bytes(8)
-        + bytes([0]) + bytes(2)
-    )
-    region = (
-        w.to_bytes(4, "big") + h.to_bytes(4, "big") + bytes(8)
-        + bytes([0]) + bytes([0])  # gflags: MMR=0, template 0
-        + at + body
-    )
-    return (seg(0, 48, pi) + seg(1, 38, region)).hex().upper()
-
-
 @register(
     "pdf_jbig2_arith_scanned_digits",
     """

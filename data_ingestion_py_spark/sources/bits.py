@@ -7,6 +7,9 @@
 - ``read_varint`` / ``zigzag``: LEB128 varints (ORC's protobuf
   footers, parquet's thrift-compact footers, Avro container headers).
 - ``rbsp_unescape``: H.264 emulation-prevention removal.
+- ``riff_chunks``: the RIFF chunk walk (WAV, AVI, WebP), here rather
+  than in ``multimodal`` because ``vp8l`` needs it and ``multimodal``
+  imports ``vp8l``.
 - ``bounded_decompress`` / ``decompress_members``: zlib / bz2 / xz
   inflation that stops one byte past an output cap, so a few hundred
   bytes of hostile input cannot make a decoder allocate far past it.
@@ -48,6 +51,7 @@ import functools
 import lzma
 import sys
 import zlib
+from collections.abc import Iterator
 
 
 #: bound on the rows of one bilevel raster (a CCITT fax image, a JBIG2
@@ -267,6 +271,24 @@ def rbsp_unescape(data: bytes) -> bytes:
     """Strip H.264 emulation-prevention bytes (00 00 03 → 00 00,
     ISO 14496-10 §7.4.1.1) from a NAL payload."""
     return bytes(data).replace(b"\x00\x00\x03", b"\x00\x00")
+
+
+def riff_chunks(
+    data: bytes, start: int, end: int
+) -> Iterator[tuple[bytes, int, int]]:
+    """Walk the RIFF chunks in ``data[start:end)``, yielding
+    ``(fourcc, data_start, data_end)`` per chunk. Sizes are
+    little-endian uint32 and chunks are word-aligned: an odd size is
+    followed by one pad byte. ``data_end`` is the declared end and may
+    pass ``end``; a reader that needs the bytes checks it. A LIST
+    chunk's data opens with its list-type fourcc, and its children are
+    ``riff_chunks(data, data_start + 4, data_end)``."""
+    i = start
+    n = min(end, len(data))
+    while i + 8 <= n:
+        size = int.from_bytes(data[i + 4 : i + 8], "little")
+        yield data[i : i + 4], i + 8, i + 8 + size
+        i += 8 + size + (size & 1)
 
 
 def bounded_decompress(d, data: bytes, cap: int) -> bytes | None:

@@ -32,6 +32,7 @@ from data_ingestion_py_spark.sources.bits import (
     bounded_decompress,
     none_on_refusal,
     rbsp_unescape,
+    riff_chunks,
 )
 from data_ingestion_py_spark.sources.spread import kernel_rows
 from data_ingestion_py_spark.sources.vp8l import decode_webp_array
@@ -76,17 +77,14 @@ FEATURE_SCHEMA = T.StructType(
 )
 
 
+@none_on_refusal
 def image_dimensions(payload: bytes | None) -> tuple[int, int] | None:
-    """REAL decode kernel: (width, height) from PNG / JPEG / GIF header
-    bytes — pure-Python byte parsing, no codec libraries.
-
-    - PNG: 8-byte signature, then the IHDR chunk's big-endian uint32
-      width/height at offsets 16/20 (PNG spec §11.2.2).
-    - JPEG: walk the marker segments from SOI; the first SOFn frame
-      header (C0–CF except the non-frame C4/C8/CC) carries big-endian
-      uint16 height then width after the precision byte (ITU T.81 §B.2.2).
-    - GIF: 'GIF87a'/'GIF89a', little-endian uint16 logical-screen
-      width/height at offset 6.
+    """REAL decode kernel: (width, height) from PNG / JPEG / GIF / TIFF
+    / BMP / WebP header bytes — pure-Python byte parsing, no codec
+    libraries. PNG's IHDR is the first chunk at a fixed offset; JPEG
+    takes the first SOFn frame header (C0–CF except the non-frame
+    C4/C8/CC) from the marker walk ``_jpeg_segments``; TIFF reads IFD0
+    through ``tiff_dimensions``.
 
     Returns None for anything unrecognized or truncated — audio/video
     and genuinely-opaque payloads stay (None, None) in extract_features.
@@ -103,33 +101,18 @@ def image_dimensions(payload: bytes | None) -> tuple[int, int] | None:
             int.from_bytes(payload[20:24], "big"),
         )
     if payload[:2] in (b"II", b"MM"):
-        return tiff_dimensions(payload)
+        return tiff_dimensions.__wrapped__(payload)
     if payload[:2] == b"\xff\xd8":
-        i, n = 2, len(payload)
-        while i + 4 <= n:
-            if payload[i] != 0xFF:
-                return None
-            # spec-legal 0xFF fill bytes may pad before the marker
-            # (ITU T.81 §B.1.1.2) — skip to the last 0xFF of the run
-            while i + 2 < n and payload[i + 1] == 0xFF:
-                i += 1
-            if i + 4 > n:
-                return None
-            marker = payload[i + 1]
-            if marker in (0xD9, 0xDA):
-                return None  # EOI / SOS: entropy data follows, no SOF seen
-            if marker == 0xD8 or marker == 0x01 or 0xD0 <= marker <= 0xD7:
-                i += 2  # standalone markers have no length field
-                continue
-            seg_len = int.from_bytes(payload[i + 2 : i + 4], "big")
+        for marker, s, _ in _jpeg_segments(payload):
             if 0xC0 <= marker <= 0xCF and marker not in (0xC4, 0xC8, 0xCC):
-                if i + 9 > n:
+                if s + 5 > len(payload):
                     return None
+                # precision byte, then uint16 height and width (T.81
+                # §B.2.2)
                 return (
-                    int.from_bytes(payload[i + 7 : i + 9], "big"),
-                    int.from_bytes(payload[i + 5 : i + 7], "big"),
+                    int.from_bytes(payload[s + 3 : s + 5], "big"),
+                    int.from_bytes(payload[s + 1 : s + 3], "big"),
                 )
-            i += 2 + seg_len
         return None
     if len(payload) >= 10 and payload[:6] in (b"GIF87a", b"GIF89a"):
         return (
@@ -178,38 +161,53 @@ def image_dimensions(payload: bytes | None) -> tuple[int, int] | None:
         return None
     return None
 
+
+def _tiff_ifd0(tiff: bytes | None) -> tuple[str, int]:
+    """A TIFF header (TIFF 6.0 §2): byte order "II" (little-endian) or
+    "MM" (big-endian), the magic 42, then the offset of IFD0 →
+    ``(byte order, IFD0 offset)``. ``Refused`` for anything else."""
+    if tiff is None or len(tiff) < 8 or tiff[:2] not in (b"II", b"MM"):
+        raise Refused("not a TIFF header")
+    end = "little" if tiff[:2] == b"II" else "big"
+    if int.from_bytes(tiff[2:4], end) != 42:
+        raise Refused("not a TIFF header")
+    return end, int.from_bytes(tiff[4:8], end)
+
+
+def _tiff_entries(
+    tiff: bytes, off: int, end: str
+) -> Iterator[tuple[int, int, int, int]]:
+    """Walk the TIFF IFD at ``off``: a 2-byte entry count, then 12-byte
+    entries, yielding ``(tag, type, count, entry_offset)`` per entry;
+    the 4-byte value field sits at ``entry_offset + 8``. Raises
+    ``Truncated`` when the count or an entry runs past the data (after
+    yielding the entries that fit). The next-IFD pointer is not
+    followed, so a crafted circular chain cannot loop."""
+    if off + 2 > len(tiff):
+        raise Truncated
+    for k in range(int.from_bytes(tiff[off : off + 2], end)):
+        e = off + 2 + 12 * k
+        if e + 12 > len(tiff):
+            raise Truncated
+        yield (
+            int.from_bytes(tiff[e : e + 2], end),
+            int.from_bytes(tiff[e + 2 : e + 4], end),
+            int.from_bytes(tiff[e + 4 : e + 8], end),
+            e,
+        )
+
+
+@none_on_refusal
 def tiff_dimensions(payload: bytes | None) -> tuple[int, int] | None:
-    """(width, height) from a TIFF header via a REAL IFD walk — both
-    byte orders ("II" little / "MM" big), magic-42 check, 12-byte
-    entry scan for ImageWidth(256)/ImageLength(257), with the spec's
-    left-justified value rule for SHORT(3) vs full-field LONG(4)
-    reads (the classic endianness trap: a SHORT in a big-endian file
-    occupies the FIRST two bytes of the 4-byte value field). Unlike
-    the fixed-offset PNG/JPEG/GIF parses this walks a structured
-    directory — count, typed entries, next-IFD pointer — which is the
-    shape every EXIF/DNG/GeoTIFF metadata extractor needs."""
-    if payload is None or len(payload) < 8:
-        return None
-    order = payload[:2]
-    if order == b"II":
-        end = "little"
-    elif order == b"MM":
-        end = "big"
-    else:
-        return None
-    if int.from_bytes(payload[2:4], end) != 42:
-        return None
-    off = int.from_bytes(payload[4:8], end)
-    if off + 2 > len(payload):
-        return None
-    n = int.from_bytes(payload[off : off + 2], end)
+    """(width, height) from a TIFF's IFD0 (``_tiff_entries``):
+    ImageWidth(256)/ImageLength(257), with the spec's left-justified
+    value rule for SHORT(3) vs full-field LONG(4) reads (the classic
+    endianness trap: a SHORT in a big-endian file occupies the FIRST
+    two bytes of the 4-byte value field). None when either is missing
+    or the directory is truncated."""
+    end, off = _tiff_ifd0(payload)
     w = h = None
-    for i in range(n):
-        e = off + 2 + 12 * i
-        if e + 12 > len(payload):
-            return None
-        tag = int.from_bytes(payload[e : e + 2], end)
-        typ = int.from_bytes(payload[e + 2 : e + 4], end)
+    for tag, typ, _, e in _tiff_entries(payload, off, end):
         field = payload[e + 8 : e + 12]
         if typ == 3:  # SHORT — left-justified in the value field
             v = int.from_bytes(field[:2], end)
@@ -262,6 +260,7 @@ _EXIF_IFD0_TAGS = {271: "make", 272: "model", 274: "orientation",
 _EXIF_SUB_TAGS = {34855: "iso", 40962: "exif_width", 40963: "exif_height"}
 
 
+@none_on_refusal
 def exif_metadata(payload: bytes | None) -> dict | None:
     """EXIF metadata from a JPEG APP1 segment or a standalone TIFF —
     a REAL IFD walk (both byte orders), the structured-directory
@@ -276,64 +275,39 @@ def exif_metadata(payload: bytes | None) -> dict | None:
     there is no EXIF at all; entry values are bounds-checked against
     the TIFF body (offsets in crafted files can't read out of range),
     and only IFD0 + the Exif pointer are walked — no next-IFD chain,
-    so a crafted circular chain can't loop."""
-    if payload is None:
-        return None
-    tiff: bytes | None = None
-    if payload[:2] == b"\xff\xd8":
-        i, n = 2, len(payload)
-        while i + 4 <= n:
-            if payload[i] != 0xFF:
-                return None
-            while i + 2 < n and payload[i + 1] == 0xFF:
-                i += 1
-            marker = payload[i + 1]
-            if marker in (0xD9, 0xDA):
-                break  # entropy data / end: no APP1 seen
-            if marker == 0x01 or 0xD0 <= marker <= 0xD7:
-                i += 2
-                continue
-            seglen = int.from_bytes(payload[i + 2 : i + 4], "big")
-            if seglen < 2 or i + 2 + seglen > n:
-                return None
-            if marker == 0xE1 and payload[i + 4 : i + 10] == b"Exif\x00\x00":
-                tiff = payload[i + 10 : i + 2 + seglen]
+    so a crafted circular chain can't loop. A truncated directory
+    keeps the entries read before the cut."""
+    tiff = payload
+    if payload is not None and payload[:2] == b"\xff\xd8":
+        tiff = None
+        for marker, s, e in _jpeg_segments(payload):
+            if marker == 0xE1 and payload[s : s + 6] == b"Exif\x00\x00":
+                tiff = payload[s + 6 : e]
                 break
-            i += 2 + seglen
-    elif payload[:2] in (b"II", b"MM"):
-        tiff = payload
-    if tiff is None or len(tiff) < 8:
-        return None
-    end = "little" if tiff[:2] == b"II" else "big"
-    if int.from_bytes(tiff[2:4], end) != 42:
-        return None
+    end, ifd0 = _tiff_ifd0(tiff)
     out: dict = {k: None for k in (*_EXIF_IFD0_TAGS.values(),
                                    *_EXIF_SUB_TAGS.values())}
     found = False
 
     def _walk(off: int, tags: dict[int, str]) -> int | None:
         nonlocal found
-        if off + 2 > len(tiff):
-            return None
-        cnt = int.from_bytes(tiff[off : off + 2], end)
         sub = None
-        for i in range(cnt):
-            e = off + 2 + 12 * i
-            if e + 12 > len(tiff):
-                return sub
-            tag = int.from_bytes(tiff[e : e + 2], end)
-            if tag in tags:
-                v = _ifd_value(tiff, e, end)
-                if v is not None:
-                    out[tags[tag]] = v
-                    found = True
-            elif tag == 34665 and tags is _EXIF_IFD0_TAGS:
-                p = _ifd_value(tiff, e, end)
-                if isinstance(p, int):
-                    sub = p
+        try:
+            for tag, _, _, e in _tiff_entries(tiff, off, end):
+                if tag in tags:
+                    v = _ifd_value(tiff, e, end)
+                    if v is not None:
+                        out[tags[tag]] = v
+                        found = True
+                elif tag == 34665 and tags is _EXIF_IFD0_TAGS:
+                    p = _ifd_value(tiff, e, end)
+                    if isinstance(p, int):
+                        sub = p
+        except Truncated:
+            pass  # best effort: keep the entries read before the cut
         return sub
 
-    sub = _walk(int.from_bytes(tiff[4:8], end), _EXIF_IFD0_TAGS)
+    sub = _walk(ifd0, _EXIF_IFD0_TAGS)
     if sub is not None:
         _walk(sub, _EXIF_SUB_TAGS)
     return out if found else None
@@ -363,27 +337,9 @@ def decode_tiff_array(
     out-of-range strip offsets."""
     import zlib
 
-    if (
-        payload is None
-        or len(payload) < 8
-        or payload[:2] not in (b"II", b"MM")
-    ):
-        return None
-    end = "little" if payload[:2] == b"II" else "big"
-    if int.from_bytes(payload[2:4], end) != 42:
-        return None
-    off = int.from_bytes(payload[4:8], end)
-    if off + 2 > len(payload):
-        return None
-    cnt = int.from_bytes(payload[off : off + 2], end)
+    end, off = _tiff_ifd0(payload)
     fields: dict[int, list[int]] = {}
-    for i in range(cnt):
-        e = off + 2 + 12 * i
-        if e + 12 > len(payload):
-            return None
-        tag = int.from_bytes(payload[e : e + 2], end)
-        typ = int.from_bytes(payload[e + 2 : e + 4], end)
-        nv = int.from_bytes(payload[e + 4 : e + 8], end)
+    for tag, typ, nv, e in _tiff_entries(payload, off, end):
         size = {1: 1, 3: 2, 4: 4}.get(typ)
         if size is None or nv == 0 or nv > len(payload):
             continue  # ASCII/rational fields are irrelevant here
@@ -791,6 +747,23 @@ def _png_unfilter(
     return recon
 
 
+def _png_chunk_spans(payload: bytes) -> Iterator[tuple[bytes, int, int]]:
+    """Walk the PNG chunks after the 8-byte signature, yielding
+    ``(type, data_start, data_end)``: each chunk is a big-endian uint32
+    length, a 4-byte type, the data and a 4-byte CRC (not checked
+    here). ``data_end`` is the declared end; a chunk whose data or CRC
+    runs past the payload is the last one yielded. The walk ends after
+    IEND."""
+    i, n = 8, len(payload)
+    while i + 8 <= n:
+        end = i + 8 + int.from_bytes(payload[i : i + 4], "big")
+        ctype = payload[i + 4 : i + 8]
+        yield ctype, i + 8, end
+        if ctype == b"IEND":
+            return
+        i = end + 4
+
+
 @none_on_refusal
 def decode_png_array(
     payload: bytes | None,
@@ -850,19 +823,13 @@ def decode_png_array(
     # IDAT data may span chunks; concatenate in file order
     idat = bytearray()
     plte: bytes | None = None
-    i, n = 33, len(payload)
-    while i + 8 <= n:
-        clen = int.from_bytes(payload[i : i + 4], "big")
-        ctype = payload[i + 4 : i + 8]
-        if i + 12 + clen > n:
+    for ctype, start, end in _png_chunk_spans(payload):
+        if end + 4 > len(payload):
             return None  # truncated chunk
         if ctype == b"IDAT":
-            idat += payload[i + 8 : i + 8 + clen]
+            idat += payload[start:end]
         elif ctype == b"PLTE":
-            plte = payload[i + 8 : i + 8 + clen]
-        elif ctype == b"IEND":
-            break
-        i += 12 + clen
+            plte = payload[start:end]
     if color_type == 3 and (
         plte is None or len(plte) % 3 or not 3 <= len(plte) <= 768
     ):
@@ -1245,6 +1212,41 @@ def _jpeg_idct(coef: "np.ndarray") -> "np.ndarray":
     return np.clip(np.round(spatial) + 128.0, 0.0, 255.0).astype(np.uint8)
 
 
+def _jpeg_segments(
+    payload: bytes, i: int = 2
+) -> Iterator[tuple[int, int, int]]:
+    """Walk the JPEG marker segments from offset ``i`` (the byte after
+    SOI by default), yielding ``(marker, body_start, body_end)``. 0xFF
+    fill bytes before a marker are skipped (T.81 §B.1.1.2); the
+    standalone markers TEM (01), RSTn (D0–D7) and SOI (D8) yield an
+    empty body; every other marker carries a big-endian length that
+    counts itself. The walk ends after yielding SOS (DA) — the
+    entropy-coded data follows, and a caller that reads past it walks
+    again from the next marker's offset — or EOI (D9), or when fewer
+    than 4 bytes are left. ``Refused`` for a byte that is not a marker,
+    a length below 2, or a segment running past the data."""
+    n = len(payload)
+    while i + 4 <= n:
+        if payload[i] != 0xFF:
+            raise Refused("JPEG marker expected")
+        while i + 2 < n and payload[i + 1] == 0xFF:
+            i += 1
+        marker = payload[i + 1]
+        if marker in (0x01, 0xD8, 0xD9) or 0xD0 <= marker <= 0xD7:
+            yield marker, i + 2, i + 2
+            if marker == 0xD9:
+                return
+            i += 2
+            continue
+        end = i + 2 + int.from_bytes(payload[i + 2 : i + 4], "big")
+        if end < i + 4 or end > n:
+            raise Refused("JPEG segment length")
+        yield marker, i + 4, end
+        if marker == 0xDA:
+            return
+        i = end
+
+
 def _jpeg_entropy_segments(
     payload: bytes, i: int
 ) -> tuple[list[bytes], int]:
@@ -1527,8 +1529,6 @@ def decode_jpeg_array(
     r=g=b=Y), so checksums/phashes stay decoder-independent."""
     if payload is None or len(payload) < 4 or payload[:2] != b"\xff\xd8":
         raise Refused("malformed or unsupported JPEG")
-    n = len(payload)
-    i = 2
     qt: dict[int, "np.ndarray"] = {}
     huff_dc: dict[int, tuple] = {}
     huff_ac: dict[int, tuple] = {}
@@ -1537,117 +1537,107 @@ def decode_jpeg_array(
     progressive = False
     # each scan: (sel, ss, se, ah, al, restart_interval, segments)
     scans: list[tuple] = []
-    while i + 4 <= n:
-        if payload[i] != 0xFF:
-            raise Refused("malformed or unsupported JPEG")
-        while i + 2 < n and payload[i + 1] == 0xFF:  # legal fill bytes
-            i += 1
-        marker = payload[i + 1]
-        if marker == 0xD9:
-            if scans:  # progressive: EOI terminates the scan sequence
-                break
-            raise Refused("EOI before a scan completed")
-        seglen = int.from_bytes(payload[i + 2 : i + 4], "big")
-        if seglen < 2 or i + 2 + seglen > n:
-            raise Refused("malformed or unsupported JPEG")
-        body = payload[i + 4 : i + 2 + seglen]
-        i += 2 + seglen
-        if marker == 0xDB:  # DQT: one or more tables
-            j = 0
-            while j < len(body):
-                pq, tq_id = body[j] >> 4, body[j] & 0x0F
-                j += 1
-                if pq == 0:
-                    if j + 64 > len(body):
+    start: int | None = 2  # where the marker walk (re)starts
+    while start is not None:
+        walk_from, start = start, None
+        for marker, body_at, body_end in _jpeg_segments(payload, walk_from):
+            if marker == 0xD9 and not scans:
+                raise Refused("EOI before a scan completed")
+            body = payload[body_at:body_end]
+            if marker == 0xDB:  # DQT: one or more tables
+                j = 0
+                while j < len(body):
+                    pq, tq_id = body[j] >> 4, body[j] & 0x0F
+                    j += 1
+                    if pq == 0:
+                        if j + 64 > len(body):
+                            raise Refused("malformed or unsupported JPEG")
+                        vals = np.frombuffer(
+                            body[j : j + 64], dtype=np.uint8
+                        ).astype(np.int32)
+                        j += 64
+                    elif pq == 1:
+                        if j + 128 > len(body):
+                            raise Refused("malformed or unsupported JPEG")
+                        vals = (
+                            np.frombuffer(body[j : j + 128], dtype=">u2")
+                            .astype(np.int32)
+                        )
+                        j += 128
+                    else:
                         raise Refused("malformed or unsupported JPEG")
-                    vals = np.frombuffer(
-                        body[j : j + 64], dtype=np.uint8
-                    ).astype(np.int32)
-                    j += 64
-                elif pq == 1:
-                    if j + 128 > len(body):
+                    table = np.zeros(64, dtype=np.int32)
+                    table[list(_JPEG_ZIGZAG)] = vals  # stored in zigzag order
+                    qt[tq_id] = table
+            elif marker == 0xC4:  # DHT: one or more tables
+                j = 0
+                while j + 17 <= len(body):
+                    tc, th = body[j] >> 4, body[j] & 0x0F
+                    counts = body[j + 1 : j + 17]
+                    nv = sum(counts)
+                    if j + 17 + nv > len(body):
                         raise Refused("malformed or unsupported JPEG")
-                    vals = (
-                        np.frombuffer(body[j : j + 128], dtype=">u2")
-                        .astype(np.int32)
+                    if tc > 1:
+                        raise Refused("malformed or unsupported JPEG")
+                    (huff_dc if tc == 0 else huff_ac)[th] = _jpeg_huff_table(
+                        counts, body[j + 17 : j + 17 + nv]
                     )
-                    j += 128
-                else:
+                    j += 17 + nv
+                if j != len(body):
                     raise Refused("malformed or unsupported JPEG")
-                table = np.zeros(64, dtype=np.int32)
-                table[list(_JPEG_ZIGZAG)] = vals  # stored in zigzag order
-                qt[tq_id] = table
-        elif marker == 0xC4:  # DHT: one or more tables
-            j = 0
-            while j + 17 <= len(body):
-                tc, th = body[j] >> 4, body[j] & 0x0F
-                counts = body[j + 1 : j + 17]
-                nv = sum(counts)
-                if j + 17 + nv > len(body):
+            elif marker in (0xC0, 0xC1, 0xC2):  # sequential / progressive
+                if frame is not None:  # second SOF: corrupt
                     raise Refused("malformed or unsupported JPEG")
-                if tc > 1:
+                progressive = marker == 0xC2
+                if len(body) < 6 or body[0] != 8:  # 8-bit samples only
                     raise Refused("malformed or unsupported JPEG")
-                (huff_dc if tc == 0 else huff_ac)[th] = _jpeg_huff_table(
-                    counts, body[j + 17 : j + 17 + nv]
-                )
-                j += 17 + nv
-            if j != len(body):
-                raise Refused("malformed or unsupported JPEG")
-        elif marker in (0xC0, 0xC1, 0xC2):  # sequential / progressive
-            if frame is not None:  # second SOF: corrupt
-                raise Refused("malformed or unsupported JPEG")
-            progressive = marker == 0xC2
-            if len(body) < 6 or body[0] != 8:  # 8-bit samples only
-                raise Refused("malformed or unsupported JPEG")
-            h = int.from_bytes(body[1:3], "big")
-            w = int.from_bytes(body[3:5], "big")
-            ncomp = body[5]
-            if w <= 0 or h <= 0 or ncomp not in (1, 3):
-                raise Refused("malformed or unsupported JPEG")
-            if len(body) != 6 + 3 * ncomp:
-                raise Refused("malformed or unsupported JPEG")
-            comps = []
-            for c in range(ncomp):
-                cid = body[6 + 3 * c]
-                hv = body[7 + 3 * c]
-                comps.append((cid, hv >> 4, hv & 0x0F, body[8 + 3 * c]))
-            frame = (w, h, comps)
-        elif marker in (0xC3, 0xC5, 0xC6, 0xC7, 0xC9, 0xCA, 0xCB,
-                        0xCD, 0xCE, 0xCF):
-            raise Refused("lossless/arithmetic/hierarchical")
-        elif marker == 0xDD:  # DRI (may change between scans)
-            if len(body) != 2:
-                raise Refused("malformed or unsupported JPEG")
-            restart_interval = int.from_bytes(body, "big")
-        elif marker == 0xDA:  # SOS
-            if frame is None or len(body) < 1:
-                raise Refused("malformed or unsupported JPEG")
-            ns = body[0]
-            if len(body) != 1 + 2 * ns + 3:
-                raise Refused("malformed or unsupported JPEG")
-            if not progressive and ns != len(frame[2]):
-                raise Refused("baseline scan is not interleaved")
-            if not 1 <= ns <= len(frame[2]):
-                raise Refused("malformed or unsupported JPEG")
-            sel = []
-            for s in range(ns):
-                cs = body[1 + 2 * s]
-                idx = next(
-                    (k for k, c in enumerate(frame[2]) if c[0] == cs), None
-                )
-                if idx is None:
+                h = int.from_bytes(body[1:3], "big")
+                w = int.from_bytes(body[3:5], "big")
+                ncomp = body[5]
+                if w <= 0 or h <= 0 or ncomp not in (1, 3):
                     raise Refused("malformed or unsupported JPEG")
-                tt = body[2 + 2 * s]
-                sel.append((idx, tt >> 4, tt & 0x0F))
-            ss, se = body[1 + 2 * ns], body[2 + 2 * ns]
-            ah, al = body[3 + 2 * ns] >> 4, body[3 + 2 * ns] & 0x0F
-            segments, end = _jpeg_entropy_segments(payload, i)
-            scans.append((sel, ss, se, ah, al, restart_interval, segments))
-            if not progressive:
-                break
-            i = end  # resume the marker walk after this scan
-            continue
-        # APPn / COM / anything else with a length: skipped
+                if len(body) != 6 + 3 * ncomp:
+                    raise Refused("malformed or unsupported JPEG")
+                comps = []
+                for c in range(ncomp):
+                    cid = body[6 + 3 * c]
+                    hv = body[7 + 3 * c]
+                    comps.append((cid, hv >> 4, hv & 0x0F, body[8 + 3 * c]))
+                frame = (w, h, comps)
+            elif marker in (0xC3, 0xC5, 0xC6, 0xC7, 0xC9, 0xCA, 0xCB,
+                            0xCD, 0xCE, 0xCF):
+                raise Refused("lossless/arithmetic/hierarchical")
+            elif marker == 0xDD:  # DRI (may change between scans)
+                if len(body) != 2:
+                    raise Refused("malformed or unsupported JPEG")
+                restart_interval = int.from_bytes(body, "big")
+            elif marker == 0xDA:  # SOS
+                if frame is None or len(body) < 1:
+                    raise Refused("malformed or unsupported JPEG")
+                ns = body[0]
+                if len(body) != 1 + 2 * ns + 3:
+                    raise Refused("malformed or unsupported JPEG")
+                if not progressive and ns != len(frame[2]):
+                    raise Refused("baseline scan is not interleaved")
+                if not 1 <= ns <= len(frame[2]):
+                    raise Refused("malformed or unsupported JPEG")
+                sel = []
+                for s in range(ns):
+                    cs = body[1 + 2 * s]
+                    idx = next(
+                        (k for k, c in enumerate(frame[2]) if c[0] == cs), None
+                    )
+                    if idx is None:
+                        raise Refused("malformed or unsupported JPEG")
+                    tt = body[2 + 2 * s]
+                    sel.append((idx, tt >> 4, tt & 0x0F))
+                ss, se = body[1 + 2 * ns], body[2 + 2 * ns]
+                ah, al = body[3 + 2 * ns] >> 4, body[3 + 2 * ns] & 0x0F
+                segments, end = _jpeg_entropy_segments(payload, body_end)
+                scans.append((sel, ss, se, ah, al, restart_interval, segments))
+                if progressive:
+                    start = end  # walk on after this scan
+            # APPn / COM / anything else with a length: skipped
     if frame is None or not scans:
         raise Refused("malformed or unsupported JPEG")
     w, h, comps = frame
@@ -1908,6 +1898,17 @@ _MP3_KBPS_V2 = (0, 8, 16, 24, 32, 40, 48, 56, 64, 80, 96, 112, 128, 144, 160, 0)
 _MP3_RATES = {3: (44100, 48000, 32000), 2: (22050, 24000, 16000), 0: (11025, 12000, 8000)}
 
 
+def _syncsafe(raw: bytes) -> int:
+    """An ID3v2 syncsafe integer (ID3v2.4 §6.2): 7 bits per byte, most
+    significant first. ``Refused`` when a byte has its high bit set."""
+    v = 0
+    for b in raw:
+        if b & 0x80:
+            raise Refused("syncsafe byte with its high bit set")
+        v = (v << 7) | b
+    return v
+
+
 def _mp3_duration_ms(payload: bytes) -> int | None:
     """MPEG-1/2/2.5 Layer III frame-header walk — metadata only, no
     codec: skip an ID3v2 container (syncsafe size), then step frame to
@@ -1924,12 +1925,7 @@ def _mp3_duration_ms(payload: bytes) -> int | None:
     n = len(payload)
     i = 0
     if payload[:3] == b"ID3" and n >= 10:
-        sz = 0
-        for b in payload[6:10]:
-            if b & 0x80:  # syncsafe bytes have the high bit clear
-                return None
-            sz = (sz << 7) | b
-        i = 10 + sz
+        i = 10 + _syncsafe(payload[6:10])
     samples_by_rate: dict[int, int] = {}
     first = True
     while i < n:
@@ -1978,6 +1974,7 @@ _ID3_TEXT_FRAMES = {
 }
 
 
+@none_on_refusal
 def id3v2_tags(payload: bytes | None) -> dict | None:
     """Text tags (title/artist/album/year) from an ID3v2.3/2.4
     container prefix — the audio-corpus sibling of ``exif_metadata``:
@@ -1994,23 +1991,16 @@ def id3v2_tags(payload: bytes | None) -> dict | None:
     ver = payload[3]
     if ver not in (3, 4):
         return None
-    size = 0
-    for b in payload[6:10]:
-        if b & 0x80:
-            return None
-        size = (size << 7) | b
-    end = min(10 + size, len(payload))
+    end = min(10 + _syncsafe(payload[6:10]), len(payload))
     out: dict = {"title": None, "artist": None, "album": None, "year": None}
     i = 10
     if payload[5] & 0x40:  # extended header: skip by its own size
         if i + 4 > end:
             return None
-        ext = int.from_bytes(payload[i : i + 4], "big")
-        if ver == 4:  # syncsafe
-            ext = sum(
-                (payload[i + j] & 0x7F) << (7 * (3 - j)) for j in range(4)
-            )
-        i += ext if ver == 4 else ext + 4
+        if ver == 4:  # syncsafe, counting its own 4 bytes
+            i += _syncsafe(payload[i : i + 4])
+        else:
+            i += int.from_bytes(payload[i : i + 4], "big") + 4
     while i + 10 <= end:
         fid = payload[i : i + 4]
         if fid[0] == 0:  # padding
@@ -2018,11 +2008,7 @@ def id3v2_tags(payload: bytes | None) -> dict | None:
         if not all(0x30 <= c <= 0x5A for c in fid):
             return None  # desynced walk
         if ver == 4:
-            fsz = 0
-            for b in payload[i + 4 : i + 8]:
-                if b & 0x80:
-                    return None
-                fsz = (fsz << 7) | b
+            fsz = _syncsafe(payload[i + 4 : i + 8])
         else:
             fsz = int.from_bytes(payload[i + 4 : i + 8], "big")
         if fsz < 0 or i + 10 + fsz > end:
@@ -2169,20 +2155,20 @@ def _ogg_duration_ms(payload: bytes) -> int | None:
     return granule * 1000 // rate
 
 
+@none_on_refusal
 def media_duration_ms(payload: bytes | None) -> int | None:
     """REAL decode kernel: duration in milliseconds from WAV/RIFF, MP4
     (ISO BMFF), FLAC, AVI, MP3 (MPEG Layer III), AAC (ADTS), or Ogg
     (Vorbis/Opus) header bytes — pure-Python byte parsing, no codec
     libraries. The audio/video counterpart of ``image_dimensions``.
 
-    - WAV: 'RIFF'+size+'WAVE', then a word-aligned chunk walk; the
-      'fmt ' chunk's little-endian uint32 byte-rate at data offset 8
-      and the 'data' chunk's declared size give
-      ``data_size * 1000 // byte_rate`` (RIFF/WAVE spec).
-    - MP4: big-endian box walk; inside 'moov', the 'mvhd' box carries
-      timescale + duration — version 0 as uint32s at offsets 20/24,
-      version 1 as uint32/uint64 at 28/32 (ISO 14496-12 §8.2.2) —
-      giving ``duration * 1000 // timescale``.
+    - WAV (``riff_chunks``): the 'data' chunk's declared size over the
+      'fmt ' chunk's byte rate.
+    - MP4 (``_mp4_boxes``): the first 'moov' box's 'mvhd' timescale and
+      duration, version 0 or 1 (ISO 14496-12 §8.2.2).
+    - FLAC (``_flac_blocks``): STREAMINFO's total samples over its
+      sample rate.
+    - AVI: ``avi_headers``' frame count times frame period.
 
     Returns None for unrecognized, truncated, or 64-bit-size ('co64'
     style size==1) payloads — those stay NULL rather than guessed.
@@ -2205,21 +2191,19 @@ def media_duration_ms(payload: bytes | None) -> int | None:
             return _adts_duration_ms(payload)
         return _mp3_duration_ms(payload)
     if n >= 12 and payload[:4] == b"RIFF" and payload[8:12] == b"WAVE":
-        i = 12
         byte_rate: int | None = None
         data_size: int | None = None
-        while i + 8 <= n:
-            cid = payload[i : i + 4]
-            csz = int.from_bytes(payload[i + 4 : i + 8], "little")
-            if cid == b"fmt " and i + 20 <= n:
-                byte_rate = int.from_bytes(payload[i + 16 : i + 20], "little")
+        for cid, start, end in riff_chunks(payload, 12, n):
+            if cid == b"fmt " and start + 12 <= n:
+                byte_rate = int.from_bytes(
+                    payload[start + 8 : start + 12], "little"
+                )
             elif cid == b"data":
-                data_size = csz
+                data_size = end - start
             if byte_rate is not None and data_size is not None:
                 return (
                     data_size * 1000 // byte_rate if byte_rate else None
                 )
-            i += 8 + csz + (csz & 1)  # RIFF chunks are word-aligned
         return None
     if n >= 12 and payload[:4] == b"RIFF" and payload[8:12] == b"AVI ":
         hdr = avi_headers(payload)
@@ -2227,81 +2211,43 @@ def media_duration_ms(payload: bytes | None) -> int | None:
             return None
         return hdr["usec_per_frame"] * hdr["total_frames"] // 1000
     if n >= 8 and payload[:4] == b"fLaC":
-        # metadata block walk: 1-byte (last<<7 | type) + 24-bit length;
-        # STREAMINFO (type 0) packs sample_rate(20) channels-1(3)
-        # bits-1(5) total_samples(36) into bytes 10..18 (FLAC spec §9.1)
-        i = 4
-        while i + 4 <= n:
-            hdr = payload[i]
-            blen = int.from_bytes(payload[i + 1 : i + 4], "big")
-            if hdr & 0x7F == 0:
-                if blen < 18 or i + 4 + 18 > n:
-                    return None
-                packed = int.from_bytes(payload[i + 14 : i + 22], "big")
-                rate = packed >> 44
-                total = packed & ((1 << 36) - 1)
+        for btype, start, end in _flac_blocks(payload):
+            if btype == 0:
+                rate, _, _, total = _flac_streaminfo(payload, start, end)
                 return total * 1000 // rate if rate else None
-            if hdr & 0x80:  # last block, no STREAMINFO found
-                return None
-            i += 4 + blen
         return None
     if n >= 12 and payload[4:8] == b"ftyp":
-        i = 0
-        while i + 8 <= n:
-            size = int.from_bytes(payload[i : i + 4], "big")
-            if size < 8:  # size 0 (to-eof) / 1 (64-bit) unsupported
-                return None
-            if payload[i + 4 : i + 8] == b"moov":
-                j, end = i + 8, min(i + size, n)
-                while j + 8 <= end:
-                    bsz = int.from_bytes(payload[j : j + 4], "big")
-                    if payload[j + 4 : j + 8] == b"mvhd" and j + 9 <= end:
-                        if payload[j + 8] == 1:
-                            if j + 40 > n:
-                                return None
-                            ts = int.from_bytes(
-                                payload[j + 28 : j + 32], "big"
-                            )
-                            dur = int.from_bytes(
-                                payload[j + 32 : j + 40], "big"
-                            )
-                        else:
-                            if j + 28 > n:
-                                return None
-                            ts = int.from_bytes(
-                                payload[j + 20 : j + 24], "big"
-                            )
-                            dur = int.from_bytes(
-                                payload[j + 24 : j + 28], "big"
-                            )
-                        return dur * 1000 // ts if ts else None
-                    if bsz < 8:
+        for box, start, end in _mp4_boxes(payload, 0, n):
+            if box != b"moov":
+                continue
+            for child, j, _ in _mp4_boxes(payload, start, end):
+                if child != b"mvhd" or j >= end:
+                    continue
+                # timescale and duration after version/flags and the
+                # creation/modification times (64-bit in version 1)
+                if payload[j] == 1:
+                    if j + 32 > n:
                         return None
-                    j += bsz
-            i += size
+                    ts = int.from_bytes(payload[j + 20 : j + 24], "big")
+                    dur = int.from_bytes(payload[j + 24 : j + 32], "big")
+                else:
+                    if j + 20 > n:
+                        return None
+                    ts = int.from_bytes(payload[j + 12 : j + 16], "big")
+                    dur = int.from_bytes(payload[j + 16 : j + 20], "big")
+                return dur * 1000 // ts if ts else None
         return None
     return None
 
 
-def _riff_children(
-    payload: bytes, start: int, end: int
-) -> Iterator[tuple[bytes, bytes | None, int, int]]:
-    """Walk the RIFF chunks in ``payload[start:end)``, yielding
-    ``(fourcc, list_type, data_start, data_size)`` per chunk. LIST
-    chunks carry their list-type fourcc (data then starts past it);
-    plain chunks yield ``list_type=None``. Chunk sizes are little-endian
-    and word-aligned (odd sizes pad one byte) — the same walk the WAV
-    branch of ``media_duration_ms`` does inline."""
-    i = start
-    n = min(end, len(payload))
-    while i + 8 <= n:
-        cid = payload[i : i + 4]
-        csz = int.from_bytes(payload[i + 4 : i + 8], "little")
-        if cid == b"LIST" and i + 12 <= n:
-            yield cid, payload[i + 8 : i + 12], i + 12, csz - 4
-        else:
-            yield cid, None, i + 8, csz
-        i += 8 + csz + (csz & 1)
+def _riff_list(
+    payload: bytes, start: int, end: int, list_type: bytes
+) -> Iterator[tuple[bytes, int, int]]:
+    """The children of every LIST chunk of ``list_type`` among the RIFF
+    chunks in ``payload[start:end)``, as ``riff_chunks`` yields them."""
+    for cid, ds, de in riff_chunks(payload, start, end):
+        if cid == b"LIST" and payload[ds : ds + 4] == list_type:
+            yield from riff_chunks(payload, ds + 4, de)
 
 
 def avi_headers(payload: bytes | None) -> dict | None:
@@ -2327,42 +2273,42 @@ def avi_headers(payload: bytes | None) -> dict | None:
         "bit_count": None,
         "compression": None,
     }
-    for cid, ltype, ds, dsz in _riff_children(payload, 12, len(payload)):
-        if cid != b"LIST" or ltype != b"hdrl":
-            continue
-        for c2, l2, ds2, dsz2 in _riff_children(payload, ds, ds + dsz):
-            if c2 == b"avih" and dsz2 >= 20 and ds2 + 20 <= len(payload):
-                out["usec_per_frame"] = int.from_bytes(
-                    payload[ds2 : ds2 + 4], "little"
-                )
-                out["total_frames"] = int.from_bytes(
-                    payload[ds2 + 16 : ds2 + 20], "little"
-                )
-            elif c2 == b"LIST" and l2 == b"strl" and out["width"] is None:
-                is_vids = False
-                for c3, _, ds3, dsz3 in _riff_children(
-                    payload, ds2, ds2 + dsz2
+    n = len(payload)
+    for c2, ds2, de2 in _riff_list(payload, 12, n, b"hdrl"):
+        if c2 == b"avih" and de2 - ds2 >= 20 and ds2 + 20 <= n:
+            out["usec_per_frame"] = int.from_bytes(
+                payload[ds2 : ds2 + 4], "little"
+            )
+            out["total_frames"] = int.from_bytes(
+                payload[ds2 + 16 : ds2 + 20], "little"
+            )
+        elif (
+            c2 == b"LIST"
+            and payload[ds2 : ds2 + 4] == b"strl"
+            and out["width"] is None
+        ):
+            is_vids = False
+            for c3, ds3, de3 in riff_chunks(payload, ds2 + 4, de2):
+                if c3 == b"strh" and de3 - ds3 >= 4:
+                    is_vids = payload[ds3 : ds3 + 4] == b"vids"
+                elif (
+                    c3 == b"strf"
+                    and is_vids
+                    and de3 - ds3 >= 20
+                    and ds3 + 20 <= n
                 ):
-                    if c3 == b"strh" and dsz3 >= 4:
-                        is_vids = payload[ds3 : ds3 + 4] == b"vids"
-                    elif (
-                        c3 == b"strf"
-                        and is_vids
-                        and dsz3 >= 20
-                        and ds3 + 20 <= len(payload)
-                    ):
-                        out["width"] = int.from_bytes(
-                            payload[ds3 + 4 : ds3 + 8], "little", signed=True
-                        )
-                        out["height"] = int.from_bytes(
-                            payload[ds3 + 8 : ds3 + 12], "little", signed=True
-                        )
-                        out["bit_count"] = int.from_bytes(
-                            payload[ds3 + 14 : ds3 + 16], "little"
-                        )
-                        out["compression"] = int.from_bytes(
-                            payload[ds3 + 16 : ds3 + 20], "little"
-                        )
+                    out["width"] = int.from_bytes(
+                        payload[ds3 + 4 : ds3 + 8], "little", signed=True
+                    )
+                    out["height"] = int.from_bytes(
+                        payload[ds3 + 8 : ds3 + 12], "little", signed=True
+                    )
+                    out["bit_count"] = int.from_bytes(
+                        payload[ds3 + 14 : ds3 + 16], "little"
+                    )
+                    out["compression"] = int.from_bytes(
+                        payload[ds3 + 16 : ds3 + 20], "little"
+                    )
     return out
 
 
@@ -2470,21 +2416,16 @@ def decode_avi_frames(
     mjpg = hdr["compression"] == 0x47504A4D  # 'MJPG' little-endian
     if mjpg:
         frames: list[bytes] = []
-        for cid, ltype, ds, dsz in _riff_children(payload, 12, len(payload)):
-            if cid != b"LIST" or ltype != b"movi":
+        for c2, ds2, de2 in _riff_list(payload, 12, len(payload), b"movi"):
+            if c2[2:4] not in (b"db", b"dc"):
                 continue
-            for c2, _, ds2, dsz2 in _riff_children(payload, ds, ds + dsz):
-                if c2[2:4] not in (b"db", b"dc"):
-                    continue
-                decoded = decode_jpeg_array(payload[ds2 : ds2 + dsz2])
-                if decoded is None:
-                    continue
-                fw, fh, pix = decoded
-                frames.append(
-                    b"P5\n%d %d\n255\n" % (fw, fh) + pix.tobytes()
-                )
-                if len(frames) == max_frames:
-                    return frames
+            decoded = decode_jpeg_array(payload[ds2:de2])
+            if decoded is None:
+                continue
+            fw, fh, pix = decoded
+            frames.append(b"P5\n%d %d\n255\n" % (fw, fh) + pix.tobytes())
+            if len(frames) == max_frames:
+                return frames
         return frames or None
     if (
         hdr["compression"] != 0
@@ -2500,18 +2441,15 @@ def decode_avi_frames(
     bpp = hdr["bit_count"]
     stride = ((w * (bpp // 8) + 3) // 4) * 4
     frames: list[bytes] = []
-    for cid, ltype, ds, dsz in _riff_children(payload, 12, len(payload)):
-        if cid != b"LIST" or ltype != b"movi":
+    for c2, ds2, de2 in _riff_list(payload, 12, len(payload), b"movi"):
+        if c2[2:4] not in (b"db", b"dc") or de2 - ds2 < stride * h:
             continue
-        for c2, _, ds2, dsz2 in _riff_children(payload, ds, ds + dsz):
-            if c2[2:4] not in (b"db", b"dc") or dsz2 < stride * h:
-                continue
-            gray = _dib_gray(payload, ds2, w, h, bpp, bottom_up)
-            if gray is None:
-                continue
-            frames.append(b"P5\n%d %d\n255\n" % (w, h) + gray.tobytes())
-            if len(frames) == max_frames:
-                return frames
+        gray = _dib_gray(payload, ds2, w, h, bpp, bottom_up)
+        if gray is None:
+            continue
+        frames.append(b"P5\n%d %d\n255\n" % (w, h) + gray.tobytes())
+        if len(frames) == max_frames:
+            return frames
     return frames or None
 
 
@@ -3441,8 +3379,8 @@ def decode_wav_samples(
 ) -> tuple[int, "np.ndarray"] | None:
     """REAL sample-level decode kernel: parse a WAV payload down to
     ``(sample_rate, int16 waveform array)`` — the audio sibling of
-    ``decode_pnm_array``'s pixel raster (header walk done by the same
-    RIFF rules as ``media_duration_ms``).
+    ``decode_pnm_array``'s pixel raster (chunks from ``riff_chunks``,
+    like ``media_duration_ms``).
 
     Decodes, with no codec library:
 
@@ -3463,20 +3401,17 @@ def decode_wav_samples(
     n = len(payload)
     if n < 12 or payload[:4] != b"RIFF" or payload[8:12] != b"WAVE":
         raise Refused("unsupported or empty WAV")
-    i = 12
     audio_format = 0
     rate = 0
     block_align = 0
     fmt_ok = False
-    while i + 8 <= n:
-        cid = payload[i : i + 4]
-        csz = int.from_bytes(payload[i + 4 : i + 8], "little")
-        if cid == b"fmt " and i + 24 <= n:
-            audio_format = int.from_bytes(payload[i + 8 : i + 10], "little")
-            channels = int.from_bytes(payload[i + 10 : i + 12], "little")
-            rate = int.from_bytes(payload[i + 12 : i + 16], "little")
-            block_align = int.from_bytes(payload[i + 20 : i + 22], "little")
-            bits = int.from_bytes(payload[i + 22 : i + 24], "little")
+    for cid, i, end in riff_chunks(payload, 12, n):
+        if cid == b"fmt " and i + 16 <= n:
+            audio_format = int.from_bytes(payload[i : i + 2], "little")
+            channels = int.from_bytes(payload[i + 2 : i + 4], "little")
+            rate = int.from_bytes(payload[i + 4 : i + 8], "little")
+            block_align = int.from_bytes(payload[i + 12 : i + 14], "little")
+            bits = int.from_bytes(payload[i + 14 : i + 16], "little")
             fmt_ok = channels == 1 and (
                 (audio_format == 1 and bits == 16)
                 or (audio_format in (6, 7) and bits == 8)
@@ -3485,26 +3420,23 @@ def decode_wav_samples(
         elif cid == b"data":
             if not fmt_ok:
                 raise Refused("unsupported or empty WAV")
-            avail = min(csz, n - i - 8)
+            avail = min(end, n) - i
             if audio_format == 1:
                 m = avail // 2
                 if m == 0:
                     raise Refused("unsupported or empty WAV")
                 return rate, np.frombuffer(
-                    payload, dtype="<i2", count=m, offset=i + 8
+                    payload, dtype="<i2", count=m, offset=i
                 )
             if audio_format in (6, 7):
                 if avail == 0:
                     raise Refused("unsupported or empty WAV")
                 lut = _ULAW_LUT if audio_format == 7 else _ALAW_LUT
                 codes = np.frombuffer(
-                    payload, dtype=np.uint8, count=avail, offset=i + 8
+                    payload, dtype=np.uint8, count=avail, offset=i
                 )
                 return rate, lut[codes]
-            return rate, _ima_adpcm_decode(
-                payload[i + 8 : i + 8 + avail], block_align
-            )
-        i += 8 + csz + (csz & 1)  # word-aligned RIFF chunks
+            return rate, _ima_adpcm_decode(payload[i : i + avail], block_align)
     raise Refused("unsupported or empty WAV")
 
 
@@ -3540,6 +3472,41 @@ _FLAC_BLOCKSIZE = (
 _FLAC_FIXED_COEFS = ((), (1,), (2, -1), (3, -3, 1), (4, -6, 4, -1))
 
 
+def _flac_blocks(payload: bytes) -> Iterator[tuple[int, int, int]]:
+    """Walk the FLAC metadata blocks after the 'fLaC' marker (RFC 9639
+    §8.1), yielding ``(block_type, data_start, data_end)``: a header
+    byte (last-block flag in bit 7, type in bits 0-6), then a 24-bit
+    big-endian length. The walk ends after the block flagged last, or
+    when fewer than 4 bytes are left; the ``data_end`` of the last
+    block yielded is where the audio frames begin."""
+    i, n = 4, len(payload)
+    while i + 4 <= n:
+        hdr = payload[i]
+        end = i + 4 + int.from_bytes(payload[i + 1 : i + 4], "big")
+        yield hdr & 0x7F, i + 4, end
+        if hdr & 0x80:
+            return
+        i = end
+
+
+def _flac_streaminfo(
+    payload: bytes, start: int, end: int
+) -> tuple[int, int, int, int]:
+    """(sample_rate, channels, bits_per_sample, total_samples) from the
+    data of a STREAMINFO block (RFC 9639 §8.2), where they are packed
+    as 20, 3 (channels-1), 5 (bits-1) and 36 bits into bytes 10..18.
+    ``Refused`` unless all of the block's 34 bytes are there."""
+    if end - start < 34 or start + 34 > len(payload):
+        raise Refused("STREAMINFO shorter than 34 bytes")
+    packed = int.from_bytes(payload[start + 10 : start + 18], "big")
+    return (
+        packed >> 44,
+        ((packed >> 41) & 7) + 1,
+        ((packed >> 36) & 31) + 1,
+        packed & ((1 << 36) - 1),
+    )
+
+
 @none_on_refusal
 def decode_flac_samples(
     payload: bytes | None,
@@ -3567,22 +3534,14 @@ def decode_flac_samples(
     if payload is None or len(payload) < 8 or payload[:4] != b"fLaC":
         return None
     n = len(payload)
-    i = 4
+    i = 4  # the frames start past the last metadata block
     rate = channels = bits = total = None
-    while i + 4 <= n:
-        hdr = payload[i]
-        blen = int.from_bytes(payload[i + 1 : i + 4], "big")
-        if hdr & 0x7F == 0:
-            if blen < 34 or i + 4 + 34 > n:
-                return None
-            packed = int.from_bytes(payload[i + 14 : i + 22], "big")
-            rate = packed >> 44
-            channels = ((packed >> 41) & 7) + 1
-            bits = ((packed >> 36) & 31) + 1
-            total = packed & ((1 << 36) - 1)
-        i += 4 + blen
-        if hdr & 0x80:
-            break
+    for btype, start, end in _flac_blocks(payload):
+        if btype == 0:
+            rate, channels, bits, total = _flac_streaminfo(
+                payload, start, end
+            )
+        i = end
     if rate is None or not rate or channels != 1 or bits != 16:
         return None
     out: list[int] = []
@@ -3862,27 +3821,20 @@ def png_chunks(payload: bytes | None) -> list[tuple[int, str, int]] | None:
     """REAL container-walk kernel: enumerate every chunk of a PNG
     payload as (ordinal, type, data_length) — the media-inventory
     primitive (which ancillary metadata exists, how big is the pixel
-    stream) a lake profiler runs before any pixel decode. Walks the
-    spec layout exactly: 8-byte signature, then per chunk a 4-byte
-    big-endian length, 4-byte ASCII type, ``length`` data bytes and a
-    4-byte CRC (CRCs are not validated — inventory, not integrity).
-    Stops at IEND or a truncated chunk; returns None for non-PNGs.
+    stream) a lake profiler runs before any pixel decode, read off the
+    chunk walk ``_png_chunk_spans`` (CRCs are not validated —
+    inventory, not integrity). Stops at IEND or a truncated chunk,
+    which is listed with its declared length; returns None for
+    non-PNGs.
     """
-    if payload is None or len(payload) < 8:
+    if payload is None or payload[:8] != b"\x89PNG\r\n\x1a\n":
         return None
-    if payload[:8] != b"\x89PNG\r\n\x1a\n":
-        return None
-    out: list[tuple[int, str, int]] = []
-    i, n, ordinal = 8, len(payload), 0
-    while i + 8 <= n:
-        clen = int.from_bytes(payload[i : i + 4], "big")
-        ctype = payload[i + 4 : i + 8].decode("ascii", errors="replace")
-        out.append((ordinal, ctype, clen))
-        ordinal += 1
-        if ctype == "IEND":
-            break
-        i += 12 + clen
-    return out
+    return [
+        (ordinal, ctype.decode("ascii", errors="replace"), end - start)
+        for ordinal, (ctype, start, end) in enumerate(
+            _png_chunk_spans(payload)
+        )
+    ]
 
 
 CHUNK_SCHEMA = T.StructType(

@@ -54,6 +54,7 @@ from data_ingestion_py_spark.sources.bits import (
     LsbBits,
     Refused,
     none_on_refusal,
+    riff_chunks,
 )
 
 # ---------------------------------------------------------------------------
@@ -565,21 +566,16 @@ def decode_webp_array(
         or payload[8:12] != b"WEBP"
     ):
         return None
-    i = 12
-    n = len(payload)
-    while i + 8 <= n:
-        tag = payload[i : i + 4]
-        size = int.from_bytes(payload[i + 4 : i + 8], "little")
-        if i + 8 + size > n:
+    for tag, start, end in riff_chunks(payload, 12, len(payload)):
+        if end > len(payload):
             return None
         if tag == b"VP8L":
             w, h, px = decode_vp8l_pixels.__wrapped__(
-                payload[i + 8 : i + 8 + size], max_pixels
+                payload[start:end], max_pixels
             )
             arr = np.asarray(px, dtype=np.uint32)
             gray = (
                 ((arr >> 16) & 0xFF) + ((arr >> 8) & 0xFF) + (arr & 0xFF)
             ) // 3
             return w, h, gray.astype(np.uint8)
-        i += 8 + size + (size & 1)  # RIFF chunks are 2-byte aligned
     return None

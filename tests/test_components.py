@@ -61,22 +61,36 @@ def test_dedup_clusters_sizes_and_canonical(spark):
 
 
 # ---------------------------------------------------------------------------
-# method="star" (large-star/small-star alternation) — must agree with
-# propagation on every graph shape, including the power-law case it
-# exists for (a planted high-degree hub).
+# Graphs checked against a union-find written here: the unit graphs
+# above plus a self-loop, a planted high-degree hub (the power-law
+# shape, where the min label must flow through the hub) and a
+# pseudo-random sparse graph.
 # ---------------------------------------------------------------------------
 
 
-def _both(spark, edges):
-    a = connected_components(_pairs(spark, edges))
-    b = connected_components(_pairs(spark, edges), method="star")
-    return (
-        {r.node: r.component for r in a.collect()},
-        {r.node: r.component for r in b.collect()},
-    )
+def _union_find(edges):
+    parent = {}
+
+    def root(x):
+        parent.setdefault(x, x)
+        while parent[x] != x:
+            x = parent[x]
+        return x
+
+    for a, b in edges:
+        ra, rb = root(a), root(b)
+        parent[max(ra, rb)] = min(ra, rb)
+    return {x: root(x) for x in parent}
 
 
-def test_star_matches_propagation_unit_graphs(spark):
+def _check_against_union_find(spark, edges):
+    cc = connected_components(_pairs(spark, edges))
+    got = {r.node: r.component for r in cc.collect()}
+    assert got == _union_find(edges)
+    return got
+
+
+def test_unit_graphs_match_union_find(spark):
     for edges in (
         [(1, 2), (2, 3), (10, 11)],            # two components
         [(i, i + 1) for i in range(9)],        # long chain
@@ -84,28 +98,23 @@ def test_star_matches_propagation_unit_graphs(spark):
         [(7, 3), (3, 12), (20, 21)],           # mixed sizes
         [(4, 4), (1, 2)],                      # self-loop node
     ):
-        a, b = _both(spark, edges)
-        assert a == b, f"divergence on {edges}: {a} vs {b}"
+        _check_against_union_find(spark, edges)
 
 
-def test_star_planted_high_degree_hub(spark):
-    # power-law shape: hub 500 connects to 200 leaves, one of which
-    # chains down to the true component min (0). Propagation needs the
-    # min to flow THROUGH the hub; star re-roots the hub's edges at the
-    # minimum directly.
+def test_planted_high_degree_hub(spark):
+    # hub 500 connects to 200 leaves, one of which chains down to the
+    # true component min (0)
     edges = [(500, 1000 + i) for i in range(200)]
-    edges += [(1000, 3), (3, 0)]  # chain to a smaller min
-    a, b = _both(spark, edges)
-    assert a == b
-    assert set(b.values()) == {0}  # one component, rooted at min
+    edges += [(1000, 3), (3, 0)]
+    got = _check_against_union_find(spark, edges)
+    assert set(got.values()) == {0}  # one component, rooted at min
 
 
-def test_star_random_graph_equivalence(spark):
+def test_random_graph_matches_union_find(spark):
     # deterministic pseudo-random sparse graph: ~150 nodes, 120 edges
     edges = [
         ((i * 7919) % 150, (i * 104729) % 150)
         for i in range(120)
         if (i * 7919) % 150 != (i * 104729) % 150
     ]
-    a, b = _both(spark, edges)
-    assert a == b
+    _check_against_union_find(spark, edges)

@@ -3854,3 +3854,172 @@ def test_tiff_planar2_rgb_decodes():
         "II", w, h, [plane_strips(p) for p in range(2)] + [[]], rps
     )
     assert multimodal.decode_tiff_array(t) is None
+
+
+# ------------------------------------------ container framing edge cases
+
+
+def _walker_edge_cases():
+    """(id, reader, payload, expected) rows: malformed or unusual
+    framing for each container walker, judged by the public reader.
+    Rows whose id ends in ``-changed`` pin a rule the walkers share
+    where the hand-written walks they replaced disagreed (listed in
+    CHANGES.md)."""
+    import struct
+
+    import numpy as np
+
+    from tests.test_flac import _streaminfo
+    from tests.test_jpeg import _jpeg_bytes
+    from tests.test_vp8l import encode_vp8l
+
+    def le32(v):
+        return struct.pack("<I", v)
+
+    rows = []
+
+    def add(case_id, reader, payload, expected):
+        rows.append((case_id, reader, payload, expected))
+
+    # JPEG marker segments
+    raster = np.arange(256, dtype=np.uint8).reshape(16, 16)
+    jpg = _jpeg_bytes([raster], [(1, 1)], 16, 16)[0]
+    soi, rest = jpg[:2], jpg[2:]  # rest opens with DQT, then SOF0
+    clean = multimodal.decode_jpeg_array(jpg)
+    add("jpeg-fill-bytes-dims", "image_dimensions",
+        soi + b"\xff\xff" + rest, (16, 16))
+    add("jpeg-fill-bytes-pixels", "decode_jpeg_array",
+        soi + b"\xff\xff" + rest, clean)
+    add("jpeg-standalone-markers-dims", "image_dimensions",
+        soi + b"\xff\x01\xff\xd0" + rest, (16, 16))
+    add("jpeg-length-below-2-dims", "image_dimensions",
+        soi + b"\xff\xe0\x00\x00" + rest, None)
+    add("jpeg-length-below-2-pixels", "decode_jpeg_array",
+        soi + b"\xff\xe0\x00\x01" + rest, None)
+    add("jpeg-standalone-markers-pixels-changed", "decode_jpeg_array",
+        soi + b"\xff\x01\xff\xd0" + rest, clean)
+    add("jpeg-sof-length-below-2-changed", "image_dimensions",
+        soi + b"\xff\xc0\x00\x01\x08\x00\x10\x00\x10\x01", None)
+    sof_at = 2 + 4 + 65  # SOI, then DQT: marker, length, 65-byte table
+    add("jpeg-sof-past-end-changed", "image_dimensions",
+        jpg[: sof_at + 9], None)
+    tiff = _exif_tiff("II", 6, "CAM42", "Mk7", 4032, 3024)
+    meta = {"make": "CAM42", "model": "Mk7", "orientation": 6,
+            "datetime": None, "iso": None, "exif_width": 4032,
+            "exif_height": 3024}
+
+    def exif_jpeg(prefix, body=tiff):
+        app1 = b"Exif\x00\x00" + body
+        return (soi + prefix + b"\xff\xe1" + struct.pack(">H", 2 + len(app1))
+                + app1 + b"\xff\xd9")
+
+    add("jpeg-fill-bytes-exif", "exif_metadata", exif_jpeg(b"\xff"), meta)
+    add("jpeg-length-below-2-exif", "exif_metadata",
+        exif_jpeg(b"\xff\xe0\x00\x00"), None)
+    add("jpeg-soi-standalone-exif-changed", "exif_metadata",
+        exif_jpeg(b"\xff\xd8"), meta)
+    mm_tiff = _exif_tiff("MM", 3, "CAM07", "Mk1", 640, 480)
+    add("tiff-byte-order-mark-exif-changed", "exif_metadata",
+        exif_jpeg(b"", b"XM" + mm_tiff[2:]), None)
+
+    # RIFF chunks
+    samples = [(k * 37) % 2000 - 1000 for k in range(1600)]
+    wav = _wav(samples)  # 8000 Hz mono 16-bit: 3200 data bytes
+
+    def riff(form, extra, body):
+        return b"RIFF" + le32(4 + len(extra) + len(body)) + form + extra + body
+
+    odd = b"junk" + le32(3) + b"abc\x00"
+    info = b"LIST" + le32(14) + b"INFO" + b"ISFT" + le32(2) + b"x\x00"
+    for tag, extra in (("odd-pad", odd), ("list", info)):
+        payload = riff(b"WAVE", extra, wav[12:])
+        add(f"riff-{tag}-duration", "media_duration_ms", payload, 200)
+        add(f"riff-{tag}-samples", "decode_wav_samples", payload,
+            (8000, np.array(samples, dtype="<i2")))
+    avi = _avi(usec=40000, n_frames=250)
+    add("riff-odd-pad-avi", "avi_headers", riff(b"AVI ", odd, avi[12:]),
+        {"usec_per_frame": 40000, "total_frames": 250, "width": 4,
+         "height": 4, "bit_count": 24, "compression": 0})
+    argb = [0xFF000000 | (v * 0x010101) for v in range(64)]
+    webp = encode_vp8l(8, 8, argb)
+    add("riff-odd-pad-webp", "decode_webp_array",
+        riff(b"WEBP", b"ICCP" + le32(3) + b"abc\x00", webp[12:]),
+        (8, 8, np.arange(64, dtype=np.uint8)))
+    add("riff-chunk-past-end-webp", "decode_webp_array",
+        riff(b"WEBP", b"ICCP" + le32(1 << 20), webp[12:]), None)
+
+    # ISO-BMFF boxes
+    mp4 = _mp4(600, 1500)  # ftyp (16 bytes), moov > mvhd
+    add("bmff-box-size-below-8", "media_duration_ms",
+        mp4[:16] + b"\x00\x00\x00\x04free" + mp4[16:], None)
+    add("bmff-mvhd-size-below-8-changed", "media_duration_ms",
+        mp4[:24] + bytes(4) + mp4[28:], None)
+
+    # PNG chunks
+    png = _png_bytes(4, 3, 0, list(range(12)))
+    cut = png[: len(png) - 12 - 2]  # IEND gone, IDAT's CRC cut short
+    idat_len = len(png) - 8 - 25 - 12 - 12
+    add("png-truncated-chunk-inventory", "png_chunks", cut,
+        [(0, "IHDR", 13), (1, "IDAT", idat_len)])
+    add("png-truncated-chunk-pixels", "decode_png_array", cut, None)
+
+    # FLAC metadata blocks
+    padding_last = b"fLaC" + b"\x81" + (4).to_bytes(3, "big") + bytes(4)
+    add("flac-last-block-no-streaminfo-duration", "media_duration_ms",
+        padding_last + bytes(16), None)
+    add("flac-last-block-no-streaminfo-samples", "decode_flac_samples",
+        padding_last + bytes(16), None)
+    info34 = _streaminfo(8000, 16000)
+    add("flac-streaminfo-cut-short-changed", "media_duration_ms",
+        info34[: 8 + 20], None)
+    add("flac-streaminfo-declared-18-changed", "media_duration_ms",
+        info34[:5] + (18).to_bytes(3, "big") + info34[8:], None)
+
+    # TIFF IFD entries
+    def be_entry(tag, typ, value_field):
+        return struct.pack(">HHI", tag, typ, 1) + value_field
+
+    mm_short = (b"MM" + struct.pack(">HIH", 42, 8, 2)
+                + be_entry(256, 3, struct.pack(">HH", 300, 0))
+                + be_entry(257, 3, struct.pack(">HH", 200, 0))
+                + bytes(4))
+    add("tiff-mm-short-dims", "tiff_dimensions", mm_short, (300, 200))
+    add("tiff-mm-short-image-dims", "image_dimensions", mm_short, (300, 200))
+    add("tiff-mm-short-exif", "exif_metadata", mm_tiff,
+        {"make": "CAM07", "model": "Mk1", "orientation": 3,
+         "datetime": None, "iso": None, "exif_width": 640,
+         "exif_height": 480})
+    add("tiff-mm-short-pixels", "decode_tiff_array",
+        _tiff_bytes("MM", 4, 3, 1, [bytes(range(12))]),
+        (4, 3, np.arange(12, dtype=np.uint8)))
+
+    # ID3v2 syncsafe sizes
+    frames = _id3_frame("TIT2", "Hello", ver=4)
+    ext = b"\x00\x00\x00\x86\x01\x00"  # size 6 with a high bit set
+    body = ext + frames
+    add("id3-ext-size-high-bit-changed", "id3v2_tags",
+        b"ID3\x04\x00\x40" + _syncsafe(len(body)) + body, None)
+    return rows
+
+
+def _comparable(v):
+    import numpy as np
+
+    if isinstance(v, np.ndarray):
+        return (v.dtype.str, v.shape, v.tobytes())
+    if isinstance(v, tuple):
+        return tuple(_comparable(x) for x in v)
+    return v
+
+
+WALKER_EDGE_CASES = _walker_edge_cases()
+
+
+@pytest.mark.parametrize(
+    "reader, payload, expected",
+    [c[1:] for c in WALKER_EDGE_CASES],
+    ids=[c[0] for c in WALKER_EDGE_CASES],
+)
+def test_container_walker_edge_cases(reader, payload, expected):
+    got = getattr(multimodal, reader)(payload)
+    assert _comparable(got) == _comparable(expected)
